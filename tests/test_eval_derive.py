@@ -414,3 +414,30 @@ def test_key_skew_report(spark):
     assert got[5]["pair_share"] == round(10 / 12, 6)
     assert got[2]["pair_share"] == round(2 / 12, 6)
     assert [got[f]["rank"] for f in (5, 2, 1)] == [1, 2, 3]
+
+
+def test_lineitem_part_edges_builds_without_jobs(spark, tmp_path):
+    """Building the derivation runs no Spark job: the read schema is
+    given, and the narrow-input spread is decided from the physical
+    plan (no ``.rdd`` probe)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from vite_spark.derive import lineitem_part_edges
+
+    pq.write_table(pa.table({
+        "l_orderkey": pa.array([1, 1, 1, 2, 2, 3], pa.int64()),
+        "l_partkey": pa.array([10, 11, 12, 10, 11, 12], pa.int64()),
+        "l_quantity": pa.array([1.0] * 6),
+    }), str(tmp_path / "lineitem.parquet"))
+    sc = spark.sparkContext
+    sc.setJobGroup("lineitem_part_edges-build", "build only")
+    try:
+        edges = lineitem_part_edges(spark, str(tmp_path))
+        jobs = sc.statusTracker().getJobIdsForGroup("lineitem_part_edges-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 0
+    got = {(r["src"], r["dst"]): r["weight"] for r in edges.collect()}
+    assert got == {(10, 11): 2.0, (11, 10): 2.0, (10, 12): 1.0,
+                   (12, 10): 1.0, (11, 12): 1.0, (12, 11): 1.0}

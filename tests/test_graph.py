@@ -87,6 +87,37 @@ def test_dense_ids_tiers_identical(spark):
     assert out.collect() == [] and set(out.columns) == {"v", "id"}
 
 
+def test_dense_ids_null_same_id_in_both_tiers(spark, monkeypatch):
+    """A null value takes id 0 in both tiers (Spark's ascending order puts
+    nulls first), and local_max_rows=0 forces the distributed tier even
+    on an empty input."""
+    from vite_spark.kernels.ids import dense_ids
+
+    for rows, schema, want in (
+        ([(5,), (None,), (2,), (None,), (9,)], "v long",
+         {None: 0, 2: 1, 5: 2, 9: 3}),
+        ([("b",), (None,), ("a",)], "v string", {None: 0, "a": 1, "b": 2}),
+        ([(None,)], "v long", {None: 0}),
+    ):
+        df = spark.createDataFrame(rows, schema)
+        small = {r["v"]: r["id"] for r in dense_ids(df, "v", "id").collect()}
+        dist = {r["v"]: r["id"] for r in
+                dense_ids(df, "v", "id", local_max_rows=0).collect()}
+        assert small == dist == want
+
+    empty = spark.createDataFrame([], "v string")
+    ranged = []
+    real = type(empty).repartitionByRange
+
+    def spy(self, *a, **k):
+        ranged.append(a)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(type(empty), "repartitionByRange", spy)
+    assert dense_ids(empty, "v", "id", local_max_rows=0).collect() == []
+    assert len(ranged) == 1
+
+
 def test_graphframe(spark):
     e = edges_from_pairs(spark, [(0, 1), (1, 2)])
     gf = GraphFrame.from_edges(e)

@@ -97,11 +97,12 @@ def test_dangling_input_falls_back_to_join_path(spark):
 
 def test_packed_pack_cache_reuse(spark, tmp_path):
     """Second run against the same pack_cache_dir reuses the manifest
-    (fileConvert-once) and returns identical ranks."""
+    (fileConvert-once) and returns identical ranks. Four partitions: a
+    one-partition run takes the single-task tier, which builds no pack."""
     import os
 
     edges = spark.createDataFrame(_rand_sym_edges(7, nv=400, ne=2000))
-    cfg = EngineConfig(pack_cache_dir=str(tmp_path))
+    cfg = EngineConfig(pack_cache_dir=str(tmp_path), shuffle_partitions=4)
     m1, m2 = MetricsCollector(), MetricsCollector()
     r1 = pagerank(spark, edges, tol=0.0, max_iter=8, cfg=cfg,
                   metrics=m1).toPandas().sort_values("id")

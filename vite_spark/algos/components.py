@@ -135,24 +135,25 @@ def connected_components_twophase(
     pin = None
     if not edges.is_cached:
         pin = edges = edges.persist()
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
-    e = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
+    try:
+        verts = (
+            edges.select(F.col("src").alias("id"))
+            .union(edges.select(F.col("dst").alias("id")))
+            .distinct()
+            .persist()
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    verts.count()
-    if pin is not None:
-        pin.unpersist()
+        e = (
+            edges.select("src", "dst")
+            .filter(F.col("src") != F.col("dst"))
+            .select(F.greatest("src", "dst").alias("u"),
+                    F.least("src", "dst").alias("v"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        verts.count()
+    finally:
+        if pin is not None:
+            pin.unpersist()
 
     def checksum(df: DataFrame) -> tuple:
         r = df.agg(

@@ -104,4 +104,9 @@ def link_prediction_topk(
             (F.col("du") * F.col("dv")).alias("pa"),
         )
     )
+    if k > 1 << 20:
+        # Spark's top-k operator sizes each task's heap by k: a k far past
+        # the row count (k = 10**9 for "every pair") committed GBs of empty
+        # slots on the driver JVM, so a large k is clamped to the row count
+        k = min(k, scored.count())
     return scored.orderBy(F.col("cn").desc(), "u", "v").limit(k)

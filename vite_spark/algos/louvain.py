@@ -750,91 +750,86 @@ def louvain_phase(
 
     probe = None
     pin = None
-    if (
-        (cfg.local_phase_max_edges > 0 or cfg.use_csr_kernel)
-        and cfg.checkpoint_dir is None
-        and resume_from is None
-    ):
-        # pin the level's edge table across the probe and whichever tier
-        # consumes it next (the local tier's toPandas or the packed
-        # path's pack job): each re-ran the caller's upstream derivation
-        # on an unpersisted input (csr_pr._prepare_pack's pattern).
-        # Skipped when the caller already cached it (the bench does);
-        # released as soon as the tier has materialized.
-        if not edges.is_cached:
-            pin = edges = edges.persist()
-        # one probe job serves BOTH the local-tier gate and _csr_phase's
-        # dense-id precheck / scale-adaptive partition cap (formerly a
-        # count job here plus an agg job there)
-        probe = edges.agg(
-            F.max("src").alias("ms"), F.max("dst").alias("md"),
-            F.count(F.lit(1)).alias("ne"),
-        ).collect()[0]
-    local_lim = cfg.local_phase_max_edges
-    if local_lim > 0 and level >= 1:
-        # coarse levels: the distributed path's per-level fixed costs
-        # (pack build, one job per superstep) dominate at post-coarsen
-        # sizes — see config.local_phase_coarse_max_edges
-        local_lim = max(local_lim, cfg.local_phase_coarse_max_edges)
-    if (
-        local_lim > 0
-        and probe is not None
-        and int(probe["ne"] or 0) <= local_lim
-    ):
-        try:
+    try:
+        if (
+            (cfg.local_phase_max_edges > 0 or cfg.use_csr_kernel)
+            and cfg.checkpoint_dir is None
+            and resume_from is None
+        ):
+            # pin the level's edge table across the probe and whichever
+            # tier consumes it next (the local tier's toPandas or the
+            # packed path's pack job): each re-ran the caller's upstream
+            # derivation on an unpersisted input (csr_pr._run_packed's
+            # pattern). Skipped when the caller already cached it (the
+            # bench does); released once the tier has materialized — on
+            # the join path, once its own repartitioned copy is filled
+            # (the count below).
+            if not edges.is_cached:
+                pin = edges = edges.persist()
+            # one probe job serves BOTH the local-tier gate and
+            # _csr_phase's dense-id precheck / scale-adaptive partition
+            # cap (formerly a count job here plus an agg job there)
+            probe = edges.agg(
+                F.max("src").alias("ms"), F.max("dst").alias("md"),
+                F.count(F.lit(1)).alias("ne"),
+            ).collect()[0]
+        local_lim = cfg.local_phase_max_edges
+        if local_lim > 0 and level >= 1:
+            # coarse levels: the distributed path's per-level fixed costs
+            # (pack build, one job per superstep) dominate at post-coarsen
+            # sizes — see config.local_phase_coarse_max_edges
+            local_lim = max(local_lim, cfg.local_phase_coarse_max_edges)
+        if (
+            local_lim > 0
+            and probe is not None
+            and int(probe["ne"] or 0) <= local_lim
+        ):
             return _local_phase(
                 spark, edges, threshold, lower, metrics, level,
                 early_term=cfg.early_term, colors=colors,
             )
-        finally:
-            if pin is not None:
-                pin.unpersist()
 
-    if (
-        cfg.use_csr_kernel
-        and cfg.checkpoint_dir is None
-        and resume_from is None
-    ):
-        # early_term and colored runs stay on the packed path too (owner-
-        # local ET state files; one packed job per color bucket; the
-        # colored+ET combination chains ET state per bucket — r2 VERDICT
-        # next#6, r3 next#6). _csr_phase returns None for the combinations
-        # it does not pack (colored on the sharded kernel, non-local
-        # master, key-width overflow) and the join superstep below
-        # provides identical semantics.
-        try:
+        if (
+            cfg.use_csr_kernel
+            and cfg.checkpoint_dir is None
+            and resume_from is None
+        ):
+            # early_term and colored runs stay on the packed path too
+            # (owner-local ET state files; one packed job per color
+            # bucket; the colored+ET combination chains ET state per
+            # bucket — r2 VERDICT next#6, r3 next#6). _csr_phase returns
+            # None for the combinations it does not pack (colored on the
+            # sharded kernel, non-local master, key-width overflow) and
+            # the join superstep below provides identical semantics.
             res = _csr_phase(
                 spark, edges, threshold, lower, cfg, metrics, level,
                 colors=colors, coarsen_gain_over=coarsen_gain_over,
                 probe=probe,
             )
-        finally:
-            if pin is not None:
-                pin.unpersist()
-                pin = None
-        if res is not None:
-            return res
+            if res is not None:
+                return res
 
-    if pin is not None:
-        # csr kernel disabled: the join path below persists its own
-        # repartitioned copy
-        pin.unpersist()
-    edges = edges.repartition(
-        cfg.shuffle_partitions
-        or int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-        "src",
-    ).persist()
+        edges = edges.repartition(
+            cfg.shuffle_partitions
+            or int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+            "src",
+        ).persist()
 
-    vdeg = weighted_degrees(edges)
-    selfw = self_loop_weights(edges)
-    vstate = (
-        vdeg.join(selfw, vdeg.id == selfw.id, "left")
-        .select(vdeg.id, "vdeg", F.coalesce("self_w", F.lit(0.0)).alias("self_w"))
-        .persist()
-    )
-    row = vstate.agg(F.sum("vdeg").alias("tw"), F.count(F.lit(1)).alias("nv")).collect()[0]
-    two_m, nv = float(row["tw"]), int(row["nv"])
-    ne = edges.count()
+        vdeg = weighted_degrees(edges)
+        selfw = self_loop_weights(edges)
+        vstate = (
+            vdeg.join(selfw, vdeg.id == selfw.id, "left")
+            .select(vdeg.id, "vdeg",
+                    F.coalesce("self_w", F.lit(0.0)).alias("self_w"))
+            .persist()
+        )
+        row = vstate.agg(F.sum("vdeg").alias("tw"),
+                         F.count(F.lit(1)).alias("nv")).collect()[0]
+        two_m, nv = float(row["tw"]), int(row["nv"])
+        ne = edges.count()
+    finally:
+        if pin is not None:
+            pin.unpersist()
     const = 1.0 / two_m
 
     # state init (louvain.cpp:2564-2581) or resume (north_star)

@@ -51,9 +51,19 @@ def _spread_narrow(pairs: DataFrame) -> DataFrame:
     real 100 TB table) is left alone, where the extra full shuffle of
     the incidence rows would dominate. Interleaved A/B at sf0.1 (noop
     sink, cooccurrence_edges): 1.27 vs 2.05 s medians, every pair wins;
-    output proven identical (exceptAll both ways)."""
+    output proven identical (exceptAll both ways).
+
+    Decided from the physical plan, running no job: an adaptive plan
+    (AQE wraps every plan with an exchange or a subquery) is already
+    spread by its exchange — asking it for ``.rdd`` would run its
+    upstream stages as a side job whose output the real action does not
+    reuse; any other plan's partition count is read off its planned RDD,
+    which lists files but reads no rows."""
     spark = pairs.sparkSession
-    if 2 * pairs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
+    plan = pairs._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return pairs
+    if 2 * plan.execute().getNumPartitions() < spark.sparkContext.defaultParallelism:
         pairs = pairs.repartition(
             int(spark.conf.get("spark.sql.shuffle.partitions", "32")), "key"
         )
@@ -165,9 +175,10 @@ def lineitem_part_edges(spark, sf_dir: str) -> DataFrame:
     in the same order. Vertices are l_partkey (already dense-ish ints);
     weight = number of shared orders. Symmetric by construction.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        F.col("l_orderkey").alias("key"), F.col("l_partkey").cast("long").alias("entity")
-    )
+    # the read schema is given: inferring it runs a footer-reading job
+    li = spark.read.schema("l_orderkey long, l_partkey long").parquet(
+        f"{sf_dir}/lineitem.parquet"
+    ).select(F.col("l_orderkey").alias("key"), F.col("l_partkey").alias("entity"))
     return cooccurrence_edges(li, "entity", "key")
 
 

@@ -67,13 +67,12 @@ point, shared with csr_lpa.py/csr_cc.py.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 import numpy as np
 
 from vite_spark.kernels.csr import _atomic_save, _pid_frame
-from vite_spark.kernels.csr_pr import _prepare_pack
+from vite_spark.kernels.csr_pr import _run_packed
 from vite_spark.kernels.csr_sharded import (
     _load_bounds,
     _req_of,
@@ -187,8 +186,6 @@ def csr_shortest_paths(spark, edges, landmarks, max_iter, cfg, metrics,
     hop counts, double under ``weighted``), or None when a precondition
     fails (caller runs the join path): non-local master, input not
     vertex-closed, or a landmark that is not a graph vertex."""
-    if not spark.sparkContext.master.startswith("local"):
-        return None
     if not landmarks:
         return None
     # int32 state safety is structural — a distance written at superstep
@@ -198,25 +195,8 @@ def csr_shortest_paths(spark, edges, landmarks, max_iter, cfg, metrics,
         f"max_iter {max_iter} would let hop distances reach the int32 " \
         f"sentinel {int(INF32)}"
     lms = np.asarray(sorted(set(int(x) for x in landmarks)), np.int64)
-    nparts = cfg.shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    prep = _prepare_pack(spark, edges, cfg, nparts)
-    if prep is None:
-        return None
-    pack_dir, nparts, info, routing, cleanup = prep
-    if info["nv"] == 0:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
-        return None
 
-    try:
-        for f in os.listdir(pack_dir):
-            if f.startswith(BFS_TRANSIENT_PREFIXES):
-                try:
-                    os.remove(os.path.join(pack_dir, f))
-                except OSError:
-                    pass
+    def step(pack_dir, nparts, info, routing):
         t_final = 1
         for t in range(1, max_iter + 1):
             t_final = t
@@ -264,19 +244,10 @@ def csr_shortest_paths(spark, edges, landmarks, max_iter, cfg, metrics,
                                  else d[ii, jj].astype(np.int64)),
                     })
 
-        out = _pid_frame(spark, nparts).mapInPandas(
+        return _pid_frame(spark, nparts).mapInPandas(
             emit,
             schema="id long, landmark long, dist "
                    + ("double" if weighted else "long"),
         ).localCheckpoint(eager=True)
-    finally:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
-        else:
-            for f in os.listdir(pack_dir):
-                if f.startswith(BFS_TRANSIENT_PREFIXES):
-                    try:
-                        os.remove(os.path.join(pack_dir, f))
-                    except OSError:
-                        pass
-    return out
+
+    return _run_packed(spark, edges, cfg, BFS_TRANSIENT_PREFIXES, step)

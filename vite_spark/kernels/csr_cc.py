@@ -18,7 +18,15 @@ pack's (src, dst)-sorted row order means the per-iteration sweep needs no
 grouping sort at all — srcl is non-decreasing, so the neighbor minimum is
 ONE gather plus `np.minimum.reduceat` over the existing segment bounds.
 
-Per iteration, ONE job; task p:
+Two tiers, one gate (csr_pr._run_packed): a run whose pack would have
+one partition, with no ``checkpoint_dir``, takes the single-task tier —
+csr_pr._single_task moves the edge rows into one task, which runs the
+whole fixpoint in place over what a one-partition pack holds (ux ==
+own, no exchange) in ONE job. Every other run takes the sharded job
+loop. Integer min is order-free, so both tiers produce the same labels
+and per-iteration changed counts as the join path.
+
+Sharded job loop, per iteration ONE job; task p:
 
 1. **Gather** curr over U_p at t-1 (identity at t=1) by slicing each
    owner's `cown_{t-1}_{q}` vector through the static req sets into the
@@ -51,13 +59,12 @@ its fillRemoteCommunities send shape (/root/reference/louvain.cpp:
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 import numpy as np
 
 from vite_spark.kernels.csr import _atomic_save, _pid_frame
-from vite_spark.kernels.csr_pr import _prepare_pack
+from vite_spark.kernels.csr_pr import _emit_own, _run_packed, _single_task
 from vite_spark.kernels.csr_sharded import (
     _load_bounds,
     _req_of,
@@ -144,220 +151,56 @@ def _cc_job(spark, pack_dir, nparts, t, routing, ckpt_dir=None):
     )
 
 
-def _csr_cc_packless(spark, edges, max_iter, metrics, ne):
-    """Packless single-task tier (caller gates on PACK_EDGES_PER_PART):
-    ONE job maps the edge rows straight into the Jacobi min-label
-    fixpoint — no range exchange, pack/route files, or per-iteration
-    jobs. Integer min is order-free, so per-iteration labels and changed
-    counts are identical to the packed job loop; same oracle rows cover
-    it. Returns None when the input is not vertex-closed (sentinel) —
-    the caller's join path handles open graphs."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    def run(pdf_iter):
-        import pandas as pd
-
-        parts = [p for p in pdf_iter if len(p)]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        src = pdf["src"].to_numpy(np.int64)
-        dst = pdf["dst"].to_numpy(np.int64)
-        order = np.lexsort((dst, src))
-        src, dst = src[order], dst[order]
-        first = np.r_[True, src[1:] != src[:-1]]
-        own = src[np.flatnonzero(first)]
-        pos = np.searchsorted(own, dst)
-        closed = bool((pos < len(own)).all()) and \
-            bool((own[np.minimum(pos, len(own) - 1)] == dst).all())
-        if not closed:
-            yield pd.DataFrame({"kind": [np.int32(3)], "id": [0],
-                                "component": [0]})
-            return
-        dstl = pos
-        starts_seg = np.flatnonzero(first)
-        lab = own.astype(np.int64, copy=True)
-        chg = []
-        for _t in range(1, max_iter + 1):
-            nbr_min = np.minimum.reduceat(lab[dstl], starts_seg)
-            new = np.minimum(lab, nbr_min)
-            changed = int((new != lab).sum())
-            chg.append(changed)
-            lab = new
-            if changed == 0:
-                break
-        yield pd.DataFrame({
-            "kind": np.ones(len(chg), np.int32),
-            "id": np.arange(1, len(chg) + 1, dtype=np.int64),
-            "component": np.asarray(chg, dtype=np.int64),
-        })
-        yield pd.DataFrame({
-            "kind": np.zeros(len(own), np.int32), "id": own,
-            "component": lab,
-        })
-
-    t0 = _time.time()
-    # no self-loop filter: the packed path packs edges as-is, and a
-    # vertex with only self-loops must still receive its identity label
-    mixed = edges.select("src", "dst").repartition(1).mapInPandas(
-        run, schema="kind int, id long, component long"
-    ).localCheckpoint(eager=True)
-    wall = _time.time() - t0
-    if mixed.filter(F.col("kind") == 3).count() > 0:
-        return None
-    crows = sorted(
-        (int(r["id"]), int(r["component"]))
-        for r in mixed.filter(F.col("kind") == 1).collect()
-    )
-    for t, c in crows:
-        metrics.record(kind="cc_superstep", iter=t, changed=c,
-                       wall_s=wall / max(len(crows), 1),
-                       edges_processed=int(ne), mode="csr_sharded_min")
-    return mixed.filter(F.col("kind") == 0).select("id", "component")
-
-
 def csr_cc(spark, edges, max_iter, cfg, metrics):
     """Packed-CSR connected-components driver. Returns the
     (id, component) DataFrame, or None when a precondition fails (caller
     runs the join path): non-local master (the pack is a shared
     filesystem), or input not vertex-closed (a dst that is never a src
     has no owner to author its label)."""
-    if not spark.sparkContext.master.startswith("local"):
-        return None
-    nparts = cfg.shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    ne_pre = None
-    pin = None
-    if (cfg.shuffle_partitions is None and not cfg.checkpoint_dir
-            and not cfg.pack_cache_dir):
-        from vite_spark.config import PACK_EDGES_PER_PART
 
-        # one cache serves the gate count AND whichever tier runs next
-        # (packless map or pack build) — see csr_pr's gate: without it
-        # each consumer re-ran the caller's upstream derivation
-        # (interleaved A/B at sf0.1: packed-CC query 4.66 s vs 7.52 s
-        # medians, every pair wins). Skipped when already persisted.
-        if not edges.is_cached:
-            pin = edges = edges.persist()
-        ne_pre = edges.count()
-        if ne_pre == 0:
-            if pin is not None:
-                pin.unpersist()
+    def single(edges):
+        def body(own, srcl, dstl, seg, w):
+            lab = own.astype(np.int64, copy=True)
+            chg = []
+            for _t in range(1, max_iter + 1):
+                new = np.minimum(lab, np.minimum.reduceat(lab[dstl], seg))
+                changed = int((new != lab).sum())
+                chg.append(changed)
+                lab = new
+                if changed == 0:
+                    break
+            return chg, lab
+
+        # no self-loop filter: the packed path packs edges as-is, and a
+        # vertex with only self-loops must still receive its identity label
+        res = _single_task(spark, edges, ("src", "dst"), "component", "long",
+                           body)
+        if res is None:
             return None
-        if ne_pre <= PACK_EDGES_PER_PART:
-            try:
-                # None → caller's join path (open graph)
-                return _csr_cc_packless(spark, edges, max_iter, metrics,
-                                        ne_pre)
-            finally:
-                if pin is not None:
-                    pin.unpersist()
-    prep = _prepare_pack(spark, edges, cfg, nparts, ne_precounted=ne_pre)
-    if pin is not None:
-        pin.unpersist()
-    if prep is None:
-        return None
-    pack_dir, nparts, info, routing, cleanup = prep
-    if info["nv"] == 0:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
-        return None
-
-    from vite_spark.runtime import iter_checkpoint as ic
-
-    ckroot = cfg.checkpoint_dir
-    if nparts == 1 and not ckroot:
-        # single-partition graphs: the partition owns every vertex
-        # (ux == own under the vertex-closed precondition), so the whole
-        # Jacobi min-label fixpoint runs inside ONE task of ONE job
-        # instead of one driver-scheduled job per iteration. Integer
-        # min is order-free — per-iteration labels and changed counts
-        # are identical to the job loop; same oracle rows cover it.
-        def run(pdf_iter):
-            import pandas as pd
-
-            for pdf in pdf_iter:
-                for pid in pdf["pid"]:
-                    pid = int(pid)
-                    own = np.load(os.path.join(pack_dir, f"own_{pid}.npy"),
-                                  mmap_mode="r")
-                    if len(own) == 0:
-                        continue
-                    srcl = np.load(os.path.join(
-                        pack_dir, f"srcl_{pid}.npy"), mmap_mode="r")
-                    dstl = np.load(os.path.join(
-                        pack_dir, f"dstl_{pid}.npy"), mmap_mode="r")
-                    starts_seg = np.flatnonzero(
-                        np.r_[True, srcl[1:] != srcl[:-1]])
-                    lab = np.asarray(own, dtype=np.int64).copy()
-                    chg = []
-                    for _t in range(1, max_iter + 1):
-                        nbr_min = np.minimum.reduceat(lab[dstl], starts_seg)
-                        new = np.minimum(lab, nbr_min)
-                        changed = int((new != lab).sum())
-                        chg.append(changed)
-                        lab = new
-                        if changed == 0:
-                            break
-                    yield pd.DataFrame({
-                        "kind": np.ones(len(chg), np.int32),
-                        "id": np.arange(1, len(chg) + 1, dtype=np.int64),
-                        "component": np.asarray(chg, dtype=np.int64),
-                    })
-                    yield pd.DataFrame({
-                        "kind": np.zeros(len(own), np.int32),
-                        "id": np.asarray(own, dtype=np.int64),
-                        "component": lab,
-                    })
-
-        try:
-            import time as _time
-
-            from pyspark.sql import functions as F
-
-            t0 = _time.time()
-            mixed = _pid_frame(spark, 1).mapInPandas(
-                run, schema="kind int, id long, component long"
-            ).localCheckpoint(eager=True)
-            wall = _time.time() - t0
-            crows = sorted(
-                (int(r["id"]), int(r["component"]))
-                for r in mixed.filter(F.col("kind") == 1).collect()
-            )
-            for t, c in crows:
-                metrics.record(kind="cc_superstep", iter=t, changed=c,
-                               wall_s=wall / max(len(crows), 1),
-                               edges_processed=int(info["ne"]),
-                               mode="csr_sharded_min")
-            out = mixed.filter(F.col("kind") == 0).select("id", "component")
-        finally:
-            if cleanup:
-                shutil.rmtree(pack_dir, ignore_errors=True)
-            else:
-                for f in os.listdir(pack_dir):
-                    if f.startswith(CC_TRANSIENT_PREFIXES):
-                        try:
-                            os.remove(os.path.join(pack_dir, f))
-                        except OSError:
-                            pass
+        out, chg, wall, ne = res
+        for t, c in enumerate(chg, 1):
+            metrics.record(kind="cc_superstep", iter=t, changed=c,
+                           wall_s=wall / max(len(chg), 1),
+                           edges_processed=ne, mode="csr_sharded_min")
         return out
-    start_t = 0
-    if ckroot:
-        ck = ic.latest_complete(ckroot, "cc")
-        if ck is not None and ic.validate(ck, info, nparts):
-            t0 = time.time()
-            if ic.restore_job(spark, pack_dir, nparts,
-                              ic.iter_dir(ckroot, "cc", ck["t"]),
-                              f"cown_{ck['t']}"):
-                start_t = min(int(ck["t"]), max_iter)
-                metrics.record(kind="cc_resume", iter=start_t,
-                               wall_s=time.time() - t0,
-                               mode="csr_sharded_min")
 
-    try:
+    def step(pack_dir, nparts, info, routing):
+        from vite_spark.runtime import iter_checkpoint as ic
+
+        ckroot = cfg.checkpoint_dir
+        start_t = 0
+        if ckroot:
+            ck = ic.latest_complete(ckroot, "cc")
+            if ck is not None and ic.validate(ck, info, nparts):
+                t0 = time.time()
+                if ic.restore_job(spark, pack_dir, nparts,
+                                  ic.iter_dir(ckroot, "cc", ck["t"]),
+                                  f"cown_{ck['t']}"):
+                    start_t = min(int(ck["t"]), max_iter)
+                    metrics.record(kind="cc_resume", iter=start_t,
+                                   wall_s=time.time() - t0,
+                                   mode="csr_sharded_min")
+
         t_final = max(start_t, 1)
         for t in range(start_t + 1, max_iter + 1):
             t_final = t
@@ -378,32 +221,8 @@ def csr_cc(spark, edges, max_iter, cfg, metrics):
                            mode="csr_sharded_min")
             if changed == 0:
                 break
+        return _emit_own(spark, pack_dir, nparts, "id long, component long",
+                         [("component", f"cown_{t_final}")])
 
-        def emit(pdf_iter):
-            import pandas as pd
-
-            for pdf in pdf_iter:
-                for pid in pdf["pid"]:
-                    pid = int(pid)
-                    own = np.load(os.path.join(pack_dir, f"own_{pid}.npy"),
-                                  mmap_mode="r")
-                    if len(own) == 0:
-                        continue
-                    lab = np.load(os.path.join(
-                        pack_dir, f"cown_{t_final}_{pid}.npy"))
-                    yield pd.DataFrame({"id": own, "component": lab})
-
-        out = _pid_frame(spark, nparts).mapInPandas(
-            emit, schema="id long, component long"
-        ).localCheckpoint(eager=True)
-    finally:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
-        else:
-            for f in os.listdir(pack_dir):
-                if f.startswith(CC_TRANSIENT_PREFIXES):
-                    try:
-                        os.remove(os.path.join(pack_dir, f))
-                    except OSError:
-                        pass
-    return out
+    return _run_packed(spark, edges, cfg, CC_TRANSIENT_PREFIXES, step,
+                       single=single)

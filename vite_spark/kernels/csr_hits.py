@@ -1,6 +1,6 @@
 """Packed-CSR HITS on the sharded pack.
 
-Same infrastructure as packed PageRank/LPA (csr_pr._prepare_pack: range
+Same infrastructure as packed PageRank/LPA (csr_pr._run_packed: range
 ownership, sorted per-partition universe ux, pack-time req_{owner}_{reader}
 interest sets), composing BOTH established exchange shapes — one per
 direction of the alternating recurrence:
@@ -16,8 +16,8 @@ direction of the alternating recurrence:
   h_t(own) with one bincount over srcl → ``hown_{t}``.
 
 Two jobs per iteration (merge, then gather+scatter): the gather needs
-every owner's merged a_t — a real barrier the fused PageRank loop doesn't
-have, inherent to the alternating-direction recurrence. Exchange per
+every owner's merged a_t — a real barrier PageRank's one-job merge +
+scatter doesn't have, inherent to the alternating-direction recurrence. Exchange per
 iteration = 2·Σ_p |U_p| floats (one push + one pull of the ghost set —
 twice Vite's one-direction exchange bound, the minimum for A then Aᵀ).
 Every accumulate is a sequential bincount in a fixed order, so runs are
@@ -40,13 +40,12 @@ the PR/LPA kernels.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 import numpy as np
 
 from vite_spark.kernels.csr import _atomic_save, _pid_frame
-from vite_spark.kernels.csr_pr import _merge_layout, _prepare_pack
+from vite_spark.kernels.csr_pr import _emit_own, _merge_layout, _run_packed
 from vite_spark.kernels.csr_sharded import (
     _load_bounds,
     _req_of,
@@ -171,23 +170,10 @@ def csr_hits(spark, edges, iters, weighted, cfg, metrics):
     (unnormalized h_iters / a_iters — the caller applies the shared L1
     emit), or None when a precondition fails (caller runs the join
     path)."""
-    if not spark.sparkContext.master.startswith("local"):
-        return None
     if iters < 1:
         return None
-    nparts = cfg.shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    prep = _prepare_pack(spark, edges, cfg, nparts)
-    if prep is None:
-        return None
-    pack_dir, nparts, info, routing, cleanup = prep
-    if info["nv"] == 0:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
-        return None
 
-    try:
+    def step(pack_dir, nparts, info, routing):
         t0 = time.time()
         _scatter_job(spark, pack_dir, nparts, 0, routing, weighted,
                      last=False).collect()
@@ -203,34 +189,8 @@ def csr_hits(spark, edges, iters, weighted, cfg, metrics):
                            wall_s=time.time() - t0,
                            mode="csr_sharded_hits",
                            edges_processed=int(info["ne"]))
+        return _emit_own(spark, pack_dir, nparts,
+                         "id long, hv double, av double",
+                         [("hv", f"hown_{iters}"), ("av", f"aown_{iters}")])
 
-        def emit(pdf_iter):
-            import pandas as pd
-
-            for pdf in pdf_iter:
-                for pid in pdf["pid"]:
-                    pid = int(pid)
-                    own = np.load(os.path.join(pack_dir, f"own_{pid}.npy"),
-                                  mmap_mode="r")
-                    if len(own) == 0:
-                        continue
-                    hv = np.load(os.path.join(
-                        pack_dir, f"hown_{iters}_{pid}.npy"))
-                    av = np.load(os.path.join(
-                        pack_dir, f"aown_{iters}_{pid}.npy"))
-                    yield pd.DataFrame({"id": own, "hv": hv, "av": av})
-
-        out = _pid_frame(spark, nparts).mapInPandas(
-            emit, schema="id long, hv double, av double"
-        ).localCheckpoint(eager=True)
-    finally:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
-        else:
-            for f in os.listdir(pack_dir):
-                if f.startswith(HITS_TRANSIENT_PREFIXES):
-                    try:
-                        os.remove(os.path.join(pack_dir, f))
-                    except OSError:
-                        pass
-    return out
+    return _run_packed(spark, edges, cfg, HITS_TRANSIENT_PREFIXES, step)

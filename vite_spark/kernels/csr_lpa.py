@@ -43,7 +43,6 @@ its fillRemoteCommunities send shape (/root/reference/louvain.cpp:
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 import numpy as np
@@ -54,7 +53,7 @@ from vite_spark.kernels.csr import (
     _pid_frame,
     _take,
 )
-from vite_spark.kernels.csr_pr import _prepare_pack
+from vite_spark.kernels.csr_pr import _emit_own, _run_packed
 from vite_spark.kernels.csr_sharded import (
     _load_bounds,
     _req_of,
@@ -186,39 +185,29 @@ def _lpa_job(spark, pack_dir, nparts, t, routing, ckpt_dir=None):
 def csr_lpa(spark, edges, max_iter, cfg, metrics):
     """Packed-CSR LPA driver. Returns the (id, label) DataFrame, or None
     when a precondition fails (caller runs the join path)."""
-    if not spark.sparkContext.master.startswith("local"):
-        return None
-    nparts = cfg.shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    prep = _prepare_pack(spark, edges, cfg, nparts)
-    if prep is None:
-        return None
-    pack_dir, nparts, info, routing, cleanup = prep
-    if info["nv"] == 0 or not info["w_integer"]:
-        # empty input, or float-tied votes could differ across summation
-        # orders — join path
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
-        return None
 
-    from vite_spark.runtime import iter_checkpoint as ic
+    def step(pack_dir, nparts, info, routing):
+        if not info["w_integer"]:
+            # float-tied votes could differ across summation orders —
+            # join path
+            return None
 
-    ckroot = cfg.checkpoint_dir
-    start_t = 0
-    if ckroot:
-        ck = ic.latest_complete(ckroot, "lpa")
-        if ck is not None and ic.validate(ck, info, nparts):
-            t0 = time.time()
-            if ic.restore_job(spark, pack_dir, nparts,
-                              ic.iter_dir(ckroot, "lpa", ck["t"]),
-                              f"lown_{ck['t']}"):
-                start_t = min(int(ck["t"]), max_iter)
-                metrics.record(kind="lpa_resume", iter=start_t,
-                               wall_s=time.time() - t0,
-                               mode="csr_sharded_lpa")
+        from vite_spark.runtime import iter_checkpoint as ic
 
-    try:
+        ckroot = cfg.checkpoint_dir
+        start_t = 0
+        if ckroot:
+            ck = ic.latest_complete(ckroot, "lpa")
+            if ck is not None and ic.validate(ck, info, nparts):
+                t0 = time.time()
+                if ic.restore_job(spark, pack_dir, nparts,
+                                  ic.iter_dir(ckroot, "lpa", ck["t"]),
+                                  f"lown_{ck['t']}"):
+                    start_t = min(int(ck["t"]), max_iter)
+                    metrics.record(kind="lpa_resume", iter=start_t,
+                                   wall_s=time.time() - t0,
+                                   mode="csr_sharded_lpa")
+
         t_final = max(start_t, 1)
         for t in range(start_t + 1, max_iter + 1):
             t_final = t
@@ -239,32 +228,7 @@ def csr_lpa(spark, edges, max_iter, cfg, metrics):
                            mode="csr_sharded_lpa")
             if changed == 0:
                 break
+        return _emit_own(spark, pack_dir, nparts, "id long, label long",
+                         [("label", f"lown_{t_final}")])
 
-        def emit(pdf_iter):
-            import pandas as pd
-
-            for pdf in pdf_iter:
-                for pid in pdf["pid"]:
-                    pid = int(pid)
-                    own = np.load(os.path.join(pack_dir, f"own_{pid}.npy"),
-                                  mmap_mode="r")
-                    if len(own) == 0:
-                        continue
-                    lab = np.load(os.path.join(
-                        pack_dir, f"lown_{t_final}_{pid}.npy"))
-                    yield pd.DataFrame({"id": own, "label": lab})
-
-        out = _pid_frame(spark, nparts).mapInPandas(
-            emit, schema="id long, label long"
-        ).localCheckpoint(eager=True)
-    finally:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
-        else:
-            for f in os.listdir(pack_dir):
-                if f.startswith(LPA_TRANSIENT_PREFIXES):
-                    try:
-                        os.remove(os.path.join(pack_dir, f))
-                    except OSError:
-                        pass
-    return out
+    return _run_packed(spark, edges, cfg, LPA_TRANSIENT_PREFIXES, step)

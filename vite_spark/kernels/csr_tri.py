@@ -220,40 +220,48 @@ def _prepare_tri_pack(spark, edges, cfg, nparts):
     # oriented range-boundary sample and the pack job each consume it,
     # and without the cache each re-runs the whole upstream derivation
     # (3/4 interleaved-pair win, median −35% on q_triangles_total).
-    # Released alongside ranks/d2 — never outlives the pack build.
+    # Released alongside ranks/d2 — never outlives the pack build, also
+    # when it fails (a fresh temporary pack is then removed too).
     e = (edges.select("src", "dst")
          .filter(F.col("src") != F.col("dst")).distinct().persist())
-    d2, ranks, dstats = _rank_by_degree(spark, e, nparts)
-    ranks = ranks.persist()
-    if cfg.shuffle_partitions is None:
-        # scale-adaptive pack partition count (guide §2). The count
-        # job's work is the WEDGE probe, not an edge gather, so the cap
-        # is driven by the wedge-volume upper bound Σ C(deg, 2)
-        # (computed inside the rank job's count pass — no extra job)
-        # alongside |oriented| = Σdeg/2 — a small-edge graph with heavy
-        # wedges keeps its parallelism
-        from vite_spark.config import adaptive_pack_nparts
+    d2 = ranks = None
+    try:
+        d2, ranks, dstats = _rank_by_degree(spark, e, nparts)
+        ranks = ranks.persist()
+        if cfg.shuffle_partitions is None:
+            # scale-adaptive pack partition count (guide §2). The count
+            # job's work is the WEDGE probe, not an edge gather, so the cap
+            # is driven by the wedge-volume upper bound Σ C(deg, 2)
+            # (computed inside the rank job's count pass — no extra job)
+            # alongside |oriented| = Σdeg/2 — a small-edge graph with heavy
+            # wedges keeps its parallelism
+            from vite_spark.config import adaptive_pack_nparts
 
-        work = max(dstats["sum_deg"] // 2, dstats["wedges_est"])
-        nparts = adaptive_pack_nparts(nparts, work)
-    oriented = (
-        e.join(ranks.select(F.col("id").alias("src"),
-                            F.col("rk").alias("rs")), "src")
-        .join(ranks.select(F.col("id").alias("dst"),
-                           F.col("rk").alias("rd")), "dst")
-        .filter(F.col("rs") < F.col("rd"))
-        .select(F.col("rs").alias("src"), F.col("rd").alias("dst"),
-                F.lit(1.0).alias("weight"))
-    )
-    oriented = oriented.repartitionByRange(nparts, "src")
-    # the range partitioner may collapse to fewer partitions on small
-    # inputs — the pack's file set is per ACTUAL partition
-    nparts = oriented.rdd.getNumPartitions()
-    info = pack_csr_partitions_sharded(oriented, pack_dir, nparts)
-    _build_probe_keys(spark, pack_dir, nparts)
-    ranks.unpersist()
-    d2.unpersist()
-    e.unpersist()
+            work = max(dstats["sum_deg"] // 2, dstats["wedges_est"])
+            nparts = adaptive_pack_nparts(nparts, work)
+        oriented = (
+            e.join(ranks.select(F.col("id").alias("src"),
+                                F.col("rk").alias("rs")), "src")
+            .join(ranks.select(F.col("id").alias("dst"),
+                               F.col("rk").alias("rd")), "dst")
+            .filter(F.col("rs") < F.col("rd"))
+            .select(F.col("rs").alias("src"), F.col("rd").alias("dst"),
+                    F.lit(1.0).alias("weight"))
+        )
+        oriented = oriented.repartitionByRange(nparts, "src")
+        # the range partitioner may collapse to fewer partitions on small
+        # inputs — the pack's file set is per ACTUAL partition
+        nparts = oriented.rdd.getNumPartitions()
+        info = pack_csr_partitions_sharded(oriented, pack_dir, nparts)
+        _build_probe_keys(spark, pack_dir, nparts)
+    except BaseException:
+        if cleanup:
+            shutil.rmtree(pack_dir, ignore_errors=True)
+        raise
+    finally:
+        for df in (ranks, d2, e):
+            if df is not None:
+                df.unpersist()
     if not cleanup:
         with open(os.path.join(pack_dir, "manifest.json"), "w") as fh:
             json.dump({"info": info, "nparts": nparts}, fh)
