@@ -1,4 +1,4 @@
-"""Checkpoint/resume for the packed PageRank / LPA / CC kernels
+"""Checkpoint/resume for the packed PageRank / LPA / CC / BFS kernels
 (runtime/iter_checkpoint.py): a run killed mid-iteration resumes from the
 last _COMPLETE-marked state and finishes with results identical to an
 uninterrupted run — labels exactly equal, ranks equal to ~ulp (the
@@ -11,8 +11,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from vite_spark import fixtures as fx
+from vite_spark.algos.bfs import shortest_paths
 from vite_spark.algos.components import connected_components
 from vite_spark.algos.lpa import label_propagation
 from vite_spark.algos.pagerank import pagerank
@@ -181,3 +183,49 @@ def test_checkpoint_every_interval(spark, tmp_path):
         metrics=m))
     assert got == ref
     assert _iters(m, "lpa_superstep") == [5, 6, 7]
+
+
+@pytest.mark.parametrize("algo", ["cc", "lpa"])
+def test_resume_beyond_max_iter(spark, tmp_path, algo):
+    """A checkpoint newer than ``max_iter`` stands in for state
+    ``max_iter`` (PageRank's rule): no iteration runs, and the restored
+    labels are emitted."""
+    fn = {"cc": connected_components, "lpa": label_propagation}[algo]
+    edges = _edges(spark, seed=41)
+    ck = str(tmp_path / f"ck_{algo}_past")
+    cfg = EngineConfig(checkpoint_dir=ck, checkpoint_every=1)
+    ref = _map(fn(spark, edges, max_iter=8, cfg=cfg))
+    assert ic.latest_complete(ck, algo)["t"] > 3
+    m = MetricsCollector()
+    got = _map(fn(spark, edges, max_iter=3, cfg=cfg, metrics=m))
+    assert got == ref
+    assert _iters(m, f"{algo}_resume") == [3]
+    assert not _iters(m, f"{algo}_superstep")
+
+
+def _dists(df):
+    return {(r["id"], r["landmark"]): r["dist"] for r in df.collect()}
+
+
+def test_bfs_resume_identical_distances(spark, tmp_path):
+    """BFS state is an (nown, L) matrix: the restore keeps its shape, and
+    a checkpoint of other landmarks is not resumed."""
+    edges = _edges(spark, seed=43, nv=600, ne=900)
+    ids = sorted(r["src"] for r in edges.select("src").distinct().collect())
+    lms = [ids[0], ids[len(ids) // 2], ids[-1]]
+    ref = _dists(shortest_paths(spark, edges, lms))
+    ck = str(tmp_path / "ck_bfs")
+    cfg = EngineConfig(checkpoint_dir=ck)
+    shortest_paths(spark, edges, lms, max_iter=2, cfg=cfg).count()
+    assert ic.latest_complete(ck, "bfs")["t"] == 2
+
+    m = MetricsCollector()
+    got = _dists(shortest_paths(spark, edges, lms, cfg=cfg, metrics=m))
+    assert got == ref
+    assert _iters(m, "bfs_resume") == [2]
+    assert _iters(m, "bfs_superstep")[0] == 3
+
+    m = MetricsCollector()
+    other = _dists(shortest_paths(spark, edges, lms[:2], cfg=cfg, metrics=m))
+    assert other == {k: v for k, v in ref.items() if k[1] in lms[:2]}
+    assert not _iters(m, "bfs_resume")

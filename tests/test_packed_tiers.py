@@ -1,11 +1,13 @@
-"""Tier equivalence of the packed PageRank and CC kernels, and input pins
-and temporary packs released when the tier after the gate fails.
+"""Tier equivalence of the route-pack kernels (PageRank, CC, LPA,
+BFS/SSSP), the tier rows ``_run_packed`` records, and input pins and
+temporary packs released when the tier after the gate fails.
 
-PageRank and CC each run one sparse-id input through their three tiers:
-the single-task tier (a one-partition pack: ``shuffle_partitions=1``),
-the sharded job loop (``shuffle_partitions=4``) and the join path
+Each kernel runs one sparse-id input through its three tiers: the
+single-task tier (a one-partition pack: ``shuffle_partitions=1``), the
+sharded job loop (``shuffle_partitions=4``) and the join path
 (``use_csr_kernel=False``). Ranks agree to float accumulation order;
-CC labels and per-iteration changed counts are equal."""
+CC/LPA labels, BFS/SSSP distances and per-iteration changed counts are
+equal."""
 
 from __future__ import annotations
 
@@ -16,11 +18,13 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from vite_spark.algos.bfs import shortest_paths
 from vite_spark.algos.centrality import katz_centrality
 from vite_spark.algos.components import connected_components
+from vite_spark.algos.lpa import label_propagation
 from vite_spark.algos.pagerank import pagerank
 from vite_spark.config import EngineConfig, resolve_scratch
-from vite_spark.kernels import csr_cc, csr_pr
+from vite_spark.kernels import csr_pr
 from vite_spark.runtime.metrics import MetricsCollector
 
 TIERS = {
@@ -56,7 +60,6 @@ def single_calls(monkeypatch):
         return real(*a, **k)
 
     monkeypatch.setattr(csr_pr, "_single_task", spy)
-    monkeypatch.setattr(csr_cc, "_single_task", spy)
     return calls
 
 
@@ -65,12 +68,20 @@ def edges(spark):
     return spark.createDataFrame(_rand_sym_edges(23))
 
 
+def _tiers(m):
+    return [(r["tier"], r["reason"]) for r in m.rows
+            if r.get("kind") == "tier"]
+
+
 def _by_tier(run, single_calls):
+    """``run(cfg, metrics)`` in each tier, checking which tier ran."""
     out = {}
     for tier, cfg in TIERS.items():
         before = len(single_calls)
-        out[tier] = run(cfg)
+        m = MetricsCollector()
+        out[tier] = run(cfg, m)
         assert (len(single_calls) - before) == (tier == "single"), tier
+        assert _tiers(m) == ([] if tier == "join" else [(tier, None)]), tier
     return out
 
 
@@ -82,13 +93,15 @@ def _ranks(df, col):
 def test_pagerank_tiers_agree(spark, edges, single_calls, case):
     seeds = edges.select("src").limit(3).toPandas()["src"].tolist()
 
-    def run(cfg):
+    def run(cfg, m):
         if case == "katz":
-            return _ranks(katz_centrality(spark, edges, alpha=0.02, iters=8,
-                                          weighted=True, cfg=cfg), "score")
+            return _ranks(katz_centrality(
+                spark, edges, alpha=0.02, iters=8, weighted=True, cfg=cfg,
+                metrics=m), "score")
         return _ranks(pagerank(
             spark, edges, tol=0.0, max_iter=15, weighted=case == "weighted",
-            seeds=seeds if case == "ppr" else None, cfg=cfg), "rank")
+            seeds=seeds if case == "ppr" else None, cfg=cfg, metrics=m),
+            "rank")
 
     got = _by_tier(run, single_calls)
     for tier in ("sharded", "join"):
@@ -97,18 +110,95 @@ def test_pagerank_tiers_agree(spark, edges, single_calls, case):
                            rtol=1e-12, atol=1e-18), tier
 
 
-def test_cc_tiers_agree(spark, edges, single_calls):
-    def run(cfg):
-        m = MetricsCollector()
-        labels = {r["id"]: r["component"] for r in connected_components(
-            spark, edges, cfg=cfg, metrics=m).collect()}
-        return labels, [r["changed"] for r in m.rows
-                        if r.get("kind") == "cc_superstep"]
+def _labels_and_changed(spark, edges, cfg, m, algo, max_iter=20):
+    fn, col = {"cc": (connected_components, "component"),
+               "lpa": (label_propagation, "label")}[algo]
+    labels = {r["id"]: r[col] for r in fn(
+        spark, edges, max_iter=max_iter, cfg=cfg, metrics=m).collect()}
+    return labels, [r["changed"] for r in m.rows
+                    if r.get("kind") == f"{algo}_superstep"]
 
-    got = _by_tier(run, single_calls)
+
+def test_cc_tiers_agree(spark, edges, single_calls):
+    got = _by_tier(
+        lambda cfg, m: _labels_and_changed(spark, edges, cfg, m, "cc"),
+        single_calls)
     assert got["sharded"] == got["single"] == got["join"]
     assert len(set(got["single"][0].values())) > 1
     assert got["single"][1][-1] == 0 and len(got["single"][1]) > 1
+
+
+def test_lpa_tiers_agree(spark, edges, single_calls):
+    got = _by_tier(
+        lambda cfg, m: _labels_and_changed(spark, edges, cfg, m, "lpa"),
+        single_calls)
+    assert got["sharded"] == got["single"] == got["join"]
+    assert len(set(got["single"][0].values())) > 1
+    assert len(got["single"][1]) > 1
+
+
+@pytest.mark.parametrize("weighted", [False, True], ids=["bfs", "sssp"])
+def test_bfs_tiers_agree(spark, edges, single_calls, weighted):
+    lms = edges.select("src").distinct().orderBy("src").limit(3) \
+        .toPandas()["src"].tolist()
+
+    def run(cfg, m):
+        dists = {(r["id"], r["landmark"]): r["dist"] for r in shortest_paths(
+            spark, edges, lms, cfg=cfg, metrics=m, weighted=weighted)
+            .collect()}
+        return dists, [r["changed"] for r in m.rows
+                       if r.get("kind") == "bfs_superstep"]
+
+    got = _by_tier(run, single_calls)
+    assert got["sharded"] == got["single"]
+    # the join path counts newly reached pairs: the same per-iteration
+    # count for hop distances only (algos/bfs.py)
+    assert got["join"][0] == got["single"][0]
+    assert got["join"][1] == got["single"][1] or weighted
+    assert len(got["single"][0]) > len(lms)
+    assert got["single"][1][-1] == 0 and len(got["single"][1]) > 1
+
+
+@pytest.mark.parametrize("algo", ["cc", "lpa"])
+def test_max_iter_zero_is_identity(spark, edges, single_calls, algo):
+    got = _by_tier(
+        lambda cfg, m: _labels_and_changed(spark, edges, cfg, m, algo,
+                                           max_iter=0),
+        single_calls)
+    ids = {r["src"] for r in edges.select("src").collect()}
+    for tier, (labels, changed) in got.items():
+        assert labels == {v: v for v in ids} and changed == [], tier
+
+
+def test_tier_rows(spark, edges, monkeypatch):
+    from perfbench.trace import _is_superstep
+
+    def run(cfg, e=edges, fn=connected_components):
+        m = MetricsCollector()
+        fn(spark, e, cfg=cfg, metrics=m).collect()
+        return m
+
+    ne = edges.count()
+    for cfg, gate in ((EngineConfig(), ("single", ne, 1)),
+                      (TIERS["sharded"], ("sharded", ne, 4))):
+        assert [(r["tier"], r["ne"], r["nparts"]) for r in run(cfg).rows
+                if r.get("kind") == "tier"] == [gate]
+    open_edges = spark.createDataFrame(
+        pd.DataFrame({"src": [0, 1], "dst": [1, 2], "weight": [1.0, 1.0]}))
+    assert _tiers(run(EngineConfig(), open_edges)) == [("join", "open")]
+    assert _tiers(run(TIERS["sharded"], open_edges)) == [("join", "open")]
+    # a kernel's own precondition, in both tiers: LPA's integer weights,
+    # BFS's landmark that is no vertex
+    frac = spark.createDataFrame(_rand_sym_edges(23).assign(weight=1.5))
+    for cfg in (EngineConfig(), TIERS["sharded"]):
+        assert _tiers(run(cfg, frac, label_propagation)) == \
+            [("join", "kernel")]
+        assert _tiers(run(cfg, fn=lambda s, e, **k: shortest_paths(
+            s, e, [-1], **k))) == [("join", "kernel")]
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://elsewhere:7077")
+    assert _tiers(run(EngineConfig())) == [("join", "non_local")]
+    # the tier row is no superstep: perfbench's counters skip it
+    assert not _is_superstep("tier")
 
 
 def _persistent(spark):

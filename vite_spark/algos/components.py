@@ -46,8 +46,25 @@ def connected_components(
         if res is not None:
             return res
 
+    return _label_fixpoint(
+        spark, edges, max_iter, cfg, metrics, "component", "cc_superstep",
+        lambda nbr: nbr.groupBy(F.col("src").alias("id"))
+        .agg(F.min("component").alias("new")),
+        F.least)
+
+
+def _label_fixpoint(spark, edges, max_iter, cfg, metrics, col, kind,
+                    update, merge, weighted=False):
+    """The join path of ``connected_components`` and
+    ``label_propagation``: labels start as the vertex ids; per superstep
+    ``update(nbr)``, over nbr = the self-loop-free edges (src, dst[,
+    weight]) joined with their dst's label ``col``, gives (id, new) for
+    the srcs it reaches, and ``merge(label, new)`` the next label (new is
+    null for the others). One ``kind`` row per superstep; stops when no
+    label changes. The label table is broadcast up to
+    ``cfg.broadcast_max_rows`` vertices."""
     e = (
-        edges.select("src", "dst")
+        edges.select("src", "dst", *(["weight"] if weighted else []))
         .filter(F.col("src") != F.col("dst"))
         .repartition(
             cfg.shuffle_partitions
@@ -63,38 +80,26 @@ def connected_components(
         .persist()
     )
     nv = verts.count()
-    labels = verts.select("id", F.col("id").alias("component")).persist()
-
-    def _mb(df):
-        return F.broadcast(df) if nv <= cfg.broadcast_max_rows else df
+    labels = verts.select("id", F.col("id").alias(col)).persist()
 
     for it in range(1, max_iter + 1):
         t0 = time.time()
-        nbr_min = (
-            e.join(_mb(labels).select(F.col("id").alias("dst"), "component"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
+        cur = labels.select(F.col("id").alias("dst"), col)
+        new = update(e.join(
+            F.broadcast(cur) if nv <= cfg.broadcast_max_rows else cur, "dst"))
         new_labels = (
-            labels.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("component"), F.coalesce("nbr_min", F.col("component"))).alias(
-                    "component"
-                ),
-            )
+            labels.join(new, "id", "left")
+            .select("id", merge(F.col(col), F.col("new")).alias(col))
             .localCheckpoint(eager=True)
         )
         changed = (
-            new_labels.join(
-                labels.select("id", F.col("component").alias("old")), "id"
-            )
-            .filter(F.col("component") != F.col("old"))
+            new_labels.join(labels.select("id", F.col(col).alias("old")), "id")
+            .filter(F.col(col) != F.col("old"))
             .count()
         )
         labels.unpersist()
         labels = new_labels
-        metrics.record(kind="cc_superstep", iter=it, changed=changed,
+        metrics.record(kind=kind, iter=it, changed=changed,
                        wall_s=time.time() - t0)
         if changed == 0:
             break

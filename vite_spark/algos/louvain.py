@@ -361,6 +361,7 @@ def _csr_phase(
         pack_colors,
         pack_csr_partitions,
     )
+    from vite_spark.kernels.csr_pr import _purge
     from vite_spark.kernels.csr_sharded import (
         build_routes,
         csr_advance_sharded,
@@ -432,14 +433,9 @@ def _csr_phase(
                 {int(k): v for k, v in man["owners_of"].items()},
                 {int(k): v for k, v in man["rdrs_of"].items()},
             )
-            for f in os.listdir(pack_dir):
-                if f.startswith(("mvu_", "mvd_", "flw_", "cur_", "ost_",
-                                 "et_", "tm_", "mvc_", "colw_", "colr_",
-                                 "col_", "prc_", "rnk_", "lown_")):
-                    try:
-                        os.remove(os.path.join(pack_dir, f))
-                    except OSError:
-                        pass
+            _purge(pack_dir, ("mvu_", "mvd_", "flw_", "cur_", "ost_", "et_",
+                              "tm_", "mvc_", "colw_", "colr_", "col_", "prc_",
+                              "rnk_", "lown_"))
     if info is None:
         if sharded:
             # RANGE partitioning for the sharded kernel: Vite's 1-D block

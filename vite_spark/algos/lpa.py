@@ -8,10 +8,9 @@ Fixed max_iter with early stop when no label changes.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from vite_spark.algos.components import _label_fixpoint
 from vite_spark.config import EngineConfig
 from vite_spark.runtime.metrics import MetricsCollector
 
@@ -40,64 +39,13 @@ def label_propagation(
         if res is not None:
             return res
 
-    e = (
-        edges.select("src", "dst", "weight")
-        .filter(F.col("src") != F.col("dst"))
-        .repartition(
-            cfg.shuffle_partitions
-            or int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-            "dst",
-        )
-        .persist()
-    )
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
-    nv = verts.count()
-    labels = verts.select("id", F.col("id").alias("label")).persist()
-
-    def _mb(df):
-        return F.broadcast(df) if nv <= cfg.broadcast_max_rows else df
-
-    for it in range(1, max_iter + 1):
-        t0 = time.time()
-        votes = (
-            e.join(_mb(labels).select(F.col("id").alias("dst"), "label"), "dst")
-            .groupBy("src", "label")
-            .agg(F.sum("weight").alias("vote"))
-        )
-        # ordered argmax: max vote, tie → min label
-        best = (
-            votes.groupBy(F.col("src").alias("id"))
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("vote"), (-F.col("label")).alias("neg"), F.col("label")
-                    )
-                ).alias("m")
-            )
-            .select("id", F.col("m.label").alias("new_label"))
-        )
-        new_labels = (
-            labels.join(best, "id", "left")
-            .select("id", F.coalesce("new_label", F.col("label")).alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.join(labels.select("id", F.col("label").alias("old")), "id")
-            .filter(F.col("label") != F.col("old"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        metrics.record(kind="lpa_superstep", iter=it, changed=changed,
-                       wall_s=time.time() - t0)
-        if changed == 0:
-            break
-
-    e.unpersist()
-    verts.unpersist()
-    return labels
+    # ordered argmax: max vote, tie → min label
+    return _label_fixpoint(
+        spark, edges, max_iter, cfg, metrics, "label", "lpa_superstep",
+        lambda nbr: nbr.groupBy("src", "label")
+        .agg(F.sum("weight").alias("vote"))
+        .groupBy(F.col("src").alias("id"))
+        .agg(F.max(F.struct(F.col("vote"), (-F.col("label")).alias("neg"),
+                            F.col("label"))).alias("m"))
+        .select("id", F.col("m.label").alias("new")),
+        lambda label, new: F.coalesce(new, label), weighted=True)

@@ -60,6 +60,7 @@ import time
 import numpy as np
 
 from vite_spark.kernels.csr import _atomic_save, _pid_frame
+from vite_spark.kernels.csr_pr import _emit_own, _purge
 from vite_spark.kernels.csr_sharded import (
     _load_bounds,
     _req_of,
@@ -220,12 +221,7 @@ def _prepare_core_pack(spark, edges_simple, cfg, nparts):
                     {int(k): v for k, v in man["owners_of"].items()},
                     {int(k): v for k, v in man["rdrs_of"].items()},
                 )
-                for f in os.listdir(pack_dir):
-                    if f.startswith(CORE_TRANSIENT_PREFIXES):
-                        try:
-                            os.remove(os.path.join(pack_dir, f))
-                        except OSError:
-                            pass
+                _purge(pack_dir, CORE_TRANSIENT_PREFIXES)
     if info is None:
         # pin across the build consumers (count, range sample, pack job):
         # each re-ran the upstream simplify + derivation on an
@@ -313,25 +309,8 @@ def csr_coreness(spark, edges_simple, max_iter, cfg, metrics,
                 # steady per-superstep cost on any input
                 break
 
-        def emit(pdf_iter):
-            import pandas as pd
-
-            for pdf in pdf_iter:
-                for pid in pdf["pid"]:
-                    pid = int(pid)
-                    own = np.load(os.path.join(pack_dir, f"own_{pid}.npy"),
-                                  mmap_mode="r")
-                    if len(own) == 0:
-                        continue
-                    c = np.load(os.path.join(
-                        pack_dir, f"hco_{s_final}_{pid}.npy"))
-                    yield pd.DataFrame(
-                        {"id": np.asarray(own, np.int64),
-                         "coreness": np.asarray(c, np.int64)})
-
-        out = _pid_frame(spark, nparts).mapInPandas(
-            emit, schema="id long, coreness long"
-        ).localCheckpoint(eager=True)
+        out = _emit_own(spark, pack_dir, nparts, "id long, coreness long",
+                        [("coreness", f"hco_{s_final}")])
     finally:
         if cleanup:
             shutil.rmtree(pack_dir, ignore_errors=True)

@@ -193,4 +193,5 @@ def csr_hits(spark, edges, iters, weighted, cfg, metrics):
                          "id long, hv double, av double",
                          [("hv", f"hown_{iters}"), ("av", f"aown_{iters}")])
 
-    return _run_packed(spark, edges, cfg, HITS_TRANSIENT_PREFIXES, step)
+    return _run_packed(spark, edges, cfg, metrics, HITS_TRANSIENT_PREFIXES,
+                       step)

@@ -1,66 +1,32 @@
-"""Packed-CSR synchronous label propagation on the sharded pack.
+"""Packed-CSR synchronous label propagation as an owner-authored sweep
+(kernels/csr_pr.py ``_owner_sweep`` holds the exchange, both tiers and
+the driver loop). Synchronous LPA state — like PageRank's and unlike
+Louvain's — is fully determined by the previous iteration's labels: no
+community aggregates, no flow partials, no replay.
 
-Same infrastructure as the packed PageRank (kernels/csr_pr.py): the
-sharded Louvain pack (range ownership, sorted per-partition universe ux,
-pack-time req_{owner}_{reader} interest sets) plus the observation that
-synchronous LPA state — like PageRank's and unlike Louvain's — is fully
-determined by the previous iteration's labels: no community aggregates,
-no flow partials, no replay.
-
-The exchange is even simpler than PageRank's: labels are OWNER-authored,
-so each iteration every partition ships exactly ONE array — its post-
-iteration own-label vector `lown_{t}_{p}` (O(nv/p) bytes; Σ = nv per
-iteration) — and readers assemble their universe view by slicing each
-owner's vector through the static req sets into the contiguous
-universe spans (the same ascending-id-run invariant the Louvain dense
-advance uses). One job per iteration, task p:
-
-1. **Gather** curr over U_p at t-1 (identity at t=1) from the owners'
-   `lown_{t-1}_{q}` mmaps — page-touches of the referenced entries only.
-2. **Sweep**: drop self-loop rows, group rows by (src, tracked-label)
-   via the adaptive radix/timsort grouping the Louvain kernels use
-   (csr._grouped_segments), sum weights per group, then per src take the
-   max-vote label with min-label tie-break (tkeys sorted ⇒ min tracked
-   index ≡ min label — the algos/lpa.py ordered-argmax discipline).
-   Chunked at src boundaries (result-invariant) to bound transients.
-3. Save `lown_{t}_{p}`; the changed-label count rides the sentinel row
-   (known same-job — LPA needs no one-job-late protocol).
+Operator (identity labels at t = 0): drop self-loop rows, group rows by
+(src, tracked-label) via the adaptive radix/timsort grouping the Louvain
+kernels use (csr._grouped_segments), sum weights per group, then per src
+take the max-vote label with min-label tie-break (tkeys sorted ⇒ min
+tracked index ≡ min label — the algos/lpa.py ordered-argmax discipline).
+A src with no voting row keeps its label. Chunked at src boundaries
+(result-invariant) to bound transients.
 
 Exactness domain: with integer-valued edge weights every vote sum is
 exact in both this kernel and the join path (doubles < 2^53), so labels
 are IDENTICAL; with non-integer weights a float-tied vote could resolve
-differently across summation orders, so the dispatch auto-routes
-non-integer-weight graphs to the join path (same gate as the sharded
-Louvain kernel, r3 ADVICE #1). Preconditions otherwise as csr_pr:
-local master, vertex-closed input (labels of every dst must be owned
-somewhere), else None → join path.
-
-Reference analog: Vite has no LPA; the owner-authored dense exchange is
-its fillRemoteCommunities send shape (/root/reference/louvain.cpp:
-2583-2954) at the always-dense operating point.
+differently across summation orders, so both tiers send non-integer-
+weight graphs to the join path (same gate as the sharded Louvain kernel,
+r3 ADVICE #1). The other fallbacks: a non-local master, and an input
+that is not vertex-closed (labels of every dst must be owned somewhere).
 """
 
 from __future__ import annotations
 
-import os
-import time
-
 import numpy as np
 
-from vite_spark.kernels.csr import (
-    _atomic_save,
-    _grouped_segments,
-    _pid_frame,
-    _take,
-)
-from vite_spark.kernels.csr_pr import _emit_own, _run_packed
-from vite_spark.kernels.csr_sharded import (
-    _load_bounds,
-    _req_of,
-    _ux_owner_span,
-)
-
-LPA_TRANSIENT_PREFIXES = ("lown_",)
+from vite_spark.kernels.csr import _grouped_segments, _take
+from vite_spark.kernels.csr_pr import OwnerSweep, _identity, _owner_sweep
 
 # rows per sweep sub-call, cut at src boundaries (per-src votes are
 # independent, so chunking is result-invariant — same rationale as
@@ -88,147 +54,34 @@ def _lpa_votes(srcl, c_dst, w, ntrk, nown):
     return g_srcidx[bounds], win
 
 
-def _lpa_job(spark, pack_dir, nparts, t, routing, ckpt_dir=None):
-    """Iteration ``t``: gather labels at t-1, vote, save lown_{t}; one
-    sentinel row (pid, changed) per partition. When ``ckpt_dir`` is set,
-    each task also copies its new state vector there
-    (runtime/iter_checkpoint.py layout; the driver commits the marker
-    after the job returns)."""
-    owners_of, _ = routing
-
-    def run(pdf_iter):
-        import pandas as pd
-
-        for pdf in pdf_iter:
-            for pid in pdf["pid"]:
-                pid = int(pid)
-                own = np.load(os.path.join(pack_dir, f"own_{pid}.npy"),
-                              mmap_mode="r")
-                if len(own) == 0:
-                    yield pd.DataFrame(
-                        {"pid": [pid], "changed": [np.int64(0)]})
-                    continue
-                ux = np.load(os.path.join(pack_dir, f"ux_{pid}.npy"),
-                             mmap_mode="r")
-                own_pos = np.searchsorted(ux, own).astype(np.int32)
-
-                # --- gather curr over U_p at t-1 ---
-                if t == 1:
-                    curr = np.asarray(ux, dtype=np.int64).copy()
-                else:
-                    starts, bpids = _load_bounds(pack_dir)
-                    curr = np.empty(len(ux), np.int64)
-                    for q in owners_of.get(pid, ()):
-                        lo, hi = _ux_owner_span(ux, starts, bpids, q)
-                        req = _req_of(pack_dir, q, pid)
-                        lq = np.load(os.path.join(
-                            pack_dir, f"lown_{t - 1}_{int(q)}.npy"),
-                            mmap_mode="r")
-                        curr[lo:hi] = lq[req]
-                old_own = curr[own_pos].copy()
-
-                # --- sweep (self-loop rows excluded from voting) ---
-                srcl = np.load(os.path.join(
-                    pack_dir, f"srcl_{pid}.npy"), mmap_mode="r")
-                dstl = np.load(os.path.join(
-                    pack_dir, f"dstl_{pid}.npy"), mmap_mode="r")
-                w = np.load(os.path.join(pack_dir, f"w_{pid}.npy"),
-                            mmap_mode="r")
-                non_self = dstl != own_pos[srcl]
-                if not non_self.all():
-                    srcl = np.asarray(srcl)[non_self]
-                    dstl = np.asarray(dstl)[non_self]
-                    w = np.asarray(w)[non_self]
-                new_own = old_own.copy()
-                n = len(srcl)
-                if n:
-                    tkeys, tinv = np.unique(curr, return_inverse=True)
-                    cidx = tinv.astype(np.int32)
-                    ntrk = len(tkeys)
-                    lo_r = 0
-                    while lo_r < n:
-                        hi_r = min(lo_r + _CHUNK_ROWS, n)
-                        if hi_r < n:
-                            hi_r = int(np.searchsorted(
-                                srcl, srcl[hi_r], side="left"))
-                            if hi_r <= lo_r:
-                                hi_r = int(np.searchsorted(
-                                    srcl, srcl[lo_r], side="right"))
-                        s_idx, win = _lpa_votes(
-                            srcl[lo_r:hi_r], cidx[dstl[lo_r:hi_r]],
-                            w[lo_r:hi_r], ntrk, len(own),
-                        )
-                        new_own[s_idx] = tkeys[win]
-                        lo_r = hi_r
-                changed = int((new_own != old_own).sum())
-                _atomic_save(
-                    os.path.join(pack_dir, f"lown_{t}_{pid}.npy"), new_own)
-                if ckpt_dir is not None:
-                    from vite_spark.runtime.iter_checkpoint import \
-                        save_shard
-                    save_shard(ckpt_dir, pid, own, new_own)
-                old = t - 2
-                if old >= 1:
-                    try:
-                        os.remove(os.path.join(
-                            pack_dir, f"lown_{old}_{pid}.npy"))
-                    except OSError:
-                        pass
-                yield pd.DataFrame(
-                    {"pid": [pid], "changed": [np.int64(changed)]})
-
-    return _pid_frame(spark, nparts).mapInPandas(
-        run, schema="pid int, changed long"
-    )
+def _lpa_sweep(curr, own_pos, srcl, dstl, seg, w):
+    """The weighted vote over the non-self rows (module docstring)."""
+    new_own = curr[own_pos]
+    non_self = dstl != own_pos[srcl]
+    if not non_self.all():
+        srcl, dstl, w = (np.asarray(a)[non_self] for a in (srcl, dstl, w))
+    n = len(srcl)
+    if n:
+        tkeys, tinv = np.unique(curr, return_inverse=True)
+        cidx = tinv.astype(np.int32)
+        lo = 0
+        while lo < n:
+            hi = min(lo + _CHUNK_ROWS, n)
+            if hi < n:
+                hi = int(np.searchsorted(srcl, srcl[hi], side="left"))
+                if hi <= lo:
+                    hi = int(np.searchsorted(srcl, srcl[lo], side="right"))
+            s_idx, win = _lpa_votes(srcl[lo:hi], cidx[dstl[lo:hi]],
+                                    w[lo:hi], len(tkeys), len(own_pos))
+            new_own[s_idx] = tkeys[win]
+            lo = hi
+    return new_own
 
 
 def csr_lpa(spark, edges, max_iter, cfg, metrics):
     """Packed-CSR LPA driver. Returns the (id, label) DataFrame, or None
     when a precondition fails (caller runs the join path)."""
-
-    def step(pack_dir, nparts, info, routing):
-        if not info["w_integer"]:
-            # float-tied votes could differ across summation orders —
-            # join path
-            return None
-
-        from vite_spark.runtime import iter_checkpoint as ic
-
-        ckroot = cfg.checkpoint_dir
-        start_t = 0
-        if ckroot:
-            ck = ic.latest_complete(ckroot, "lpa")
-            if ck is not None and ic.validate(ck, info, nparts):
-                t0 = time.time()
-                if ic.restore_job(spark, pack_dir, nparts,
-                                  ic.iter_dir(ckroot, "lpa", ck["t"]),
-                                  f"lown_{ck['t']}"):
-                    start_t = min(int(ck["t"]), max_iter)
-                    metrics.record(kind="lpa_resume", iter=start_t,
-                                   wall_s=time.time() - t0,
-                                   mode="csr_sharded_lpa")
-
-        t_final = max(start_t, 1)
-        for t in range(start_t + 1, max_iter + 1):
-            t_final = t
-            ck_dir = None
-            if ckroot and t % max(cfg.checkpoint_every, 1) == 0:
-                ck_dir = ic.prepare_iter(ckroot, "lpa", t)
-            t0 = time.time()
-            sent = _lpa_job(spark, pack_dir, nparts, t, routing,
-                            ckpt_dir=ck_dir).collect()
-            changed = int(sum(r["changed"] for r in sent))
-            if ck_dir is not None:
-                ic.mark_complete(ckroot, "lpa", t, {
-                    "changed": changed, "nv": int(info["nv"]),
-                    "ne": int(info["ne"]), "nparts": nparts})
-            metrics.record(kind="lpa_superstep", iter=t, changed=changed,
-                           wall_s=time.time() - t0,
-                           edges_processed=int(info["ne"]),
-                           mode="csr_sharded_lpa")
-            if changed == 0:
-                break
-        return _emit_own(spark, pack_dir, nparts, "id long, label long",
-                         [("label", f"lown_{t_final}")])
-
-    return _run_packed(spark, edges, cfg, LPA_TRANSIENT_PREFIXES, step)
+    return _owner_sweep(spark, edges, max_iter, cfg, metrics, OwnerSweep(
+        algo="lpa", prefix="lown", mode="csr_sharded_lpa",
+        out="id long, label long", init=_identity, sweep=_lpa_sweep,
+        weights=True, integer_weights=True))

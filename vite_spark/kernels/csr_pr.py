@@ -1,31 +1,56 @@
-"""Packed-CSR PageRank on the sharded pack (north-rule first-class op),
-plus the one runner every route-pack kernel (PageRank, CC, LPA, BFS,
-HITS) shares.
+"""The route-pack kernels' one runner and owner-authored sweep, plus
+packed-CSR PageRank (north-rule first-class op).
 
-The join+agg PageRank (algos/pagerank.py) is the cluster-correct shape,
-but on one box its per-iteration cost is a full edge-table shuffle join —
-measured 0.539 per-core scaling efficiency 4→16 (BENCH.md r4), bounded by
-shuffle machinery, not by the algorithm. This kernel re-expresses the
-iteration over the SAME sharded CSR pack the Louvain kernel uses
-(kernels/csr_sharded.py: 1-D range ownership, per-partition sorted
-universe ux, pack-time req_{owner}_{reader} interest sets), exploiting a
-property Louvain doesn't have: **PageRank state is fully determined by
-the previous iteration's inbound messages** — no community aggregates, no
-tracked pulls, no replay chains.
+Every route-pack kernel (PageRank, HITS, CC, LPA, BFS) iterates over the
+SAME sharded CSR pack the Louvain kernel uses (kernels/csr_sharded.py:
+1-D range ownership, per-partition sorted universe ux, pack-time
+req_{owner}_{reader} interest sets) through one runner, ``_run_packed``:
+local-master check, one input pin, one gate, pack build or reuse,
+cleanup, and one ``kind="tier"`` metrics row naming the tier that ran
+and why. Vite's DistGraph likewise runs one code path at any rank count:
+one rank simply owns [0, nv].
 
-Two tiers, one gate (``_run_packed``): a run whose pack would have one
-partition (``cfg.shuffle_partitions``, else the scale-adaptive count
-``adaptive_pack_nparts``), with no ``checkpoint_dir``, takes the
-single-task tier; every other run takes the sharded job loop.
+Gate: a run whose pack would have one partition (``cfg.shuffle_partitions``,
+else the scale-adaptive count ``adaptive_pack_nparts``), with no
+``checkpoint_dir``, takes the single-task tier; every other run takes the
+sharded job loop. A non-local master, an empty input, an input that is not
+vertex-closed, or a kernel's own precondition sends the run to the
+caller's join path (the runner returns None).
 
 - **Single task** (``_single_task``): ONE job maps the edge rows into one
   task, which lexsorts them into pack order and derives own/srcl/dstl
   exactly as a one-partition pack would (ux == own when vertex-closed,
-  the merge is the identity, there is no exchange), then runs the whole
-  recurrence in place. No range exchange, pack/route files or
-  per-iteration jobs. PageRank and CC share this prologue and its driver
-  side; each keeps only its recurrence.
-- **Sharded job loop**, per iteration ONE job; task p:
+  there is no exchange), then runs the whole recurrence in place. No
+  range exchange, pack/route files or per-iteration jobs.
+- **Sharded job loop**: one job per iteration, in one of two shapes.
+
+**Owner-authored sweep** (CC, LPA, BFS — ``OwnerSweep``): the state of a
+vertex at t is a function of the states at t-1 of the vertex and its
+out-neighbours, and the vertex's owner authors it. Each kernel supplies
+only ``init`` and ``sweep``; task p of job t:
+
+1. **Gather** curr over U_p at t-1 by slicing each owner's
+   ``{prefix}_{t-1}_{q}`` through the static req sets into the contiguous
+   universe spans (the ascending-id-run invariant the Louvain dense
+   advance uses); at t = 1 the kernel's ``init(ux)``. Exchange volume is
+   Σ_p |U_p| state rows per iteration — the ghost-set lower bound; the
+   owners' files are mmaps, so only referenced entries are touched.
+2. **Sweep**: ``sweep(curr, own_pos, srcl, dstl, seg, w)`` → new own
+   state. Pack rows are (src, dst)-sorted, so srcl is non-decreasing and
+   the src segments need no grouping sort; own = unique(src), so the
+   segments enumerate own densely (asserted).
+3. Save ``{prefix}_{t}_{p}`` (O(nv/p)) and the optional checkpoint shard,
+   drop ``{prefix}_{t-2}_{p}``; the changed count rides the sentinel row.
+
+The driver loop resumes from the newest valid checkpoint, stops at
+Σ changed == 0 or ``max_iter``, records one ``{algo}_superstep`` row per
+iteration and emits the last state (the identity at t = 0). The
+single-task tier runs the same ``init`` and ``sweep`` over the in-task
+CSR (ux == own), so its states and changed counts equal the sharded
+loop's. Reference analog: Vite's fillRemoteCommunities send shape
+(louvain.cpp:2583-2954) at the always-dense operating point.
+
+**PageRank** is merge + scatter instead, per iteration ONE job; task p:
 
   1. **Merge** r_{t-1} over own vertices: accumulate inbound
      contribution spans `prc_{t-1}_{w}_{p}` through the static
@@ -44,25 +69,27 @@ single-task tier; every other run takes the sharded job loop.
      ascending q-owned run of the sorted universe — same invariant the
      Louvain dense advance uses).
 
-Per-iteration exchange volume is Σ_p |U_p| floats (the ghost-set size —
-Vite's exchange lower bound), compute is O(edges/p) gathers + one
-bincount, per-partition memory O(nv/p + |U_p|). Nothing O(nv) on any
-worker and nothing but scalars on the driver, so the plan survives a
-100× scale-up the same way the Louvain sharded kernel does.
+The join+agg PageRank (algos/pagerank.py) is the cluster-correct shape,
+but on one box its per-iteration cost is a full edge-table shuffle join —
+measured 0.539 per-core scaling efficiency 4→16 (BENCH.md r4), bounded by
+shuffle machinery, not by the algorithm. PageRank state is fully
+determined by the previous iteration's inbound messages — no community
+aggregates, no tracked pulls, no replay chains. Per-iteration exchange
+volume is Σ_p |U_p| floats (the ghost-set size — Vite's exchange lower
+bound), compute is O(edges/p) gathers + one bincount, per-partition
+memory O(nv/p + |U_p|). Nothing O(nv) on any worker and nothing but
+scalars on the driver, so the plan survives a 100× scale-up the same way
+the Louvain sharded kernel does.
 
-Preconditions (caller falls back to the join path on None): local master
-(shared pack filesystem), vertex-closed input (every dst also a src —
-build_routes, resp. the single task's sentinel, detects this; open graphs
-have dangling mass the join path redistributes), non-empty edges.
+Vertex-closed input matters: every dst must also be a src (build_routes,
+resp. the single task's sentinel, detects this; open graphs have
+dangling mass the join path redistributes, and a dst that is never a src
+has no owner to author its state).
 
-Semantics match algos/pagerank.pagerank exactly (same damping/base/
-convergence contract; float sums differ only in accumulation order) —
-parity pytest-enforced, and the driver's `pagerank` oracle row runs this
-path at sf0.01. Reference analog: Vite has no PageRank; the exchange
-pattern mirrors its fillRemoteCommunities send shape
-(/root/reference/louvain.cpp:2583-2954) reused from csr_sharded.py.
-Vite's DistGraph likewise runs one code path at any rank count: one rank
-simply owns [0, nv].
+PageRank semantics match algos/pagerank.pagerank exactly (same
+damping/base/convergence contract; float sums differ only in
+accumulation order) — parity pytest-enforced, and the driver's
+`pagerank` oracle row runs this path at sf0.01.
 """
 
 from __future__ import annotations
@@ -72,6 +99,8 @@ import os
 import shutil
 import tempfile
 import time
+from collections.abc import Callable
+from dataclasses import dataclass, field
 
 import numpy as np
 
@@ -179,10 +208,17 @@ def _purge(pack_dir, prefixes):
                 pass
 
 
-def _run_packed(spark, edges, cfg, prefixes, step, single=None):
+class _Fallback(Exception):
+    """A tier cannot take this input; ``args[0]`` is the reason
+    (``empty``/``open``/``kernel``). ``_run_packed`` records it and
+    returns None, so the caller's join path runs."""
+
+
+def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None):
     """The route-pack kernels' one runner. Returns None when the caller's
     join path must run instead: a non-local master (the pack is a shared
-    filesystem), an empty input, or an input that is not vertex-closed.
+    filesystem), an empty input, an input that is not vertex-closed, or a
+    tier raising ``_Fallback`` (a kernel's own precondition).
 
     Gate (kernels with a single-task tier pass ``single(edges)``): the
     pack's partition count is ``cfg.shuffle_partitions``, else
@@ -191,7 +227,10 @@ def _run_packed(spark, edges, cfg, prefixes, step, single=None):
     builds (or reopens the cached) pack and returns
     ``step(pack_dir, nparts, info, routing)``; afterwards the pack is
     removed, or — a cached pack — only the run's files starting with
-    ``prefixes``.
+    ``prefixes``. Records one ``kind="tier"`` row: ``tier``
+    (single/sharded/join), ``reason`` (non_local/empty/open/kernel, join
+    only) and the gate inputs ``nparts`` and ``ne`` (the gate's count,
+    else the pack's; None when neither exists).
 
     One pin spans every consumer of ``edges`` (gate count, single task or
     range-boundary sample + pack job): without it each re-ran the
@@ -199,47 +238,64 @@ def _run_packed(spark, edges, cfg, prefixes, step, single=None):
     q_pagerank 4.73 s vs 6.50 s, packed-CC query 4.66 s vs 7.52 s
     medians, every pair wins). Skipped when the caller already cached
     the table."""
-    if not spark.sparkContext.master.startswith("local"):
-        return None
     nparts = cfg.shuffle_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
+    gate = {"ne": None, "nparts": nparts}
+
+    def tier(name, reason=None):
+        metrics.record(kind="tier", tier=name, reason=reason, **gate)
+
+    if not spark.sparkContext.master.startswith("local"):
+        tier("join", "non_local")
+        return None
     pin = None
     if not edges.is_cached:
         pin = edges = edges.persist()
     try:
-        ne = None
-        if single is not None:
-            if cfg.shuffle_partitions is None:
-                from vite_spark.config import adaptive_pack_nparts
+        try:
+            if single is not None:
+                if cfg.shuffle_partitions is None:
+                    from vite_spark.config import adaptive_pack_nparts
 
-                ne = edges.count()
-                if ne == 0:
-                    return None
-                nparts = adaptive_pack_nparts(nparts, ne)
-            if nparts == 1 and not cfg.checkpoint_dir:
-                return single(edges)
-        prep = _prepare_pack(spark, edges, cfg, nparts, ne_precounted=ne)
-    finally:
-        if pin is not None:
-            pin.unpersist()
-    if prep is None:
+                    gate["ne"] = ne = edges.count()
+                    if ne == 0:
+                        raise _Fallback("empty")
+                    gate["nparts"] = nparts = adaptive_pack_nparts(nparts, ne)
+                if nparts == 1 and not cfg.checkpoint_dir:
+                    out = single(edges)
+                    tier("single")
+                    return out
+            prep = _prepare_pack(spark, edges, cfg, nparts,
+                                 ne_precounted=gate["ne"])
+        finally:
+            if pin is not None:
+                pin.unpersist()
+        if prep is None:
+            raise _Fallback("open")
+        pack_dir, nparts, info, routing, cleanup = prep
+        if gate["ne"] is None:
+            gate["ne"] = int(info["ne"])
+        try:
+            if info["nv"] == 0:
+                raise _Fallback("empty")
+            out = step(pack_dir, nparts, info, routing)
+        finally:
+            if cleanup:
+                shutil.rmtree(pack_dir, ignore_errors=True)
+            else:
+                _purge(pack_dir, prefixes)
+    except _Fallback as fb:
+        tier("join", fb.args[0])
         return None
-    pack_dir, nparts, info, routing, cleanup = prep
-    try:
-        if info["nv"] == 0:
-            return None
-        return step(pack_dir, nparts, info, routing)
-    finally:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
-        else:
-            _purge(pack_dir, prefixes)
+    tier("sharded")
+    return out
 
 
-def _emit_own(spark, pack_dir, nparts, schema, states):
+def _emit_own(spark, pack_dir, nparts, schema, states, rows=None):
     """One row per owned vertex: ``id`` plus, for each (column, prefix)
-    of ``states``, the vertex's entry of ``{prefix}_{pid}.npy``. Cut
+    of ``states``, the vertex's entry of ``{prefix}_{pid}.npy``;
+    ``rows(own, *state arrays)`` builds the frame instead when given. Cut
     eagerly, so the pack can be removed on return."""
 
     def emit(pdf_iter):
@@ -252,33 +308,52 @@ def _emit_own(spark, pack_dir, nparts, schema, states):
                               mmap_mode="r")
                 if len(own) == 0:
                     continue
-                yield pd.DataFrame({"id": own, **{
-                    c: np.load(os.path.join(pack_dir, f"{pre}_{pid}.npy"))
-                    for c, pre in states}})
+                st = [np.load(os.path.join(pack_dir, f"{pre}_{pid}.npy"))
+                      for _, pre in states]
+                yield pd.DataFrame(rows(own, *st) if rows else {
+                    "id": own, **{c: s for (c, _), s in zip(states, st)}})
 
     return _pid_frame(spark, nparts).mapInPandas(
         emit, schema=schema).localCheckpoint(eager=True)
 
 
-def _single_task(spark, edges, cols, col, vtype, body):
-    """The single-task tier's shared prologue and driver side (PageRank
-    and CC). ONE job moves every edge row into one task, which lexsorts
-    them into pack row order and derives what a one-partition pack holds:
-    own = sorted distinct src, srcl, dstl (ux == own when the input is
-    vertex-closed) and the src segment starts. ``body(own, srcl, dstl,
-    seg, w)`` (w = the weights when ``cols`` has them, else None) returns
-    (per-iteration stats, final state over own).
+def _members(ids, x):
+    """(pos, hit): searchsorted positions of ``x`` in the sorted ``ids``
+    and whether each x is present."""
+    pos = np.searchsorted(ids, x)
+    hit = pos < len(ids)
+    hit[hit] = np.asarray(ids)[pos[hit]] == x[hit]
+    return pos, hit
 
-    Returns (DataFrame(id, ``col``), stats, wall_s, ne), or None when the
-    input is empty or not vertex-closed (sentinel row kind 3) — the join
-    path then provides the open-graph semantics, exactly like the packed
-    path's routes fallback."""
+
+def _single_task(spark, edges, cols, out, body):
+    """The single-task tier's shared prologue and driver side. ONE job
+    moves every edge row into one task, which lexsorts them into pack row
+    order and derives what a one-partition pack holds: own = sorted
+    distinct src, srcl, dstl (ux == own when the input is vertex-closed)
+    and the src segment starts. ``body(own, srcl, dstl, seg, w)`` (w = the
+    weights when ``cols`` has them, else None) returns (per-iteration
+    stats, the columns of the output schema ``out``), or None when the
+    kernel's own precondition fails.
+
+    Returns (DataFrame(``out``), stats, wall_s, ne). Raises ``_Fallback``
+    when the input is empty or not vertex-closed, or body returned None
+    (sentinel row kind 3, its ``id`` the reason) — the join path then
+    provides the open-graph semantics, exactly like the packed path's
+    routes fallback."""
+    names = [c.split()[0] for c in out.split(",")]
+    reasons = ("empty", "open", "kernel")
 
     def run(pdf_iter):
         import pandas as pd
 
+        def frame(kind, cols):
+            n = len(cols["id"])
+            return pd.DataFrame({"kind": np.full(n, kind, np.int32), **{
+                c: cols.get(c, np.zeros(n, np.int64)) for c in names}})
+
         parts = [p for p in pdf_iter if len(p)]
-        closed = False
+        res, why = None, 0
         if parts:
             pdf = (pd.concat(parts, ignore_index=True) if len(parts) > 1
                    else parts[0])
@@ -292,38 +367,227 @@ def _single_task(spark, edges, cols, col, vtype, body):
             seg = np.flatnonzero(first)
             own = src[seg]
             srcl = (np.cumsum(first) - 1).astype(np.int64)
-            pos = np.searchsorted(own, dst)
-            closed = bool((pos < len(own)).all()) and \
-                bool((own[np.minimum(pos, len(own) - 1)] == dst).all())
-        if not closed:
-            yield pd.DataFrame({"kind": [np.int32(3)], "id": [0],
-                                col: [0]})
+            pos, hit = _members(own, dst)
+            why = 1
+            if hit.all():
+                why = 2
+                res = body(own, srcl, pos, seg, w)
+        if res is None:
+            yield frame(3, {"id": [why]})
             return
-        stats, state = body(own, srcl, pos, seg, w)
+        stats, cols = res
         # kind 1: id 0 carries the edge count, ids 1..K the stats
-        yield pd.DataFrame({
-            "kind": np.ones(len(stats) + 1, np.int32),
-            "id": np.arange(len(stats) + 1, dtype=np.int64),
-            col: np.asarray([len(src), *stats]),
-        })
-        yield pd.DataFrame({
-            "kind": np.zeros(len(own), np.int32), "id": own, col: state,
-        })
+        yield frame(1, {"id": np.arange(len(stats) + 1, dtype=np.int64),
+                        names[-1]: np.asarray([len(src), *stats])})
+        yield frame(0, cols)
 
     t0 = time.time()
     mixed = edges.select(*cols).repartition(1).mapInPandas(
-        run, schema=f"kind int, id long, {col} {vtype}"
+        run, schema="kind int, " + out
     ).localCheckpoint(eager=True)
     wall = time.time() - t0
-    if mixed.filter(F.col("kind") == 3).count() > 0:
-        return None
+    bad = mixed.filter(F.col("kind") == 3)
+    if bad.count() > 0:
+        raise _Fallback(reasons[bad.first()["id"]])
     stats = [v for _, v in sorted(
-        (int(r["id"]), r[col])
+        (int(r["id"]), r[names[-1]])
         for r in mixed.filter(F.col("kind") == 1).collect()
     )]
-    return (mixed.filter(F.col("kind") == 0).select("id", col),
+    return (mixed.filter(F.col("kind") == 0).select(*names),
             stats[1:], wall, int(stats[0]))
 
+
+def _identity(ids):
+    """Identity labels: every vertex starts as its own label (CC, LPA)."""
+    return np.asarray(ids, dtype=np.int64)
+
+
+@dataclass(frozen=True)
+class OwnerSweep:
+    """One owner-authored kernel for ``_owner_sweep`` (module docstring):
+    its operator, names and preconditions.
+
+    ``init(ids)`` is the state of the sorted vertex ids at t = 0;
+    ``sweep(curr, own_pos, srcl, dstl, seg, w)`` maps the state over the
+    universe at t-1 to the new own state (``own_pos`` = own's rows in the
+    universe, ``seg`` = the src segment starts, ``w`` = the edge weights
+    when ``weights``); ``frame(own, state)`` shapes the output rows
+    (``rows``, default ``id`` + state). Preconditions, checked in both
+    tiers (join path otherwise): integer-valued weights when
+    ``integer_weights``, every ``seeds`` id a vertex. ``key`` joins
+    (nv, ne) as the checkpoint's identity; ``tags`` ride every superstep
+    row."""
+    algo: str        # metrics kinds {algo}_superstep/_resume, checkpoints
+    prefix: str      # state files {prefix}_{t}_{pid}.npy
+    mode: str
+    out: str         # output schema, "id long, ..."
+    init: Callable
+    sweep: Callable
+    rows: Callable | None = None
+    weights: bool = False
+    integer_weights: bool = False
+    seeds: np.ndarray | None = None
+    key: dict = field(default_factory=dict)
+    tags: dict = field(default_factory=dict)
+
+    def frame(self, own, state=None):
+        state = self.init(own) if state is None else state
+        if self.rows is not None:
+            return self.rows(own, state)
+        return {"id": own, self.out.split(",")[1].split()[0]: state}
+
+    def admits(self, own, w):
+        if self.integer_weights and not (w == np.rint(w)).all():
+            return False
+        return self.seeds is None or bool(_members(own, self.seeds)[1].all())
+
+
+def _sweep_job(spark, pack_dir, nparts, t, routing, op, ckpt_dir=None):
+    """Iteration ``t`` of ``op`` (module docstring): one sentinel row
+    (pid, changed, seeded) per partition; ``seeded`` (t == 1) counts the
+    ``op.seeds`` ids the partition owns. With ``ckpt_dir`` each task also
+    copies its new state there (runtime/iter_checkpoint.py layout; the
+    driver commits the marker after the job returns)."""
+    owners_of, _ = routing
+
+    def run(pdf_iter):
+        import pandas as pd
+
+        for pdf in pdf_iter:
+            for pid in pdf["pid"]:
+                pid = int(pid)
+
+                def load(name):
+                    return np.load(os.path.join(
+                        pack_dir, f"{name}_{pid}.npy"), mmap_mode="r")
+
+                own = load("own")
+                seeded = 0
+                if len(own) == 0:
+                    yield pd.DataFrame({"pid": [pid], "changed": [0],
+                                        "seeded": [0]})
+                    continue
+                ux = load("ux")
+                if t == 1:
+                    curr = op.init(ux)
+                    if op.seeds is not None:
+                        seeded = int(_members(own, op.seeds)[1].sum())
+                else:
+                    starts, bpids = _load_bounds(pack_dir)
+                    for i, q in enumerate(owners_of.get(pid, ())):
+                        lo, hi = _ux_owner_span(ux, starts, bpids, q)
+                        prev = np.load(os.path.join(
+                            pack_dir, f"{op.prefix}_{t - 1}_{int(q)}.npy"),
+                            mmap_mode="r")
+                        if i == 0:
+                            curr = np.empty((len(ux), *prev.shape[1:]),
+                                            prev.dtype)
+                        curr[lo:hi] = prev[_req_of(pack_dir, q, pid)]
+                own_pos = np.searchsorted(ux, own).astype(np.int32)
+                srcl, dstl = load("srcl"), load("dstl")
+                seg = np.flatnonzero(np.r_[True, srcl[1:] != srcl[:-1]])
+                assert len(seg) == len(own), \
+                    "pack invariant broken: segments must enumerate own"
+                new_own = op.sweep(curr, own_pos, srcl, dstl, seg,
+                                   load("w") if op.weights else None)
+                changed = int((new_own != curr[own_pos]).sum())
+                _atomic_save(os.path.join(
+                    pack_dir, f"{op.prefix}_{t}_{pid}.npy"), new_own)
+                if ckpt_dir is not None:
+                    from vite_spark.runtime.iter_checkpoint import \
+                        save_shard
+                    save_shard(ckpt_dir, pid, own, new_own)
+                if t >= 3:
+                    try:
+                        os.remove(os.path.join(
+                            pack_dir, f"{op.prefix}_{t - 2}_{pid}.npy"))
+                    except OSError:
+                        pass
+                yield pd.DataFrame({"pid": [pid], "changed": [changed],
+                                    "seeded": [seeded]})
+
+    return _pid_frame(spark, nparts).mapInPandas(
+        run, schema="pid int, changed long, seeded long")
+
+
+def _owner_sweep(spark, edges, max_iter, cfg, metrics, op):
+    """The owner-authored kernels' driver (module docstring). Returns the
+    ``op.out`` DataFrame, or None when the caller's join path must run."""
+    kind = f"{op.algo}_superstep"
+    tags = {"mode": op.mode, **op.tags}
+
+    def single(edges):
+        def body(own, srcl, dstl, seg, w):
+            if not op.admits(own, w):
+                return None
+            own_pos = np.arange(len(own))
+            curr, chg = op.init(own), []
+            for _t in range(max_iter):
+                new = op.sweep(curr, own_pos, srcl, dstl, seg, w)
+                chg.append(int((new != curr).sum()))
+                curr = new
+                if chg[-1] == 0:
+                    break
+            return chg, op.frame(own, curr)
+
+        cols = ("src", "dst", "weight") if op.weights else ("src", "dst")
+        out, chg, wall, ne = _single_task(spark, edges, cols, op.out, body)
+        for t, c in enumerate(chg, 1):
+            metrics.record(kind=kind, iter=t, changed=int(c),
+                           wall_s=wall / len(chg), edges_processed=ne,
+                           **tags)
+        return out
+
+    def step(pack_dir, nparts, info, routing):
+        from vite_spark.runtime import iter_checkpoint as ic
+
+        if op.integer_weights and not info["w_integer"]:
+            raise _Fallback("kernel")
+        ckroot = cfg.checkpoint_dir
+        scalars = {"nv": int(info["nv"]), "ne": int(info["ne"]),
+                   "nparts": nparts, **op.key}
+        t_final = 0
+        ck = ic.latest_complete(ckroot, op.algo) if ckroot else None
+        if (ck is not None and max_iter > 0 and ic.validate(ck, info, nparts)
+                and all(ck.get(k) == v for k, v in op.key.items())):
+            # a checkpoint beyond max_iter stands in for state max_iter,
+            # like PageRank's restore into rnk_{min(t, max_iter)}
+            k = min(int(ck["t"]), max_iter)
+            t0 = time.time()
+            if ic.restore_job(spark, pack_dir, nparts,
+                              ic.iter_dir(ckroot, op.algo, int(ck["t"])),
+                              f"{op.prefix}_{k}"):
+                t_final = k
+                metrics.record(kind=f"{op.algo}_resume", iter=k,
+                               wall_s=time.time() - t0, mode=op.mode)
+
+        for t in range(t_final + 1, max_iter + 1):
+            ck_dir = None
+            if ckroot and t % max(cfg.checkpoint_every, 1) == 0:
+                ck_dir = ic.prepare_iter(ckroot, op.algo, t)
+            t0 = time.time()
+            sent = _sweep_job(spark, pack_dir, nparts, t, routing, op,
+                              ckpt_dir=ck_dir).collect()
+            changed = int(sum(r["changed"] for r in sent))
+            if (t == 1 and op.seeds is not None
+                    and sum(r["seeded"] for r in sent) != len(op.seeds)):
+                raise _Fallback("kernel")
+            if ck_dir is not None:
+                ic.mark_complete(ckroot, op.algo, t,
+                                 {"changed": changed, **scalars})
+            metrics.record(kind=kind, iter=t, changed=changed,
+                           wall_s=time.time() - t0,
+                           edges_processed=int(info["ne"]), **tags)
+            t_final = t
+            if changed == 0:
+                break
+        # t_final == 0: no state file; frame() falls back to init(own)
+        return _emit_own(spark, pack_dir, nparts, op.out,
+                         [("", f"{op.prefix}_{t_final}")] if t_final else [],
+                         rows=op.frame)
+
+    return _run_packed(spark, edges, cfg, metrics, (op.prefix + "_",), step,
+                       single=single)
 
 
 # Per-worker cache of the merge layout for partition p: the writers'
@@ -567,13 +831,11 @@ def csr_pagerank(spark, edges, damping, tol, max_iter, weighted, cfg,
                 if delta < tol:
                     break
             norm = float(r.sum()) if mode == "eigen" else 1.0
-            return deltas, r / norm
+            return deltas, {"id": own, "rank": r / norm}
 
-        res = _single_task(spark, edges, ("src", "dst", "weight"), "rank",
-                           "double", body)
-        if res is None:
-            return None
-        out, deltas, wall, ne = res
+        out, deltas, wall, ne = _single_task(
+            spark, edges, ("src", "dst", "weight"), "id long, rank double",
+            body)
         # metrics rows mirror the job loop's one-job-late delta protocol
         # exactly: row t (a scatter job there) carries Δ_{t-1};
         # convergence at Δ_K stops the rows at t = K+1; a finalize row
@@ -682,5 +944,5 @@ def csr_pagerank(spark, edges, damping, tol, max_iter, weighted, cfg,
                          sorted(rows, key=lambda r: r["pid"])))
         return out.select("id", (F.col("rank") / norm).alias("rank"))
 
-    return _run_packed(spark, edges, cfg, PR_TRANSIENT_PREFIXES, step,
-                       single=single)
+    return _run_packed(spark, edges, cfg, metrics, PR_TRANSIENT_PREFIXES,
+                       step, single=single)

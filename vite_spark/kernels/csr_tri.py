@@ -92,6 +92,7 @@ import time
 import numpy as np
 
 from vite_spark.kernels.csr import _atomic_save
+from vite_spark.kernels.csr_pr import _purge
 from vite_spark.kernels.csr_sharded import (
     _load_bounds,
     _positions,
@@ -314,15 +315,6 @@ def _build_probe_keys(spark, pack_dir, nparts):
         run, schema="pid int, n long").collect()
 
 
-def _clear_transients(pack_dir):
-    for f in os.listdir(pack_dir):
-        if f.startswith(TRI_TRANSIENT_PREFIXES):
-            try:
-                os.remove(os.path.join(pack_dir, f))
-            except OSError:
-                pass
-
-
 def _count_job(spark, pack_dir, nparts, flush_pairs):
     """Enumerate wedge queries, probe local ones in place and remote
     ones against the owners' static index files; one sentinel row
@@ -518,7 +510,8 @@ def csr_triangles(spark, edges, cfg, metrics) -> int | None:
                            wall_s=0.0, wedges=0, queries=0,
                            edges_oriented=0, triangles=0)
             return 0
-        _clear_transients(pack_dir)  # scrub pre-r4 caches' routed files
+        # scrub pre-r4 caches' routed files
+        _purge(pack_dir, TRI_TRANSIENT_PREFIXES)
         t0 = time.time()
         sent = _count_job(spark, pack_dir, nparts, FLUSH_PAIRS).collect()
         t1 = time.time()

@@ -46,6 +46,7 @@ import numpy as np
 from vite_spark.algos.coloring import hash32_np
 from vite_spark.kernels.csr import _atomic_save, _pid_frame
 from vite_spark.kernels.csr_core import _prepare_core_pack
+from vite_spark.kernels.csr_pr import _emit_own, _purge
 from vite_spark.kernels.csr_sharded import (
     _load_bounds,
     _req_of,
@@ -205,33 +206,11 @@ def csr_wl(spark, edges_simple, rounds, seed, stride, offset, cfg, metrics,
                                wall_s=time.time() - t0,
                                edges_processed=int(info["ne"]),
                                mode="wl_csr_sharded")
-        t_final = rounds
-
-        def emit(pdf_iter):
-            import pandas as pd
-
-            for pdf in pdf_iter:
-                for pid in pdf["pid"]:
-                    pid = int(pid)
-                    own = np.load(os.path.join(pack_dir, f"own_{pid}.npy"),
-                                  mmap_mode="r")
-                    if len(own) == 0:
-                        continue
-                    lab = np.load(os.path.join(
-                        pack_dir, f"wlo_{t_final}_{pid}.npy"))
-                    yield pd.DataFrame({"id": own, "lab": lab})
-
-        out = _pid_frame(spark, nparts).mapInPandas(
-            emit, schema="id long, lab long"
-        ).localCheckpoint(eager=True)
+        out = _emit_own(spark, pack_dir, nparts, "id long, lab long",
+                        [("lab", f"wlo_{rounds}")])
     finally:
         if cleanup:
             shutil.rmtree(pack_dir, ignore_errors=True)
         else:
-            for f in os.listdir(pack_dir):
-                if f.startswith(WL_TRANSIENT_PREFIXES):
-                    try:
-                        os.remove(os.path.join(pack_dir, f))
-                    except OSError:
-                        pass
+            _purge(pack_dir, WL_TRANSIENT_PREFIXES)
     return out, profile

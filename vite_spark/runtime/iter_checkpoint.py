@@ -1,8 +1,8 @@
 """Per-iteration checkpoint/resume for the packed iterative kernels
-(PageRank, LPA, connected components) — the north rule's "resumable from
-checkpoint with per-partition lineage + metrics" applied beyond Louvain
-(whose checkpoints live in runtime/checkpoint.py with a parquet layout,
-because its fallback path is cluster-generic).
+(PageRank, LPA, connected components, BFS/SSSP) — the north rule's
+"resumable from checkpoint with per-partition lineage + metrics" applied
+beyond Louvain (whose checkpoints live in runtime/checkpoint.py with a
+parquet layout, because its fallback path is cluster-generic).
 
 The packed kernels' state is already per-partition owner-authored arrays
 on the shared scratch filesystem, so the checkpoint is the same artifact
@@ -102,7 +102,8 @@ def restore_job(spark, pack_dir: str, nparts: int, ckpt_iter_dir: str,
                 state_name: str):
     """One job: task p gathers its own ids' values from the id-keyed
     checkpoint shards (mmap range test, then searchsorted extract) and
-    writes {pack_dir}/{state_name}_{p}.npy. Returns True when every
+    writes {pack_dir}/{state_name}_{p}.npy (rows keep the shards'
+    trailing shape: BFS state is (nown, L)). Returns True when every
     partition restored every one of its ids."""
     from vite_spark.kernels.csr import _atomic_save, _pid_frame
 
@@ -154,7 +155,8 @@ def restore_job(spark, pack_dir: str, nparts: int, ckpt_iter_dir: str,
                         ok = False
                         break
                     if state is None:
-                        state = np.empty(len(own), vals.dtype)
+                        state = np.empty((len(own), *vals.shape[1:]),
+                                         vals.dtype)
                     state[a:b] = vals[pos]
                     filled += b - a
                 ok = ok and filled == len(own) and state is not None
