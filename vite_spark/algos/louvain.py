@@ -35,6 +35,7 @@ Scale design:
 
 from __future__ import annotations
 
+import math
 import time
 from dataclasses import dataclass, field
 
@@ -245,16 +246,18 @@ def _local_phase(
     edges: DataFrame,
     threshold: float,
     lower: float,
+    cfg: EngineConfig,
     metrics: MetricsCollector,
     level: int,
-    early_term: int = 0,
     colors: DataFrame | None = None,
 ) -> PhaseResult:
     """Driver-local phase on CSR NumPy kernels (the oracle-validated sweep,
     vite_spark/oracle/louvain_ref.py) for levels whose edge table fits on
     one node. Identical labels/Q to the distributed path (pytest-proven);
     arbitrary vertex ids handled by a monotone densify/undensify, which
-    preserves every id-order tie-break."""
+    preserves every id-order tie-break. With a checkpoint dir, every
+    accepted iteration is written from the driver (no Spark job) in the
+    join path's layout and order."""
     import time as _t
 
     import numpy as np
@@ -271,19 +274,32 @@ def _local_phase(
     sd = np.searchsorted(uniq, s)
     dd = np.searchsorted(uniq, d)
     nv = len(uniq)
+    ne = len(s)
     col_arr = None
     if colors is not None:
         cp = colors.toPandas()
         col_arr = np.full(nv, -1, dtype=np.int64)
         pos = np.searchsorted(uniq, cp["id"].to_numpy(dtype=np.int64))
         col_arr[pos] = cp["color"].to_numpy(dtype=np.int64)
+    on_iter = None
+    if cfg.checkpoint_dir:
+        state = {"two_m": float(w.sum()), "nv": nv, "ne": ne,
+                 "early_term": cfg.early_term}
+
+        def on_iter(iters, curr, past, prev_mod, act):
+            if ckpt._due(iters, cfg.checkpoint_every):
+                ckpt.write_superstep_arrays(
+                    cfg.checkpoint_dir, level, iters, uniq, uniq[curr],
+                    uniq[past], {"iter": iters, "prev_mod": prev_mod, **state},
+                    act=act,
+                )
     trace: list = []
     labels, q, iters = louvain_oracle_phase(
         sd, dd, w, nv, threshold=threshold, lower=lower, trace=trace,
-        phase_no=level, early_term=early_term, colors=col_arr,
+        phase_no=level, early_term=cfg.early_term, colors=col_arr,
+        max_iters=cfg.max_total_iterations, on_iter=on_iter,
     )
     wall = _t.time() - t0
-    ne = len(s)
     for (_, it, qq) in trace:
         metrics.record(
             kind="superstep", level=level, iter=it, q=qq, moved=-1, active=nv,
@@ -307,6 +323,7 @@ def _csr_phase(
     colors: DataFrame | None = None,
     coarsen_gain_over: float | None = None,
     probe=None,
+    gate: dict | None = None,
 ) -> PhaseResult | None:
     """Distributed packed-CSR phase (BASELINE.json core-iteration design).
 
@@ -337,6 +354,15 @@ def _csr_phase(
       remoteCinfo model, louvain.cpp:2583-2954) with self-describing move
       records — no dense-id ceiling; this is the path a 10⁹-vertex graph
       takes.
+
+    Checkpointing (cfg.checkpoint_dir): the mirror kernel's sweep tasks
+    write their owned slices and the driver commits iteration j after job
+    j+1, when it accepts j (runtime/checkpoint.py); the sharded and
+    colored kernels do not checkpoint, so they decline.
+
+    ``gate`` (the caller's tier row) receives the ``tier`` this phase
+    runs (packed/sharded), the pack's ``nparts``, and a ``reason`` when
+    the phase declines for a non-local master or a checkpoint dir.
 
     Preconditions (enforced here; returns None → caller falls back to the
     shuffle-join superstep):
@@ -371,7 +397,9 @@ def _csr_phase(
         pack_csr_partitions_sharded,
     )
 
+    gate = {} if gate is None else gate
     if not spark.sparkContext.master.startswith("local"):
+        gate["reason"] = "non_local"
         return None
 
     nparts = cfg.shuffle_partitions or int(
@@ -384,6 +412,7 @@ def _csr_phase(
         F.max("src").alias("ms"), F.max("dst").alias("md"),
         F.count(F.lit(1)).alias("ne")).collect()[0]
     if row["ms"] is None:
+        gate["tier"] = "packed"
         return PhaseResult(
             assignment=spark.createDataFrame([], "id long, comm long"),
             q=float(lower), iters=0, nv=0,
@@ -409,7 +438,12 @@ def _csr_phase(
         sharded = True   # mirror's conservative key bound; sharded re-checks
     # colored runs (incl. colored+ET and colored-on-sharded, packed this
     # round — r3 VERDICT next#6) stay on whichever kernel the id width
-    # selects; nothing falls back to the join path for colors any more
+    # selects; with a checkpoint dir they and the sharded kernel take the
+    # join path, which writes the checkpoint
+    gate["tier"] = "sharded" if sharded else "packed"
+    if cfg.checkpoint_dir and (sharded or colors is not None):
+        gate["reason"] = "checkpoint"
+        return None
 
     import json
     import os
@@ -495,6 +529,7 @@ def _csr_phase(
             info = pack_csr_partitions(edges, pack_dir, nparts)
         ne, nv, two_m = info["ne"], info["nv"], info["two_m"]
         const = 1.0 / two_m
+        gate["nparts"] = nparts
 
         if colors is not None:
             # colored iteration = one packed job per color bucket; bucket
@@ -609,9 +644,13 @@ def _csr_phase(
         labels_at = 0
         q_final = lower
         iters_final = 0
+        ck, every = cfg.checkpoint_dir, cfg.checkpoint_every
+        ck_state = {"two_m": two_m, "nv": nv, "ne": ne, "early_term": et}
         while True:
             k += 1
             t0 = time.time()
+            if ck and ckpt._due(k, every):
+                ckpt.clear_superstep(ck, level, k)
             # moves travel worker-to-worker via per-(step, pid) files; the
             # driver's job result is nparts scalar sentinel rows only
             if sharded:
@@ -635,6 +674,7 @@ def _csr_phase(
                 sent = csr_superstep_packed(
                     spark, pack_dir, nparts, nv_dense, const, k,
                     early_term=et,
+                    checkpoint=(ck, level, every) if ck else None,
                 ).collect()
             walls[k] = time.time() - t0
             e_terms[k] = float(sum(r["e_part"] for r in sent))
@@ -666,6 +706,14 @@ def _csr_phase(
                     labels_at, q_final, iters_final = max(j - 2, 0), prev_mod, j
                     break
                 prev_mod = mod_j if mod_j > lower else lower
+                if ck and ckpt._due(j, every):
+                    # job k wrote S_j as iter j's assignment; job j wrote
+                    # its past (and act)
+                    ckpt.commit_superstep(
+                        ck, level, j,
+                        {"iter": j, "prev_mod": prev_mod, **ck_state},
+                        has_act=bool(et),
+                    )
                 if j >= cfg.max_total_iterations:
                     # reference max-iter break happens AFTER rotation:
                     # past = S_{j-1}, prevMod = mod_j
@@ -738,18 +786,29 @@ def louvain_phase(
     the colored Gauss-Seidel-by-color variant (louvain.cpp:593-786).
 
     Adaptive execution: levels at most cfg.local_phase_max_edges rows run
-    driver-local on the CSR NumPy kernel (identical semantics) unless a
-    checkpoint dir demands the distributed resumable path.
+    driver-local on the CSR NumPy kernel (identical semantics), larger
+    ones on the packed kernels (``_csr_phase``), the rest on the
+    shuffle-join superstep. With a checkpoint dir every tier writes the
+    same per-superstep checkpoint (runtime/checkpoint.py); a resume runs
+    the join path, which reads it.
+
+    Records one ``kind="tier"`` metrics row: ``tier``
+    (local/packed/sharded/join), ``reason`` for the join tier (resume,
+    config = use_csr_kernel off, checkpoint = a sharded or colored phase
+    with a checkpoint dir, non_local, kernel = any other decline of
+    ``_csr_phase``) and the gate inputs ``ne`` and ``nparts``.
     """
     cfg = cfg or EngineConfig()
     metrics = metrics or MetricsCollector()
+    nparts = cfg.shuffle_partitions or int(
+        spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    gate = {"tier": "join", "reason": None, "ne": None, "nparts": nparts}
 
     probe = None
     pin = None
     try:
         if (
             (cfg.local_phase_max_edges > 0 or cfg.use_csr_kernel)
-            and cfg.checkpoint_dir is None
             and resume_from is None
         ):
             # pin the level's edge table across the probe and whichever
@@ -769,47 +828,45 @@ def louvain_phase(
                 F.max("src").alias("ms"), F.max("dst").alias("md"),
                 F.count(F.lit(1)).alias("ne"),
             ).collect()[0]
+            gate["ne"] = int(probe["ne"] or 0)
         local_lim = cfg.local_phase_max_edges
         if local_lim > 0 and level >= 1:
             # coarse levels: the distributed path's per-level fixed costs
             # (pack build, one job per superstep) dominate at post-coarsen
             # sizes — see config.local_phase_coarse_max_edges
             local_lim = max(local_lim, cfg.local_phase_coarse_max_edges)
-        if (
-            local_lim > 0
-            and probe is not None
-            and int(probe["ne"] or 0) <= local_lim
-        ):
-            return _local_phase(
-                spark, edges, threshold, lower, metrics, level,
-                early_term=cfg.early_term, colors=colors,
-            )
+        if probe is not None and 0 < local_lim and gate["ne"] <= local_lim:
+            res = _local_phase(spark, edges, threshold, lower, cfg, metrics,
+                               level, colors=colors)
+            gate["tier"] = "local"
+            metrics.record(kind="tier", **gate)
+            return res
 
-        if (
-            cfg.use_csr_kernel
-            and cfg.checkpoint_dir is None
-            and resume_from is None
-        ):
+        if resume_from is not None:
+            gate["reason"] = "resume"
+        elif not cfg.use_csr_kernel:
+            gate["reason"] = "config"
+        else:
             # early_term and colored runs stay on the packed path too
             # (owner-local ET state files; one packed job per color
             # bucket; the colored+ET combination chains ET state per
             # bucket — r2 VERDICT next#6, r3 next#6). _csr_phase returns
-            # None for the combinations it does not pack (colored on the
-            # sharded kernel, non-local master, key-width overflow) and
-            # the join superstep below provides identical semantics.
+            # None for the combinations it does not pack (colored or
+            # sharded with a checkpoint dir, non-local master, key-width
+            # overflow) and the join superstep below provides identical
+            # semantics.
             res = _csr_phase(
                 spark, edges, threshold, lower, cfg, metrics, level,
                 colors=colors, coarsen_gain_over=coarsen_gain_over,
-                probe=probe,
+                probe=probe, gate=gate,
             )
             if res is not None:
+                metrics.record(kind="tier", **gate)
                 return res
+            gate.update(tier="join", nparts=nparts,
+                        reason=gate["reason"] or "kernel")
 
-        edges = edges.repartition(
-            cfg.shuffle_partitions
-            or int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-            "src",
-        ).persist()
+        edges = edges.repartition(nparts, "src").persist()
 
         vdeg = weighted_degrees(edges)
         selfw = self_loop_weights(edges)
@@ -826,6 +883,9 @@ def louvain_phase(
     finally:
         if pin is not None:
             pin.unpersist()
+    if gate["ne"] is None:
+        gate["ne"] = ne
+    metrics.record(kind="tier", **gate)
     const = 1.0 / two_m
 
     # state init (louvain.cpp:2564-2581) or resume (north_star)
@@ -848,6 +908,13 @@ def louvain_phase(
                 "resumed ET run would diverge from the uninterrupted "
                 "trajectory"
             )
+        for key, have in (("nv", nv), ("ne", ne), ("two_m", two_m)):
+            if not math.isclose(state[key], have, rel_tol=1e-12):
+                raise ValueError(
+                    f"checkpoint was written for a graph with {key}="
+                    f"{state[key]} but this level has {key}={have}: it "
+                    "belongs to another graph"
+                )
         start_iter = state["iter"]
         prev_mod = state["prev_mod"]
         curr = curr.persist()
@@ -1082,7 +1149,7 @@ def louvain_phase(
         if old_past is not past and old_past is not curr:
             old_past.unpersist()
 
-        if cfg.checkpoint_dir and iters % cfg.checkpoint_every == 0:
+        if cfg.checkpoint_dir and ckpt._due(iters, cfg.checkpoint_every):
             ckpt.write_superstep(
                 cfg.checkpoint_dir,
                 level,

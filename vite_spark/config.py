@@ -128,7 +128,11 @@ class EngineConfig:
     # Shuffle partitions for superstep joins; None = session default.
     shuffle_partitions: int | None = None
     # Checkpoint directory for per-superstep resumable state (None =
-    # localCheckpoint only, not resumable across processes).
+    # localCheckpoint only, not resumable across processes). Louvain's
+    # driver-local, packed-mirror and shuffle-join tiers all write it
+    # (runtime/checkpoint.py), so it does not select the tier; the
+    # sharded and colored packed kernels do not, so with a checkpoint dir
+    # those phases run the join tier, as does every resume.
     checkpoint_dir: str | None = None
     # Checkpoint every k supersteps (1 = every superstep, per north_star).
     # Lineage is ALWAYS cut eagerly once per superstep regardless — the

@@ -571,6 +571,7 @@ def csr_superstep_packed(
     const: float,
     step: int,
     early_term: int = 0,
+    checkpoint: tuple | None = None,
 ) -> DataFrame:
     """Superstep ``step`` (1-based) over packed partitions with
     delta-replayed worker state.
@@ -592,6 +593,13 @@ def csr_superstep_packed(
     froze only after 2 static iterations, so curr at every j ≥ f-2 equals
     the pinned past) — the labels_at = j-2 replay stays exact under ET.
 
+    ``checkpoint`` = (dir, level, every) makes each task write its owned
+    slice of the superstep checkpoint (runtime/checkpoint.py layout, one
+    parquet file per partition): S_{step-1} is the ``assignment`` of
+    iter step-1 and the ``past`` of iter step; under ET the ``past`` and
+    ``act`` of iter step come from the advanced ET state. The driver
+    commits (state.json + _COMPLETE) once it accepts the iteration.
+
     Output schema: (pid, e_part, a_part, moved, frozen).
     """
 
@@ -600,6 +608,13 @@ def csr_superstep_packed(
 
         import pandas as pd
 
+        from vite_spark.runtime import checkpoint as ckpt
+
+        def shard(it, table, **cols):
+            if checkpoint is not None and ckpt._due(it, checkpoint[2]):
+                ckpt.write_shard(checkpoint[0], checkpoint[1], it, table,
+                                 pid, cols)
+
         for pdf in pdf_iter:
             for pid in pdf["pid"]:
                 pid = int(pid)
@@ -607,6 +622,9 @@ def csr_superstep_packed(
                 own = np.load(os.path.join(pack_dir, f"own_{pid}.npy"))
                 a_part = float((st["cd"][own] ** 2).sum())
                 et = _load_et(pack_dir, pid, step - 1, own) if early_term else None
+                shard(step - 1, "assignment", id=own, comm=st["curr"][own])
+                if not early_term:
+                    shard(step, "past", id=own, comm=st["curr"][own])
                 dst = np.load(os.path.join(pack_dir, f"dst_{pid}.npy"),
                               mmap_mode="r")
                 if len(dst) == 0:
@@ -656,6 +674,9 @@ def csr_superstep_packed(
                     et = _advance_et(et, step, early_term, cc, new_comm,
                                      e_cc, swept)
                     _save_et(pack_dir, pid, step, et)
+                    shard(step, "past", id=own, comm=et["past"])
+                    shard(step, "act", id=own, active=et["active"],
+                          frozen_cw=et["frozen_cw"], p=et["p"])
                 yield pd.DataFrame({
                     "pid": [pid], "e_part": [e_part],
                     "a_part": [a_part], "moved": [np.int64(mvd.sum())],

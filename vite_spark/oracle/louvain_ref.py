@@ -165,10 +165,17 @@ def louvain_oracle_phase(
     et_delta: float = 0.5,
     colors: np.ndarray | None = None,
     max_iters: int = 10_000,
+    on_iter=None,
 ):
     """One Louvain phase (reference distLouvainMethod, louvain.cpp:427-592).
 
     Returns (labels=pastComm, q=prevMod, iters).
+
+    on_iter: observer called once per accepted iteration, after the
+    past/curr rotation and before the max-iteration break (the order of
+    the engine's checkpoint write), as ``on_iter(iters, curr, past,
+    prev_mod, act)`` — ``act`` is (active, frozen_cw, p) under
+    early_term, else None. It must not modify the arrays.
 
     early_term: 0=off; 1/3 = freeze-after-stable (louvain.cpp:7-205
     documented intent: vertex frozen when target==curr==past after
@@ -276,6 +283,9 @@ def louvain_oracle_phase(
         else:
             past, curr = curr, target
 
+        if on_iter is not None:
+            on_iter(iters, curr, past, prev_mod,
+                    (active, frozen_cw, p_active) if early_term else None)
         if iters >= max_iters:  # engine cfg.max_total_iterations analog
             break
 
