@@ -1,8 +1,18 @@
 from __future__ import annotations
 
 import gc
+import os
 
 import pytest
+
+
+def _driver_heap() -> str:
+    """The test JVM's heap, sized from this machine's memory: half of
+    what is left after 3 GB of headroom (the JVM's off-heap, the Python
+    workers and pytest take the other half), between 2 and 16 GB."""
+    total_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+                >> 20)
+    return f"{min(16384, max(2048, (total_mb - 3072) // 2))}m"
 
 
 @pytest.fixture(scope="session")
@@ -13,7 +23,7 @@ def spark():
         app_name="vite_spark_tests",
         cores=8,
         shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "16g"},
+        extra_conf={"spark.driver.memory": _driver_heap()},
     )
     yield s
     s.stop()

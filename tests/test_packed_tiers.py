@@ -1,5 +1,5 @@
-"""Tier equivalence of the route-pack kernels (PageRank, CC, LPA,
-BFS/SSSP), the tier rows ``_run_packed`` records, and input pins and
+"""Tier equivalence of the packed kernels (PageRank, CC, LPA, BFS/SSSP,
+triangles), the tier rows ``_run_packed`` records, and input pins and
 temporary packs released when the tier after the gate fails.
 
 Each kernel runs one sparse-id input through its three tiers: the
@@ -7,7 +7,8 @@ single-task tier (a one-partition pack: ``shuffle_partitions=1``), the
 sharded job loop (``shuffle_partitions=4``) and the join path
 (``use_csr_kernel=False``). Ranks agree to float accumulation order;
 CC/LPA labels, BFS/SSSP distances and per-iteration changed counts are
-equal."""
+equal. Triangle counts and per-vertex rows are equal on five input
+shapes, with the single tier taken by the default edge gate."""
 
 from __future__ import annotations
 
@@ -228,7 +229,8 @@ def test_pins_released_when_pack_build_fails(spark, monkeypatch, kernel):
         "pagerank": (csr_pr, "pack_csr_partitions_sharded", lambda: pagerank(
             spark, edges, max_iter=3, cfg=EngineConfig(shuffle_partitions=4))),
         "triangles": (csr_tri, "pack_csr_partitions_sharded",
-                      lambda: triangle_count(spark, edges)),
+                      lambda: triangle_count(
+                          spark, edges, EngineConfig(shuffle_partitions=4))),
         "louvain": (lv, "_local_phase",
                     lambda: lv.louvain_phase(spark, edges, 1e-6)),
     }[kernel]
@@ -239,3 +241,187 @@ def test_pins_released_when_pack_build_fails(spark, monkeypatch, kernel):
         call()
     assert _persistent(spark) - rdds == set()
     assert _packs(scratch) - packs == set()
+
+
+def _tri_inputs():
+    """The triangle tier-equivalence inputs: (name, src/dst/weight frame)."""
+    from vite_spark import fixtures as fx
+
+    def frame(s, d):
+        return pd.DataFrame({"src": np.asarray(s, np.int64),
+                             "dst": np.asarray(d, np.int64),
+                             "weight": np.ones(len(s))})
+
+    s, d, _, _ = fx.karate()
+    yield "karate", frame(s, d)
+    s, d, _, _, _ = fx.planted_partition()
+    yield "planted", frame(s, d)
+    r = _rand_sym_edges(7, nv=200, ne=2500)
+    yield "sparse_ids", frame(r["src"], r["dst"])
+    s, d, _, _ = fx.self_loops_triangle()
+    yield "loops_multi", frame(np.r_[s, s, s], np.r_[d, d, d])
+    # one direction, plus sinks: some dst is never a src
+    rng = np.random.default_rng(11)
+    s, d = rng.integers(0, 60, 700), rng.integers(0, 60, 700)
+    sink = rng.integers(0, 60, 12)
+    yield "one_direction", frame(np.r_[s, sink], np.r_[d, 1000 + sink])
+
+
+TRI_TIERS = {
+    "single": EngineConfig(),
+    "sharded": EngineConfig(shuffle_partitions=4),
+    "join": EngineConfig(use_csr_kernel=False),
+}
+
+
+def _tri_by_tier(spark, run, single_calls):
+    """``run(edges, cfg, metrics)`` per input and tier, checking which
+    tier ran; {input: {tier: (result, metrics rows)}}."""
+    got = {}
+    for name, pdf in _tri_inputs():
+        edges = spark.createDataFrame(pdf)
+        for tier, cfg in TRI_TIERS.items():
+            before = len(single_calls)
+            m = MetricsCollector()
+            res = run(edges, cfg, m)
+            assert (len(single_calls) - before) == (tier == "single"), \
+                (name, tier)
+            assert _tiers(m) == ([] if tier == "join" else [(tier, None)]), \
+                (name, tier)
+            got.setdefault(name, {})[tier] = (res, m.rows)
+    return got
+
+
+def test_triangles_tiers_agree(spark, single_calls):
+    from vite_spark.algos.triangles import triangle_count
+
+    kept = []
+
+    def run(e, cfg, m):
+        before = _persistent(spark)
+        out = triangle_count(spark, e, cfg=cfg, metrics=m)
+        kept.extend(_persistent(spark) - before)
+        return out
+
+    got = _tri_by_tier(spark, run, single_calls)
+    # a scalar count leaves no persisted RDD behind in any tier
+    assert kept == []
+
+    def row(rows):
+        (r,) = [r for r in rows if r.get("kind") == "triangles_packed"]
+        return r
+
+    for name, by in got.items():
+        assert by["single"][0] == by["sharded"][0] == by["join"][0], name
+        single, sharded = row(by["single"][1]), row(by["sharded"][1])
+        for k in ("wedges", "edges_oriented", "triangles"):
+            assert single[k] == sharded[k], (name, k)
+        assert single["queries"] == 0 and single["mode"] == sharded["mode"]
+    assert got["karate"]["single"][0] == 45
+    assert got["planted"]["single"][0] > 100
+    assert got["loops_multi"]["single"][0] == 1
+    assert got["one_direction"]["single"][0] > 0
+
+
+def test_triangles_per_vertex_tiers_agree(spark, single_calls):
+    from vite_spark.algos.triangles import triangles_per_vertex
+
+    got = _tri_by_tier(spark, lambda e, cfg, m: {
+        r["id"]: r["triangles"] for r in triangles_per_vertex(
+            spark, e, cfg=cfg, metrics=m).collect()}, single_calls)
+    for name, by in got.items():
+        assert by["single"][0] == by["sharded"][0] == by["join"][0], name
+    assert sum(got["karate"]["single"][0].values()) == 3 * 45
+    # the sinks: vertices that are only ever a dst get zero rows
+    one = got["one_direction"]["single"][0]
+    assert all(one[1000 + v] == 0 for v in range(60) if 1000 + v in one)
+    assert sum(v >= 1000 for v in one) > 5 and sum(one.values()) > 0
+
+
+def test_tier_rows_triangles_kcore_wl(spark, edges, monkeypatch):
+    """Triangles, triangle-vertex, k-core and WL record the runner's tier
+    row: single or sharded, else join with the reason."""
+    from vite_spark.algos.core import coreness
+    from vite_spark.algos.triangles import triangle_count, \
+        triangles_per_vertex
+    from vite_spark.algos.wl import wl_refine
+    from vite_spark.kernels.csr_core import csr_coreness
+    from vite_spark.kernels.csr_wl import csr_wl
+
+    def tri(s, e, **k):
+        return triangle_count(s, e, **k)
+
+    def tri_v(s, e, **k):
+        return triangles_per_vertex(s, e, **k).collect()
+
+    def kcore(s, e, **k):
+        return coreness(s, e, **k).collect()
+
+    def wl(s, e, **k):
+        return wl_refine(s, e, rounds=2, **k).collect()
+
+    def rows(fn, cfg, e=edges):
+        m = MetricsCollector()
+        fn(spark, e, cfg=cfg, metrics=m)
+        return [(r["tier"], r["reason"]) for r in m.rows
+                if r.get("kind") == "tier"]
+
+    sharded = EngineConfig(shuffle_partitions=4)
+    empty = edges.filter("src < 0")
+    for fn in (tri, tri_v):
+        assert rows(fn, EngineConfig()) == [("single", None)]
+        assert rows(fn, sharded) == [("sharded", None)]
+        assert rows(fn, EngineConfig(), empty) == [("join", "empty")]
+    # the triangle gate is the kernels' own edge-row target
+    from vite_spark.kernels import csr_tri, csr_tri_vertex
+
+    ne = edges.count()
+    for target, want in ((ne - 1, "sharded"), (ne, "single")):
+        for mod in (csr_tri, csr_tri_vertex):
+            monkeypatch.setattr(mod, "TRI_EDGES_PER_PART", target)
+        for fn in (tri, tri_v):
+            assert rows(fn, EngineConfig()) == [(want, None)], target
+    for fn in (kcore, wl):
+        assert rows(fn, EngineConfig()) == [("sharded", None)]
+        assert rows(fn, EngineConfig(), empty) == [("join", "empty")]
+    # k-core and WL simplify to a symmetric table before the kernel; an
+    # open table handed to the kernel itself takes the join path
+    open_edges = spark.createDataFrame(pd.DataFrame(
+        {"src": [0, 1], "dst": [1, 2], "weight": [1.0, 1.0]}))
+    for call in (
+            lambda m: csr_coreness(spark, open_edges, 5, EngineConfig(), m),
+            lambda m: csr_wl(spark, open_edges, 2, 0, 1, 0, EngineConfig(),
+                             m)):
+        m = MetricsCollector()
+        assert call(m) is None
+        assert _tiers(m) == [("join", "open")]
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://elsewhere:7077")
+    for fn in (tri, tri_v, kcore, wl):
+        assert rows(fn, EngineConfig()) == [("join", "non_local")]
+
+
+def test_scratch_skips_full_tmpfs(monkeypatch, caplog):
+    """Without an explicit scratch dir, a pack larger than free /dev/shm
+    goes to the system tempdir, and the switch is logged."""
+    import logging
+
+    from vite_spark import config
+
+    if not os.path.isdir("/dev/shm"):
+        pytest.skip("no /dev/shm")
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH", raising=False)
+
+    class Vfs:
+        f_bavail, f_frsize = 1000, 4096    # ~4 MB free
+
+    monkeypatch.setattr(config.os, "statvfs", lambda path: Vfs)
+    fits = 4096 * 1000 // config.SCRATCH_BYTES_PER_EDGE
+    with caplog.at_level(logging.WARNING, logger="vite_spark.config"):
+        assert resolve_scratch(None, ne=fits) == "/dev/shm"
+        assert not caplog.records
+        assert resolve_scratch(None, ne=fits + 1) is None
+        assert "system tempdir" in caplog.records[-1].getMessage()
+    assert resolve_scratch(None) == "/dev/shm"          # size unknown
+    assert resolve_scratch("/x", ne=10 ** 12) == "/x"   # explicit wins
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", "/y")
+    assert resolve_scratch(None, ne=10 ** 12) == "/y"

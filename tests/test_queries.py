@@ -77,3 +77,30 @@ def test_rows_only_queries_run(spark, name):
     df = fn(spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.columns) >= 1
+
+
+def test_cc_rows_match_twophase(spark):
+    """`cc_sizes` and `cc_gini` run the runner CC; the large-star/
+    small-star CC gives the same labels, sizes and Gini."""
+    from pyspark.sql import functions as F
+
+    from vite_spark.algos.components import (
+        connected_components,
+        connected_components_twophase,
+    )
+    from vite_spark.eval.compare import gini_coefficient
+    from vite_spark.queries import lineitem_part_edges
+
+    e = lineitem_part_edges(spark, SF_DIR)
+    two = connected_components_twophase(spark, e)
+    assert sorted(map(tuple, connected_components(spark, e).collect())) \
+        == sorted(map(tuple, two.select("id", "component").collect()))
+    sizes = two.groupBy("component").agg(
+        F.count(F.lit(1)).cast("long").alias("n"))
+    fn = registry()["cc_sizes"][0]
+    assert sorted(map(tuple, fn(spark, SF_DIR).collect())) \
+        == sorted(map(tuple, sizes.collect()))
+    g = gini_coefficient(two.select("id", F.col("component").alias("comm")))
+    want = spark.createDataFrame([(g,)], "g double").select(
+        F.round("g", 6).alias("gini")).collect()
+    assert registry()["cc_gini"][0](spark, SF_DIR).collect() == want

@@ -34,9 +34,9 @@ def _brute_triangles(src, dst):
     return tri
 
 
-def _counts(spark, edges):
+def _counts(spark, edges, cfg=None):
     mp, mj = MetricsCollector(), MetricsCollector()
-    packed = triangle_count(spark, edges, metrics=mp)
+    packed = triangle_count(spark, edges, cfg=cfg, metrics=mp)
     assert {r.get("mode") for r in mp.rows
             if r.get("kind") == "triangles_packed"} == {"tri_csr_packed"}
     join = triangle_count(
@@ -98,13 +98,15 @@ def test_non_symmetric_input_same_contract_as_join_path(spark):
 
 def test_chunked_flush_parity(spark, monkeypatch):
     """Force many small remote-probe batches: FLUSH_PAIRS=64 on a graph
-    with thousands of wedges must change nothing but the batch count."""
+    with thousands of wedges must change nothing but the batch count.
+    Remote probes exist only in the sharded tier, hence 4 partitions."""
     from vite_spark.kernels import csr_tri
 
     monkeypatch.setattr(csr_tri, "FLUSH_PAIRS", 64)
     s, d, w, nv, _truth = fx.planted_partition()
     edges = fx.to_spark_edges(spark, (s, d, w, nv))
-    packed, join, mp = _counts(spark, edges)
+    packed, join, mp = _counts(spark, edges,
+                               EngineConfig(shuffle_partitions=4))
     assert packed == join
     row = [r for r in mp.rows if r.get("kind") == "triangles_packed"][0]
     assert row["wedges"] > 64  # the flush path actually ran

@@ -40,9 +40,9 @@ def _brute_per_vertex(src, dst):
     return cnt
 
 
-def _per_vertex(spark, edges):
+def _per_vertex(spark, edges, cfg=None):
     mp, mj = MetricsCollector(), MetricsCollector()
-    packed = triangles_per_vertex(spark, edges, metrics=mp)
+    packed = triangles_per_vertex(spark, edges, cfg=cfg, metrics=mp)
     assert {r.get("mode") for r in mp.rows
             if r.get("kind") == "triangles_vertex_packed"} \
         == {"tri_vertex_csr_packed"}, "packed path must have dispatched"
@@ -86,35 +86,47 @@ def test_vertex_packed_random_sparse_ids(spark, seed):
 
 def test_vertex_packed_small_flush_batches(spark, monkeypatch):
     """FLUSH_PAIRS=64 forces many remote probe batches carrying the apex
-    triple — per-vertex credits must be identical."""
+    triple — per-vertex credits must be identical. Remote probes exist
+    only in the sharded tier, hence 4 partitions."""
     from vite_spark.kernels import csr_tri, csr_tri_vertex
 
     monkeypatch.setattr(csr_tri, "FLUSH_PAIRS", 64)
     monkeypatch.setattr(csr_tri_vertex, "FLUSH_PAIRS", 64)
     s, d, w, nv, _truth = fx.planted_partition()
     edges = fx.to_spark_edges(spark, (s, d, w, nv))
-    p, j = _per_vertex(spark, edges)
+    p, j = _per_vertex(spark, edges, EngineConfig(shuffle_partitions=4))
     assert p == j
 
 
 def test_vertex_packed_pack_cache_reuse(spark, tmp_path):
     """Global count then per-vertex on one cache dir: the second call
     reuses the pack (manifest + krw + rank_map written once) and both
-    agree with each other."""
+    agree with each other. The pack exists only in the sharded tier,
+    hence 4 partitions."""
+    import os
+
     from vite_spark.algos.triangles import triangle_count
 
     s, d, w, nv = fx.karate()
     edges = fx.to_spark_edges(spark, (s, d, w, nv))
-    cfg = EngineConfig(pack_cache_dir=str(tmp_path))
+    cfg = EngineConfig(pack_cache_dir=str(tmp_path), shuffle_partitions=4)
     m = MetricsCollector()
     total = triangle_count(spark, edges, cfg=cfg, metrics=m)
+    pack = tmp_path / "tri_pack"
+    assert (pack / "manifest.json").exists()
+    assert any(f.startswith("krw_") for f in os.listdir(pack))
     out = triangles_per_vertex(spark, edges, cfg=cfg, metrics=m)
     per_v = {int(r["id"]): int(r["triangles"]) for r in out.collect()}
-    assert sum(per_v.values()) == 3 * total
+    assert (pack / "rank_map.parquet" / "_SUCCESS").exists()
+    assert sum(per_v.values()) == 3 * total == 3 * 45
+    assert [r["tier"] for r in m.rows if r.get("kind") == "tier"] \
+        == ["sharded", "sharded"]
     # second per-vertex call hits the cached rank_map too
     out2 = triangles_per_vertex(spark, edges, cfg=cfg, metrics=m)
     assert {int(r["id"]): int(r["triangles"])
             for r in out2.collect()} == per_v
+    assert [r["tier"] for r in m.rows if r.get("kind") == "tier"][-1] \
+        == "sharded"
 
 
 def test_vertex_packed_triangle_free_and_empty(spark):

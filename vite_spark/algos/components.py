@@ -9,6 +9,15 @@ Scale note: on high-diameter graphs the two-phase "large-star/small-star"
 algorithm (Kiveris et al.) converges in O(log²) rounds; implemented here as
 ``connected_components_twophase`` for path-like graphs. Both return
 identical labels (min vertex id per component).
+
+Callers: every registry CC row (``connected_components``, ``cc_sizes``,
+``cc_gini``) and every other algorithm runs ``connected_components``, i.e.
+the packed runner CC (kernels/csr_cc.py: single-task tier below the pack
+gate, sharded job loop above it, this module's join loop as the fallback).
+Only MSF's contraction (algos/msf.py) keeps ``connected_components_twophase``:
+its contracted forests can be path-like, the one shape where the O(log²)
+round bound beats O(diameter) supersteps. Whether it stays is decided by
+a measured crossover of the two on high-diameter graphs.
 """
 
 from __future__ import annotations

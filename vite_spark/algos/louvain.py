@@ -490,8 +490,9 @@ def _csr_phase(
         if pack_dir is None:
             from vite_spark.config import resolve_scratch
 
-            pack_dir = tempfile.mkdtemp(prefix="vite_csr_",
-                                        dir=resolve_scratch(cfg.scratch_dir))
+            pack_dir = tempfile.mkdtemp(
+                prefix="vite_csr_",
+                dir=resolve_scratch(cfg.scratch_dir, ne=int(row["ne"])))
         else:
             os.makedirs(pack_dir, exist_ok=True)
     try:

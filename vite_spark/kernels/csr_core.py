@@ -60,7 +60,7 @@ import time
 import numpy as np
 
 from vite_spark.kernels.csr import _atomic_save, _pid_frame
-from vite_spark.kernels.csr_pr import _emit_own, _purge
+from vite_spark.kernels.csr_pr import _Fallback, _emit_own, _purge, _run_packed
 from vite_spark.kernels.csr_sharded import (
     _load_bounds,
     _req_of,
@@ -186,7 +186,7 @@ def _core_job(spark, pack_dir, nparts, s, routing):
     )
 
 
-def _prepare_core_pack(spark, edges_simple, cfg, nparts):
+def _prepare_core_pack(spark, edges_simple, cfg, nparts, ne):
     """(pack_dir, nparts, info, routing, cleanup) — the sharded pack of
     the SIMPLIFIED graph + routes. Never the shared vite_pack (that cache
     holds the canonical weighted table — different graph, different
@@ -197,9 +197,8 @@ def _prepare_core_pack(spark, edges_simple, cfg, nparts):
     every pack cache: one cache dir ↔ one edge table + nparts; the
     nparts half of that contract is validated against the manifest (a
     stale cache left by a killed run with a different layout is wiped
-    and repacked, not silently reused — counting ``edges_simple`` to
-    validate the table half would re-run its whole simplify shuffle, so
-    the table half stays the documented dir-naming convention)."""
+    and repacked, not silently reused; the table half stays the
+    documented dir-naming convention)."""
     routing = None
     info = None
     pack_dir = None
@@ -223,34 +222,33 @@ def _prepare_core_pack(spark, edges_simple, cfg, nparts):
                 )
                 _purge(pack_dir, CORE_TRANSIENT_PREFIXES)
     if info is None:
-        # pin across the build consumers (count, range sample, pack job):
-        # each re-ran the upstream simplify + derivation on an
-        # unpersisted input — csr_pr._prepare_pack's pattern. Released
-        # once the pack files are written.
-        pin = None
-        if not edges_simple.is_cached:
-            pin = edges_simple = edges_simple.persist()
+        # the runner (csr_pr._run_packed) pins edges_simple across its
+        # count, the range sample and the pack job
+        if ne is not None:
+            # scale-adaptive partition count (guide §2) over the
+            # runner's count
+            from vite_spark.config import adaptive_pack_nparts
+
+            nparts = adaptive_pack_nparts(nparts, ne)
+        e = edges_simple.repartitionByRange(nparts, "src")
+        nparts = e.rdd.getNumPartitions()
+        if pack_dir is None:
+            from vite_spark.config import resolve_scratch
+
+            pack_dir = tempfile.mkdtemp(
+                prefix="vite_csr_core_",
+                dir=resolve_scratch(cfg.scratch_dir, ne=ne))
+        else:
+            os.makedirs(pack_dir, exist_ok=True)
         try:
-            if cfg.shuffle_partitions is None:
-                # scale-adaptive partition count (guide §2); the count's
-                # simplify shuffle is reused by the range exchange below
-                from vite_spark.config import adaptive_pack_nparts
-
-                nparts = adaptive_pack_nparts(nparts, edges_simple.count())
-            e = edges_simple.repartitionByRange(nparts, "src")
-            nparts = e.rdd.getNumPartitions()
-            if pack_dir is None:
-                from vite_spark.config import resolve_scratch
-
-                pack_dir = tempfile.mkdtemp(
-                    prefix="vite_csr_core_",
-                    dir=resolve_scratch(cfg.scratch_dir))
-            else:
-                os.makedirs(pack_dir, exist_ok=True)
             info = pack_csr_partitions_sharded(e, pack_dir, nparts)
-        finally:
-            if pin is not None:
-                pin.unpersist()
+            if info["nv"] == 0:
+                # no partition wrote files: nothing to route
+                raise _Fallback("empty")
+        except BaseException:
+            if cleanup:
+                shutil.rmtree(pack_dir, ignore_errors=True)
+            raise
     if routing is None:
         routing = build_routes(spark, pack_dir, nparts)
         if routing is None:
@@ -273,24 +271,12 @@ def csr_coreness(spark, edges_simple, max_iter, cfg, metrics,
                  force_iters=False):
     """Packed-CSR coreness driver over a SIMPLE undirected edge table
     (caller guarantees symmetrized, deduped, self-loop-free — hence
-    vertex-closed). Returns the (id, coreness) DataFrame, or None when a
-    precondition fails (caller runs the join path): non-local master, or
-    routing finds the input not vertex-closed after all."""
-    if not spark.sparkContext.master.startswith("local"):
-        return None
-    nparts = cfg.shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    prep = _prepare_core_pack(spark, edges_simple, cfg, nparts)
-    if prep is None:
-        return None
-    pack_dir, nparts, info, routing, cleanup = prep
-    if info["nv"] == 0:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
-        return None
-    try:
+    vertex-closed), through ``csr_pr._run_packed`` (sharded tier only).
+    Returns the (id, coreness) DataFrame, or None when the caller's join
+    path must run: non-local master, empty input, or routing finds the
+    input not vertex-closed after all."""
 
+    def step(pack_dir, nparts, info, routing):
         _degree_job(spark, pack_dir, nparts).collect()
         s_final = 0
         for s in range(1, max_iter + 1):
@@ -308,10 +294,9 @@ def csr_coreness(spark, edges_simple, max_iter, cfg, metrics,
                 # hco arrays — so running them measures the kernel's
                 # steady per-superstep cost on any input
                 break
+        return _emit_own(spark, pack_dir, nparts, "id long, coreness long",
+                         [("coreness", f"hco_{s_final}")])
 
-        out = _emit_own(spark, pack_dir, nparts, "id long, coreness long",
-                        [("coreness", f"hco_{s_final}")])
-    finally:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
-    return out
+    return _run_packed(spark, edges_simple, cfg, metrics,
+                       CORE_TRANSIENT_PREFIXES, step,
+                       prepare=_prepare_core_pack)

@@ -1,4 +1,4 @@
-"""The route-pack kernels' one runner and owner-authored sweep, plus
+"""The packed kernels' one runner and owner-authored sweep, plus
 packed-CSR PageRank (north-rule first-class op).
 
 Every route-pack kernel (PageRank, HITS, CC, LPA, BFS) iterates over the
@@ -7,15 +7,21 @@ SAME sharded CSR pack the Louvain kernel uses (kernels/csr_sharded.py:
 req_{owner}_{reader} interest sets) through one runner, ``_run_packed``:
 local-master check, one input pin, one gate, pack build or reuse,
 cleanup, and one ``kind="tier"`` metrics row naming the tier that ran
-and why. Vite's DistGraph likewise runs one code path at any rank count:
-one rank simply owns [0, nv].
+and why. The runner also serves the kernels that build their own pack
+(the ``prepare`` argument): both triangle kernels (kernels/csr_tri*.py:
+oriented rank-relabeled pack, single-task tier under their own edge-row
+target) and
+k-core and WL (kernels/csr_core.py's simplified-graph pack, sharded
+tier only). Vite's DistGraph likewise runs one code path at any rank
+count: one rank simply owns [0, nv].
 
 Gate: a run whose pack would have one partition (``cfg.shuffle_partitions``,
 else the scale-adaptive count ``adaptive_pack_nparts``), with no
 ``checkpoint_dir``, takes the single-task tier; every other run takes the
 sharded job loop. A non-local master, an empty input, an input that is not
-vertex-closed, or a kernel's own precondition sends the run to the
-caller's join path (the runner returns None).
+vertex-closed (except for the triangle kernels, whose bodies take open
+inputs), or a kernel's own precondition sends the run to the caller's
+join path (the runner returns None).
 
 - **Single task** (``_single_task``): ONE job maps the edge rows into one
   task, which lexsorts them into pack order and derives own/srcl/dstl
@@ -126,14 +132,14 @@ PR_TRANSIENT_PREFIXES = ("prc_", "rnk_", "lown_", "cown_", "bfd_",
                          "hac_", "aown_", "hown_")
 
 
-def _prepare_pack(spark, edges, cfg, nparts, ne_precounted=None):
+def _prepare_pack(spark, edges, cfg, nparts, ne):
     """(pack_dir, nparts, info, routing, cleanup) — the sharded pack +
     routes, reusing the persistent pack cache exactly like the Louvain
     phase (same manifest.json, so a cached pack serves both algorithms).
     Returns None when routing finds the input not vertex-closed; a fresh
     temporary pack is removed then, and when the build fails. The caller
-    (_run_packed) pins ``edges`` across the count, range-boundary sample
-    and pack job."""
+    (_run_packed) pins ``edges`` across its count, the range-boundary
+    sample and the pack job."""
     routing = None
     info = None
     pack_dir = None
@@ -153,17 +159,13 @@ def _prepare_pack(spark, edges, cfg, nparts, ne_precounted=None):
             )
             _purge(pack_dir, PR_TRANSIENT_PREFIXES)
     if info is None:
-        if cfg.shuffle_partitions is None:
-            # scale-adaptive partition count (guide §2): one extra count
-            # job (its shuffle work is reused by the range exchange
-            # below) buys every downstream superstep job a task count
-            # matched to the input size instead of the session constant
+        if ne is not None:
+            # scale-adaptive partition count (guide §2) over the
+            # runner's count: every downstream superstep job gets a task
+            # count matched to the input size, not the session constant
             from vite_spark.config import adaptive_pack_nparts
 
-            nparts = adaptive_pack_nparts(
-                nparts,
-                edges.count() if ne_precounted is None else ne_precounted,
-            )
+            nparts = adaptive_pack_nparts(nparts, ne)
         edges = edges.repartitionByRange(nparts, "src")
         nparts = edges.rdd.getNumPartitions()
         if pack_dir is None:
@@ -171,13 +173,16 @@ def _prepare_pack(spark, edges, cfg, nparts, ne_precounted=None):
 
             pack_dir = tempfile.mkdtemp(
                 prefix="vite_csr_pr_",
-                dir=resolve_scratch(cfg.scratch_dir))
+                dir=resolve_scratch(cfg.scratch_dir, ne=ne))
         else:
             os.makedirs(pack_dir, exist_ok=True)
     fresh = routing is None
     try:
         if info is None:
             info = pack_csr_partitions_sharded(edges, pack_dir, nparts)
+            if info["nv"] == 0:
+                # no partition wrote files: nothing to route
+                raise _Fallback("empty")
         if fresh:
             routing = build_routes(spark, pack_dir, nparts)
     except BaseException:
@@ -214,17 +219,24 @@ class _Fallback(Exception):
     returns None, so the caller's join path runs."""
 
 
-def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None):
-    """The route-pack kernels' one runner. Returns None when the caller's
+def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None,
+                prepare=_prepare_pack, target=None):
+    """The packed kernels' one runner. Returns None when the caller's
     join path must run instead: a non-local master (the pack is a shared
     filesystem), an empty input, an input that is not vertex-closed, or a
     tier raising ``_Fallback`` (a kernel's own precondition).
 
-    Gate (kernels with a single-task tier pass ``single(edges)``): the
-    pack's partition count is ``cfg.shuffle_partitions``, else
-    ``adaptive_pack_nparts`` over one count job; at one partition with no
-    ``cfg.checkpoint_dir`` the run is ``single(edges)``. Every other run
-    builds (or reopens the cached) pack and returns
+    Gate: the pack's partition count is ``cfg.shuffle_partitions``,
+    else ``adaptive_pack_nparts`` of the session's count over one count
+    job — the only count of ``edges`` — at ``target`` edge rows per
+    partition (default ``PACK_EDGES_PER_PART``); at one partition with no
+    ``cfg.checkpoint_dir`` a kernel with a single-task tier runs
+    ``single(edges)``. Every other run builds (or reopens the cached)
+    pack through ``prepare(spark, edges, cfg, nparts, ne)``: given the
+    requested partition count and the gate's count (None when
+    ``cfg.shuffle_partitions`` fixes the layout), the builder picks the
+    layout and returns ``(pack_dir, nparts, info, routing, cleanup)``,
+    or None when not vertex-closed. The runner then returns
     ``step(pack_dir, nparts, info, routing)``; afterwards the pack is
     removed, or — a cached pack — only the run's files starting with
     ``prefixes``. Records one ``kind="tier"`` row: ``tier``
@@ -238,10 +250,10 @@ def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None):
     q_pagerank 4.73 s vs 6.50 s, packed-CC query 4.66 s vs 7.52 s
     medians, every pair wins). Skipped when the caller already cached
     the table."""
-    nparts = cfg.shuffle_partitions or int(
+    requested = cfg.shuffle_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    gate = {"ne": None, "nparts": nparts}
+    gate = {"ne": None, "nparts": requested}
 
     def tier(name, reason=None):
         metrics.record(kind="tier", tier=name, reason=reason, **gate)
@@ -254,20 +266,20 @@ def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None):
         pin = edges = edges.persist()
     try:
         try:
-            if single is not None:
-                if cfg.shuffle_partitions is None:
-                    from vite_spark.config import adaptive_pack_nparts
+            if cfg.shuffle_partitions is None:
+                from vite_spark.config import adaptive_pack_nparts
 
-                    gate["ne"] = ne = edges.count()
-                    if ne == 0:
-                        raise _Fallback("empty")
-                    gate["nparts"] = nparts = adaptive_pack_nparts(nparts, ne)
-                if nparts == 1 and not cfg.checkpoint_dir:
-                    out = single(edges)
-                    tier("single")
-                    return out
-            prep = _prepare_pack(spark, edges, cfg, nparts,
-                                 ne_precounted=gate["ne"])
+                gate["ne"] = ne = edges.count()
+                if ne == 0:
+                    raise _Fallback("empty")
+                gate["nparts"] = adaptive_pack_nparts(requested, ne,
+                                                      target)
+            if (single is not None and gate["nparts"] == 1
+                    and not cfg.checkpoint_dir):
+                out = single(edges)
+                tier("single")
+                return out
+            prep = prepare(spark, edges, cfg, requested, gate["ne"])
         finally:
             if pin is not None:
                 pin.unpersist()
@@ -326,7 +338,8 @@ def _members(ids, x):
     return pos, hit
 
 
-def _single_task(spark, edges, cols, out, body):
+def _single_task(spark, edges, cols, out, body, open_ok=False,
+                 stats_only=False):
     """The single-task tier's shared prologue and driver side. ONE job
     moves every edge row into one task, which lexsorts them into pack row
     order and derives what a one-partition pack holds: own = sorted
@@ -336,11 +349,18 @@ def _single_task(spark, edges, cols, out, body):
     stats, the columns of the output schema ``out``), or None when the
     kernel's own precondition fails.
 
-    Returns (DataFrame(``out``), stats, wall_s, ne). Raises ``_Fallback``
+    Returns (DataFrame(``out``), stats, wall_s, ne); with ``stats_only``
+    (a body whose columns are None: the scalar triangle count) the job's
+    rows are collected instead of checkpointed, so nothing stays
+    persisted, and the DataFrame is None. Raises ``_Fallback``
     when the input is empty or not vertex-closed, or body returned None
     (sentinel row kind 3, its ``id`` the reason) — the join path then
     provides the open-graph semantics, exactly like the packed path's
-    routes fallback."""
+    routes fallback. A body that handles open inputs itself (the
+    triangle kernels, ``open_ok``) is called on every nonempty input as
+    ``body(own, srcl, dstl, seg, w, hit, dst)``: ``hit`` marks the rows
+    whose dst is a src (dstl is its position in own only there) and
+    ``dst`` holds the rows' dst ids."""
     names = [c.split()[0] for c in out.split(",")]
     reasons = ("empty", "open", "kernel")
 
@@ -369,7 +389,10 @@ def _single_task(spark, edges, cols, out, body):
             srcl = (np.cumsum(first) - 1).astype(np.int64)
             pos, hit = _members(own, dst)
             why = 1
-            if hit.all():
+            if open_ok:
+                why = 2
+                res = body(own, srcl, pos, seg, w, hit, dst)
+            elif hit.all():
                 why = 2
                 res = body(own, srcl, pos, seg, w)
         if res is None:
@@ -379,21 +402,26 @@ def _single_task(spark, edges, cols, out, body):
         # kind 1: id 0 carries the edge count, ids 1..K the stats
         yield frame(1, {"id": np.arange(len(stats) + 1, dtype=np.int64),
                         names[-1]: np.asarray([len(src), *stats])})
-        yield frame(0, cols)
+        if cols is not None:
+            yield frame(0, cols)
 
     t0 = time.time()
     mixed = edges.select(*cols).repartition(1).mapInPandas(
-        run, schema="kind int, " + out
-    ).localCheckpoint(eager=True)
+        run, schema="kind int, " + out)
+    if stats_only:
+        meta, mixed = mixed.collect(), None
+    else:
+        mixed = mixed.localCheckpoint(eager=True)
     wall = time.time() - t0
-    bad = mixed.filter(F.col("kind") == 3)
-    if bad.count() > 0:
-        raise _Fallback(reasons[bad.first()["id"]])
-    stats = [v for _, v in sorted(
-        (int(r["id"]), r[names[-1]])
-        for r in mixed.filter(F.col("kind") == 1).collect()
-    )]
-    return (mixed.filter(F.col("kind") == 0).select(*names),
+    if mixed is not None:
+        meta = mixed.filter(F.col("kind") != 0).collect()
+    bad = [r["id"] for r in meta if r["kind"] == 3]
+    if bad:
+        raise _Fallback(reasons[bad[0]])
+    stats = [v for _, v in sorted((int(r["id"]), r[names[-1]])
+                                  for r in meta)]
+    return (None if mixed is None
+            else mixed.filter(F.col("kind") == 0).select(*names),
             stats[1:], wall, int(stats[0]))
 
 

@@ -1,8 +1,30 @@
-"""Packed-CSR triangle counting on the sharded pack — the fifth and last
-north-rule-named algorithm ("PageRank, connected components, label
-propagation, triangle count") over the shared kernel infrastructure
-(Louvain kernels/csr*.py, PageRank csr_pr.py, LPA csr_lpa.py, CC
-csr_cc.py).
+"""Packed-CSR triangle counting — the fifth and last north-rule-named
+algorithm ("PageRank, connected components, label propagation, triangle
+count") over the shared kernel infrastructure (Louvain kernels/csr*.py,
+PageRank csr_pr.py, LPA csr_lpa.py, CC csr_cc.py).
+
+Both triangle kernels (this global count and kernels/csr_tri_vertex.py)
+run through the packed runner ``csr_pr._run_packed``: local-master check,
+one input pin, the edge-count gate (``adaptive_pack_nparts`` over one
+count job, at ``TRI_EDGES_PER_PART`` rows per partition), cleanup and
+the ``kind="tier"`` row. Two tiers:
+
+- **Single task** (one partition at that target, no ``checkpoint_dir``):
+  ``csr_pr._single_task`` moves the rows into one task, where
+  ``_tri_single`` runs ``algos/triangles._oriented`` and the count job's
+  local probe in NumPy: drop self-loops and duplicate rows, out-degree,
+  drop rows whose dst has no out-edge, rank by (deg, id) and orient low
+  → high, offset-k wedge passes with a searchsorted membership test per
+  closing edge, per-vertex credits by bincount. Inputs that are not
+  vertex-closed stay on this tier (the body takes the miss mask). No
+  pack files, one Spark job.
+- **Sharded**: the pack and count phases below. ``_prepare_tri_pack`` is
+  the runner's pack builder; it keeps its own partition cap from the
+  wedge volume.
+
+Both tiers record the same ``triangles_packed`` row (``wedges``,
+``queries``, ``edges_oriented``, ``triangles``; at one partition every
+query is local, so ``queries`` is 0).
 
 The join-path `algos/triangles.triangle_count` is the cluster-correct
 DataFrame shape (degree-oriented wedge self-join + closing-edge join);
@@ -73,7 +95,7 @@ explicit-cast (NumPy 1.x value-based casting — the r3 int32-overflow
 lesson, kernels/csr.py:199).
 
 Preconditions (caller falls back to the join path on None): local
-master (shared pack filesystem). Reference analog: Vite has no triangle
+master (shared pack filesystem), nonempty input. Reference analog: Vite has no triangle
 counting; the owner routing reuses csr_sharded.py's getOwner bounds
 table, and the remote probe replaces its exchangeVertexReqs-style
 request exchange (/root/reference/louvain.cpp:3251-3397) with one-sided
@@ -91,8 +113,8 @@ import time
 
 import numpy as np
 
+from vite_spark.kernels import csr_pr
 from vite_spark.kernels.csr import _atomic_save
-from vite_spark.kernels.csr_pr import _purge
 from vite_spark.kernels.csr_sharded import (
     _load_bounds,
     _positions,
@@ -106,6 +128,21 @@ TRI_TRANSIENT_PREFIXES = ("twq_",)
 # remote wedge queries buffered per task before a probe batch (bounds
 # per-task memory; bigger batches amortize the per-owner searchsorteds)
 FLUSH_PAIRS = 8_000_000
+
+# The triangle kernels' edge-row gate: the single-task tier takes inputs
+# of at most this many rows (the runner's ``target``; the linear sweeps
+# use config.PACK_EDGES_PER_PART, 4M). The single tier's wedge probe runs
+# on one core, so its loss grows with the wedges per row, while the
+# sharded tier's loss is its fixed pack overhead. Measured (4-core VM,
+# local[4], seeded NumPy inputs, whole triangle_count wall, single vs
+# shuffle_partitions=4): 100-vertex dense communities (p = 0.5, ~15.5
+# wedges per row) at 1M rows 6.5/5.6/6.1 s vs 8.7/6.6/6.0 s (tie), at
+# 2M rows 15.4/13.7/13.9 s vs 11.5/10.5/11.7 s, at 4M rows 35.1 s vs
+# 26.7 s; ring lattice (k = 5, ~1 wedge per row) at 2M rows 3.3/2.6/2.2 s
+# vs 7.6/5.5/4.8 s, at 4M rows 6.9/4.8/5.7 s vs 15.2/8.5/9.5 s;
+# Chung-Lu alpha = 2.1 at 4M rows a tie. 1M keeps every measured input
+# at most one tie away from its faster tier.
+TRI_EDGES_PER_PART = 1_000_000
 
 
 def _pid_tasks(spark, nparts):
@@ -187,14 +224,21 @@ def _rank_by_degree(spark, e, nparts):
     return d2, d2.mapInPandas(rk, schema="id long, rk long"), stats
 
 
-def _prepare_tri_pack(spark, edges, cfg, nparts):
-    """(pack_dir, nparts, info, cleanup) — the oriented rank-relabeled
-    sharded pack, cached under <pack_cache_dir>/tri_pack (NOT the shared
+def _prepare_tri_pack(spark, edges, cfg, nparts, ne):
+    """The sharded tier's pack builder for ``csr_pr._run_packed``:
+    (pack_dir, nparts, info, None, cleanup) — the oriented rank-relabeled
+    sharded pack (no routes: the count job reads the owners' static
+    files), cached under <pack_cache_dir>/tri_pack (NOT the shared
     vite_pack: the triangle pack stores a different graph — oriented,
     relabeled). Same caller contract as the Louvain pack cache: every
     run pointing at one cache dir must use the same edge table and
-    shuffle-partition count."""
+    shuffle-partition count. The runner pins ``edges`` across the build
+    and passes the requested partition count ``nparts`` and its gate
+    count ``ne`` (None when ``cfg.shuffle_partitions`` fixes the
+    layout)."""
     from pyspark.sql import functions as F
+
+    from vite_spark.config import adaptive_pack_nparts, resolve_scratch
 
     pack_dir = None
     cleanup = True
@@ -208,19 +252,17 @@ def _prepare_tri_pack(spark, edges, cfg, nparts):
             if not os.path.exists(os.path.join(pack_dir, "krw_0.npy")):
                 # cache written before probe keys were pack-time artifacts
                 _build_probe_keys(spark, pack_dir, man["nparts"])
-            return pack_dir, man["nparts"], man["info"], False
+            return pack_dir, man["nparts"], man["info"], None, False
     if pack_dir is None:
-        from vite_spark.config import resolve_scratch
-
-        pack_dir = tempfile.mkdtemp(prefix="vite_csr_tri_",
-                                    dir=resolve_scratch(cfg.scratch_dir))
+        pack_dir = tempfile.mkdtemp(
+            prefix="vite_csr_tri_",
+            dir=resolve_scratch(cfg.scratch_dir, ne=ne))
     else:
         os.makedirs(pack_dir, exist_ok=True)
 
     # persist the distinct self-loop-free table: the degree job, the
     # oriented range-boundary sample and the pack job each consume it,
-    # and without the cache each re-runs the whole upstream derivation
-    # (3/4 interleaved-pair win, median −35% on q_triangles_total).
+    # and without the cache each re-runs the distinct shuffle.
     # Released alongside ranks/d2 — never outlives the pack build, also
     # when it fails (a fresh temporary pack is then removed too).
     e = (edges.select("src", "dst")
@@ -229,15 +271,13 @@ def _prepare_tri_pack(spark, edges, cfg, nparts):
     try:
         d2, ranks, dstats = _rank_by_degree(spark, e, nparts)
         ranks = ranks.persist()
-        if cfg.shuffle_partitions is None:
-            # scale-adaptive pack partition count (guide §2). The count
-            # job's work is the WEDGE probe, not an edge gather, so the cap
-            # is driven by the wedge-volume upper bound Σ C(deg, 2)
-            # (computed inside the rank job's count pass — no extra job)
-            # alongside |oriented| = Σdeg/2 — a small-edge graph with heavy
-            # wedges keeps its parallelism
-            from vite_spark.config import adaptive_pack_nparts
-
+        if ne is not None:
+            # the count job's work is the WEDGE probe, not an edge
+            # gather, so the requested partition count is capped by the
+            # wedge-volume upper bound Σ C(deg, 2) (computed inside the
+            # rank job's count pass — no extra job) alongside
+            # |oriented| = Σdeg/2 — a graph with heavy wedges keeps its
+            # parallelism
             work = max(dstats["sum_deg"] // 2, dstats["wedges_est"])
             nparts = adaptive_pack_nparts(nparts, work)
         oriented = (
@@ -266,7 +306,72 @@ def _prepare_tri_pack(spark, edges, cfg, nparts):
     if not cleanup:
         with open(os.path.join(pack_dir, "manifest.json"), "w") as fh:
             json.dump({"info": info, "nparts": nparts}, fh)
-    return pack_dir, nparts, info, cleanup
+    return pack_dir, nparts, info, None, cleanup
+
+
+def _tri_single(own, srcl, dstl, hit, dst, credits=False):
+    """The single-task tier's count: ``algos/triangles._oriented`` and
+    the count job's local probe, step by step, on one task's lexsorted
+    rows (``csr_pr._single_task``'s open-input body arguments). Returns
+    (stats, cr): stats = [wedges, queries, edges_oriented, triangles]
+    exactly as the sharded count job sums them at one partition (no
+    remote queries); cr = per-own-vertex triangle counts (every triangle
+    credited to its three vertices) with ``credits``, else None."""
+    n = len(own)
+    src = own[srcl]
+    # 1. self-loops and duplicate rows (the rows are lexsorted)
+    keep = (src != dst) & np.r_[True, (src[1:] != src[:-1])
+                                | (dst[1:] != dst[:-1])]
+    s, d, hit = srcl[keep], dstl[keep], hit[keep]
+    # 2. out-degree of the distinct self-loop-free table
+    deg = np.bincount(s, minlength=n)
+    # 3. rows whose dst has no out-edge: the join path's inner degree
+    #    join drops them
+    hit[hit] = deg[d[hit]] > 0
+    s, d = s[hit], d[hit]
+    # 4. rank by (deg, id) — own is id-sorted — and orient low → high
+    rank = np.empty(n, np.int64)
+    rank[np.lexsort((own, deg))] = np.arange(n, dtype=np.int64)
+    rs, rd = rank[s], rank[d]
+    o = rs < rd
+    rs, rd = rs[o], rd[o]
+    o = np.lexsort((rd, rs))
+    rs, rd = rs[o], rd[o]
+    m = len(rs)
+    if m == 0:
+        return [0, 0, 0, 0], np.zeros(n, np.int64) if credits else None
+    # 5. offset-k wedge passes; each closing edge (v, w) is a
+    #    searchsorted membership test against the sorted key array. The
+    #    active rows (those with a row k further on in their segment)
+    #    only shrink, so each pass touches its wedges only.
+    keys = rs * np.int64(n) + rd
+    seg = np.flatnonzero(np.r_[True, rs[1:] != rs[:-1]])
+    row_end = np.repeat(np.r_[seg[1:], m], np.diff(np.r_[seg, m]))
+    act = np.arange(m, dtype=np.int64)
+    lo = rs[0]
+    wedges = tri = 0
+    found_i, found_k = [], []
+    k = 0
+    while len(act):
+        k += 1
+        act = act[act + k < row_end[act]]
+        v, w = rd[act], rd[act + k]
+        # the count job's wedge tally: v below every owner range (below
+        # the smallest oriented src) has no out-edge and is not queried
+        wedges += int((v >= lo).sum())
+        _, f = _positions(keys, v * np.int64(n) + w)
+        tri += int(f.sum())
+        if credits and f.any():
+            found_i.append(act[f])
+            found_k.append(np.full(int(f.sum()), k, np.int64))
+    if not credits:
+        return [wedges, 0, m, tri], None
+    i = np.concatenate(found_i) if found_i else np.empty(0, np.int64)
+    j = i + (np.concatenate(found_k) if found_k else 0)
+    # 6. credit each triangle's three vertices (ranks → own positions)
+    cr = (np.bincount(rs[i], minlength=n) + np.bincount(rd[i], minlength=n)
+          + np.bincount(rd[j], minlength=n))
+    return [wedges, 0, m, tri], cr[rank]
 
 
 def _build_probe_keys(spark, pack_dir, nparts):
@@ -495,34 +600,37 @@ def _count_job(spark, pack_dir, nparts, flush_pairs):
 
 
 def csr_triangles(spark, edges, cfg, metrics) -> int | None:
-    """Packed-CSR global triangle count. Returns the exact count, or
-    None when a precondition fails (caller runs the wedge-join path):
-    non-local master (the pack is a shared filesystem)."""
-    if not spark.sparkContext.master.startswith("local"):
-        return None
-    nparts = cfg.shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    pack_dir, nparts, info, cleanup = _prepare_tri_pack(
-        spark, edges, cfg, nparts)
-    try:
-        if info["ne"] == 0:
-            metrics.record(kind="triangles_packed", mode="tri_csr_packed",
-                           wall_s=0.0, wedges=0, queries=0,
-                           edges_oriented=0, triangles=0)
-            return 0
-        # scrub pre-r4 caches' routed files
-        _purge(pack_dir, TRI_TRANSIENT_PREFIXES)
+    """Packed-CSR global triangle count through ``csr_pr._run_packed``.
+    Returns the exact count, or None when the caller's wedge-join path
+    must run (non-local master, empty input). Both tiers record one
+    ``triangles_packed`` row (``wedges``, ``queries``, ``edges_oriented``,
+    ``triangles``)."""
+
+    def record(wall, wedges, queries, oriented, tri):
+        metrics.record(kind="triangles_packed", mode="tri_csr_packed",
+                       wall_s=wall, wedges=int(wedges),
+                       queries=int(queries), edges_oriented=int(oriented),
+                       triangles=int(tri))
+        return int(tri)
+
+    def single(edges):
+        def body(own, srcl, dstl, seg, w, hit, dst):
+            return _tri_single(own, srcl, dstl, hit, dst)[0], None
+
+        _, stats, wall, _ = csr_pr._single_task(
+            spark, edges, ("src", "dst"), "id long, triangles long", body,
+            open_ok=True, stats_only=True)
+        return record(wall, *stats)
+
+    def step(pack_dir, nparts, info, routing):
         t0 = time.time()
         sent = _count_job(spark, pack_dir, nparts, FLUSH_PAIRS).collect()
-        t1 = time.time()
-        tri = int(sum(r["tri"] for r in sent))
-        metrics.record(
-            kind="triangles_packed", mode="tri_csr_packed",
-            wall_s=t1 - t0,
-            wedges=int(sum(r["wedges"] for r in sent)),
-            queries=int(sum(r["queries"] for r in sent)),
-            edges_oriented=int(info["ne"]), triangles=tri)
-        return tri
-    finally:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
+        return record(time.time() - t0,
+                      sum(r["wedges"] for r in sent),
+                      sum(r["queries"] for r in sent), info["ne"],
+                      sum(r["tri"] for r in sent))
+
+    return csr_pr._run_packed(spark, edges, cfg, metrics,
+                              TRI_TRANSIENT_PREFIXES, step, single=single,
+                              prepare=_prepare_tri_pack,
+                              target=TRI_EDGES_PER_PART)

@@ -1,14 +1,18 @@
 """Packed-CSR PER-VERTEX triangle counts — the by-vertex companion of
-kernels/csr_tri.py (global count), sharing its pack (rank-relabeled
-oriented sharded CSR + pack-time closing-edge key arrays) and its
-single-job, no-shuffle-of-wedges count phase.
+kernels/csr_tri.py (global count), sharing its two tiers through
+``csr_pr._run_packed``: the single-task tier (``csr_tri._tri_single``'s
+per-vertex credits over original ids, plus zero rows for the dst ids
+that are never a src) and the sharded tier below, on the global
+kernel's pack (rank-relabeled oriented sharded CSR + pack-time
+closing-edge key arrays) and its single-job, no-shuffle-of-wedges count
+phase.
 
 Semantics match algos/triangles.triangles_per_vertex exactly (every
 triangle credited to each of its 3 vertices; vertices in no triangle
 included with 0) — parity pytest-enforced, and the driver query
 `triangles_by_vertex` is DuckDB-oracled.
 
-What changes vs the global kernel:
+What the sharded tier changes vs the global kernel:
 
 - **Credits**: when a wedge (v, w) at apex u closes, the job credits all
   three RANK ids. Apex credits accumulate into a dense per-own bincount
@@ -42,12 +46,16 @@ import os
 
 import numpy as np
 
+from vite_spark.kernels import csr_pr
 from vite_spark.kernels.csr_sharded import _load_bounds, _positions
 from vite_spark.kernels.csr_tri import (
     FLUSH_PAIRS,
+    TRI_EDGES_PER_PART,
+    TRI_TRANSIENT_PREFIXES,
     _pid_tasks,
     _prepare_tri_pack,
     _rank_by_degree,
+    _tri_single,
 )
 
 
@@ -241,29 +249,42 @@ def _credit_job(spark, pack_dir, nparts, flush_pairs):
 
 
 def csr_triangles_per_vertex(spark, edges, cfg, metrics):
-    """(id, triangles) DataFrame via the packed kernel, or None when a
-    precondition fails (caller runs the wedge-join path): non-local
-    master. Zero-triangle vertices included, like the join path."""
+    """(id, triangles) DataFrame through ``csr_pr._run_packed``, or None
+    when the caller's wedge-join path must run (non-local master, empty
+    input). Zero-triangle vertices included, like the join path. Both
+    tiers record one ``triangles_vertex_packed`` row."""
     import time
 
     from pyspark.sql import functions as F
 
-    import shutil
+    def record(t0, oriented):
+        metrics.record(kind="triangles_vertex_packed",
+                       mode="tri_vertex_csr_packed",
+                       wall_s=round(time.time() - t0, 3),
+                       edges_oriented=int(oriented))
 
-    if not spark.sparkContext.master.startswith("local"):
-        return None
-    nparts = cfg.shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    pack_dir, nparts, info, cleanup = _prepare_tri_pack(
-        spark, edges, cfg, nparts)
-    try:
+    def single(edges):
+        def body(own, srcl, dstl, seg, w, hit, dst):
+            stats, cr = _tri_single(own, srcl, dstl, hit, dst,
+                                    credits=True)
+            # dst ids that are never a src: in no triangle, still rows
+            miss = np.setdiff1d(dst[~hit], own)
+            return stats, {"id": np.r_[own, miss],
+                           "triangles": np.r_[cr, np.zeros(len(miss),
+                                                           np.int64)]}
+
+        t0 = time.time()
+        out, stats, _, _ = csr_pr._single_task(
+            spark, edges, ("src", "dst"), "id long, triangles long", body,
+            open_ok=True)
+        record(t0, stats[2])
+        return out
+
+    def step(pack_dir, nparts, info, routing):
         t0 = time.time()
         verts = (edges.select(F.col("src").alias("id"))
                  .union(edges.select(F.col("dst").alias("id")))
                  .distinct())
-        if info["ne"] == 0:
-            return verts.select(
-                "id", F.lit(0).cast("long").alias("triangles"))
         rank_map = spark.read.parquet(
             _ensure_rank_map(spark, edges, pack_dir, nparts))
         credits = (_credit_job(spark, pack_dir, nparts, FLUSH_PAIRS)
@@ -273,16 +294,15 @@ def csr_triangles_per_vertex(spark, edges, cfg, metrics):
             "id",
             F.coalesce("triangles", F.lit(0))
             .cast("long").alias("triangles"))
-        if cleanup:
+        if not cfg.pack_cache_dir:
             # no pack cache: the result is a lazy plan over pack files
-            # that are about to be removed — materialize executor-side
-            # (truncates lineage past the pack reads) before the rmtree
+            # that the runner removes on return — materialize
+            # executor-side (truncates lineage past the pack reads)
             out = out.localCheckpoint(eager=True)
-        metrics.record(kind="triangles_vertex_packed",
-                       mode="tri_vertex_csr_packed",
-                       wall_s=round(time.time() - t0, 3),
-                       edges_oriented=int(info["ne"]))
+        record(t0, info["ne"])
         return out
-    finally:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
+
+    return csr_pr._run_packed(spark, edges, cfg, metrics,
+                              TRI_TRANSIENT_PREFIXES, step, single=single,
+                              prepare=_prepare_tri_pack,
+                              target=TRI_EDGES_PER_PART)

@@ -38,7 +38,6 @@ always-dense operating point, shared with csr_cc/csr_lpa.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 import numpy as np
@@ -46,12 +45,13 @@ import numpy as np
 from vite_spark.algos.coloring import hash32_np
 from vite_spark.kernels.csr import _atomic_save, _pid_frame
 from vite_spark.kernels.csr_core import _prepare_core_pack
-from vite_spark.kernels.csr_pr import _emit_own, _purge
+from vite_spark.kernels.csr_pr import _emit_own, _run_packed
 from vite_spark.kernels.csr_sharded import (
     _load_bounds,
     _req_of,
     _ux_owner_span,
 )
+from vite_spark.runtime.metrics import MetricsCollector
 
 M32 = 1 << 32
 WL_TRANSIENT_PREFIXES = ("wlo_",)
@@ -164,29 +164,18 @@ def _wl_job(spark, pack_dir, nparts, t, routing, seed, stride, offset,
 def csr_wl(spark, edges_simple, rounds, seed, stride, offset, cfg, metrics,
            want_profile=False):
     """Packed-CSR WL driver over a SIMPLE undirected edge table (caller
-    guarantees symmetrized, deduped, self-loop-free — vertex-closed).
-    Returns ((id, lab) DataFrame, profile-or-None), or None when a
-    precondition fails (caller runs the join path): non-local master or
-    routing finds the input not vertex-closed."""
-    if not spark.sparkContext.master.startswith("local"):
-        return None
-    nparts = cfg.shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    prep = _prepare_core_pack(spark, edges_simple, cfg, nparts)
-    if prep is None:
-        return None
-    pack_dir, nparts, info, routing, cleanup = prep
-    if info["nv"] == 0:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
-        return None
+    guarantees symmetrized, deduped, self-loop-free — vertex-closed),
+    through ``csr_pr._run_packed`` (sharded tier only). Returns ((id,
+    lab) DataFrame, profile-or-None), or None when the caller's join path
+    must run: non-local master, empty input, or routing finds the input
+    not vertex-closed."""
+    metrics = metrics if metrics is not None else MetricsCollector()
 
     def _class_count(sent_df):
         return sent_df.filter("lab >= 0").select("lab").distinct().count()
 
-    profile = [] if want_profile else None
-    try:
+    def step(pack_dir, nparts, info, routing):
+        profile = [] if want_profile else None
         sent = _wl_init_job(spark, pack_dir, nparts, want_profile)
         if want_profile:
             profile.append((0, _class_count(sent)))
@@ -197,20 +186,16 @@ def csr_wl(spark, edges_simple, rounds, seed, stride, offset, cfg, metrics,
             sent = _wl_job(spark, pack_dir, nparts, t, routing,
                            seed, stride, offset, want_profile)
             if want_profile:
-                n_cls = _class_count(sent)
-                profile.append((t, n_cls))
+                profile.append((t, _class_count(sent)))
             else:
                 sent.count()
-            if metrics is not None:
-                metrics.record(kind="wl_round", iter=t,
-                               wall_s=time.time() - t0,
-                               edges_processed=int(info["ne"]),
-                               mode="wl_csr_sharded")
-        out = _emit_own(spark, pack_dir, nparts, "id long, lab long",
-                        [("lab", f"wlo_{rounds}")])
-    finally:
-        if cleanup:
-            shutil.rmtree(pack_dir, ignore_errors=True)
-        else:
-            _purge(pack_dir, WL_TRANSIENT_PREFIXES)
-    return out, profile
+            metrics.record(kind="wl_round", iter=t,
+                           wall_s=time.time() - t0,
+                           edges_processed=int(info["ne"]),
+                           mode="wl_csr_sharded")
+        return _emit_own(spark, pack_dir, nparts, "id long, lab long",
+                         [("lab", f"wlo_{rounds}")]), profile
+
+    return _run_packed(spark, edges_simple, cfg, metrics,
+                       WL_TRANSIENT_PREFIXES, step,
+                       prepare=_prepare_core_pack)

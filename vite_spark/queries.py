@@ -628,8 +628,9 @@ def q_connected_components(spark, sf_dir):
     `connected_components`, so at sf0.01 this row drives the PACKED-CSR
     min-label kernel (kernels/csr_cc.py) against the recursive-CTE oracle
     — the same driver-oracles-the-kernel pattern as `pagerank` and
-    `lpa_labels`. The independent large-star/small-star algorithm stays
-    driver-checked via `cc_sizes` / `cc_gini`."""
+    `lpa_labels`. `cc_sizes` / `cc_gini` run the same CC; the
+    large-star/small-star algorithm stays on MSF's contraction
+    (algos/components.py)."""
     from vite_spark.algos.components import connected_components
 
     e = lineitem_part_edges(spark, sf_dir)
@@ -650,11 +651,11 @@ SELECT id, MIN(component) AS component FROM cc GROUP BY id"""
 
 
 def q_cc_sizes(spark, sf_dir):
-    from vite_spark.algos.components import connected_components_twophase
+    from vite_spark.algos.components import connected_components
 
     e = lineitem_part_edges(spark, sf_dir)
     return (
-        connected_components_twophase(spark, e)
+        connected_components(spark, e)
         .groupBy("component")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
@@ -670,11 +671,11 @@ SQL_CC_SIZES = SQL_CONNECTED_COMPONENTS.replace(
 def q_cc_gini(spark, sf_dir):
     """E4 (compare.cpp:310-336): Gini of the component-size distribution —
     driver-checked on the deterministic CC assignment."""
-    from vite_spark.algos.components import connected_components_twophase
+    from vite_spark.algos.components import connected_components
     from vite_spark.eval.compare import gini_coefficient
 
     e = lineitem_part_edges(spark, sf_dir)
-    lab = connected_components_twophase(spark, e).select(
+    lab = connected_components(spark, e).select(
         "id", F.col("component").alias("comm")
     )
     g = gini_coefficient(lab)
