@@ -247,3 +247,21 @@ def test_converged_improves_modularity_two_fixtures(spark):
     # deterministic protocol — floor pins as regression guards
     assert pins["karate"] > 0.25
     assert pins["planted"] > 0.0
+
+
+def test_converged_stop_rule_ignores_ulp_gains():
+    """The converged protocol continues only on a Q gain above
+    1e-12·max(1, |Q|): ties and ULP-close pairs (the two paths' sums in
+    different orders) stop."""
+    from vite_spark.algos.leiden import _q_improved
+
+    for q in (0.0, 0.41, -0.3, 2.5, 1e-20):
+        assert not _q_improved(q, q)
+        ulp = np.spacing(max(1.0, abs(q)))
+        for k in (1, 4, 64):
+            assert not _q_improved(q + k * ulp, q), (q, k)
+            assert not _q_improved(q - k * ulp, q), (q, k)
+        assert _q_improved(q + 1e-9 * max(1.0, abs(q)), q)
+        assert not _q_improved(q - 1e-9, q)
+    assert not _q_improved(float("nan"), 0.3)
+    assert not _q_improved(0.3, float("nan"))

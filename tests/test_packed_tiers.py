@@ -54,13 +54,13 @@ def _rand_sym_edges(seed: int, nv: int = 500, ne: int = 1200):
 def single_calls(monkeypatch):
     """Counts calls into the single-task tier."""
     calls = []
-    real = csr_pr._single_task
+    real = csr_pr._driver_local
 
     def spy(*a, **k):
         calls.append(a[3])
         return real(*a, **k)
 
-    monkeypatch.setattr(csr_pr, "_single_task", spy)
+    monkeypatch.setattr(csr_pr, "_driver_local", spy)
     return calls
 
 
@@ -196,8 +196,11 @@ def test_tier_rows(spark, edges, monkeypatch):
             [("join", "kernel")]
         assert _tiers(run(cfg, fn=lambda s, e, **k: shortest_paths(
             s, e, [-1], **k))) == [("join", "kernel")]
+    # a non-local master: the driver tier writes no scratch files, so
+    # only the sharded loop declines
     monkeypatch.setattr(spark.sparkContext, "master", "spark://elsewhere:7077")
-    assert _tiers(run(EngineConfig())) == [("join", "non_local")]
+    assert _tiers(run(EngineConfig())) == [("single", None)]
+    assert _tiers(run(TIERS["sharded"])) == [("join", "non_local")]
     # the tier row is no superstep: perfbench's counters skip it
     assert not _is_superstep("tier")
 
@@ -372,13 +375,12 @@ def test_tier_rows_triangles_kcore_wl(spark, edges, monkeypatch):
         assert rows(fn, EngineConfig()) == [("single", None)]
         assert rows(fn, sharded) == [("sharded", None)]
         assert rows(fn, EngineConfig(), empty) == [("join", "empty")]
-    # the triangle gate is the kernels' own edge-row target
-    from vite_spark.kernels import csr_tri, csr_tri_vertex
+    # the triangle gate is the shared edge-row target
+    from vite_spark import config
 
     ne = edges.count()
     for target, want in ((ne - 1, "sharded"), (ne, "single")):
-        for mod in (csr_tri, csr_tri_vertex):
-            monkeypatch.setattr(mod, "TRI_EDGES_PER_PART", target)
+        monkeypatch.setattr(config, "PACK_EDGES_PER_PART", target)
         for fn in (tri, tri_v):
             assert rows(fn, EngineConfig()) == [(want, None)], target
     for fn in (kcore, wl):
@@ -396,7 +398,10 @@ def test_tier_rows_triangles_kcore_wl(spark, edges, monkeypatch):
         assert call(m) is None
         assert _tiers(m) == [("join", "open")]
     monkeypatch.setattr(spark.sparkContext, "master", "spark://elsewhere:7077")
-    for fn in (tri, tri_v, kcore, wl):
+    for fn in (tri, tri_v):
+        assert rows(fn, EngineConfig()) == [("single", None)]
+        assert rows(fn, sharded) == [("join", "non_local")]
+    for fn in (kcore, wl):
         assert rows(fn, EngineConfig()) == [("join", "non_local")]
 
 

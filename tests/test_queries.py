@@ -104,3 +104,27 @@ def test_cc_rows_match_twophase(spark):
     want = spark.createDataFrame([(g,)], "g double").select(
         F.round("g", 6).alias("gini")).collect()
     assert registry()["cc_gini"][0](spark, SF_DIR).collect() == want
+
+
+def test_graph_queries_leave_no_state(spark):
+    """PageRank, CC sizes, the triangle total and LPA each leave no
+    persisted RDD and no engine scratch entry behind: their single-task
+    tier runs in the driver."""
+    import os
+    import tempfile
+
+    from vite_spark.config import resolve_scratch
+
+    jsc = spark.sparkContext._jsc
+    scratch = resolve_scratch(None) or tempfile.gettempdir()
+
+    def packs():
+        return {f for f in os.listdir(scratch) if f.startswith("vite_")}
+
+    for name in ("pagerank", "cc_sizes", "triangles_total", "lpa_labels"):
+        rdds, before = set(jsc.getPersistentRDDs().keys()), packs()
+        assert registry()[name][0](spark, SF_DIR).collect(), name
+        # ids, not a count: the context cleaner may drop an earlier
+        # test's RDDs while the call runs
+        assert set(jsc.getPersistentRDDs().keys()) - rdds == set(), name
+        assert packs() - before == set(), name

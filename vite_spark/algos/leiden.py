@@ -153,7 +153,7 @@ def leiden_refine_sweeps(
                 curr = nxt
                 break
             q_new = modularity_of(edges, nxt)
-            if not (q_new > q_prev):
+            if not _q_improved(q_new, q_prev):
                 break                  # revert: keep pre-sweep labels
             q_prev = q_new
         curr = nxt
@@ -220,7 +220,7 @@ def leiden_refine_numpy(
             if np.array_equal(new, comm):
                 break
             q_new = _modularity_numpy(src, dst, w, new)
-            if not (q_new > q_prev):
+            if not _q_improved(q_new, q_prev):
                 break
             q_prev = q_new
         comm = new
@@ -297,7 +297,7 @@ def _jacobi_sweeps(
                 curr = nxt
                 break
             q_new = modularity_of(edges, nxt)
-            if not (q_new > q_prev):
+            if not _q_improved(q_new, q_prev):
                 break                  # revert: keep pre-sweep labels
             q_prev = q_new
         curr = nxt
@@ -439,14 +439,27 @@ def leiden_levels(
 # sweep cap for the converged (k=None) protocol. Jacobi sweeps DO
 # oscillate in practice (measured period-2 cycle on karate, Q degrading
 # mid-cycle), so convergence is monotone-Q: sweep while full-graph
-# modularity strictly improves, REVERT the first non-improving sweep —
-# the reference's ΔQ-threshold break analog — capped here as a safety
-# bound. Identical rule on the Spark and NumPy paths (pytest-pinned).
+# modularity improves (``_q_improved``), REVERT the first non-improving
+# sweep — the reference's ΔQ-threshold break analog — capped here as a
+# safety bound. Identical rule on the Spark and NumPy paths
+# (pytest-pinned).
 MAX_CONVERGE_SWEEPS = 64
 # level cap for the converged protocol (levels=None): levels stop when
 # coarsening stops shrinking the graph; the cap is a safety bound only
 # (real graphs coarsen out in a handful of levels).
 MAX_CONVERGE_LEVELS = 10
+
+# the converged protocol's least Q gain, relative to max(1, |Q|): Spark
+# and NumPy sum Q in different orders, so a strict ``>`` on ULP-close
+# values could keep one path sweeping where its mirror stops
+Q_GAIN_RTOL = 1e-12
+
+
+def _q_improved(q_new: float, q_prev: float) -> bool:
+    """Whether a converged sweep continues: its Q gain exceeds
+    ``Q_GAIN_RTOL · max(1, |q_prev|)``. Ties, ULP-level differences and
+    NaN stop."""
+    return q_new - q_prev > Q_GAIN_RTOL * max(1.0, abs(q_prev))
 
 
 def _modularity_numpy(src, dst, w, comm):
@@ -519,7 +532,7 @@ def _jacobi_numpy(src, dst, w, comm0, k, parent=None):
             if np.array_equal(new, comm):
                 break
             q_new = _modularity_numpy(src, dst, w, new)
-            if not (q_new > q_prev):
+            if not _q_improved(q_new, q_prev):
                 break
             q_prev = q_new
         comm = new

@@ -255,21 +255,21 @@ def _local_phase(
     vite_spark/oracle/louvain_ref.py) for levels whose edge table fits on
     one node. Identical labels/Q to the distributed path (pytest-proven);
     arbitrary vertex ids handled by a monotone densify/undensify, which
-    preserves every id-order tie-break. With a checkpoint dir, every
+    preserves every id-order tie-break. The level comes in and the labels
+    go out through the packed runner's driver-tier helpers
+    (kernels/csr_pr ``_collect``/``_emit_local``: one Arrow collect, one
+    Arrow hand-off, no Python worker). With a checkpoint dir, every
     accepted iteration is written from the driver (no Spark job) in the
     join path's layout and order."""
     import time as _t
 
     import numpy as np
-    import pandas as pd
 
+    from vite_spark.kernels.csr_pr import _collect, _emit_local
     from vite_spark.oracle.louvain_ref import louvain_oracle_phase
 
     t0 = _t.time()
-    pdf = edges.select("src", "dst", "weight").toPandas()
-    s = pdf["src"].to_numpy(dtype=np.int64)
-    d = pdf["dst"].to_numpy(dtype=np.int64)
-    w = pdf["weight"].to_numpy(dtype=np.float64)
+    s, d, w = _collect(edges, ("src", "dst", "weight"))
     uniq = np.unique(np.r_[s, d])
     sd = np.searchsorted(uniq, s)
     dd = np.searchsorted(uniq, d)
@@ -277,10 +277,9 @@ def _local_phase(
     ne = len(s)
     col_arr = None
     if colors is not None:
-        cp = colors.toPandas()
+        cid, cval = _collect(colors, ("id", "color"))
         col_arr = np.full(nv, -1, dtype=np.int64)
-        pos = np.searchsorted(uniq, cp["id"].to_numpy(dtype=np.int64))
-        col_arr[pos] = cp["color"].to_numpy(dtype=np.int64)
+        col_arr[np.searchsorted(uniq, cid)] = cval
     on_iter = None
     if cfg.checkpoint_dir:
         state = {"two_m": float(w.sum()), "nv": nv, "ne": ne,
@@ -307,8 +306,8 @@ def _local_phase(
             edges_per_sec=ne * len(trace) / wall if wall > 0 else 0.0,
             mode="local_csr",
         )
-    out = pd.DataFrame({"id": uniq, "comm": uniq[labels]})
-    adf = spark.createDataFrame(out, schema="id long, comm long")
+    adf = _emit_local(spark, {"id": uniq, "comm": uniq[labels]},
+                      "id long, comm long")
     return PhaseResult(assignment=adf, q=float(q), iters=iters, nv=nv)
 
 
@@ -813,7 +812,7 @@ def louvain_phase(
             and resume_from is None
         ):
             # pin the level's edge table across the probe and whichever
-            # tier consumes it next (the local tier's toPandas or the
+            # tier consumes it next (the local tier's Arrow collect or the
             # packed path's pack job): each re-ran the caller's upstream
             # derivation on an unpersisted input (csr_pr._run_packed's
             # pattern). Skipped when the caller already cached it (the

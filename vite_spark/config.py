@@ -47,6 +47,22 @@ def threshold_for_phase(phase: int) -> float:
 # dispatch cost (measured ~7 ms/task + ~190 ms/job on this host); 2M rows
 # ≈ 30-60 ms of sweep per task. Overridable for clusters whose task
 # dispatch or memory profile differs.
+#
+# At one partition (ne ≤ this target) every kernel with a single-task
+# tier runs in the driver (kernels/csr_pr._driver_local), the triangle
+# kernels included. Crossover at the top (4-core VM, local[4], seeded
+# inputs, 3 interleaved reps, whole call, driver tier vs
+# shuffle_partitions=4): PageRank 4M-row ring lattice 5.4/4.7/4.0 s vs
+# 10.4/7.5/7.4 s, Chung-Lu (alpha 2.1, 4M rows) 7.5/6.7/6.8 s vs
+# 14.7/13.9/13.4 s; CC Chung-Lu 5.5/5.6/6.0 s vs 8.3/8.6/7.9 s; triangle
+# count 100-vertex dense communities (p = 0.5) at 2M rows 4.3/4.2/4.0 s vs
+# 13.3/9.5/7.5 s, at 4M 6.0/7.3/6.8 s vs 10.0/10.2/10.6 s, ring lattice
+# 4M 2.4/2.0/1.8 s vs 9.0/8.6/8.7 s, Chung-Lu 4M 7.7/7.7/7.7 s vs
+# 11.5/10.3/10.2 s; per-vertex triangles dense 4M 10.3/10.7/9.6 s vs
+# 29.9/21.2/17.5 s, Chung-Lu 4M 10.2/9.4/9.4 s vs 20.1/15.7/16.9 s. Driver
+# peak RSS at 4M rows: Python 350-440 MB (PageRank, CC), 590 MB (triangle
+# count), 1.1 GB (per-vertex triangles on dense communities); JVM
+# 1.1-1.7 GB (3 GB heap).
 PACK_EDGES_PER_PART = int(
     os.environ.get("SPARK_GRAFT_PACK_EDGES_PER_PART", "4000000"))
 

@@ -41,8 +41,8 @@ accumulation order), and min-plus has no accumulation-order ambiguity
 per-iteration changed counts equal the join path's in every tier
 (pytest-enforced, tests/test_bfs_packed.py).
 
-Fallbacks to the join path: a non-local master, an input that is not
-vertex-closed (a dst that is never a src has no owner to author its
+Fallbacks to the join path: a non-local master (sharded loop only), an
+input that is not vertex-closed (a dst that is never a src has no owner to author its
 distances), and a landmark that is not a graph vertex (the join path's
 unconditional (lm, lm, 0) seed row has no owner here).
 """

@@ -20,8 +20,8 @@ high-diameter graphs at cluster scale the O(log²)-round
 `connected_components_twophase` (large-star/small-star) remains the
 right DataFrame shape.
 
-Fallbacks to the join path: a non-local master, and an input that is not
-vertex-closed (a dst that is never a src has no owner to author its
+Fallbacks to the join path: a non-local master (sharded loop only), and
+an input that is not vertex-closed (a dst that is never a src has no owner to author its
 label). There is no self-loop filter: the packed path packs edges as-is,
 and a vertex with only self-loops keeps its identity label.
 """

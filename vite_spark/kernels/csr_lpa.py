@@ -17,8 +17,8 @@ exact in both this kernel and the join path (doubles < 2^53), so labels
 are IDENTICAL; with non-integer weights a float-tied vote could resolve
 differently across summation orders, so both tiers send non-integer-
 weight graphs to the join path (same gate as the sharded Louvain kernel,
-r3 ADVICE #1). The other fallbacks: a non-local master, and an input
-that is not vertex-closed (labels of every dst must be owned somewhere).
+r3 ADVICE #1). The other fallbacks: a non-local master (sharded loop
+only), and an input that is not vertex-closed (labels of every dst must be owned somewhere).
 """
 
 from __future__ import annotations

@@ -5,29 +5,33 @@ Every route-pack kernel (PageRank, HITS, CC, LPA, BFS) iterates over the
 SAME sharded CSR pack the Louvain kernel uses (kernels/csr_sharded.py:
 1-D range ownership, per-partition sorted universe ux, pack-time
 req_{owner}_{reader} interest sets) through one runner, ``_run_packed``:
-local-master check, one input pin, one gate, pack build or reuse,
+one input pin, one gate, pack build or reuse, the local-master check,
 cleanup, and one ``kind="tier"`` metrics row naming the tier that ran
 and why. The runner also serves the kernels that build their own pack
 (the ``prepare`` argument): both triangle kernels (kernels/csr_tri*.py:
-oriented rank-relabeled pack, single-task tier under their own edge-row
-target) and
+oriented rank-relabeled pack, single-task tier on open inputs too) and
 k-core and WL (kernels/csr_core.py's simplified-graph pack, sharded
 tier only). Vite's DistGraph likewise runs one code path at any rank
 count: one rank simply owns [0, nv].
 
 Gate: a run whose pack would have one partition (``cfg.shuffle_partitions``,
 else the scale-adaptive count ``adaptive_pack_nparts``), with no
-``checkpoint_dir``, takes the single-task tier; every other run takes the
-sharded job loop. A non-local master, an empty input, an input that is not
-vertex-closed (except for the triangle kernels, whose bodies take open
-inputs), or a kernel's own precondition sends the run to the caller's
-join path (the runner returns None).
+``checkpoint_dir``, takes the single-task tier, on any master; every
+other run takes the sharded job loop. A non-local master (sharded loop
+only: the pack is a shared filesystem), an empty input, an input that is
+not vertex-closed (except for the triangle kernels, whose bodies take
+open inputs), or a kernel's own precondition sends the run to the
+caller's join path (the runner returns None).
 
-- **Single task** (``_single_task``): ONE job maps the edge rows into one
-  task, which lexsorts them into pack order and derives own/srcl/dstl
-  exactly as a one-partition pack would (ux == own when vertex-closed,
-  there is no exchange), then runs the whole recurrence in place. No
-  range exchange, pack/route files or per-iteration jobs.
+- **Single task** (``_driver_local``), run in the driver: ONE Arrow
+  collect brings the edge rows into the driver, which lexsorts them into
+  pack order and derives own/srcl/dstl exactly as a one-partition pack
+  would (ux == own when vertex-closed, there is no exchange), runs the
+  whole recurrence in place and hands the result back as one Arrow
+  table. No shuffle, Python worker, pack/route or scratch files,
+  per-iteration jobs or persisted blocks. Louvain's driver-local phase
+  (algos/louvain._local_phase) collects and emits through the same
+  helpers.
 - **Sharded job loop**: one job per iteration, in one of two shapes.
 
 **Owner-authored sweep** (CC, LPA, BFS — ``OwnerSweep``): the state of a
@@ -88,7 +92,7 @@ scalars on the driver, so the plan survives a 100× scale-up the same way
 the Louvain sharded kernel does.
 
 Vertex-closed input matters: every dst must also be a src (build_routes,
-resp. the single task's sentinel, detects this; open graphs have
+resp. the single task's membership test, detects this; open graphs have
 dangling mass the join path redistributes, and a dst that is never a src
 has no owner to author its state).
 
@@ -220,20 +224,23 @@ class _Fallback(Exception):
 
 
 def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None,
-                prepare=_prepare_pack, target=None):
+                prepare=_prepare_pack):
     """The packed kernels' one runner. Returns None when the caller's
-    join path must run instead: a non-local master (the pack is a shared
-    filesystem), an empty input, an input that is not vertex-closed, or a
-    tier raising ``_Fallback`` (a kernel's own precondition).
+    join path must run instead: a non-local master on the sharded loop
+    (the pack is a shared filesystem), an empty input, an input that is
+    not vertex-closed, or a tier raising ``_Fallback`` (a kernel's own
+    precondition).
 
     Gate: the pack's partition count is ``cfg.shuffle_partitions``,
     else ``adaptive_pack_nparts`` of the session's count over one count
-    job — the only count of ``edges`` — at ``target`` edge rows per
-    partition (default ``PACK_EDGES_PER_PART``); at one partition with no
+    job — the only count of ``edges`` — at ``PACK_EDGES_PER_PART`` edge
+    rows per partition; at one partition with no
     ``cfg.checkpoint_dir`` a kernel with a single-task tier runs
-    ``single(edges)``. Every other run builds (or reopens the cached)
-    pack through ``prepare(spark, edges, cfg, nparts, ne)``: given the
-    requested partition count and the gate's count (None when
+    ``single(edges)`` in the driver (``_driver_local``: no scratch
+    files, so on any master). Every other run needs a local master and
+    builds (or reopens the cached) pack through
+    ``prepare(spark, edges, cfg, nparts, ne)``: given the requested
+    partition count and the gate's count (None when
     ``cfg.shuffle_partitions`` fixes the layout), the builder picks the
     layout and returns ``(pack_dir, nparts, info, routing, cleanup)``,
     or None when not vertex-closed. The runner then returns
@@ -244,8 +251,8 @@ def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None,
     only) and the gate inputs ``nparts`` and ``ne`` (the gate's count,
     else the pack's; None when neither exists).
 
-    One pin spans every consumer of ``edges`` (gate count, single task or
-    range-boundary sample + pack job): without it each re-ran the
+    One pin spans every consumer of ``edges`` (gate count, driver collect
+    or range-boundary sample + pack job): without it each re-ran the
     caller's whole upstream derivation (interleaved A/B at sf0.1:
     q_pagerank 4.73 s vs 6.50 s, packed-CC query 4.66 s vs 7.52 s
     medians, every pair wins). Skipped when the caller already cached
@@ -258,7 +265,8 @@ def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None,
     def tier(name, reason=None):
         metrics.record(kind="tier", tier=name, reason=reason, **gate)
 
-    if not spark.sparkContext.master.startswith("local"):
+    local = spark.sparkContext.master.startswith("local")
+    if not local and (single is None or cfg.checkpoint_dir):
         tier("join", "non_local")
         return None
     pin = None
@@ -272,13 +280,14 @@ def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None,
                 gate["ne"] = ne = edges.count()
                 if ne == 0:
                     raise _Fallback("empty")
-                gate["nparts"] = adaptive_pack_nparts(requested, ne,
-                                                      target)
+                gate["nparts"] = adaptive_pack_nparts(requested, ne)
             if (single is not None and gate["nparts"] == 1
                     and not cfg.checkpoint_dir):
                 out = single(edges)
                 tier("single")
                 return out
+            if not local:
+                raise _Fallback("non_local")
             prep = prepare(spark, edges, cfg, requested, gate["ne"])
         finally:
             if pin is not None:
@@ -338,91 +347,70 @@ def _members(ids, x):
     return pos, hit
 
 
-def _single_task(spark, edges, cols, out, body, open_ok=False,
-                 stats_only=False):
-    """The single-task tier's shared prologue and driver side. ONE job
-    moves every edge row into one task, which lexsorts them into pack row
-    order and derives what a one-partition pack holds: own = sorted
-    distinct src, srcl, dstl (ux == own when the input is vertex-closed)
-    and the src segment starts. ``body(own, srcl, dstl, seg, w)`` (w = the
-    weights when ``cols`` has them, else None) returns (per-iteration
-    stats, the columns of the output schema ``out``), or None when the
-    kernel's own precondition fails.
+def _collect(edges, cols):
+    """The columns ``cols`` of ``edges`` as NumPy arrays in the driver,
+    through one Arrow collect (``DataFrame.toArrow``, whatever the
+    session's Arrow setting): ``weight`` as float64, the rest int64."""
+    tbl = edges.select(*cols).toArrow()
+    return [np.asarray(tbl.column(c).to_numpy(),
+                       np.float64 if c == "weight" else np.int64)
+            for c in cols]
 
-    Returns (DataFrame(``out``), stats, wall_s, ne); with ``stats_only``
-    (a body whose columns are None: the scalar triangle count) the job's
-    rows are collected instead of checkpointed, so nothing stays
-    persisted, and the DataFrame is None. Raises ``_Fallback``
-    when the input is empty or not vertex-closed, or body returned None
-    (sentinel row kind 3, its ``id`` the reason) — the join path then
-    provides the open-graph semantics, exactly like the packed path's
-    routes fallback. A body that handles open inputs itself (the
-    triangle kernels, ``open_ok``) is called on every nonempty input as
+
+def _emit_local(spark, cols, out):
+    """A DataFrame of schema ``out`` ("id long, ...") over the driver's
+    arrays ``cols`` (column name → array), handed to the JVM as one Arrow
+    table: no job, no Python worker, nothing persisted."""
+    import pyarrow as pa
+
+    names = [c.split()[0] for c in out.split(",")]
+    return spark.createDataFrame(
+        pa.table({n: np.asarray(cols[n]) for n in names}), schema=out)
+
+
+def _driver_local(spark, edges, cols, out, body, open_ok=False):
+    """The single-task tier, run in the driver: ``_collect`` the edge
+    rows, lexsort them into pack row order and derive what a
+    one-partition pack holds: own = sorted distinct src, srcl, dstl
+    (ux == own when the input is vertex-closed) and the src segment
+    starts. ``body(own, srcl, dstl, seg, w)`` (w = the weights when
+    ``cols`` has them, else None) returns (per-iteration stats, the
+    columns of the output schema ``out``), or None when the kernel's own
+    precondition fails.
+
+    Returns (DataFrame(``out``) via ``_emit_local``, stats, wall_s, ne);
+    the DataFrame is None when the body's columns are (the scalar
+    triangle count). Raises ``_Fallback`` when the input is empty or not
+    vertex-closed, or body returned None — the join path then provides
+    the open-graph semantics, exactly like the packed path's routes
+    fallback. A body that handles open inputs itself (the triangle
+    kernels, ``open_ok``) is called on every nonempty input as
     ``body(own, srcl, dstl, seg, w, hit, dst)``: ``hit`` marks the rows
     whose dst is a src (dstl is its position in own only there) and
     ``dst`` holds the rows' dst ids."""
-    names = [c.split()[0] for c in out.split(",")]
-    reasons = ("empty", "open", "kernel")
-
-    def run(pdf_iter):
-        import pandas as pd
-
-        def frame(kind, cols):
-            n = len(cols["id"])
-            return pd.DataFrame({"kind": np.full(n, kind, np.int32), **{
-                c: cols.get(c, np.zeros(n, np.int64)) for c in names}})
-
-        parts = [p for p in pdf_iter if len(p)]
-        res, why = None, 0
-        if parts:
-            pdf = (pd.concat(parts, ignore_index=True) if len(parts) > 1
-                   else parts[0])
-            src = pdf["src"].to_numpy(np.int64)
-            dst = pdf["dst"].to_numpy(np.int64)
-            order = np.lexsort((dst, src))          # pack row order
-            src, dst = src[order], dst[order]
-            w = (pdf["weight"].to_numpy(np.float64)[order]
-                 if "weight" in pdf else None)
-            first = np.r_[True, src[1:] != src[:-1]]
-            seg = np.flatnonzero(first)
-            own = src[seg]
-            srcl = (np.cumsum(first) - 1).astype(np.int64)
-            pos, hit = _members(own, dst)
-            why = 1
-            if open_ok:
-                why = 2
-                res = body(own, srcl, pos, seg, w, hit, dst)
-            elif hit.all():
-                why = 2
-                res = body(own, srcl, pos, seg, w)
-        if res is None:
-            yield frame(3, {"id": [why]})
-            return
-        stats, cols = res
-        # kind 1: id 0 carries the edge count, ids 1..K the stats
-        yield frame(1, {"id": np.arange(len(stats) + 1, dtype=np.int64),
-                        names[-1]: np.asarray([len(src), *stats])})
-        if cols is not None:
-            yield frame(0, cols)
-
     t0 = time.time()
-    mixed = edges.select(*cols).repartition(1).mapInPandas(
-        run, schema="kind int, " + out)
-    if stats_only:
-        meta, mixed = mixed.collect(), None
+    src, dst, *w = _collect(edges, cols)
+    if not len(src):
+        raise _Fallback("empty")
+    order = np.lexsort((dst, src))          # pack row order
+    src, dst = src[order], dst[order]
+    w = w[0][order] if w else None
+    first = np.r_[True, src[1:] != src[:-1]]
+    seg = np.flatnonzero(first)
+    own = src[seg]
+    srcl = np.cumsum(first) - 1
+    pos, hit = _members(own, dst)
+    if open_ok:
+        res = body(own, srcl, pos, seg, w, hit, dst)
+    elif not hit.all():
+        raise _Fallback("open")
     else:
-        mixed = mixed.localCheckpoint(eager=True)
-    wall = time.time() - t0
-    if mixed is not None:
-        meta = mixed.filter(F.col("kind") != 0).collect()
-    bad = [r["id"] for r in meta if r["kind"] == 3]
-    if bad:
-        raise _Fallback(reasons[bad[0]])
-    stats = [v for _, v in sorted((int(r["id"]), r[names[-1]])
-                                  for r in meta)]
-    return (None if mixed is None
-            else mixed.filter(F.col("kind") == 0).select(*names),
-            stats[1:], wall, int(stats[0]))
+        res = body(own, srcl, pos, seg, w)
+    if res is None:
+        raise _Fallback("kernel")
+    stats, rows = res
+    frame = None if rows is None else _emit_local(spark, rows, out)
+    return frame, stats, time.time() - t0, len(src)
 
 
 def _identity(ids):
@@ -559,7 +547,8 @@ def _owner_sweep(spark, edges, max_iter, cfg, metrics, op):
             return chg, op.frame(own, curr)
 
         cols = ("src", "dst", "weight") if op.weights else ("src", "dst")
-        out, chg, wall, ne = _single_task(spark, edges, cols, op.out, body)
+        out, chg, wall, ne = _driver_local(spark, edges, cols, op.out,
+                                           body)
         for t, c in enumerate(chg, 1):
             metrics.record(kind=kind, iter=t, changed=int(c),
                            wall_s=wall / len(chg), edges_processed=ne,
@@ -861,7 +850,7 @@ def csr_pagerank(spark, edges, damping, tol, max_iter, weighted, cfg,
             norm = float(r.sum()) if mode == "eigen" else 1.0
             return deltas, {"id": own, "rank": r / norm}
 
-        out, deltas, wall, ne = _single_task(
+        out, deltas, wall, ne = _driver_local(
             spark, edges, ("src", "dst", "weight"), "id long, rank double",
             body)
         # metrics rows mirror the job loop's one-job-late delta protocol

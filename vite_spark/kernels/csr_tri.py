@@ -4,20 +4,22 @@ count") over the shared kernel infrastructure (Louvain kernels/csr*.py,
 PageRank csr_pr.py, LPA csr_lpa.py, CC csr_cc.py).
 
 Both triangle kernels (this global count and kernels/csr_tri_vertex.py)
-run through the packed runner ``csr_pr._run_packed``: local-master check,
-one input pin, the edge-count gate (``adaptive_pack_nparts`` over one
-count job, at ``TRI_EDGES_PER_PART`` rows per partition), cleanup and
-the ``kind="tier"`` row. Two tiers:
+run through the packed runner ``csr_pr._run_packed``: one input pin,
+the edge-count gate (``adaptive_pack_nparts`` over one count job, at the
+shared ``config.PACK_EDGES_PER_PART`` rows per partition; the crossover
+is measured there), the local-master check of the sharded tier, cleanup
+and the ``kind="tier"`` row. Two tiers:
 
 - **Single task** (one partition at that target, no ``checkpoint_dir``):
-  ``csr_pr._single_task`` moves the rows into one task, where
-  ``_tri_single`` runs ``algos/triangles._oriented`` and the count job's
-  local probe in NumPy: drop self-loops and duplicate rows, out-degree,
-  drop rows whose dst has no out-edge, rank by (deg, id) and orient low
-  → high, offset-k wedge passes with a searchsorted membership test per
-  closing edge, per-vertex credits by bincount. Inputs that are not
-  vertex-closed stay on this tier (the body takes the miss mask). No
-  pack files, one Spark job.
+  ``csr_pr._driver_local`` collects the rows into the driver with one
+  Arrow collect, where ``_tri_single`` runs ``algos/triangles._oriented``
+  and the count job's local probe in NumPy: drop self-loops and
+  duplicate rows, out-degree, drop rows whose dst has no out-edge, rank
+  by (deg, id) and orient low → high, offset-k wedge passes with a
+  searchsorted membership test per closing edge, per-vertex credits by
+  bincount. Inputs that are not vertex-closed stay on this tier (the
+  body takes the miss mask). No pack files, no Python worker, one Spark
+  job (the collect).
 - **Sharded**: the pack and count phases below. ``_prepare_tri_pack`` is
   the runner's pack builder; it keeps its own partition cap from the
   wedge volume.
@@ -128,21 +130,6 @@ TRI_TRANSIENT_PREFIXES = ("twq_",)
 # remote wedge queries buffered per task before a probe batch (bounds
 # per-task memory; bigger batches amortize the per-owner searchsorteds)
 FLUSH_PAIRS = 8_000_000
-
-# The triangle kernels' edge-row gate: the single-task tier takes inputs
-# of at most this many rows (the runner's ``target``; the linear sweeps
-# use config.PACK_EDGES_PER_PART, 4M). The single tier's wedge probe runs
-# on one core, so its loss grows with the wedges per row, while the
-# sharded tier's loss is its fixed pack overhead. Measured (4-core VM,
-# local[4], seeded NumPy inputs, whole triangle_count wall, single vs
-# shuffle_partitions=4): 100-vertex dense communities (p = 0.5, ~15.5
-# wedges per row) at 1M rows 6.5/5.6/6.1 s vs 8.7/6.6/6.0 s (tie), at
-# 2M rows 15.4/13.7/13.9 s vs 11.5/10.5/11.7 s, at 4M rows 35.1 s vs
-# 26.7 s; ring lattice (k = 5, ~1 wedge per row) at 2M rows 3.3/2.6/2.2 s
-# vs 7.6/5.5/4.8 s, at 4M rows 6.9/4.8/5.7 s vs 15.2/8.5/9.5 s;
-# Chung-Lu alpha = 2.1 at 4M rows a tie. 1M keeps every measured input
-# at most one tie away from its faster tier.
-TRI_EDGES_PER_PART = 1_000_000
 
 
 def _pid_tasks(spark, nparts):
@@ -312,7 +299,7 @@ def _prepare_tri_pack(spark, edges, cfg, nparts, ne):
 def _tri_single(own, srcl, dstl, hit, dst, credits=False):
     """The single-task tier's count: ``algos/triangles._oriented`` and
     the count job's local probe, step by step, on one task's lexsorted
-    rows (``csr_pr._single_task``'s open-input body arguments). Returns
+    rows (``csr_pr._driver_local``'s open-input body arguments). Returns
     (stats, cr): stats = [wedges, queries, edges_oriented, triangles]
     exactly as the sharded count job sums them at one partition (no
     remote queries); cr = per-own-vertex triangle counts (every triangle
@@ -602,9 +589,9 @@ def _count_job(spark, pack_dir, nparts, flush_pairs):
 def csr_triangles(spark, edges, cfg, metrics) -> int | None:
     """Packed-CSR global triangle count through ``csr_pr._run_packed``.
     Returns the exact count, or None when the caller's wedge-join path
-    must run (non-local master, empty input). Both tiers record one
-    ``triangles_packed`` row (``wedges``, ``queries``, ``edges_oriented``,
-    ``triangles``)."""
+    must run (non-local master above the gate, empty input). Both tiers
+    record one ``triangles_packed`` row (``wedges``, ``queries``,
+    ``edges_oriented``, ``triangles``)."""
 
     def record(wall, wedges, queries, oriented, tri):
         metrics.record(kind="triangles_packed", mode="tri_csr_packed",
@@ -617,9 +604,9 @@ def csr_triangles(spark, edges, cfg, metrics) -> int | None:
         def body(own, srcl, dstl, seg, w, hit, dst):
             return _tri_single(own, srcl, dstl, hit, dst)[0], None
 
-        _, stats, wall, _ = csr_pr._single_task(
+        _, stats, wall, _ = csr_pr._driver_local(
             spark, edges, ("src", "dst"), "id long, triangles long", body,
-            open_ok=True, stats_only=True)
+            open_ok=True)
         return record(wall, *stats)
 
     def step(pack_dir, nparts, info, routing):
@@ -632,5 +619,4 @@ def csr_triangles(spark, edges, cfg, metrics) -> int | None:
 
     return csr_pr._run_packed(spark, edges, cfg, metrics,
                               TRI_TRANSIENT_PREFIXES, step, single=single,
-                              prepare=_prepare_tri_pack,
-                              target=TRI_EDGES_PER_PART)
+                              prepare=_prepare_tri_pack)

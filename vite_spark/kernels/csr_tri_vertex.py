@@ -50,7 +50,6 @@ from vite_spark.kernels import csr_pr
 from vite_spark.kernels.csr_sharded import _load_bounds, _positions
 from vite_spark.kernels.csr_tri import (
     FLUSH_PAIRS,
-    TRI_EDGES_PER_PART,
     TRI_TRANSIENT_PREFIXES,
     _pid_tasks,
     _prepare_tri_pack,
@@ -250,9 +249,9 @@ def _credit_job(spark, pack_dir, nparts, flush_pairs):
 
 def csr_triangles_per_vertex(spark, edges, cfg, metrics):
     """(id, triangles) DataFrame through ``csr_pr._run_packed``, or None
-    when the caller's wedge-join path must run (non-local master, empty
-    input). Zero-triangle vertices included, like the join path. Both
-    tiers record one ``triangles_vertex_packed`` row."""
+    when the caller's wedge-join path must run (non-local master above the
+    gate, empty input). Zero-triangle vertices included, like the join
+    path. Both tiers record one ``triangles_vertex_packed`` row."""
     import time
 
     from pyspark.sql import functions as F
@@ -274,7 +273,7 @@ def csr_triangles_per_vertex(spark, edges, cfg, metrics):
                                                            np.int64)]}
 
         t0 = time.time()
-        out, stats, _, _ = csr_pr._single_task(
+        out, stats, _, _ = csr_pr._driver_local(
             spark, edges, ("src", "dst"), "id long, triangles long", body,
             open_ok=True)
         record(t0, stats[2])
@@ -304,5 +303,4 @@ def csr_triangles_per_vertex(spark, edges, cfg, metrics):
 
     return csr_pr._run_packed(spark, edges, cfg, metrics,
                               TRI_TRANSIENT_PREFIXES, step, single=single,
-                              prepare=_prepare_tri_pack,
-                              target=TRI_EDGES_PER_PART)
+                              prepare=_prepare_tri_pack)

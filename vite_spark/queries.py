@@ -279,7 +279,9 @@ def q_triangles_total(spark, sf_dir):
 
     e = lineitem_part_edges(spark, sf_dir)
     n = triangle_count(spark, e)
-    return spark.createDataFrame([(n,)], "triangles long")
+    # a literal over spark.range, not createDataFrame of a Python list:
+    # the list's rows go through a Python worker when collected
+    return spark.range(1).select(F.lit(n).cast("long").alias("triangles"))
 
 
 SQL_TRIANGLES_TOTAL = f"""WITH {EDGES_CTE},
