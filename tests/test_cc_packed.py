@@ -103,3 +103,27 @@ def test_packed_cc_open_input_falls_back(spark):
     got = _labels(connected_components(spark, edges, metrics=m))
     assert "csr_sharded_min" not in _modes(m)
     assert set(got) == {0, 1, 2}
+
+
+@pytest.mark.parametrize("cfg", [EngineConfig(),
+                                 EngineConfig(use_csr_kernel=False)],
+                         ids=["single", "join"])
+def test_cc_unconverged_run_warns(spark, caplog, cfg):
+    """A path of 12 vertices needs 11 min-label sweeps: stopped at 4 the
+    labels are still changing, so the call warns and marks its rows
+    converged=False; with room to converge every row reads True."""
+    n = 12
+    a = np.arange(n - 1, dtype=np.int64)
+    s, d = np.r_[a, a + 1], np.r_[a + 1, a]
+    edges = fx.to_spark_edges(spark, (s, d, np.ones(len(s)), n))
+    for max_iter, converged in ((4, False), (50, True)):
+        m = MetricsCollector()
+        caplog.clear()
+        with caplog.at_level("WARNING", logger="vite_spark.components"):
+            lab = _labels(connected_components(spark, edges, max_iter=max_iter,
+                                               cfg=cfg, metrics=m))
+        rows = [r for r in m.rows if r.get("kind") == "cc_superstep"]
+        assert rows and {r["converged"] for r in rows} == {converged}
+        assert any("max_iter" in r.getMessage()
+                   for r in caplog.records) is not converged
+        assert (set(lab.values()) == {0}) is converged

@@ -118,6 +118,41 @@ def test_dense_ids_null_same_id_in_both_tiers(spark, monkeypatch):
     assert len(ranged) == 1
 
 
+def test_dense_ids_driver_tier_matches_distributed(spark):
+    """The driver tier (Arrow sort) ranks exactly like the distributed
+    tier and Spark's ascending order: non-ASCII strings by UTF-8 bytes,
+    negative longs, NaN above every double, the null first. It leaves no
+    persisted block behind."""
+    from pyspark.sql import functions as F
+
+    from vite_spark.kernels.ids import dense_ids
+
+    def key(v):
+        return "nan" if isinstance(v, float) and v != v else v
+
+    sc = spark.sparkContext
+    for rows, schema in (
+        ([("é",), ("Z",), ("a",), (None,), ("ß",), ("日本",), ("",),
+          ("a",), ("éa",)], "v string"),
+        ([(-5,), (3,), (None,), (-(2 ** 62),), (0,), (2 ** 62,), (-5,)],
+         "v long"),
+        ([(float("nan"),), (-1.5,), (None,), (2.0,), (float("-inf"),)],
+         "v double"),
+    ):
+        df = spark.createDataFrame(rows, schema)
+        want = [key(r["v"]) for r in df.select("v").distinct()
+                .orderBy(F.col("v").asc_nulls_first()).collect()]
+        got = {}
+        for lim in (None, 0):
+            before = set(sc._jsc.getPersistentRDDs().keySet())
+            out = dense_ids(df, "v", "id", local_max_rows=lim).collect()
+            got[lim] = sorted((r["id"], key(r["v"])) for r in out)
+            if lim is None:
+                assert set(sc._jsc.getPersistentRDDs().keySet()) <= before
+        assert got[None] == list(enumerate(want)), schema
+        assert got[0] == got[None], schema
+
+
 def test_graphframe(spark):
     e = edges_from_pairs(spark, [(0, 1), (1, 2)])
     gf = GraphFrame.from_edges(e)

@@ -1,4 +1,4 @@
-"""Louvain's tiers and its per-superstep checkpoint.
+"""Louvain's tiers, its driver loop and its checkpoint.
 
 The driver-local tier (default config at fixture scale), the packed tier
 (``local_phase_max_edges=0``) and the shuffle-join tier
@@ -6,7 +6,12 @@ The driver-local tier (default config at fixture scale), the packed tier
 write the same checkpoint: the same complete supersteps, equal
 ``assignment``/``past``/``act`` rows and equal ``state.json`` scalars. A
 resume (always on the join tier) from any of them reproduces the
-uninterrupted run. Each phase records one ``kind="tier"`` row."""
+uninterrupted run. Each phase records one ``kind="tier"`` row.
+
+A whole ``louvain`` run moves to the driver from the first level that
+fits the gate (``_DriverLevels``): it matches the packed and join runs
+under every protocol option, writes the same checkpoint tables, resumes,
+and leaves no cached block or scratch entry behind."""
 
 from __future__ import annotations
 
@@ -18,7 +23,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from vite_spark import fixtures as fx
-from vite_spark.algos.louvain import louvain_phase, resume_phase
+from vite_spark.algos.louvain import louvain, louvain_phase, resume_phase
 from vite_spark.config import EngineConfig
 from vite_spark.runtime import checkpoint as ckpt
 from vite_spark.runtime.metrics import MetricsCollector
@@ -215,3 +220,155 @@ def test_tier_rows(spark, sbm, tmp_path, monkeypatch):
     monkeypatch.setattr(spark.sparkContext, "master", "spark://elsewhere:7077")
     assert rows(local_phase_max_edges=0) == [("join", "non_local", ne, 8)]
     assert not _is_superstep("tier")
+
+
+# the protocol options of a whole run; the ET and colored runs stop at 5
+# supersteps a phase (the join tier's ET superstep slows per iteration)
+RUNS = {
+    "plain": {},
+    **{f"et{et}": dict(early_term=et, max_total_iterations=5)
+       for et in (1, 2, 3, 4)},
+    "coloring": dict(coloring=True, max_total_iterations=5),
+    "cycling": dict(threshold_cycling=True),
+    "one_phase": dict(one_phase=True),
+    "max_phases": dict(max_phases=1),
+    "checkpoint": dict(checkpoint_dir=True),
+}
+
+
+def _run(spark, edges, tier, tmp_path=None, metrics=None, **kw):
+    if kw.get("checkpoint_dir") is True:
+        kw["checkpoint_dir"] = str(tmp_path / tier)
+    return louvain(spark, edges, EngineConfig(**TIERS[tier], **kw),
+                   metrics=metrics)
+
+
+def _read_run_tables(root):
+    """{table: sorted rows} of every level-edge table and the phase
+    state, plus the meta files."""
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        rel = os.path.relpath(dirpath, root)
+        if rel.endswith(("edges", "comm_all")):
+            out[rel] = sorted(zip(*pq.read_table(dirpath)
+                                  .to_pydict().values()))
+        for f in files:
+            if f.endswith("meta.json"):
+                with open(os.path.join(dirpath, f)) as fh:
+                    out[os.path.join(rel, f)] = json.load(fh)
+    return out
+
+
+@pytest.mark.parametrize("opt", list(RUNS))
+def test_driver_run_matches_distributed(spark, tmp_path, opt):
+    """Labels exact, Q within 1e-12 and the same phases and supersteps
+    as the packed and join runs; every phase of the default run is on the
+    local tier. With a checkpoint dir the three runs also write the same
+    level edges, phase state and supersteps."""
+    s, d, w, nv = fx.karate()
+    edges = fx.to_spark_edges(spark, (s, d, w, nv))
+    got = {}
+    for tier in TIERS:
+        m = MetricsCollector()
+        r = _run(spark, edges, tier, tmp_path, metrics=m, **RUNS[opt])
+        got[tier] = (r, _labels(r.labels, nv), m)
+    ref, ref_lab, _ = got["join"]
+    for tier, (r, lab, m) in got.items():
+        assert np.array_equal(lab, ref_lab), tier
+        assert r.q_per_phase == pytest.approx(ref.q_per_phase, abs=1e-12)
+        assert r.iters_per_phase == ref.iters_per_phase, tier
+        assert r.levels == ref.levels, tier
+    assert {t for t, _ in _tiers(got["local"][2])} == {"local"}
+    if opt == "checkpoint":
+        tables = {t: _read_run_tables(str(tmp_path / t)) for t in TIERS}
+        assert any(k.endswith("edges") for k in tables["local"])
+        for t in ("packed", "local"):
+            assert tables[t].keys() == tables["join"].keys()
+            for k, v in tables["join"].items():
+                if not k.endswith("meta.json"):
+                    assert tables[t][k] == v, (t, k)
+                    continue
+                for f, x in v.items():   # q lists and prev_phase_mod: 1e-12
+                    exact = not isinstance(x, float) and f != "q_per_phase"
+                    assert tables[t][k][f] == (
+                        x if exact else pytest.approx(x, abs=1e-12)), (t, k, f)
+            _assert_same_checkpoint(_read_checkpoint(str(tmp_path / t)),
+                                    _read_checkpoint(str(tmp_path / "join")))
+
+
+@pytest.mark.parametrize("ck", [False, True], ids=["plain", "checkpoint"])
+def test_run_switches_to_driver_mid_run(spark, tmp_path, ck):
+    """A gate below level 0's rows: level 0 runs packed, every coarse
+    level in the driver (and with a checkpoint dir, the phase state is
+    the join of the driver's labels onto the packed level's); the same
+    labels and Q as the all-packed run."""
+    s, d, w, nv = fx.grid_graph()
+    edges = fx.to_spark_edges(spark, (s, d, w, nv))
+    ne = edges.count()
+    extra = dict(checkpoint_dir=str(tmp_path / "mixed")) if ck else {}
+    m = MetricsCollector()
+    mixed = louvain(spark, edges, EngineConfig(local_phase_max_edges=ne - 1,
+                                               **extra), metrics=m)
+    ref = louvain(spark, edges, EngineConfig(local_phase_max_edges=0))
+    assert _tiers(m)[0] == ("packed", None)
+    assert {t for t, _ in _tiers(m)[1:]} == {"local"}
+    assert len(mixed.q_per_phase) >= 3   # the driver accepted coarse phases
+    assert np.array_equal(_labels(mixed.labels, nv), _labels(ref.labels, nv))
+    assert mixed.q_per_phase == pytest.approx(ref.q_per_phase, abs=1e-12)
+    assert mixed.iters_per_phase == ref.iters_per_phase
+    if ck:
+        st, _ = ckpt.read_phase_state(spark, str(tmp_path / "mixed"))
+        assert _labels(st.withColumnRenamed("label", "comm"), nv).tolist() \
+            == _labels(mixed.labels, nv).tolist()
+
+
+def test_driver_checkpoint_resumes(spark, tmp_path, monkeypatch):
+    """A driver run killed after superstep 3 of level 1 resumes through
+    louvain(resume=True) from the files the driver wrote (level edges,
+    phase state, supersteps) to the uninterrupted labels and Q."""
+    s, d, w, nv = fx.grid_graph()
+    edges = fx.to_spark_edges(spark, (s, d, w, nv))
+    ref = louvain(spark, edges)
+    ck = str(tmp_path / "ck")
+    real = ckpt.write_superstep_arrays
+
+    def killed(root, level, iter_, *a, **k):
+        real(root, level, iter_, *a, **k)
+        if (level, iter_) == (1, 3):
+            raise RuntimeError("killed")
+
+    monkeypatch.setattr(ckpt, "write_superstep_arrays", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        louvain(spark, edges, EngineConfig(checkpoint_dir=ck))
+    monkeypatch.undo()
+    assert ckpt.latest_complete(ck) == (1, 3)
+    m = MetricsCollector()
+    res = louvain(spark, edges, EngineConfig(checkpoint_dir=ck), metrics=m,
+                  resume=True)
+    assert _tiers(m)[0] == ("join", "resume")
+    assert np.array_equal(_labels(res.labels, nv), _labels(ref.labels, nv))
+    assert res.q_per_phase == pytest.approx(ref.q_per_phase, abs=1e-12)
+    assert res.iters_per_phase == ref.iters_per_phase
+
+
+@pytest.mark.parametrize("opt", ["plain", "checkpoint"])
+def test_driver_run_leaves_no_state(spark, tmp_path, opt):
+    """No persistent RDD created by the call and no new vite_* scratch
+    entry remain after a run in the driver (the input pin is released).
+    Not with coloring: multi_hash_coloring returns a localCheckpointed
+    frame, which no unpersist releases."""
+    import tempfile
+
+    def scratch():
+        return {os.path.join(d, f) for d in ("/dev/shm", tempfile.gettempdir())
+                if os.path.isdir(d) for f in os.listdir(d)
+                if f.startswith("vite_")}
+
+    s, d, w, nv = fx.grid_graph()
+    edges = fx.to_spark_edges(spark, (s, d, w, nv))
+    jsc = spark.sparkContext._jsc
+    before, scratch0 = set(jsc.getPersistentRDDs().keySet()), scratch()
+    r = _run(spark, edges, "local", tmp_path, **RUNS[opt])
+    r.labels.collect()
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+    assert scratch() <= scratch0

@@ -116,30 +116,28 @@ def test_local_path_equals_distributed(spark):
 
 
 def test_coarse_local_gate_equals_distributed(spark):
-    """The level>=1 coarse local-tier gate (local_phase_coarse_max_edges)
-    produces identical labels/Q to distributed coarse levels, and is
-    disabled when local_phase_max_edges == 0 (the scaling-bench force-
-    distributed contract)."""
+    """One gate for every level (local_phase_max_edges): a level 0 above
+    it runs distributed and the run moves to the driver at the first
+    coarse level that fits, with labels/Q identical to the all-distributed
+    run; local_phase_max_edges == 0 (the scaling-bench force-distributed
+    contract) keeps every level distributed."""
     from vite_spark.runtime.metrics import MetricsCollector
 
     s, d, w, nv = FIXTURES["sbm"]()
     edges = fx.to_spark_edges(spark, (s, d, w, nv))
-    # level 0 distributed (gate 1 row), coarse levels local (gate huge)
+    ne = edges.count()
     m1 = MetricsCollector()
     r_coarse = louvain(spark, edges, EngineConfig(
-        local_phase_max_edges=1, local_phase_coarse_max_edges=10_000_000),
-        metrics=m1)
+        local_phase_max_edges=ne - 1), metrics=m1)
     sup1 = [r for r in m1.rows if r.get("kind") == "superstep"]
     assert all(r["mode"] != "local_csr" for r in sup1 if r["level"] == 0)
     assert any(r["mode"] == "local_csr" for r in sup1 if r["level"] >= 1)
-    # local_phase_max_edges=0 disables the coarse gate too
     m2 = MetricsCollector()
-    r_dist = louvain(spark, edges, EngineConfig(
-        local_phase_max_edges=0, local_phase_coarse_max_edges=10_000_000),
-        metrics=m2)
+    r_dist = louvain(spark, edges, EngineConfig(local_phase_max_edges=0),
+                     metrics=m2)
     assert all(r["mode"] != "local_csr" for r in m2.rows
                if r.get("kind") == "superstep")
-    assert r_coarse.q_per_phase == pytest.approx(r_dist.q_per_phase, abs=1e-9)
+    assert r_coarse.q_per_phase == pytest.approx(r_dist.q_per_phase, abs=1e-12)
     assert np.array_equal(_labels_from_df(r_coarse.labels, nv),
                           _labels_from_df(r_dist.labels, nv))
 

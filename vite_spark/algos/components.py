@@ -22,12 +22,15 @@ a measured crossover of the two on high-diameter graphs.
 
 from __future__ import annotations
 
+import logging
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from vite_spark.config import EngineConfig
 from vite_spark.runtime.metrics import MetricsCollector
+
+log = logging.getLogger("vite_spark.components")
 
 
 def connected_components(
@@ -37,10 +40,28 @@ def connected_components(
     cfg: EngineConfig | None = None,
     metrics: MetricsCollector | None = None,
 ) -> DataFrame:
-    """Returns (id, component) where component = min vertex id reachable."""
+    """Returns (id, component) where component = min vertex id reachable.
+
+    Min-label propagation needs O(diameter) sweeps. A run that stops at
+    ``max_iter`` with labels still changing returns those unconverged
+    labels, logs a warning and marks its ``cc_superstep`` rows
+    ``converged=False`` (every row of a converged run reads True)."""
     cfg = cfg or EngineConfig()
     metrics = metrics or MetricsCollector()
+    n0 = len(metrics.rows)
+    out = _cc(spark, edges, max_iter, cfg, metrics)
+    steps = [r for r in metrics.rows[n0:] if r.get("kind") == "cc_superstep"]
+    converged = bool(steps) and steps[-1]["changed"] == 0
+    for r in steps:
+        r["converged"] = converged
+    if not converged:
+        log.warning("connected_components: stopped at max_iter=%d with "
+                    "labels still changing; the components are not final",
+                    max_iter)
+    return out
 
+
+def _cc(spark, edges, max_iter, cfg, metrics):
     if cfg.use_csr_kernel:
         # packed-CSR fast path on the sharded pack (kernels/csr_cc.py):
         # one job per iteration, owner-authored dense label exchange,

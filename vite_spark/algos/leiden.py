@@ -306,6 +306,15 @@ def _jacobi_sweeps(
     return curr
 
 
+# Top of the driver tier of ``leiden_levels``. Its NumPy mirror
+# (``_jacobi_numpy``) scans every edge row for each vertex, O(nv·ne) per
+# sweep, so it cannot take the Louvain gate: whole call plus collect,
+# 4-core VM, warm, driver vs distributed, 231k-row lineitem sf0.01 (2k
+# vertices) 3.5/3.3 s vs 28.1/16.7 s, but a 903k-row RGG (110k vertices)
+# did not finish one driver call in 5 minutes. It keeps its former 100k.
+LEIDEN_DRIVER_MAX_EDGES = 100_000
+
+
 def leiden_levels(
     spark: SparkSession,
     edges: DataFrame,
@@ -336,21 +345,21 @@ def leiden_levels(
     from vite_spark.kernels.ids import dense_ids
 
     cfg = cfg or EngineConfig()
-    # adaptive driver-local tier (the louvain _local_phase design): a
-    # graph under cfg.local_phase_max_edges rows runs the pytest-proven
-    # NumPy mirror in one Arrow pull — identical labels by the parity
-    # tests — so small graphs and deep coarse levels never pay cluster
-    # job latency. Arbitrary ids handled by a monotone densify (np.unique
-    # is sorted, so every min-id tie-break and the min-original-id
-    # canonicalization survive the mapping).
+    # adaptive driver-local tier (the louvain driver-level design): a
+    # graph of at most LEIDEN_DRIVER_MAX_EDGES rows, and within the
+    # Louvain gate (0 forces the distributed tier), runs the
+    # pytest-proven NumPy mirror — one Arrow collect in, one
+    # Arrow hand-off out (kernels/csr_pr ``_collect``/``_emit_local``),
+    # identical labels by the parity tests — so small graphs and deep
+    # coarse levels never pay cluster job latency. Arbitrary ids handled
+    # by a monotone densify (np.unique is sorted, so every min-id
+    # tie-break and the min-original-id canonicalization survive the
+    # mapping).
     ne = edges.count()
-    if ne <= cfg.local_phase_max_edges:
-        import pandas as pd
+    if ne <= min(cfg.local_phase_max_edges, LEIDEN_DRIVER_MAX_EDGES):
+        from vite_spark.kernels.csr_pr import _collect, _emit_local
 
-        pdf = edges.select("src", "dst", "weight").toPandas()
-        s0 = pdf["src"].to_numpy(np.int64)
-        d0 = pdf["dst"].to_numpy(np.int64)
-        w0 = pdf["weight"].to_numpy(np.float64)
+        s0, d0, w0 = _collect(edges, ("src", "dst", "weight"))
         uniq = np.unique(s0)
         # symmetrization contract: every dst must appear as a src, or
         # searchsorted would silently mismap dst ids absent from uniq
@@ -366,8 +375,8 @@ def leiden_levels(
         lab = leiden_levels_numpy(s, d, w0, levels=levels,
                                   move_sweeps=move_sweeps,
                                   refine_sweeps=refine_sweeps)
-        out = pd.DataFrame({"id": uniq, "comm": uniq[lab]})
-        return spark.createDataFrame(out, schema="id long, comm long")
+        return _emit_local(spark, {"id": uniq, "comm": uniq[lab]},
+                           "id long, comm long")
     cur = edges.select("src", "dst", "weight").persist()
     vmap = None          # orig id → current coarse id (None = identity)
     init = None          # level init; None = singletons

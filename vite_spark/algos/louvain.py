@@ -54,7 +54,9 @@ def _maybe_broadcast(df: DataFrame, nrows: int, cfg: EngineConfig) -> DataFrame:
 
 @dataclass
 class PhaseResult:
-    assignment: DataFrame  # (id, comm) — the returned pastComm labels
+    # (id, comm) — the returned pastComm labels; None from _DriverLevels,
+    # which keeps them as arrays
+    assignment: DataFrame | None
     q: float
     iters: int
     nv: int = 0
@@ -241,6 +243,70 @@ def _superstep(
     )
 
 
+def _collect_level(edges: DataFrame, colors: DataFrame | None = None):
+    """A level's edge table (and phase-0 colors) in the driver, each with
+    one Arrow collect (kernels/csr_pr ``_collect``). Returns (s, d, w,
+    ids, col): ``ids`` are the sorted distinct endpoints and s, d their
+    positions — a monotone densify, so every id-order tie-break survives;
+    ``col`` is aligned with ``ids`` (-1 uncolored), or None."""
+    import numpy as np
+
+    from vite_spark.kernels.csr_pr import _collect
+
+    s, d, w = _collect(edges, ("src", "dst", "weight"))
+    ids = np.unique(np.r_[s, d])
+    col = None
+    if colors is not None:
+        cid, cval = _collect(colors, ("id", "color"))
+        col = np.full(len(ids), -1, dtype=np.int64)
+        col[np.searchsorted(ids, cid)] = cval
+    return np.searchsorted(ids, s), np.searchsorted(ids, d), w, ids, col
+
+
+def _phase_arrays(s, d, w, ids, threshold: float, lower: float,
+                  cfg: EngineConfig, metrics: MetricsCollector, level: int,
+                  colors=None) -> tuple:
+    """One phase in the driver over a level's edge arrays (``s``/``d``:
+    positions in ``ids``, the level's sorted vertex ids; ``colors``
+    aligned with ``ids`` selects the colored sweep): the oracle-validated
+    CSR NumPy sweep (vite_spark/oracle/louvain_ref.py), identical
+    labels/Q to the distributed tiers (pytest-proven). With a checkpoint
+    dir, every accepted iteration is written from the driver (no Spark
+    job) in the join path's layout and order. Returns (labels, q, iters);
+    ``labels`` (pastComm) are positions in ``ids``."""
+    from vite_spark.oracle.louvain_ref import louvain_oracle_phase
+
+    t0 = time.time()
+    nv, ne = len(ids), len(s)
+    on_iter = None
+    if cfg.checkpoint_dir:
+        state = {"two_m": float(w.sum()), "nv": nv, "ne": ne,
+                 "early_term": cfg.early_term}
+
+        def on_iter(iters, curr, past, prev_mod, act):
+            if ckpt._due(iters, cfg.checkpoint_every):
+                ckpt.write_superstep_arrays(
+                    cfg.checkpoint_dir, level, iters, ids, ids[curr],
+                    ids[past], {"iter": iters, "prev_mod": prev_mod, **state},
+                    act=act,
+                )
+    trace: list = []
+    labels, q, iters = louvain_oracle_phase(
+        s, d, w, nv, threshold=threshold, lower=lower, trace=trace,
+        phase_no=level, early_term=cfg.early_term, colors=colors,
+        max_iters=cfg.max_total_iterations, on_iter=on_iter,
+    )
+    wall = time.time() - t0
+    for (_, it, qq) in trace:
+        metrics.record(
+            kind="superstep", level=level, iter=it, q=qq, moved=-1, active=nv,
+            edges_processed=ne, wall_s=wall / max(len(trace), 1),
+            edges_per_sec=ne * len(trace) / wall if wall > 0 else 0.0,
+            mode="local_csr",
+        )
+    return labels, float(q), iters
+
+
 def _local_phase(
     spark: SparkSession,
     edges: DataFrame,
@@ -251,64 +317,112 @@ def _local_phase(
     level: int,
     colors: DataFrame | None = None,
 ) -> PhaseResult:
-    """Driver-local phase on CSR NumPy kernels (the oracle-validated sweep,
-    vite_spark/oracle/louvain_ref.py) for levels whose edge table fits on
-    one node. Identical labels/Q to the distributed path (pytest-proven);
-    arbitrary vertex ids handled by a monotone densify/undensify, which
-    preserves every id-order tie-break. The level comes in and the labels
-    go out through the packed runner's driver-tier helpers
-    (kernels/csr_pr ``_collect``/``_emit_local``: one Arrow collect, one
-    Arrow hand-off, no Python worker). With a checkpoint dir, every
-    accepted iteration is written from the driver (no Spark job) in the
-    join path's layout and order."""
-    import time as _t
+    """Driver-local phase for a level whose edge table fits on one node:
+    the level comes in and the labels go out through the packed runner's
+    driver-tier helpers (kernels/csr_pr ``_collect``/``_emit_local``: one
+    Arrow collect, one Arrow hand-off, no Python worker) around
+    ``_phase_arrays``."""
+    from vite_spark.kernels.csr_pr import _emit_local
 
-    import numpy as np
-
-    from vite_spark.kernels.csr_pr import _collect, _emit_local
-    from vite_spark.oracle.louvain_ref import louvain_oracle_phase
-
-    t0 = _t.time()
-    s, d, w = _collect(edges, ("src", "dst", "weight"))
-    uniq = np.unique(np.r_[s, d])
-    sd = np.searchsorted(uniq, s)
-    dd = np.searchsorted(uniq, d)
-    nv = len(uniq)
-    ne = len(s)
-    col_arr = None
-    if colors is not None:
-        cid, cval = _collect(colors, ("id", "color"))
-        col_arr = np.full(nv, -1, dtype=np.int64)
-        col_arr[np.searchsorted(uniq, cid)] = cval
-    on_iter = None
-    if cfg.checkpoint_dir:
-        state = {"two_m": float(w.sum()), "nv": nv, "ne": ne,
-                 "early_term": cfg.early_term}
-
-        def on_iter(iters, curr, past, prev_mod, act):
-            if ckpt._due(iters, cfg.checkpoint_every):
-                ckpt.write_superstep_arrays(
-                    cfg.checkpoint_dir, level, iters, uniq, uniq[curr],
-                    uniq[past], {"iter": iters, "prev_mod": prev_mod, **state},
-                    act=act,
-                )
-    trace: list = []
-    labels, q, iters = louvain_oracle_phase(
-        sd, dd, w, nv, threshold=threshold, lower=lower, trace=trace,
-        phase_no=level, early_term=cfg.early_term, colors=col_arr,
-        max_iters=cfg.max_total_iterations, on_iter=on_iter,
-    )
-    wall = _t.time() - t0
-    for (_, it, qq) in trace:
-        metrics.record(
-            kind="superstep", level=level, iter=it, q=qq, moved=-1, active=nv,
-            edges_processed=ne, wall_s=wall / max(len(trace), 1),
-            edges_per_sec=ne * len(trace) / wall if wall > 0 else 0.0,
-            mode="local_csr",
-        )
-    adf = _emit_local(spark, {"id": uniq, "comm": uniq[labels]},
+    s, d, w, ids, col = _collect_level(edges, colors)
+    labels, q, iters = _phase_arrays(s, d, w, ids, threshold, lower, cfg,
+                                     metrics, level, colors=col)
+    adf = _emit_local(spark, {"id": ids, "comm": ids[labels]},
                       "id long, comm long")
-    return PhaseResult(assignment=adf, q=float(q), iters=iters, nv=nv)
+    return PhaseResult(assignment=adf, q=q, iters=iters, nv=len(ids))
+
+
+class _DriverLevels:
+    """The remaining levels of one ``louvain`` run, in the driver. The
+    entry level comes in with one collect (``_collect_level``); every
+    phase runs ``_phase_arrays``; an accepted phase's dense renumber and
+    label composition (``_dense_renumber``) and its coarsening
+    (``coarsen_oracle``: super-edges with summed weights, communities
+    renumbered by dense rank of community id — ``coarsen``'s contract)
+    stay in NumPy; the checkpoint tables are written from the driver; and
+    the composed labels go back once (``frame``)."""
+
+    def __init__(self, spark, edges, colors, base):
+        self.spark = spark
+        # base: (id, label) of the distributed levels before the entry
+        # level (labels = entry-level vertex ids), None from level 0
+        self.base = base
+        self.s, self.d, self.w, self.ids, self.colors = _collect_level(
+            edges, colors)
+        self.entry = self.ids    # the entry level's vertex ids
+        self.comp = None         # entry vertex -> current level vertex
+        self.labels = None
+
+    def phase(self, threshold, lower, cfg, metrics, level, nparts):
+        metrics.record(kind="tier", tier="local", reason=None,
+                       ne=len(self.s), nparts=nparts)
+        # the entry level's colors serve its first phase only (the
+        # threshold-cycling final pass runs uncolored, as distributed)
+        self.labels, q, iters = _phase_arrays(
+            self.s, self.d, self.w, self.ids, threshold, lower, cfg,
+            metrics, level, colors=self.colors)
+        self.colors = None
+        return PhaseResult(assignment=None, q=q, iters=iters,
+                           nv=len(self.ids))
+
+    def accept(self):
+        """Compose the last phase's renumbered labels (main.cpp:392-415)."""
+        from vite_spark.oracle.louvain_ref import _dense_renumber
+
+        ren = _dense_renumber(self.labels)
+        self.comp = ren if self.comp is None else ren[self.comp]
+
+    def coarsen(self):
+        import numpy as np
+
+        from vite_spark.oracle.louvain_ref import coarsen_oracle
+
+        self.s, self.d, self.w, nv, _ = coarsen_oracle(
+            self.s, self.d, self.w, self.labels, len(self.ids))
+        self.ids = np.arange(nv, dtype=np.int64)
+
+    def checkpoint(self, root, level, meta):
+        """The next level's edges and the phase state after an accepted
+        phase; from a distributed base, the composed labels need its
+        join, so that table is a Spark write."""
+        ckpt.write_level_edges_arrays(root, level, self.s, self.d, self.w,
+                                      {"phase": level})
+        if self.base is None:
+            ckpt.write_phase_state_arrays(root, self.entry, self.comp, meta)
+        else:
+            ckpt.write_phase_state(root, self.frame(), meta)
+
+    def frame(self) -> DataFrame | None:
+        """The composed labels (id, label) through the last accepted
+        phase: the driver's labels themselves from level 0, else joined
+        once onto the distributed levels' labels."""
+        from vite_spark.kernels.csr_pr import _emit_local
+
+        if self.comp is None:
+            return self.base
+        lab = _emit_local(self.spark, {"id": self.entry, "label": self.comp},
+                          "id long, label long")
+        if self.base is None:
+            return lab
+        return self.base.join(
+            lab.select(F.col("id").alias("label"),
+                       F.col("label").alias("nlabel")), "label",
+        ).select("id", F.col("nlabel").alias("label"))
+
+
+def _probe(edges: DataFrame):
+    """One job: max src, max dst and the row count (``ne``) — the local
+    gate's input and ``_csr_phase``'s dense-id precheck / partition cap."""
+    return edges.agg(
+        F.max("src").alias("ms"), F.max("dst").alias("md"),
+        F.count(F.lit(1)).alias("ne"),
+    ).collect()[0]
+
+
+def _fits_driver(ne: int, cfg: EngineConfig) -> bool:
+    """The one Louvain gate (every level): at most
+    ``cfg.local_phase_max_edges`` rows run in the driver; 0 disables it."""
+    return 0 < cfg.local_phase_max_edges and ne <= cfg.local_phase_max_edges
 
 
 def _csr_phase(
@@ -407,9 +521,7 @@ def _csr_phase(
     # cheap precheck before paying the pack scan (the count rides the
     # same agg for free and feeds the scale-adaptive partition cap);
     # reuses the caller's probe row when it already ran one
-    row = probe if probe is not None else edges.agg(
-        F.max("src").alias("ms"), F.max("dst").alias("md"),
-        F.count(F.lit(1)).alias("ne")).collect()[0]
+    row = probe if probe is not None else _probe(edges)
     if row["ms"] is None:
         gate["tier"] = "packed"
         return PhaseResult(
@@ -774,6 +886,7 @@ def louvain_phase(
     resume_from: tuple | None = None,
     colors: DataFrame | None = None,
     coarsen_gain_over: float | None = None,
+    probe=None,
 ) -> PhaseResult:
     """One Louvain phase (reference distLouvainMethod, louvain.cpp:427-592).
 
@@ -785,12 +898,16 @@ def louvain_phase(
     intent, louvain.cpp:7-425); ``colors`` (id, color; -1 allowed) enables
     the colored Gauss-Seidel-by-color variant (louvain.cpp:593-786).
 
-    Adaptive execution: levels at most cfg.local_phase_max_edges rows run
-    driver-local on the CSR NumPy kernel (identical semantics), larger
-    ones on the packed kernels (``_csr_phase``), the rest on the
-    shuffle-join superstep. With a checkpoint dir every tier writes the
-    same per-superstep checkpoint (runtime/checkpoint.py); a resume runs
-    the join path, which reads it.
+    Adaptive execution: a level of at most cfg.local_phase_max_edges rows
+    runs driver-local on the CSR NumPy kernel (``_local_phase``, identical
+    semantics), a larger one on the packed kernels (``_csr_phase``), the
+    rest on the shuffle-join superstep. (``louvain`` runs every level from
+    the first that fits the gate in the driver itself, so it calls this
+    only for the distributed levels and for a resumed level.) With a
+    checkpoint dir every tier writes the same per-superstep checkpoint
+    (runtime/checkpoint.py); a resume runs the join path, which reads it.
+    ``probe`` is a ``_probe`` row the caller already ran on ``edges``
+    (then the caller owns the input pin).
 
     Records one ``kind="tier"`` metrics row: ``tier``
     (local/packed/sharded/join), ``reason`` for the join tier (resume,
@@ -804,11 +921,11 @@ def louvain_phase(
         spark.conf.get("spark.sql.shuffle.partitions", "32"))
     gate = {"tier": "join", "reason": None, "ne": None, "nparts": nparts}
 
-    probe = None
     pin = None
     try:
         if (
-            (cfg.local_phase_max_edges > 0 or cfg.use_csr_kernel)
+            probe is None
+            and (cfg.local_phase_max_edges > 0 or cfg.use_csr_kernel)
             and resume_from is None
         ):
             # pin the level's edge table across the probe and whichever
@@ -824,18 +941,10 @@ def louvain_phase(
             # one probe job serves BOTH the local-tier gate and
             # _csr_phase's dense-id precheck / scale-adaptive partition
             # cap (formerly a count job here plus an agg job there)
-            probe = edges.agg(
-                F.max("src").alias("ms"), F.max("dst").alias("md"),
-                F.count(F.lit(1)).alias("ne"),
-            ).collect()[0]
+            probe = _probe(edges)
+        if probe is not None:
             gate["ne"] = int(probe["ne"] or 0)
-        local_lim = cfg.local_phase_max_edges
-        if local_lim > 0 and level >= 1:
-            # coarse levels: the distributed path's per-level fixed costs
-            # (pack build, one job per superstep) dominate at post-coarsen
-            # sizes — see config.local_phase_coarse_max_edges
-            local_lim = max(local_lim, cfg.local_phase_coarse_max_edges)
-        if probe is not None and 0 < local_lim and gate["ne"] <= local_lim:
+        if probe is not None and _fits_driver(gate["ne"], cfg):
             res = _local_phase(spark, edges, threshold, lower, cfg, metrics,
                                level, colors=colors)
             gate["tier"] = "local"
@@ -1310,17 +1419,34 @@ def louvain(
 ) -> LouvainResult:
     """Full multi-level Louvain (reference main.cpp:242-513 protocol).
 
+    Levels run distributed (``louvain_phase``) until one has at most
+    ``cfg.local_phase_max_edges`` rows — read off the probe a level runs
+    anyway. From that level on the run stays in the driver
+    (``_DriverLevels``): one Arrow collect of that level, every remaining
+    phase, renumber, composition and coarsening in NumPy, the checkpoint
+    tables written from the driver, and the composed labels handed back
+    once — the labels themselves when level 0 ran in the driver, else one
+    join onto the distributed levels' labels. Vite's coarse phases
+    likewise collapse onto few ranks. The protocol (threshold cycling and
+    its final 1e-6 pass, one_phase, max_phases, max_total_iterations) is
+    this one loop's in both places.
+
     With ``resume=True`` and a checkpoint dir, the run continues from the
     latest completed level's coarse edges + composed labels, and from the
-    latest superstep within the in-flight level."""
+    latest superstep within the in-flight level (``resume_phase``, the
+    join tier); the levels after it take the gate as above."""
     from vite_spark.config import threshold_for_phase
 
     cfg = cfg or EngineConfig()
     metrics = metrics or MetricsCollector()
     res = LouvainResult(labels=None, metrics=metrics)
+    nparts = cfg.shuffle_partitions or int(
+        spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     cur_edges = edges
     comm_all: DataFrame | None = None  # (id, label) for original vertices
+    drv: _DriverLevels | None = None   # set once the run is in the driver
+    pin: DataFrame | None = None       # the level's edges, pinned here
     prev_phase_mod = -1.0
     phase = 0
     short_phase = 0
@@ -1342,105 +1468,143 @@ def louvain(
                 cur_edges = lvl_edges
         mid_level_resume = True
 
-    while True:
-        th = threshold_for_phase(short_phase) if cfg.threshold_cycling else cfg.threshold
-        # coloring only on phase 0, where the graph is largest
-        # (main.cpp:267-269). cfg.vertex_ordering (L17,
-        # distLouvainMethodVertexOrder) is treated as the plain path — this
-        # is an exact equivalence, not an approximation: in the reference
-        # the color loop (louvain.cpp:1379-1400) reads currComm/localCinfo
-        # which are NOT mutated between buckets (decisions write targetComm
-        # and accumulate into localCupdate only), and localCupdate is
-        # applied AFTER all colors (louvain.cpp:1406-1418) — every vertex
-        # therefore sees the identical pre-sweep state, i.e. one Jacobi
-        # sweep == distLouvainMethod's single parallel-for; the coloring
-        # only reorders thread scheduling. (Contrast L16
-        # distLouvainMethodWithColoring, which DOES refresh aggregates
-        # between buckets and is implemented separately above.)
-        phase_colors = None
-        if cfg.coloring and phase == 0 and not cfg.vertex_ordering:
-            from vite_spark.algos.coloring import multi_hash_coloring
+    try:
+        while True:
+            th = threshold_for_phase(short_phase) if cfg.threshold_cycling else cfg.threshold
+            probe = None
+            if (drv is None and not mid_level_resume
+                    and (cfg.local_phase_max_edges > 0 or cfg.use_csr_kernel)):
+                # one pin spans the probe, the coloring, and the level's
+                # consumer (the driver collect, or the distributed phase
+                # and the coarsening that re-reads the level): each would
+                # re-run the caller's upstream derivation. persist()
+                # returns the same object, so ``pin`` alone says whether
+                # this loop owns the cache.
+                if not cur_edges.is_cached:
+                    pin = cur_edges = cur_edges.persist()
+                probe = _probe(cur_edges)
+            # coloring only on phase 0, where the graph is largest
+            # (main.cpp:267-269). cfg.vertex_ordering (L17,
+            # distLouvainMethodVertexOrder) is treated as the plain path — this
+            # is an exact equivalence, not an approximation: in the reference
+            # the color loop (louvain.cpp:1379-1400) reads currComm/localCinfo
+            # which are NOT mutated between buckets (decisions write targetComm
+            # and accumulate into localCupdate only), and localCupdate is
+            # applied AFTER all colors (louvain.cpp:1406-1418) — every vertex
+            # therefore sees the identical pre-sweep state, i.e. one Jacobi
+            # sweep == distLouvainMethod's single parallel-for; the coloring
+            # only reorders thread scheduling. (Contrast L16
+            # distLouvainMethodWithColoring, which DOES refresh aggregates
+            # between buckets and is implemented separately above.)
+            phase_colors = None
+            if cfg.coloring and phase == 0 and not cfg.vertex_ordering:
+                from vite_spark.algos.coloring import multi_hash_coloring
 
-            phase_colors, _ = multi_hash_coloring(spark, cur_edges)
-        if mid_level_resume:
-            # coloring is deterministic, so the recomputed phase_colors are
-            # identical to the interrupted run's buckets (ADVICE r1)
-            pres = resume_phase(
-                spark, cur_edges, threshold=th, cfg=cfg, level=phase,
-                metrics=metrics, colors=phase_colors,
-            )
-            mid_level_resume = False
-        else:
-            pres = louvain_phase(
-                spark, cur_edges, threshold=th, lower=-1.0, cfg=cfg, metrics=metrics,
-                level=phase, colors=phase_colors,
-                coarsen_gain_over=prev_phase_mod,
-            )
-        tot_iters += pres.iters
+                phase_colors, _ = multi_hash_coloring(spark, cur_edges)
+            if probe is not None and _fits_driver(int(probe["ne"] or 0), cfg):
+                drv = _DriverLevels(spark, cur_edges, phase_colors, comm_all)
+                if pin is not None:
+                    pin.unpersist()
+                    pin = None
+            if drv is not None:
+                pres = drv.phase(th, -1.0, cfg, metrics, phase, nparts)
+            elif mid_level_resume:
+                # coloring is deterministic, so the recomputed phase_colors are
+                # identical to the interrupted run's buckets (ADVICE r1)
+                pres = resume_phase(
+                    spark, cur_edges, threshold=th, cfg=cfg, level=phase,
+                    metrics=metrics, colors=phase_colors,
+                )
+                mid_level_resume = False
+            else:
+                pres = louvain_phase(
+                    spark, cur_edges, threshold=th, lower=-1.0, cfg=cfg, metrics=metrics,
+                    level=phase, colors=phase_colors,
+                    coarsen_gain_over=prev_phase_mod, probe=probe,
+                )
+            tot_iters += pres.iters
 
-        if (pres.q - prev_phase_mod) > th:
-            # compose labels through this level (main.cpp:381-425) —
-            # off the fused mirror-kernel outputs when the phase
-            # produced them, else the generic renumber+coarsen
-            if pres.coarse_edges is not None:
-                coarse = pres.coarse_edges
-                level_labels = pres.renum_labels
-            else:
-                coarse, ren = coarsen(cur_edges, pres.assignment, cfg, nv=pres.nv)
-                level_labels = pres.assignment.join(ren, "comm").select(
-                    "id", F.col("new_id").alias("label")
-                )
-            if comm_all is None:
-                comm_all = level_labels.select("id", F.col("label"))
-            else:
-                comm_all = (
-                    comm_all.join(
-                        level_labels.select(
-                            F.col("id").alias("label"), F.col("label").alias("nlabel")
-                        ),
-                        "label",
-                    )
-                    .select("id", F.col("nlabel").alias("label"))
-                )
-            comm_all = comm_all.localCheckpoint(eager=True)
-            res.q_per_phase.append(pres.q)
-            res.iters_per_phase.append(pres.iters)
-            metrics.record(kind="phase", level=phase, q=pres.q, iters=pres.iters)
-            if cfg.one_phase:
-                break
-            cur_edges = coarse.localCheckpoint(eager=True)
-            if cfg.checkpoint_dir:
-                ckpt.write_level_edges(
-                    cfg.checkpoint_dir, phase + 1, cur_edges, {"phase": phase + 1}
-                )
-                ckpt.write_phase_state(
-                    cfg.checkpoint_dir,
-                    comm_all,
-                    {
+            if (pres.q - prev_phase_mod) > th:
+                # compose labels through this level (main.cpp:381-425) —
+                # in the driver, off the fused mirror-kernel outputs when
+                # the phase produced them, else the generic renumber+coarsen
+                if drv is not None:
+                    drv.accept()
+                else:
+                    if pres.coarse_edges is not None:
+                        coarse = pres.coarse_edges
+                        level_labels = pres.renum_labels
+                    else:
+                        coarse, ren = coarsen(cur_edges, pres.assignment, cfg, nv=pres.nv)
+                        level_labels = pres.assignment.join(ren, "comm").select(
+                            "id", F.col("new_id").alias("label")
+                        )
+                    if comm_all is None:
+                        comm_all = level_labels.select("id", F.col("label"))
+                    else:
+                        comm_all = (
+                            comm_all.join(
+                                level_labels.select(
+                                    F.col("id").alias("label"), F.col("label").alias("nlabel")
+                                ),
+                                "label",
+                            )
+                            .select("id", F.col("nlabel").alias("label"))
+                        )
+                    comm_all = comm_all.localCheckpoint(eager=True)
+                res.q_per_phase.append(pres.q)
+                res.iters_per_phase.append(pres.iters)
+                metrics.record(kind="phase", level=phase, q=pres.q, iters=pres.iters)
+                if cfg.one_phase:
+                    break
+                if drv is not None:
+                    drv.coarsen()
+                else:
+                    cur_edges = coarse.localCheckpoint(eager=True)
+                    if pin is not None:
+                        pin.unpersist()
+                        pin = None
+                if cfg.checkpoint_dir:
+                    meta = {
                         "q_per_phase": res.q_per_phase,
                         "iters_per_phase": res.iters_per_phase,
                         "prev_phase_mod": pres.q,
                         "next_phase": phase + 1,
                         "short_phase": short_phase + 1 if short_phase < 12 else 0,
                         "tot_iters": tot_iters,
-                    },
-                )
-        else:
-            if cfg.threshold_cycling and not cfg.one_phase and phase < 10:
-                pres2 = louvain_phase(
-                    spark, cur_edges, threshold=1.0e-6, lower=pres.q, cfg=cfg,
-                    metrics=metrics, level=phase,
-                )
-                res.q_per_phase.append(pres2.q)
-                res.iters_per_phase.append(pres2.iters)
-            break
+                    }
+                    if drv is not None:
+                        drv.checkpoint(cfg.checkpoint_dir, phase + 1, meta)
+                    else:
+                        ckpt.write_level_edges(
+                            cfg.checkpoint_dir, phase + 1, cur_edges, {"phase": phase + 1}
+                        )
+                        ckpt.write_phase_state(cfg.checkpoint_dir, comm_all, meta)
+            else:
+                if cfg.threshold_cycling and not cfg.one_phase and phase < 10:
+                    if drv is not None:
+                        pres2 = drv.phase(1.0e-6, pres.q, cfg, metrics, phase,
+                                          nparts)
+                    else:
+                        pres2 = louvain_phase(
+                            spark, cur_edges, threshold=1.0e-6, lower=pres.q, cfg=cfg,
+                            metrics=metrics, level=phase, probe=probe,
+                        )
+                    res.q_per_phase.append(pres2.q)
+                    res.iters_per_phase.append(pres2.iters)
+                break
 
-        prev_phase_mod = pres.q
-        phase += 1
-        short_phase = short_phase + 1 if short_phase < 12 else 0
-        if phase >= cfg.max_phases or tot_iters > cfg.max_total_iterations:
-            break
+            prev_phase_mod = pres.q
+            phase += 1
+            short_phase = short_phase + 1 if short_phase < 12 else 0
+            if phase >= cfg.max_phases or tot_iters > cfg.max_total_iterations:
+                break
+    finally:
+        if pin is not None:
+            pin.unpersist()
 
+    if drv is not None:
+        comm_all = drv.frame()
     res.labels = comm_all if comm_all is not None else edges.select(
         F.col("src").alias("id"), F.col("src").alias("label")
     ).distinct()

@@ -217,24 +217,32 @@ class EngineConfig:
     # at 24M vertices from pack+delta writeback alone. Caller's choice
     # because tmpfs capacity (typically RAM/2) must fit the pack.
     scratch_dir: str | None = None
-    # Adaptive execution: when a level's edge table has at most this many
-    # rows, run the whole phase driver-local on CSR NumPy kernels (the
-    # oracle-validated sweep) instead of distributed supersteps. Coarse
-    # levels always shrink below this, so deep levels never pay cluster
-    # latency — mirroring how Vite's coarse phases collapse onto few ranks.
-    # Kept small (100k rows ≈ a few ms of NumPy) so any real level-0 graph
-    # — including the sf0.1 benchmark graph — runs the DISTRIBUTED path;
-    # set to 0 to force the distributed path everywhere (scaling bench does).
-    local_phase_max_edges: int = 100_000
-    # COARSE-level (phase ≥ 1) local-tier gate for Louvain only: coarse
-    # graphs already shrank by a level of coarsening, so the distributed
-    # path's per-level fixed costs (pack build + one job per superstep)
-    # dominate NumPy sweep time far beyond the level-0 gate. Measured at
-    # sf0.1 (level-1 ≈ 190k super-edges): 6.02 vs 6.26 s whole-operator
-    # medians, labels/Q/supersteps identical. Applied only when
-    # local_phase_max_edges > 0 (= 0 forces the distributed path
-    # everywhere — the scaling bench contract — and disables this too).
-    local_phase_coarse_max_edges: int = 1_000_000
+    # The one Louvain gate (every level; Leiden's driver tier stays
+    # within it and under its own 100k top, algos/leiden
+    # LEIDEN_DRIVER_MAX_EDGES): from the first level with at most this
+    # many edge rows, the
+    # rest of a louvain() run stays in the driver on the CSR NumPy sweep
+    # (one collect, NumPy levels, one emit) instead of distributed
+    # supersteps — as Vite's coarse phases collapse onto few ranks. Set
+    # to 0 to force the distributed path everywhere (the scaling bench
+    # does). Crossover (4-core VM, local[4], 3 GB heap, whole louvain()
+    # call plus a labels collect, warm, 3 interleaved reps after a
+    # warm-up; the driver loop vs level 0 on the packed tier with the
+    # coarse levels in the driver; labels and Q equal in every pair):
+    #
+    #   rows       input                         driver s        packed s
+    #   231,458    lineitem sf0.01               1.57/1.40/1.43  7.37/6.65/6.71
+    #   903,296    RGG 110k vertices, weight 1   4.65/4.19/4.66  9.65/9.07/9.24
+    #   1,197,704  lineitem sf0.1, even orders  10.34/11.08/10.78 15.81/14.33/13.48
+    #   2,392,000  lineitem sf0.1               10.93/10.85/11.42 9.41/9.61/9.54
+    #   3,441,504  RGG 425k vertices, weight 1  16.88/18.38/20.04 15.96/17.40/17.07
+    #
+    # (RGG: io/generators.rgg_edges_spark.) The one-core NumPy sweep loses
+    # from ~2.4M rows, so the gate is the measured top where the driver
+    # still wins every input, not PACK_EDGES_PER_PART. Peak RSS of one
+    # call at the top (1.2M rows, fresh process): Python 333 MB, JVM
+    # VmHWM 724 MB; packed level 0: 281 MB, 1,425 MB (workers excluded).
+    local_phase_max_edges: int = 1_200_000
     # Borůvka MSF adaptive contraction tier (algos/msf.py): when a
     # round's picked pseudo-forest (one edge per active component) has
     # at most this many rows, the contraction map is computed

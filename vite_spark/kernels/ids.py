@@ -3,22 +3,26 @@
 Replaces the reference community renumbering (rebuild.cpp:77-292) with a
 deterministic, cluster-scalable scheme: dense rank ordered by value,
 computed as range-repartition → per-partition offsets (one tiny collect) →
-vectorized in-partition rank. No global single-partition window, no
-driver-side materialization of the values — works at 10^12 distinct ids.
+vectorized in-partition rank. That tier has no global single-partition
+window and no driver-side materialization of the values — it works at
+10^12 distinct ids.
 
-Two tiers, one rank function. Small inputs (≤ ``local_max_rows`` distinct
+Two tiers, one order. Small inputs (≤ ``local_max_rows`` distinct
 values, default 2M / $SPARK_GRAFT_DENSE_IDS_LOCAL_MAX; 0 forces the
-distributed tier) are the distributed tier at ONE partition with offset
-0: the cached distinct set is coalesced into one task that sorts and
-ranks it in place — 2 jobs total (count + rank) versus the distributed
-tier's range-boundary sample + offsets collect + rank, and no range
-exchange. Output is identical by construction (rank ordered by value is
-a pure function of the value set).
+distributed tier) rank in the driver: the cached distinct set comes back
+with one Arrow collect, Arrow sorts it and the ranked
+table goes back to the JVM with one Arrow ``createDataFrame`` — 2 jobs
+(count + collect), no shuffle, Python worker or checkpointed block.
+Output is identical by construction (rank ordered by value is a pure
+function of the value set; Arrow and Spark both order strings by UTF-8
+bytes).
 
-A null value takes id 0, ahead of every other value, as in Spark's
-ascending order (nulls first); it never enters the rank tasks, so the
-tiers cannot place it differently and a long column is never widened to
-float by pandas' null handling.
+Both tiers sort with the same Arrow function (``_ascending``), over the
+whole set in the driver and per range partition in the rank tasks
+(``mapInArrow``: no pandas, so a NaN stays a NaN and a long column is
+never widened to float). A null value takes id 0, ahead of every other
+value, as in Spark's ascending order (nulls first); in the distributed
+tier it never enters the rank tasks.
 """
 
 from __future__ import annotations
@@ -50,53 +54,50 @@ def dense_ids(df: DataFrame, col: str, out_col: str = "new_id",
         cnt = d.agg(F.count(F.lit(1)).alias("n"),
                     F.count(col).alias("nn")).collect()[0]
         n, base = cnt["nn"], cnt["n"] - cnt["nn"]   # base 1: a null exists
-        src = d.filter(F.col(col).isNotNull()) if base else d
         out_schema = StructType(
             list(d.schema.fields) + [StructField(out_col, LongType(), False)]
         )
 
         if 0 < local_max_rows and n <= local_max_rows:
-            # single-task tier: one rank job over the cached distinct set
-            ranked, offsets = src.coalesce(1), {0: base}
-        else:
-            # distributed tier (the 10^12-id path): range partition the
-            # cached distinct (the boundary sample reads the cache instead
-            # of recomputing the distinct), offsets from per-partition
-            # counts, vectorized in-partition rank.
-            ranked = vals = src.repartitionByRange(
-                num_parts, F.col(col)).persist()
-            counts = (
-                vals.select(F.spark_partition_id().alias("pid"))
-                .groupBy("pid")
-                .count()
-                .collect()
-            )
-            # the collect filled `vals`: the distinct set is no longer read
-            d.unpersist()
-            offsets = {}
-            acc = base
-            for r in sorted(counts, key=lambda r: r["pid"]):
-                offsets[r["pid"]] = acc
-                acc += r["count"]
+            return _rank_in_driver(spark, d, col, out_schema)
+        # distributed tier (the 10^12-id path): range partition the
+        # cached distinct (the boundary sample reads the cache instead
+        # of recomputing the distinct), offsets from per-partition
+        # counts, vectorized in-partition rank.
+        src = d.filter(F.col(col).isNotNull()) if base else d
+        vals = src.repartitionByRange(num_parts, F.col(col)).persist()
+        counts = (
+            vals.select(F.spark_partition_id().alias("pid"))
+            .groupBy("pid")
+            .count()
+            .collect()
+        )
+        # the collect filled `vals`: the distinct set is no longer read
+        d.unpersist()
+        offsets = {}
+        acc = base
+        for r in sorted(counts, key=lambda r: r["pid"]):
+            offsets[r["pid"]] = acc
+            acc += r["count"]
 
-        def rank_partition(pdf_iter):
+        def rank_partition(batches):
             import numpy as np
-            import pandas as pd
+            import pyarrow as pa
             from pyspark import TaskContext
 
-            parts = [p for p in pdf_iter]
-            if not parts:
+            batches = list(batches)
+            if not batches:
                 return
-            pdf = (pd.concat(parts, ignore_index=True)
-                   if len(parts) > 1 else parts[0])
-            pdf = pdf.sort_values(col, kind="mergesort", ignore_index=True)
+            ranked = _ascending(pa.Table.from_batches(batches), col)
             lo = offsets.get(TaskContext.get().partitionId(), 0)
-            pdf[out_col] = np.arange(lo, lo + len(pdf), dtype=np.int64)
-            yield pdf
+            yield from pa.table({
+                col: ranked,
+                out_col: np.arange(lo, lo + len(ranked), dtype=np.int64),
+            }).to_batches()
 
         # eager cut so the cached sets can be released before returning
         # (`vals` was a measured cache leak when left to context GC)
-        out = ranked.mapInPandas(
+        out = vals.mapInArrow(
             rank_partition, schema=out_schema
         ).localCheckpoint(eager=True)
         if base:
@@ -107,3 +108,33 @@ def dense_ids(df: DataFrame, col: str, out_col: str = "new_id",
         if vals is not None:
             vals.unpersist()
         d.unpersist()
+
+
+def _ascending(tbl, col: str):
+    """Column ``col`` of the distinct set ``tbl`` in Spark's ascending
+    order: null first, NaN above every number, strings by UTF-8 bytes.
+    Arrow places NaN with the nulls, so both sort last and the null (at
+    most one) then moves to the front."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    vals = tbl.column(col).take(pc.sort_indices(
+        tbl, sort_keys=[(col, "ascending")], null_placement="at_end"))
+    n = len(vals)
+    if vals.null_count:
+        vals = pa.chunked_array(
+            vals.slice(n - 1).chunks + vals.slice(0, n - 1).chunks, vals.type)
+    return vals
+
+
+def _rank_in_driver(spark, d: DataFrame, col: str, out_schema) -> DataFrame:
+    """The small tier: the distinct set ``d`` (null included) ranked
+    0.. in the driver."""
+    import numpy as np
+    import pyarrow as pa
+
+    vals = _ascending(d.toArrow(), col)
+    return spark.createDataFrame(
+        pa.table({col: vals, out_schema.fieldNames()[-1]:
+                  np.arange(len(vals), dtype=np.int64)}),
+        schema=out_schema)

@@ -51,6 +51,13 @@ TOPK = 5
 
 # ---------------------------------------------------------------- helpers
 
+def _scalar_row(spark, value, name: str) -> DataFrame:
+    """A one-row result column ``name`` from a literal expression, over
+    spark.range rather than createDataFrame of a Python list: the list's
+    rows go through a Python worker when collected."""
+    return spark.range(1).select(value.alias(name))
+
+
 def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -279,9 +286,7 @@ def q_triangles_total(spark, sf_dir):
 
     e = lineitem_part_edges(spark, sf_dir)
     n = triangle_count(spark, e)
-    # a literal over spark.range, not createDataFrame of a Python list:
-    # the list's rows go through a Python worker when collected
-    return spark.range(1).select(F.lit(n).cast("long").alias("triangles"))
+    return _scalar_row(spark, F.lit(n).cast("long"), "triangles")
 
 
 SQL_TRIANGLES_TOTAL = f"""WITH {EDGES_CTE},
@@ -681,9 +686,7 @@ def q_cc_gini(spark, sf_dir):
         "id", F.col("component").alias("comm")
     )
     g = gini_coefficient(lab)
-    return spark.createDataFrame([(g,)], "g double").select(
-        F.round("g", 6).alias("gini")
-    )
+    return _scalar_row(spark, F.round(F.lit(g).cast("double"), 6), "gini")
 
 
 SQL_CC_GINI = SQL_CONNECTED_COMPONENTS.replace(
@@ -1303,9 +1306,7 @@ def q_louvain_sweep2_q(spark, sf_dir):
     lab = louvain_sweeps(spark, e, LOUVAIN_SWEEPS_K)
     q = modularity_of(e, lab)
     e.unpersist()
-    return spark.createDataFrame([(q,)], "q double").select(
-        F.round("q", 6).alias("q6")
-    )
+    return _scalar_row(spark, F.round(F.lit(q).cast("double"), 6), "q6")
 
 
 LEIDEN_REFINE_K = 2
@@ -1401,8 +1402,7 @@ def q_leiden_refine2_q(spark, sf_dir):
     ref = leiden_refine_sweeps(spark, e, parents, LEIDEN_REFINE_K)
     q = modularity_of(e, ref.select("id", "comm"))
     e.unpersist()
-    return spark.createDataFrame([(q,)], "q double").select(
-        F.round("q", 6).alias("q6"))
+    return _scalar_row(spark, F.round(F.lit(q).cast("double"), 6), "q6")
 
 
 LEIDEN_LEVELS = 2
@@ -1558,8 +1558,7 @@ def q_leiden2_q(spark, sf_dir):
                         refine_sweeps=LEIDEN_REFINE_K)
     q = modularity_of(e, lab)
     e.unpersist()
-    return spark.createDataFrame([(q,)], "q double").select(
-        F.round("q", 6).alias("q6"))
+    return _scalar_row(spark, F.round(F.lit(q).cast("double"), 6), "q6")
 
 
 def q_community_conductance(spark, sf_dir):
@@ -3964,7 +3963,8 @@ def q_effective_diameter(spark, sf_dir):
     e = lineitem_part_edges(spark, sf_dir)
     nf = [(r["h"], r["nf"]) for r in hyperanf(spark, e).collect()]
     d = effective_diameter(nf)
-    return spark.createDataFrame([(round(d, 6),)], "eff_diameter double")
+    return _scalar_row(spark, F.lit(round(d, 6)).cast("double"),
+                       "eff_diameter")
 
 
 def _build_sql_eff_diameter():

@@ -10,6 +10,9 @@ atomic _COMPLETE marker; readers only trust marked supersteps):
     {dir}/level={L}/iter={I}/_COMPLETE
     {dir}/level={L}/edges/                 parquet coarse edge table (once per level)
     {dir}/level={L}/_EDGES_COMPLETE
+    {dir}/phase_state/comm_all/            parquet (id, label) composed labels
+    {dir}/phase_state/meta.json            multi-level loop state
+    {dir}/phase_state/_PHASE_COMPLETE
 
 Three writers fill a superstep, one per Louvain tier, all in this layout:
 
@@ -22,6 +25,12 @@ Three writers fill a superstep, one per Louvain tier, all in this layout:
   ``assignment`` of iter k-1 and the ``past`` (and ``act``) of iter k; the
   driver commits iter j one job late, after job j+1 — the same protocol
   as the packed tier's modularity.
+
+The per-level tables have two writers each: ``write_level_edges`` and
+``write_phase_state`` take DataFrames (the distributed levels);
+``write_level_edges_arrays`` and ``write_phase_state_arrays`` take the
+driver's NumPy arrays (the levels Louvain runs in the driver) and write
+one parquet file with pyarrow, no Spark job.
 
 Every writer empties the superstep dir first (``clear_superstep``): stale
 shards of an earlier run with another partition count must never be read.
@@ -82,19 +91,24 @@ def write_superstep(root, level, iter_, assignment_df, past_df, state: dict,
     commit_superstep(root, level, iter_, state, has_act=act_df is not None)
 
 
-def write_shard(root, level, iter_, table, part, cols: dict):
-    """One parquet file ``{table}/part-{part:05d}.parquet`` of superstep
-    (level, iter_) from NumPy columns. Written under a dot name (readers
-    skip it) and renamed, so a retried task never leaves a torn file."""
+def _write_part(d, part, cols: dict):
+    """One parquet file ``{d}/part-{part:05d}.parquet`` from NumPy columns.
+    Written under a dot name (readers skip it) and renamed, so a retried
+    task never leaves a torn file."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d = os.path.join(superstep_dir(root, level, iter_), table)
     os.makedirs(d, exist_ok=True)
     name = f"part-{part:05d}.parquet"
     tmp = os.path.join(d, f".{name}.{os.getpid()}")
     pq.write_table(pa.table(cols), tmp)
     os.replace(tmp, os.path.join(d, name))
+
+
+def write_shard(root, level, iter_, table, part, cols: dict):
+    """Table ``table``'s file ``part`` of superstep (level, iter_)."""
+    _write_part(os.path.join(superstep_dir(root, level, iter_), table),
+                part, cols)
 
 
 def write_superstep_arrays(root, level, iter_, ids, assignment, past,
@@ -112,12 +126,32 @@ def write_superstep_arrays(root, level, iter_, ids, assignment, past,
     commit_superstep(root, level, iter_, state, has_act=act is not None)
 
 
+def _replace_table(d, cols: dict):
+    """``d`` becomes a one-file parquet table of the NumPy ``cols`` (the
+    driver-side ``mode("overwrite")``)."""
+    shutil.rmtree(d, ignore_errors=True)
+    _write_part(d, 0, cols)
+
+
+def _mark(d, meta_name, meta: dict, marker):
+    with open(os.path.join(d, meta_name), "w") as f:
+        json.dump(meta, f)
+    open(os.path.join(d, marker), "w").close()
+
+
 def write_level_edges(root, level, edges_df, meta: dict):
     d = os.path.join(root, f"level={level}")
     edges_df.write.mode("overwrite").parquet(os.path.join(d, "edges"))
-    with open(os.path.join(d, "edges_meta.json"), "w") as f:
-        json.dump(meta, f)
-    open(os.path.join(d, "_EDGES_COMPLETE"), "w").close()
+    _mark(d, "edges_meta.json", meta, "_EDGES_COMPLETE")
+
+
+def write_level_edges_arrays(root, level, src, dst, weight, meta: dict):
+    """``write_level_edges`` from the driver's arrays (src, dst long,
+    weight double)."""
+    d = os.path.join(root, f"level={level}")
+    _replace_table(os.path.join(d, "edges"),
+                   {"src": src, "dst": dst, "weight": weight})
+    _mark(d, "edges_meta.json", meta, "_EDGES_COMPLETE")
 
 
 def latest_complete(root: str):
@@ -161,9 +195,15 @@ def write_phase_state(root, comm_all_df, meta: dict):
     """Composed labels + multi-level loop state after a completed phase."""
     d = os.path.join(root, "phase_state")
     comm_all_df.write.mode("overwrite").parquet(os.path.join(d, "comm_all"))
-    with open(os.path.join(d, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    open(os.path.join(d, "_PHASE_COMPLETE"), "w").close()
+    _mark(d, "meta.json", meta, "_PHASE_COMPLETE")
+
+
+def write_phase_state_arrays(root, ids, labels, meta: dict):
+    """``write_phase_state`` from the driver's arrays: ``labels[i]`` is
+    the composed label of original vertex ``ids[i]``."""
+    d = os.path.join(root, "phase_state")
+    _replace_table(os.path.join(d, "comm_all"), {"id": ids, "label": labels})
+    _mark(d, "meta.json", meta, "_PHASE_COMPLETE")
 
 
 def read_phase_state(spark, root):
