@@ -498,8 +498,12 @@ def core_throughput(spark, edges, warmup: int = 1, iters: int | None = None,
                 else {"max_iter": iters, "force_iters": True})).count()
     sup = [r for r in m.rows if r.get("kind") == "core_superstep"][warmup:]
     if packed:
-        assert all(r.get("mode") == "csr_sharded_hindex" for r in sup), \
-            "packed k-core kernel did not run (fallback?)"
+        # the driver tier shares the mode but splits one wall evenly
+        # across its sweeps: only the sharded job loop has per-sweep walls
+        tiers = [r["tier"] for r in m.rows if r.get("kind") == "tier"]
+        assert tiers[-1:] == ["sharded"] and all(
+            r.get("mode") == "csr_sharded_hindex" for r in sup), \
+            f"packed k-core sharded loop did not run (tiers {tiers})"
     assert len(sup) >= 2, f"input converged too fast ({len(sup)} measured)"
     wall = sum(r["wall_s"] for r in sup)
     return ne * len(sup) / wall

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from vite_spark import fixtures as fx
 from vite_spark.algos.core import coreness
@@ -34,12 +35,40 @@ def _nx_truth(s, d):
     return nx.core_number(G)
 
 
+def _tiers(m):
+    return [r["tier"] for r in m.rows if r.get("kind") == "tier"]
+
+
+def _karate():
+    s, d, w, nv = fx.karate()
+    return pd.DataFrame({"src": s, "dst": d, "weight": w})
+
+
+def _dirty():
+    """One-directional rows, duplicates and self-loops over sparse ids."""
+    rng = np.random.default_rng(11)
+    nv, ne = 400, 1400
+    ids = np.sort(rng.choice(20 * nv, nv, replace=False))
+    a = ids[rng.integers(0, nv, ne)]
+    b = ids[rng.integers(0, nv, ne)]
+    s = np.concatenate([a, a[:200], ids[:10]])   # dupes + self-loops
+    d = np.concatenate([b, b[:200], ids[:10]])
+    return pd.DataFrame({"src": s, "dst": d, "weight": np.ones(len(s))})
+
+
+def _path(n=60):
+    return pd.DataFrame({"src": np.arange(n - 1), "dst": np.arange(1, n),
+                         "weight": np.ones(n - 1)})
+
+
 def test_packed_matches_join_and_networkx_karate(spark):
     s, d, w, nv = fx.karate()
     edges = fx.to_spark_edges(spark, (s, d, w, nv))
     mp, mj = MetricsCollector(), MetricsCollector()
     got = _cores(coreness(spark, edges, metrics=mp))
+    # the default config runs a one-partition pack in the driver
     assert _modes(mp) == {"csr_sharded_hindex"}
+    assert _tiers(mp) == ["single"]
     ref = _cores(coreness(
         spark, edges, cfg=EngineConfig(use_csr_kernel=False), metrics=mj))
     assert _modes(mj) == {"join_hindex"}
@@ -52,37 +81,55 @@ def test_packed_matches_join_and_networkx_karate(spark):
 def test_random_graph_with_dirt_matches_networkx(spark):
     """One-directional rows, duplicates and self-loops must all be
     normalized away — coreness is over the simple undirected graph."""
-    rng = np.random.default_rng(11)
-    nv, ne = 400, 1400
-    ids = np.sort(rng.choice(20 * nv, nv, replace=False))
-    a = ids[rng.integers(0, nv, ne)]
-    b = ids[rng.integers(0, nv, ne)]
-    s = np.concatenate([a, a[:200], ids[:10]])   # dupes + self-loops
-    d = np.concatenate([b, b[:200], ids[:10]])
-    w = np.ones(len(s))
-    edges = spark.createDataFrame(
-        pd.DataFrame({"src": s, "dst": d, "weight": w}))
+    pdf = _dirty()
+    edges = spark.createDataFrame(pdf)
     mp = MetricsCollector()
     got = _cores(coreness(spark, edges, metrics=mp))
     assert _modes(mp) == {"csr_sharded_hindex"}
     ref = _cores(coreness(
         spark, edges, cfg=EngineConfig(use_csr_kernel=False)))
     assert got == ref
-    assert got == _nx_truth(s, d)
+    assert got == _nx_truth(pdf["src"], pdf["dst"])
 
 
 def test_path_graph_worst_case_convergence(spark):
     """A path graph is the H-index fixpoint's slow case (information
     crawls one hop per sweep) — parity must hold across many sweeps."""
-    n = 60
-    s = np.arange(n - 1)
-    d = np.arange(1, n)
-    edges = spark.createDataFrame(pd.DataFrame(
-        {"src": s, "dst": d, "weight": np.ones(n - 1)}))
+    pdf = _path()
+    edges = spark.createDataFrame(pdf)
     mp = MetricsCollector()
     got = _cores(coreness(spark, edges, metrics=mp))
-    assert got == _nx_truth(s, d)
+    assert got == _nx_truth(pdf["src"], pdf["dst"])
     assert all(v == 1 for v in got.values())
+
+
+@pytest.mark.parametrize("make", [_karate, _dirty, _path],
+                         ids=["karate", "dirty", "path"])
+def test_kcore_tiers_agree(spark, make):
+    """The driver tier (default config), the sharded job loop
+    (``shuffle_partitions=4``) and the join path give equal coreness and
+    equal per-sweep changed counts; ``max_iter=0`` returns the degrees
+    in every tier."""
+    edges = spark.createDataFrame(make())
+    tiers = {"single": EngineConfig(),
+             "sharded": EngineConfig(shuffle_partitions=4),
+             "join": EngineConfig(use_csr_kernel=False)}
+    got, deg = {}, {}
+    for tier, cfg in tiers.items():
+        m = MetricsCollector()
+        got[tier] = _cores(coreness(spark, edges, cfg=cfg, metrics=m)), \
+            _iters(m)
+        assert _tiers(m) == ([] if tier == "join" else [tier]), tier
+        deg[tier] = _cores(coreness(spark, edges, max_iter=0, cfg=cfg))
+    assert got["single"] == got["sharded"] == got["join"]
+    assert got["single"][1][-1] == 0
+    assert deg["single"] == deg["sharded"] == deg["join"]
+    und = {}
+    for a, b in zip(*(make()[c] for c in ("src", "dst"))):
+        if a != b:
+            und.setdefault(int(a), set()).add(int(b))
+            und.setdefault(int(b), set()).add(int(a))
+    assert deg["single"] == {v: len(n) for v, n in und.items()}
 
 
 def test_kcore_oracle_slack(spark):

@@ -73,8 +73,7 @@ def test_early_term_engine_matches_oracle(spark, et, kernel):
         cfg=EngineConfig(local_phase_max_edges=0, early_term=et,
                          max_total_iterations=5,
                          use_csr_kernel=kernel != "join",
-                         csr_force_sharded=kernel == "sharded",
-                         csr_snapshot_every=2),
+                         csr_force_sharded=kernel == "sharded"),
     )
     assert pres.iters == o_iters
     assert pres.q == pytest.approx(o_q, abs=1e-6)
@@ -92,8 +91,7 @@ def test_et_abort_on_packed_path(spark, kernel):
         spark, edges, threshold=1e-6,
         cfg=EngineConfig(local_phase_max_edges=0, early_term=3,
                          use_csr_kernel=True,
-                         csr_force_sharded=kernel == "sharded",
-                         csr_snapshot_every=2),
+                         csr_force_sharded=kernel == "sharded"),
     )
     assert pres.iters == o_iters
     assert pres.q == pytest.approx(o_q, abs=1e-6)

@@ -229,3 +229,29 @@ def test_bfs_resume_identical_distances(spark, tmp_path):
     other = _dists(shortest_paths(spark, edges, lms[:2], cfg=cfg, metrics=m))
     assert other == {k: v for k, v in ref.items() if k[1] in lms[:2]}
     assert not _iters(m, "bfs_resume")
+
+
+def test_kcore_resume_identical_coreness(spark, tmp_path):
+    """k-core resumes from an iteration-k checkpoint (a checkpoint dir
+    selects the sharded tier): coreness equals the uninterrupted run's,
+    and the H-index sweeps continue at k + 1. The degree sweep is the
+    checkpoint's iteration 1, so H-index sweep 2 is its iteration 3."""
+    from vite_spark.algos.core import coreness
+
+    edges = _edges(spark, seed=53, nv=300, ne=900)
+    m0 = MetricsCollector()
+    ref = _map(coreness(spark, edges, metrics=m0))
+    n0 = len(_iters(m0, "core_superstep"))
+    assert n0 > 3
+    ck = str(tmp_path / "ck_core")
+    cfg = EngineConfig(checkpoint_dir=ck)
+    m1 = MetricsCollector()
+    coreness(spark, edges, max_iter=2, cfg=cfg, metrics=m1).count()
+    assert _iters(m1, "core_superstep") == [1, 2]
+    assert ic.latest_complete(ck, "core")["t"] == 3
+
+    m2 = MetricsCollector()
+    got = _map(coreness(spark, edges, cfg=cfg, metrics=m2))
+    assert got == ref
+    assert _iters(m2, "core_resume") == [2]
+    assert _iters(m2, "core_superstep") == list(range(3, n0 + 1))

@@ -220,17 +220,15 @@ def test_degree_aware_salting_hub_graph(spark):
                                   "singleton_pairs"])
 def test_csr_sharded_phase_parity(spark, name):
     """The SHARDED-state packed path (kernels/csr_sharded.py — per-
-    partition universe + owned-slice state, self-describing move records,
-    snapshot+replay persistence) matches the oracle exactly. snapshot
-    interval 2 forces several snapshot/replay/prune cycles even on short
-    fixture runs."""
+    partition universe + owned-slice state, self-describing move records)
+    matches the oracle exactly."""
     s, d, w, nv = FIXTURES[name]()
     edges = fx.to_spark_edges(spark, (s, d, w, nv))
     o_labels, o_q, o_iters = louvain_oracle_phase(s, d, w, nv)
     pres = louvain_phase(
         spark, edges, threshold=1e-6,
         cfg=EngineConfig(local_phase_max_edges=0, use_csr_kernel=True,
-                         csr_force_sharded=True, csr_snapshot_every=2),
+                         csr_force_sharded=True),
     )
     assert pres.iters == o_iters
     assert pres.q == pytest.approx(o_q, abs=1e-6)
@@ -247,7 +245,7 @@ def test_csr_sharded_full_parity(spark, name):
     res = louvain(
         spark, edges,
         EngineConfig(local_phase_max_edges=0, use_csr_kernel=True,
-                     csr_force_sharded=True, csr_snapshot_every=2),
+                     csr_force_sharded=True),
     )
     assert res.iters_per_phase == oracle.iters_per_phase
     for a, b in zip(res.q_per_phase, oracle.q_per_phase):
@@ -268,6 +266,51 @@ def test_csr_sharded_equals_mirror(spark):
     assert r_mirror.q_per_phase == r_shard.q_per_phase
     assert np.array_equal(_labels_from_df(r_mirror.labels, nv),
                           _labels_from_df(r_shard.labels, nv))
+
+
+def test_sharded_pack_builder_and_cache(spark, tmp_path):
+    """Every sharded level builds its pack through csr_pr._prepare_pack:
+    with and without a pack cache the labels, Q and iterations equal the
+    oracle's, a second cached run reuses vite_pack (the adjacency files
+    are not rewritten), and a non-integer-weight input still declines to
+    the join tier unless csr_force_sharded opts in."""
+    import os
+
+    from vite_spark.runtime.metrics import MetricsCollector
+
+    s, d, w, nv = FIXTURES["sbm"]()
+    oracle = louvain_oracle_full(s, d, w, nv)
+    pack = tmp_path / "vite_pack"
+
+    def run(w, **kw):
+        m = MetricsCollector()
+        res = louvain(spark, fx.to_spark_edges(spark, (s, d, w, nv)),
+                      EngineConfig(local_phase_max_edges=0,
+                                   shuffle_partitions=4, **kw), metrics=m)
+        return res, [(r["tier"], r["reason"]) for r in m.rows
+                     if r.get("kind") == "tier"]
+
+    def adjacency():
+        return {f: os.path.getmtime(pack / f) for f in os.listdir(pack)
+                if f.startswith(("own_", "srcl_"))}
+
+    runs = [run(w, csr_force_sharded=True)]
+    for _ in range(2):
+        runs.append(run(w, csr_force_sharded=True,
+                        pack_cache_dir=str(tmp_path)))
+        if len(runs) == 2:
+            first = adjacency()
+    assert first and adjacency() == first
+    for res, tiers in runs:
+        assert set(tiers) == {("sharded", None)}
+        assert res.iters_per_phase == oracle.iters_per_phase
+        assert res.q_per_phase == runs[0][0].q_per_phase
+        assert np.array_equal(_labels_from_df(res.labels, nv),
+                              oracle.labels)
+    # sharded by id width, not forced: non-integer weights take the join
+    # tier at level 0
+    _, tiers = run(w * 1.5, csr_mirror_max_ids=0)
+    assert tiers[0] == ("join", "kernel")
 
 
 def test_key_overflow_guard_routes_to_join(spark):

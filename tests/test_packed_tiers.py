@@ -1,6 +1,7 @@
 """Tier equivalence of the packed kernels (PageRank, CC, LPA, BFS/SSSP,
-triangles), the tier rows ``_run_packed`` records, and input pins and
-temporary packs released when the tier after the gate fails.
+triangles; k-core's is in tests/test_core_packed.py), the tier rows
+``_run_packed`` records, and input pins and temporary packs released
+when the tier after the gate fails.
 
 Each kernel runs one sparse-id input through its three tiers: the
 single-task tier (a one-partition pack: ``shuffle_partitions=1``), the
@@ -215,13 +216,16 @@ def _packs(scratch):
     return {f for f in os.listdir(scratch) if f.startswith("vite_")}
 
 
-@pytest.mark.parametrize("kernel", ["pagerank", "triangles", "louvain"])
+@pytest.mark.parametrize("kernel", ["pagerank", "triangles", "louvain",
+                                    "kcore", "wl"])
 def test_pins_released_when_pack_build_fails(spark, monkeypatch, kernel):
     """The input pin (and the triangle pack's intermediate tables) must
     not outlive a failure of the tier that follows the gate, nor must a
     half-built temporary pack."""
     from vite_spark.algos import louvain as lv
+    from vite_spark.algos.core import coreness
     from vite_spark.algos.triangles import triangle_count
+    from vite_spark.algos.wl import wl_refine
     from vite_spark.kernels import csr_tri
 
     def boom(*a, **k):
@@ -236,6 +240,10 @@ def test_pins_released_when_pack_build_fails(spark, monkeypatch, kernel):
                           spark, edges, EngineConfig(shuffle_partitions=4))),
         "louvain": (lv, "_local_phase",
                     lambda: lv.louvain_phase(spark, edges, 1e-6)),
+        "kcore": (csr_pr, "pack_csr_partitions_sharded", lambda: coreness(
+            spark, edges, cfg=EngineConfig(shuffle_partitions=4))),
+        "wl": (csr_pr, "pack_csr_partitions_sharded", lambda: wl_refine(
+            spark, edges, rounds=2, cfg=EngineConfig(shuffle_partitions=4))),
     }[kernel]
     monkeypatch.setattr(module, name, boom)
     scratch = resolve_scratch(None) or tempfile.gettempdir()
@@ -383,8 +391,12 @@ def test_tier_rows_triangles_kcore_wl(spark, edges, monkeypatch):
         monkeypatch.setattr(config, "PACK_EDGES_PER_PART", target)
         for fn in (tri, tri_v):
             assert rows(fn, EngineConfig()) == [(want, None)], target
+    # k-core is an owner sweep: the default config takes the driver
+    # tier; WL has no driver tier
+    assert rows(kcore, EngineConfig()) == [("single", None)]
+    assert rows(wl, EngineConfig()) == [("sharded", None)]
     for fn in (kcore, wl):
-        assert rows(fn, EngineConfig()) == [("sharded", None)]
+        assert rows(fn, sharded) == [("sharded", None)]
         assert rows(fn, EngineConfig(), empty) == [("join", "empty")]
     # k-core and WL simplify to a symmetric table before the kernel; an
     # open table handed to the kernel itself takes the join path
@@ -401,8 +413,9 @@ def test_tier_rows_triangles_kcore_wl(spark, edges, monkeypatch):
     for fn in (tri, tri_v):
         assert rows(fn, EngineConfig()) == [("single", None)]
         assert rows(fn, sharded) == [("join", "non_local")]
+    assert rows(kcore, EngineConfig()) == [("single", None)]
     for fn in (kcore, wl):
-        assert rows(fn, EngineConfig()) == [("join", "non_local")]
+        assert rows(fn, sharded) == [("join", "non_local")]
 
 
 def test_scratch_skips_full_tmpfs(monkeypatch, caplog):

@@ -18,9 +18,12 @@ vertex-closure precondition holds by construction.
 Two paths, identical iterates (pytest-enforced vs networkx truth,
 tests/test_core_packed.py):
 
-- **Packed kernel** (kernels/csr_core.py): one job per sweep over a
-  fresh sharded CSR pack of the simplified table, one lexsort +
-  max.reduceat per sweep. Single-box production path.
+- **Packed kernel** (kernels/csr_core.py): an owner-authored sweep on
+  the packed runner (kernels/csr_pr.py), so it has the runner's tiers —
+  in the driver when the pack would have one partition and no
+  checkpoint dir is set, else one job per sweep over the sharded pack of
+  the simplified table (``core_pack``) — and per-sweep
+  checkpoint/resume. One lexsort + max.reduceat per sweep.
 - **Join path** (below): one join + per-src descending-rank window +
   grouped max(min(c, rank)) per sweep — the multi-cluster fallback.
   The window partitions by src (never a global window), so it
@@ -73,8 +76,9 @@ def coreness(
 
     if cfg.use_csr_kernel:
         # packed-CSR fast path (kernels/csr_core.py): falls back here
-        # (None) for non-local masters. Same H-index operator on the
-        # same integers → identical iterates; pytest-enforced.
+        # (None) when the sharded tier meets a non-local master. Same
+        # H-index operator on the same integers → identical iterates;
+        # pytest-enforced.
         from vite_spark.kernels.csr_core import csr_coreness
 
         res = csr_coreness(spark, und, max_iter, cfg, metrics,

@@ -50,12 +50,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from vite_spark.algos.louvain import (
     _argmax_moves,
     _counter_tables,
+    _fits_driver,
     _maybe_broadcast,
     modularity_of,
     self_loop_weights,
     weighted_degrees,
 )
 from vite_spark.config import EngineConfig
+from vite_spark.oracle.louvain_ref import _phase_sweep_targets_cw
 
 
 def parent_filtered_edges(edges: DataFrame, parent: DataFrame,
@@ -306,15 +308,6 @@ def _jacobi_sweeps(
     return curr
 
 
-# Top of the driver tier of ``leiden_levels``. Its NumPy mirror
-# (``_jacobi_numpy``) scans every edge row for each vertex, O(nv·ne) per
-# sweep, so it cannot take the Louvain gate: whole call plus collect,
-# 4-core VM, warm, driver vs distributed, 231k-row lineitem sf0.01 (2k
-# vertices) 3.5/3.3 s vs 28.1/16.7 s, but a 903k-row RGG (110k vertices)
-# did not finish one driver call in 5 minutes. It keeps its former 100k.
-LEIDEN_DRIVER_MAX_EDGES = 100_000
-
-
 def leiden_levels(
     spark: SparkSession,
     edges: DataFrame,
@@ -346,17 +339,17 @@ def leiden_levels(
 
     cfg = cfg or EngineConfig()
     # adaptive driver-local tier (the louvain driver-level design): a
-    # graph of at most LEIDEN_DRIVER_MAX_EDGES rows, and within the
-    # Louvain gate (0 forces the distributed tier), runs the
-    # pytest-proven NumPy mirror — one Arrow collect in, one
-    # Arrow hand-off out (kernels/csr_pr ``_collect``/``_emit_local``),
-    # identical labels by the parity tests — so small graphs and deep
-    # coarse levels never pay cluster job latency. Arbitrary ids handled
-    # by a monotone densify (np.unique is sorted, so every min-id
-    # tie-break and the min-original-id canonicalization survive the
-    # mapping).
+    # graph within the one Louvain gate (cfg.local_phase_max_edges, its
+    # Leiden crossover walls at the definition; 0 forces the distributed
+    # tier) runs the pytest-proven NumPy mirror — one Arrow collect in,
+    # one Arrow hand-off out (kernels/csr_pr ``_collect``/
+    # ``_emit_local``), identical labels by the parity tests — so small
+    # graphs and deep coarse levels never pay cluster job latency.
+    # Arbitrary ids handled by a monotone densify (np.unique is sorted,
+    # so every min-id tie-break and the min-original-id canonicalization
+    # survive the mapping).
     ne = edges.count()
-    if ne <= min(cfg.local_phase_max_edges, LEIDEN_DRIVER_MAX_EDGES):
+    if _fits_driver(ne, cfg):
         from vite_spark.kernels.csr_pr import _collect, _emit_local
 
         s0, d0, w0 = _collect(edges, ("src", "dst", "weight"))
@@ -488,8 +481,12 @@ def _jacobi_numpy(src, dst, w, comm0, k, parent=None):
     """Unified NumPy sweep mirror: ``k`` Jacobi sweeps from ``comm0``
     (k=None = monotone-Q converged sweeps, capped at
     MAX_CONVERGE_SWEEPS); with ``parent`` the candidate set is
-    restricted within parents (the refinement constraint). Shared by
-    the leiden_levels mirror."""
+    restricted within parents (the refinement constraint). Each sweep is
+    the Louvain oracle's vectorized one (oracle/louvain_ref.py: the same
+    gain, (max gain, min comm) argmax and singleton guard, row-order
+    sums), so it equals the per-vertex ``leiden_refine_numpy`` bit for
+    bit (pytest-pinned) at O(ne log ne) per sweep. Labels must lie in
+    [0, nv). Shared by the leiden_levels mirror."""
     nv = len(comm0)
     vdeg = np.zeros(nv)
     np.add.at(vdeg, src, w)
@@ -505,32 +502,11 @@ def _jacobi_numpy(src, dst, w, comm0, k, parent=None):
     comm = np.asarray(comm0, dtype=np.int64).copy()
     q_prev = _modularity_numpy(src, dst, w, comm) if k is None else None
     for _ in range(k if k is not None else MAX_CONVERGE_SWEEPS):
-        cd = np.zeros(int(comm.max()) + 1 if len(comm) else 1)
+        cd = np.zeros(nv)
         np.add.at(cd, comm, vdeg)
-        cs = np.zeros(len(cd), np.int64)
-        np.add.at(cs, comm, 1)
-        new = comm.copy()
-        for v in range(nv):
-            rows = fs == v
-            if not rows.any():
-                continue
-            nbr_c = comm[fd[rows]]
-            evc: dict[int, float] = {}
-            for c, ww in zip(nbr_c, fw[rows]):
-                evc[int(c)] = evc.get(int(c), 0.0) + float(ww)
-            cc = int(comm[v])
-            e_cc = evc.get(cc, 0.0)
-            eix = e_cc - selfw[v]
-            ax = cd[cc] - vdeg[v]
-            best_gain, best_c = 0.0, None
-            for c in sorted(x for x in evc if x != cc):
-                gain = (2.0 * (evc[c] - eix)
-                        - 2.0 * vdeg[v] * (cd[c] - ax) * const)
-                if gain > 0.0 and (best_c is None or gain > best_gain):
-                    best_gain, best_c = gain, c
-            if best_c is not None:
-                if not (cs[best_c] == 1 and cs[cc] == 1 and best_c > cc):
-                    new[v] = best_c
+        new, _ = _phase_sweep_targets_cw(
+            fs, fd, fw, comm, vdeg, selfw, cd,
+            np.bincount(comm, minlength=nv), const, nv)
         if k is None:
             # converged protocol: monotone-Q sweeps. Jacobi label
             # dynamics can enter period-2 cycles (measured on karate:
@@ -579,12 +555,7 @@ def leiden_levels_numpy(src, dst, w, levels=2, move_sweeps=2,
         parent_of = np.full(len(uniq), -1, np.int64)
         parent_of[newid] = m_lab
         # next init: min new-id representative per parent community
-        rep: dict[int, int] = {}
-        for c in range(len(uniq)):
-            p = int(parent_of[c])
-            rep[p] = min(rep.get(p, c), c)
-        init = np.array([rep[int(parent_of[c])] for c in range(len(uniq))],
-                        np.int64)
+        init = _min_member(parent_of)
         # newid is PER-VERTEX (uniq[newid[v]] == refined[v]), so the
         # orig→coarse map composes by direct indexing
         orig2cur = newid[orig2cur]
@@ -598,14 +569,15 @@ def leiden_levels_numpy(src, dst, w, levels=2, move_sweeps=2,
         src = ns[starts]
         dst = nd[starts]
         w = np.add.reduceat(ws, starts)
-    fin = final_m[orig2cur]
     # canonical min-original-id label per final community
-    reps: dict[int, int] = {}
-    for v in range(nv0):
-        c = int(fin[v])
-        if c not in reps or v < reps[c]:
-            reps[c] = v
-    return np.array([reps[int(fin[v])] for v in range(nv0)], np.int64)
+    return _min_member(final_m[orig2cur])
+
+
+def _min_member(label):
+    """Per element i, the smallest j with label[j] == label[i]."""
+    first = np.full(int(label.max()) + 1, len(label), np.int64)
+    np.minimum.at(first, label, np.arange(len(label), dtype=np.int64))
+    return first[label]
 
 
 def leiden(

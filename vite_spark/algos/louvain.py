@@ -47,6 +47,17 @@ from vite_spark.kernels.ids import dense_ids
 from vite_spark.runtime.metrics import MetricsCollector
 from vite_spark.runtime import checkpoint as ckpt
 
+# Edge rows per partition of a distributed Louvain level (only caps the
+# session's count). The sweep is the heaviest per-edge packed kernel
+# (radix grouping + segment argmax ≈ 1M edge-rows/s/task on early
+# sweeps, vs >10M/s for the PR/CC gathers), hence the smaller target than
+# PACK_EDGES_PER_PART. 300k measured best on the 2.39M-edge bench graph
+# (interleaved medians 6.42 s vs 7.76 s at 128k vs 6.98 s at 600k
+# whole-operator; sf0.01 indifferent): per-task sweep compute then
+# roughly matches the ~7 ms/task dispatch + ~190 ms/job floor instead of
+# sitting under it.
+PACK_ROWS_PER_PART = 300_000
+
 
 def _maybe_broadcast(df: DataFrame, nrows: int, cfg: EngineConfig) -> DataFrame:
     return F.broadcast(df) if nrows <= cfg.broadcast_max_rows else df
@@ -466,7 +477,11 @@ def _csr_phase(
       partition's universe + owned slice only (Vite's localCinfo /
       remoteCinfo model, louvain.cpp:2583-2954) with self-describing move
       records — no dense-id ceiling; this is the path a 10⁹-vertex graph
-      takes.
+      takes. Its pack comes from the one sharded builder,
+      ``kernels/csr_pr._prepare_pack`` (range ownership + routes; level 0
+      caches it as ``vite_pack`` under ``cfg.pack_cache_dir``, shared
+      with the PageRank family; coarse levels build a temporary pack),
+      at ``PACK_ROWS_PER_PART`` rows per partition.
 
     Checkpointing (cfg.checkpoint_dir): the mirror kernel's sweep tasks
     write their owned slices and the driver commits iteration j after job
@@ -485,12 +500,12 @@ def _csr_phase(
       (max_id+1)² < 2^63; the sharded path's tracked-index key is
       partition-local (srcl·ntrk + idx, ntrk ≤ |U_p|), so only the
       memory-bounded per-partition sizes constrain it — any global id
-      width fits
+      width fits (checked on the sharded pack's ``info``)
+    - sharded: a vertex-closed input (routing) and integer weights,
+      unless ``cfg.csr_force_sharded``
     """
     import shutil
     import tempfile
-
-    import numpy as np
 
     from vite_spark.kernels.csr import (
         csr_labels_colored,
@@ -500,14 +515,12 @@ def _csr_phase(
         pack_colors,
         pack_csr_partitions,
     )
-    from vite_spark.kernels.csr_pr import _purge
+    from vite_spark.kernels.csr_pr import _prepare_pack
     from vite_spark.kernels.csr_sharded import (
-        build_routes,
         csr_advance_sharded,
         csr_labels_sharded,
         csr_superstep_sharded,
         pack_colors_sharded,
-        pack_csr_partitions_sharded,
     )
 
     gate = {} if gate is None else gate
@@ -529,21 +542,6 @@ def _csr_phase(
             q=float(lower), iters=0, nv=0,
         )
     nv_dense = int(max(row["ms"], row["md"])) + 1
-    if cfg.shuffle_partitions is None:
-        from vite_spark.config import adaptive_pack_nparts
-
-        # the Louvain sweep is the heaviest per-edge packed kernel
-        # (radix grouping + segment argmax ≈ 1M edge-rows/s/task on
-        # early sweeps, vs >10M/s for the PR/CC gathers), so its
-        # per-partition target is correspondingly smaller — capping
-        # only binds on graphs too small to fill the session's tasks.
-        # 300k/partition measured best on the 2.39M-edge bench graph
-        # (interleaved medians 6.42 s vs 7.76 s at 128k vs 6.98 s at
-        # 600k whole-operator; sf0.01 indifferent): per-task sweep
-        # compute then roughly matches the ~7 ms/task dispatch +
-        # ~190 ms/job floor instead of sitting under it
-        nparts = adaptive_pack_nparts(nparts, int(row["ne"]),
-                                      target=300_000)
     sharded = cfg.csr_force_sharded or nv_dense > cfg.csr_mirror_max_ids
     if not sharded and nv_dense * nv_dense >= 2**63:
         sharded = True   # mirror's conservative key bound; sharded re-checks
@@ -556,60 +554,32 @@ def _csr_phase(
         gate["reason"] = "checkpoint"
         return None
 
-    import json
-    import os
+    if sharded:
+        # the one sharded-pack builder (range ownership, routes, the
+        # level-0 vite_pack cache shared with the PageRank family)
+        prep = _prepare_pack(spark, edges, cfg, nparts, int(row["ne"]),
+                             cache="vite_pack" if level == 0 else None,
+                             target=PACK_ROWS_PER_PART)
+        if prep is None:
+            # some dst is never a src (input not vertex-closed /
+            # symmetrized) → shuffle-join path, same semantics
+            return None
+        pack_dir, nparts, info, routing, cleanup = prep
+    else:
+        if cfg.shuffle_partitions is None:
+            from vite_spark.config import adaptive_pack_nparts
 
-    routing = None
-    info = None
-    pack_dir = None
-    cleanup = True
-    if sharded and cfg.pack_cache_dir and level == 0:
-        # persistent pack reuse (the fileConvert-once analog): statics +
-        # routes come off the cache; per-run transients are purged
-        pack_dir = os.path.join(cfg.pack_cache_dir, "vite_pack")
-        cleanup = False
-        mf = os.path.join(pack_dir, "manifest.json")
-        if os.path.exists(mf):
-            with open(mf) as fh:
-                man = json.load(fh)
-            info = man["info"]
-            nparts = man["nparts"]
-            routing = (
-                {int(k): v for k, v in man["owners_of"].items()},
-                {int(k): v for k, v in man["rdrs_of"].items()},
-            )
-            _purge(pack_dir, ("mvu_", "mvd_", "flw_", "cur_", "ost_", "et_",
-                              "tm_", "mvc_", "colw_", "colr_", "col_", "prc_",
-                              "rnk_", "lown_"))
-    if info is None:
-        if sharded:
-            # RANGE partitioning for the sharded kernel: Vite's 1-D block
-            # ownership (distgraph.cpp:165-169) with row-sampled bounds —
-            # the edge-balanced -b variant (balanceEdges,
-            # distgraph.cpp:72-116). Ranges keep neighborhood locality, so
-            # per-partition universes (ghost sets) stay near O(nv/p)
-            # instead of hashing every neighborhood across all partitions,
-            # and owner(id) is a tiny searchsorted (getOwner,
-            # distgraph.hpp:260-271).
-            edges = edges.repartitionByRange(nparts, "src")
-            # RangePartitioner caps at the distinct-sample count — tiny
-            # key domains yield fewer partitions than requested; every
-            # downstream pid loop must see the REAL count
-            nparts = edges.rdd.getNumPartitions()
-        else:
-            edges = edges.repartition(nparts, "src")
-        if pack_dir is None:
-            from vite_spark.config import resolve_scratch
+            nparts = adaptive_pack_nparts(nparts, int(row["ne"]),
+                                          target=PACK_ROWS_PER_PART)
+        from vite_spark.config import resolve_scratch
 
-            pack_dir = tempfile.mkdtemp(
-                prefix="vite_csr_",
-                dir=resolve_scratch(cfg.scratch_dir, ne=int(row["ne"])))
-        else:
-            os.makedirs(pack_dir, exist_ok=True)
+        edges = edges.repartition(nparts, "src")
+        pack_dir = tempfile.mkdtemp(
+            prefix="vite_csr_",
+            dir=resolve_scratch(cfg.scratch_dir, ne=int(row["ne"])))
+        cleanup = True
     try:
         if sharded:
-            if info is None:
-                info = pack_csr_partitions_sharded(edges, pack_dir, nparts)
             if info["max_nown"] * (info["max_nux"] + 1) >= 2**63:
                 # tracked-index grouping key (srcl·ntrk + idx) is
                 # PARTITION-local: ntrk ≤ nux, so this bound depends only
@@ -623,20 +593,6 @@ def _csr_phase(
                 # the mirror/oracle — auto-route to the join path (r3
                 # ADVICE #1); csr_force_sharded opts in deliberately
                 return None
-            if routing is None:
-                routing = build_routes(spark, pack_dir, nparts)
-                if routing is None:
-                    # some dst is never a src (input not vertex-closed /
-                    # symmetrized) → shuffle-join path, same semantics
-                    return None
-                if not cleanup:   # cached pack: persist the manifest
-                    tmp = os.path.join(pack_dir, f".mf.{os.getpid()}")
-                    with open(tmp, "w") as fh:
-                        json.dump({
-                            "info": info, "nparts": nparts,
-                            "owners_of": routing[0], "rdrs_of": routing[1],
-                        }, fh)
-                    os.replace(tmp, os.path.join(pack_dir, "manifest.json"))
         else:
             info = pack_csr_partitions(edges, pack_dir, nparts)
         ne, nv, two_m = info["ne"], info["nv"], info["two_m"]

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 # Reference constants (/root/reference/utils.hpp:67-73, louvain.hpp:68-74)
@@ -194,11 +194,6 @@ class EngineConfig:
     csr_mirror_max_ids: int = 5_000_000
     # Force the sharded kernel at any size (parity tests / benchmarks).
     csr_force_sharded: bool = False
-    # Retired v1 knob (kept so existing configs construct): the v2
-    # sharded kernel keeps no snapshot/replay chain — per-partition state
-    # is saved fresh each superstep and deltas are reader-routed, so
-    # there is nothing to snapshot on an interval.
-    csr_snapshot_every: int = 1
     # Persistent pack cache for the SHARDED kernel (the fileConvert-once
     # analog of the reference, convert.cpp:102-281: convert an immutable
     # graph once, run many analyses against the binary). When set, the
@@ -217,10 +212,8 @@ class EngineConfig:
     # at 24M vertices from pack+delta writeback alone. Caller's choice
     # because tmpfs capacity (typically RAM/2) must fit the pack.
     scratch_dir: str | None = None
-    # The one Louvain gate (every level; Leiden's driver tier stays
-    # within it and under its own 100k top, algos/leiden
-    # LEIDEN_DRIVER_MAX_EDGES): from the first level with at most this
-    # many edge rows, the
+    # The one Louvain gate (every level; also leiden_levels' driver
+    # tier): from the first level with at most this many edge rows, the
     # rest of a louvain() run stays in the driver on the CSR NumPy sweep
     # (one collect, NumPy levels, one emit) instead of distributed
     # supersteps — as Vite's coarse phases collapse onto few ranks. Set
@@ -242,6 +235,17 @@ class EngineConfig:
     # still wins every input, not PACK_EDGES_PER_PART. Peak RSS of one
     # call at the top (1.2M rows, fresh process): Python 333 MB, JVM
     # VmHWM 724 MB; packed level 0: 281 MB, 1,425 MB (workers excluded).
+    #
+    # leiden_levels (2 levels, 2 + 2 sweeps; same VM, whole call plus a
+    # labels collect, warm, 3 interleaved reps; the vectorized NumPy
+    # mirror vs the join-path sweeps; labels equal):
+    #
+    #   rows       input                         driver s        join s
+    #   231,458    lineitem sf0.01               0.51/0.50/0.46  13.28/10.14/9.49
+    #   972,170    RGG 110k vertices, weight 1   2.10/2.09/2.01  27.48/24.07/21.45
+    #
+    # (that RGG: the coordinates and radius of rgg_edges_spark at 16
+    # strips, pairs counted exactly.)
     local_phase_max_edges: int = 1_200_000
     # Borůvka MSF adaptive contraction tier (algos/msf.py): when a
     # round's picked pseudo-forest (one edge per active component) has
@@ -258,5 +262,3 @@ class EngineConfig:
     # beyond that (a 10⁹-vertex round 1) the distributed tier both
     # fits memory and finally has enough per-round work to scale.
     msf_local_contract_max_rows: int = 4_000_000
-
-    extra: dict = field(default_factory=dict)

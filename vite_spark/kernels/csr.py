@@ -244,7 +244,8 @@ def sweep_partition_np(
     grouping key is src_local·nv + curr[dst]; the adaptive radix/timsort
     order and all big temporaries come from the worker arena — steady-state
     the sweep allocates only the (much smaller) grouped arrays. Generic
-    path (converter/broadcast variant): one int64 stable argsort of the
+    path (no pack; the packed path's reference in
+    tests/test_kernel_overflow.py): one int64 stable argsort of the
     global key, identical semantics."""
     n = len(dst)
     c_dst = _buf("c_dst", n, np.int64)
@@ -272,45 +273,6 @@ def sweep_partition_np(
     return _decide_grouped(
         g_comm, e_vc, ids, new_seg,
         curr, vdeg, self_w, comm_deg, comm_size, const,
-    )
-
-
-def csr_superstep(
-    edges: DataFrame,
-    state_bcast,            # pyspark Broadcast of (curr, vdeg, self_w, cd, cs)
-    const: float,
-) -> DataFrame:
-    """decisions(id, cc, new_comm, e_cc) via one Arrow pass over edges.
-
-    ``edges`` must be partitioned so each src's adjacency is wholly inside
-    one partition (repartition(N, "src") gives exactly that).
-
-    One-shot variant (full state broadcast, edges streamed): remains as the
-    no-local-disk fallback and for single-sweep uses; iterative phases use
-    the packed + delta-replay machinery below."""
-
-    def run(pdf_iter):
-        import pandas as pd
-
-        curr, vdeg, self_w, cd, cs = state_bcast.value
-        # mapInPandas yields Arrow batches; a vertex's adjacency may span
-        # batches within the partition — pack the whole partition first
-        parts = [p for p in pdf_iter if len(p)]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        ids, cc, new_comm, e_cc = sweep_partition_np(
-            pdf["src"].to_numpy(np.int64),
-            pdf["dst"].to_numpy(np.int64),
-            pdf["weight"].to_numpy(np.float64),
-            curr, vdeg, self_w, cd, cs, const,
-        )
-        yield pd.DataFrame(
-            {"id": ids, "cc": cc, "new_comm": new_comm, "e_cc": e_cc}
-        )
-
-    return edges.mapInPandas(
-        run, schema="id long, cc long, new_comm long, e_cc double"
     )
 
 

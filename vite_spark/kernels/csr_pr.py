@@ -1,18 +1,23 @@
 """The packed kernels' one runner and owner-authored sweep, plus
 packed-CSR PageRank (north-rule first-class op).
 
-Every route-pack kernel (PageRank, HITS, CC, LPA, BFS) iterates over the
-SAME sharded CSR pack the Louvain kernel uses (kernels/csr_sharded.py:
-1-D range ownership, per-partition sorted universe ux, pack-time
+Every route-pack kernel (PageRank, HITS, CC, LPA, BFS, k-core, WL)
+iterates over a sharded CSR pack (kernels/csr_sharded.py: 1-D range
+ownership, per-partition sorted universe ux, pack-time
 req_{owner}_{reader} interest sets) through one runner, ``_run_packed``:
 one input pin, one gate, pack build or reuse, the local-master check,
 cleanup, and one ``kind="tier"`` metrics row naming the tier that ran
-and why. The runner also serves the kernels that build their own pack
-(the ``prepare`` argument): both triangle kernels (kernels/csr_tri*.py:
-oriented rank-relabeled pack, single-task tier on open inputs too) and
-k-core and WL (kernels/csr_core.py's simplified-graph pack, sharded
-tier only). Vite's DistGraph likewise runs one code path at any rank
-count: one rank simply owns [0, nv].
+and why. ``_prepare_pack`` is the one builder of that pack, for these
+kernels and for Louvain's sharded levels (algos/louvain._csr_phase):
+range partitioning, the temporary dir or the named pack cache
+(``vite_pack`` for the canonical table, ``core_pack`` for k-core's and
+WL's simplified graph) with its manifest and one purge list, and the
+routes. Only the triangle kernels build their own pack (the runner's
+``prepare`` argument; kernels/csr_tri*.py: oriented rank-relabeled
+pack, single-task tier on open inputs too). WL keeps its own round jobs
+(per-round class counts, a fixed round count; sharded tier only). Vite's
+DistGraph likewise runs one code path at any rank count: one rank simply
+owns [0, nv].
 
 Gate: a run whose pack would have one partition (``cfg.shuffle_partitions``,
 else the scale-adaptive count ``adaptive_pack_nparts``), with no
@@ -34,10 +39,10 @@ caller's join path (the runner returns None).
   helpers.
 - **Sharded job loop**: one job per iteration, in one of two shapes.
 
-**Owner-authored sweep** (CC, LPA, BFS — ``OwnerSweep``): the state of a
-vertex at t is a function of the states at t-1 of the vertex and its
-out-neighbours, and the vertex's owner authors it. Each kernel supplies
-only ``init`` and ``sweep``; task p of job t:
+**Owner-authored sweep** (CC, LPA, BFS, k-core — ``OwnerSweep``): the
+state of a vertex at t is a function of the states at t-1 of the vertex
+and its out-neighbours, and the vertex's owner authors it. Each kernel
+supplies only ``init`` and ``sweep``; task p of job t:
 
 1. **Gather** curr over U_p at t-1 by slicing each owner's
    ``{prefix}_{t-1}_{q}`` through the static req sets into the contiguous
@@ -54,7 +59,8 @@ only ``init`` and ``sweep``; task p of job t:
 
 The driver loop resumes from the newest valid checkpoint, stops at
 Σ changed == 0 or ``max_iter``, records one ``{algo}_superstep`` row per
-iteration and emits the last state (the identity at t = 0). The
+iteration (none for a kernel's ``lead`` sweeps, k-core's degree sweep)
+and emits the last state (``init`` at t = 0). The
 single-task tier runs the same ``init`` and ``sweep`` over the in-task
 CSR (ux == own), so its states and changed counts equal the sharded
 loop's. Reference analog: Vite's fillRemoteCommunities send shape
@@ -111,6 +117,7 @@ import tempfile
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import partial
 
 import numpy as np
 
@@ -127,68 +134,79 @@ from vite_spark.kernels.csr_sharded import (
     register_pack_cache,
 )
 
-# Per-run scratch the pack-cache purge must clear (statics like coefu_/
-# coefw_ are pack-derived and deliberately kept across runs). Includes
-# the packed-LPA label files and packed-CC component files: every
-# route-pack kernel shares _prepare_pack, so any kernel opening a cached
-# pack clears every sibling's run transients.
-PR_TRANSIENT_PREFIXES = ("prc_", "rnk_", "lown_", "cown_", "bfd_",
-                         "hac_", "aown_", "hown_")
+# Per-run files of every kernel that opens a cached pack: the PageRank
+# family's spans and states (prc_/rnk_, HITS, CC, LPA, BFS), k-core's and
+# WL's states, Louvain's moves, flows, owner states and colors. Whichever
+# kernel opens a cached pack purges them all, so a sibling's hard-killed
+# run (its cleanup skipped) leaves nothing behind. Pack-derived statics
+# (coefu_/coefw_, req_, ...) are deliberately kept.
+TRANSIENT_PREFIXES = (
+    "prc_", "rnk_", "lown_", "cown_", "bfd_", "hac_", "aown_", "hown_",
+    "hco_", "wlo_", "mvu_", "mvd_", "flw_", "cur_", "ost_", "et_", "tm_",
+    "mvc_", "colw_", "colr_", "col_")
 
 
-def _prepare_pack(spark, edges, cfg, nparts, ne):
-    """(pack_dir, nparts, info, routing, cleanup) — the sharded pack +
-    routes, reusing the persistent pack cache exactly like the Louvain
-    phase (same manifest.json, so a cached pack serves both algorithms).
-    Returns None when routing finds the input not vertex-closed; a fresh
-    temporary pack is removed then, and when the build fails. The caller
-    (_run_packed) pins ``edges`` across its count, the range-boundary
-    sample and the pack job."""
-    routing = None
-    info = None
-    pack_dir = None
-    cleanup = True
-    if cfg.pack_cache_dir:
-        pack_dir = os.path.join(cfg.pack_cache_dir, "vite_pack")
-        cleanup = False
+def _prepare_pack(spark, edges, cfg, nparts, ne, cache="vite_pack",
+                  target=None):
+    """(pack_dir, nparts, info, routing, cleanup): the sharded CSR pack
+    and its routes, the one builder of every sharded kernel. Returns None
+    when routing finds the input not vertex-closed; a temporary pack is
+    removed then, and when the build fails. The caller pins ``edges``
+    across its count, the range-boundary sample and the pack job.
+
+    ``nparts`` is the requested partition count. Without
+    ``cfg.shuffle_partitions`` it is capped by ``adaptive_pack_nparts``
+    over the row count ``ne``, at ``target`` rows per partition when
+    given (Louvain's heavier sweep). With ``cfg.pack_cache_dir`` the
+    pack lives in ``<pack_cache_dir>/<cache>`` and later runs reuse it
+    (the fileConvert-once analog): ``vite_pack`` holds the canonical
+    table (PageRank family, Louvain's level 0), ``core_pack`` the
+    simplified graph (k-core, WL); ``cache=None`` (Louvain's coarse
+    levels) always builds a temporary pack. A manifest built for another
+    requested count is wiped and rebuilt, and opening a cached pack
+    purges every ``TRANSIENT_PREFIXES`` file. Caller contract: one cache
+    dir holds one edge table."""
+    cleanup = not (cfg.pack_cache_dir and cache)
+    if not cleanup:
+        pack_dir = os.path.join(cfg.pack_cache_dir, cache)
         mf = os.path.join(pack_dir, "manifest.json")
         if os.path.exists(mf):
             with open(mf) as fh:
                 man = json.load(fh)
-            info = man["info"]
-            nparts = man["nparts"]
-            routing = (
-                {int(k): v for k, v in man["owners_of"].items()},
-                {int(k): v for k, v in man["rdrs_of"].items()},
-            )
-            _purge(pack_dir, PR_TRANSIENT_PREFIXES)
-    if info is None:
-        if ne is not None:
-            # scale-adaptive partition count (guide §2) over the
-            # runner's count: every downstream superstep job gets a task
-            # count matched to the input size, not the session constant
-            from vite_spark.config import adaptive_pack_nparts
+            if man.get("requested_nparts") == nparts:
+                _purge(pack_dir, TRANSIENT_PREFIXES)
+                return pack_dir, man["nparts"], man["info"], (
+                    {int(k): v for k, v in man["owners_of"].items()},
+                    {int(k): v for k, v in man["rdrs_of"].items()},
+                ), False
+            shutil.rmtree(pack_dir, ignore_errors=True)
+        os.makedirs(pack_dir, exist_ok=True)
+    requested = nparts
+    if cfg.shuffle_partitions is None and ne is not None:
+        # scale-adaptive partition count (guide §2): every superstep job
+        # gets a task count matched to the input size
+        from vite_spark.config import adaptive_pack_nparts
 
-            nparts = adaptive_pack_nparts(nparts, ne)
-        edges = edges.repartitionByRange(nparts, "src")
-        nparts = edges.rdd.getNumPartitions()
-        if pack_dir is None:
-            from vite_spark.config import resolve_scratch
+        nparts = adaptive_pack_nparts(nparts, ne, target)
+    # RANGE partitioning: Vite's 1-D block ownership (distgraph.cpp:
+    # 165-169) with row-sampled bounds, the edge-balanced -b variant.
+    # Ranges keep neighborhoods local, so universes (ghost sets) stay
+    # near O(nv/p), and owner(id) is a searchsorted over the bounds.
+    edges = edges.repartitionByRange(nparts, "src")
+    # RangePartitioner caps at the distinct-sample count: every pid loop
+    # must see the real count
+    nparts = edges.rdd.getNumPartitions()
+    if cleanup:
+        from vite_spark.config import resolve_scratch
 
-            pack_dir = tempfile.mkdtemp(
-                prefix="vite_csr_pr_",
-                dir=resolve_scratch(cfg.scratch_dir, ne=ne))
-        else:
-            os.makedirs(pack_dir, exist_ok=True)
-    fresh = routing is None
+        pack_dir = tempfile.mkdtemp(
+            prefix="vite_csr_", dir=resolve_scratch(cfg.scratch_dir, ne=ne))
     try:
-        if info is None:
-            info = pack_csr_partitions_sharded(edges, pack_dir, nparts)
-            if info["nv"] == 0:
-                # no partition wrote files: nothing to route
-                raise _Fallback("empty")
-        if fresh:
-            routing = build_routes(spark, pack_dir, nparts)
+        info = pack_csr_partitions_sharded(edges, pack_dir, nparts)
+        if info["nv"] == 0:
+            # no partition wrote files: nothing to route
+            raise _Fallback("empty")
+        routing = build_routes(spark, pack_dir, nparts)
     except BaseException:
         if cleanup:
             shutil.rmtree(pack_dir, ignore_errors=True)
@@ -197,11 +215,11 @@ def _prepare_pack(spark, edges, cfg, nparts, ne):
         if cleanup:
             shutil.rmtree(pack_dir, ignore_errors=True)
         return None
-    if fresh and not cleanup:
+    if not cleanup:
         tmp = os.path.join(pack_dir, f".mf.{os.getpid()}")
         with open(tmp, "w") as fh:
             json.dump({
-                "info": info, "nparts": nparts,
+                "info": info, "nparts": nparts, "requested_nparts": requested,
                 "owners_of": routing[0], "rdrs_of": routing[1],
             }, fh)
         os.replace(tmp, os.path.join(pack_dir, "manifest.json"))
@@ -239,7 +257,8 @@ def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None,
     ``single(edges)`` in the driver (``_driver_local``: no scratch
     files, so on any master). Every other run needs a local master and
     builds (or reopens the cached) pack through
-    ``prepare(spark, edges, cfg, nparts, ne)``: given the requested
+    ``prepare(spark, edges, cfg, nparts, ne)`` (``_prepare_pack``, or
+    the triangle kernels' own builder): given the requested
     partition count and the gate's count (None when
     ``cfg.shuffle_partitions`` fixes the layout), the builder picks the
     layout and returns ``(pack_dir, nparts, info, routing, cleanup)``,
@@ -432,7 +451,12 @@ class OwnerSweep:
     tiers (join path otherwise): integer-valued weights when
     ``integer_weights``, every ``seeds`` id a vertex. ``key`` joins
     (nv, ne) as the checkpoint's identity; ``tags`` ride every superstep
-    row."""
+    row. The first ``lead`` sweeps only initialise (k-core's degree
+    sweep): they record no superstep row and do not count toward
+    ``max_iter``, so row ``iter`` is the sweep number minus ``lead``.
+    ``force_iters`` runs every sweep, past a zero changed count. With
+    ``cfg.pack_cache_dir`` the sharded tier caches its pack under
+    ``cache``."""
     algo: str        # metrics kinds {algo}_superstep/_resume, checkpoints
     prefix: str      # state files {prefix}_{t}_{pid}.npy
     mode: str
@@ -445,6 +469,9 @@ class OwnerSweep:
     seeds: np.ndarray | None = None
     key: dict = field(default_factory=dict)
     tags: dict = field(default_factory=dict)
+    lead: int = 0
+    force_iters: bool = False
+    cache: str = "vite_pack"
 
     def frame(self, own, state=None):
         state = self.init(own) if state is None else state
@@ -531,6 +558,12 @@ def _owner_sweep(spark, edges, max_iter, cfg, metrics, op):
     ``op.out`` DataFrame, or None when the caller's join path must run."""
     kind = f"{op.algo}_superstep"
     tags = {"mode": op.mode, **op.tags}
+    sweeps = max_iter + op.lead
+
+    def record(t, changed, wall_s, ne):
+        if t > op.lead:
+            metrics.record(kind=kind, iter=t - op.lead, changed=changed,
+                           wall_s=wall_s, edges_processed=ne, **tags)
 
     def single(edges):
         def body(own, srcl, dstl, seg, w):
@@ -538,11 +571,11 @@ def _owner_sweep(spark, edges, max_iter, cfg, metrics, op):
                 return None
             own_pos = np.arange(len(own))
             curr, chg = op.init(own), []
-            for _t in range(max_iter):
+            for _t in range(sweeps):
                 new = op.sweep(curr, own_pos, srcl, dstl, seg, w)
                 chg.append(int((new != curr).sum()))
                 curr = new
-                if chg[-1] == 0:
+                if chg[-1] == 0 and not op.force_iters:
                     break
             return chg, op.frame(own, curr)
 
@@ -550,9 +583,7 @@ def _owner_sweep(spark, edges, max_iter, cfg, metrics, op):
         out, chg, wall, ne = _driver_local(spark, edges, cols, op.out,
                                            body)
         for t, c in enumerate(chg, 1):
-            metrics.record(kind=kind, iter=t, changed=int(c),
-                           wall_s=wall / len(chg), edges_processed=ne,
-                           **tags)
+            record(t, int(c), wall / len(chg), ne)
         return out
 
     def step(pack_dir, nparts, info, routing):
@@ -565,20 +596,20 @@ def _owner_sweep(spark, edges, max_iter, cfg, metrics, op):
                    "nparts": nparts, **op.key}
         t_final = 0
         ck = ic.latest_complete(ckroot, op.algo) if ckroot else None
-        if (ck is not None and max_iter > 0 and ic.validate(ck, info, nparts)
+        if (ck is not None and sweeps > 0 and ic.validate(ck, info, nparts)
                 and all(ck.get(k) == v for k, v in op.key.items())):
-            # a checkpoint beyond max_iter stands in for state max_iter,
+            # a checkpoint beyond the last sweep stands in for its state,
             # like PageRank's restore into rnk_{min(t, max_iter)}
-            k = min(int(ck["t"]), max_iter)
+            k = min(int(ck["t"]), sweeps)
             t0 = time.time()
             if ic.restore_job(spark, pack_dir, nparts,
                               ic.iter_dir(ckroot, op.algo, int(ck["t"])),
                               f"{op.prefix}_{k}"):
                 t_final = k
-                metrics.record(kind=f"{op.algo}_resume", iter=k,
+                metrics.record(kind=f"{op.algo}_resume", iter=k - op.lead,
                                wall_s=time.time() - t0, mode=op.mode)
 
-        for t in range(t_final + 1, max_iter + 1):
+        for t in range(t_final + 1, sweeps + 1):
             ck_dir = None
             if ckroot and t % max(cfg.checkpoint_every, 1) == 0:
                 ck_dir = ic.prepare_iter(ckroot, op.algo, t)
@@ -592,11 +623,9 @@ def _owner_sweep(spark, edges, max_iter, cfg, metrics, op):
             if ck_dir is not None:
                 ic.mark_complete(ckroot, op.algo, t,
                                  {"changed": changed, **scalars})
-            metrics.record(kind=kind, iter=t, changed=changed,
-                           wall_s=time.time() - t0,
-                           edges_processed=int(info["ne"]), **tags)
+            record(t, changed, time.time() - t0, int(info["ne"]))
             t_final = t
-            if changed == 0:
+            if changed == 0 and not op.force_iters:
                 break
         # t_final == 0: no state file; frame() falls back to init(own)
         return _emit_own(spark, pack_dir, nparts, op.out,
@@ -604,7 +633,8 @@ def _owner_sweep(spark, edges, max_iter, cfg, metrics, op):
                          rows=op.frame)
 
     return _run_packed(spark, edges, cfg, metrics, (op.prefix + "_",), step,
-                       single=single)
+                       single=single,
+                       prepare=partial(_prepare_pack, cache=op.cache))
 
 
 # Per-worker cache of the merge layout for partition p: the writers'
@@ -961,5 +991,5 @@ def csr_pagerank(spark, edges, damping, tol, max_iter, weighted, cfg,
                          sorted(rows, key=lambda r: r["pid"])))
         return out.select("id", (F.col("rank") / norm).alias("rank"))
 
-    return _run_packed(spark, edges, cfg, metrics, PR_TRANSIENT_PREFIXES,
+    return _run_packed(spark, edges, cfg, metrics, ("prc_", "rnk_"),
                        step, single=single)

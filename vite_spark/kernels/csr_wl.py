@@ -6,8 +6,9 @@ measured scaling row was the engine's worst (BENCH.md r4: 0.225
 noise-hit / ~0.5 clean): per-round job machinery fragments the work at
 probe scale exactly as it did for the join-path CC (0.432) before
 kernels/csr_cc.py. This kernel is the csr_cc shape for WL — per round
-ONE job over the sharded CSR pack of the SIMPLE graph (the same pack
-`kernels/csr_core.py` builds; the two kernels share the cache), task p:
+ONE job over the sharded CSR pack of the SIMPLE graph (the same
+``core_pack`` `kernels/csr_core.py` runs on; the two kernels share the
+cache), task p:
 
 1. **Gather** labels at t-1 over U_p through the pack-time req sets
    (identical exchange to csr_cc/csr_core: Σ_p |U_p| words per round,
@@ -23,10 +24,11 @@ ONE job over the sharded CSR pack of the SIMPLE graph (the same pack
 3. Save wlo_{t}_{p}; the sentinel row carries the partition's distinct
    new-label set only when the caller wants the refinement profile.
 
-Round 0 (degree labels) is the same segment-length init csr_core's
-_degree_job writes, kept int64 here (labels are uint32 images from
-round 1 on; the degree seed can exceed int32 only when a degree does,
-which the pack's own assert already excludes).
+Round 0 writes the degree labels (segment lengths), int64 like every
+later round (labels are uint32 images from round 1 on). WL keeps its own
+round jobs instead of an owner sweep: it reports per-round class counts
+and runs a fixed round count. Its pack is ``csr_pr._prepare_pack``'s
+``core_pack``, the simplified graph k-core also runs on.
 
 Scale shape: per-partition memory O(nv/p + |U_p|), scalars on the
 driver, fixed `rounds` jobs — the csr_cc 100×-survivability argument
@@ -39,13 +41,13 @@ from __future__ import annotations
 
 import os
 import time
+from functools import partial
 
 import numpy as np
 
 from vite_spark.algos.coloring import hash32_np
 from vite_spark.kernels.csr import _atomic_save, _pid_frame
-from vite_spark.kernels.csr_core import _prepare_core_pack
-from vite_spark.kernels.csr_pr import _emit_own, _run_packed
+from vite_spark.kernels.csr_pr import _emit_own, _prepare_pack, _run_packed
 from vite_spark.kernels.csr_sharded import (
     _load_bounds,
     _req_of,
@@ -54,7 +56,6 @@ from vite_spark.kernels.csr_sharded import (
 from vite_spark.runtime.metrics import MetricsCollector
 
 M32 = 1 << 32
-WL_TRANSIENT_PREFIXES = ("wlo_",)
 
 
 def _wl_init_job(spark, pack_dir, nparts, want_profile):
@@ -196,6 +197,5 @@ def csr_wl(spark, edges_simple, rounds, seed, stride, offset, cfg, metrics,
         return _emit_own(spark, pack_dir, nparts, "id long, lab long",
                          [("lab", f"wlo_{rounds}")]), profile
 
-    return _run_packed(spark, edges_simple, cfg, metrics,
-                       WL_TRANSIENT_PREFIXES, step,
-                       prepare=_prepare_core_pack)
+    return _run_packed(spark, edges_simple, cfg, metrics, ("wlo_",), step,
+                       prepare=partial(_prepare_pack, cache="core_pack"))

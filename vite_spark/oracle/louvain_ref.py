@@ -106,16 +106,24 @@ def _phase_sweep_targets_cw(
     """One Jacobi sweep: returns (target, per-vertex clusterWeight e_cc).
 
     Vectorized over the edge table; semantics per the module docstring.
+    Community ids must lie in [0, nv).
     """
+    if not len(src):
+        return curr.copy(), np.zeros(nv)
     c_dst = curr[dst]
 
-    # group (src, neighbor community) → e_vc
+    # group (src, neighbor community) → e_vc. The stable sort keeps each
+    # group's rows in table order and bincount sums them sequentially
+    # (reduceat would sum pairwise): the reference's counter accumulates
+    # over the adjacency in order, and a per-vertex loop gets the same
+    # bits.
     key = src.astype(np.int64) * np.int64(nv) + c_dst
     order = np.argsort(key, kind="stable")
     k_sorted = key[order]
     w_sorted = w[order]
-    grp_start = np.flatnonzero(np.r_[True, k_sorted[1:] != k_sorted[:-1]])
-    e_vc = np.add.reduceat(w_sorted, grp_start)
+    first = np.r_[True, k_sorted[1:] != k_sorted[:-1]]
+    grp_start = np.flatnonzero(first)
+    e_vc = np.bincount(np.cumsum(first) - 1, weights=w_sorted)
     g_src = (k_sorted[grp_start] // nv).astype(np.int64)
     g_comm = (k_sorted[grp_start] % nv).astype(np.int64)
 
