@@ -153,6 +153,35 @@ def test_dense_ids_driver_tier_matches_distributed(spark):
         assert got[0] == got[None], schema
 
 
+def test_dense_ids_gate_boundary(spark, monkeypatch):
+    """The driver tier's gate (one collect capped at ``local_max_rows``
+    plus one row for a null) moves exactly at the distinct non-null
+    count n: the driver ranks at n, the distributed tier at n - 1, with
+    the same ids, with and without a null value."""
+    from vite_spark.kernels import ids
+
+    calls = []
+    real = ids._rank_in_driver
+
+    def spy(*a):
+        calls.append(1)
+        return real(*a)
+
+    monkeypatch.setattr(ids, "_rank_in_driver", spy)
+    df = spark.createDataFrame(
+        [(v,) for v in (5, -1, 3, None, 5, 9, 0, 2, None)], "v long")
+    n = 6
+    for data in (df, df.filter("v is not null")):
+        got = {}
+        for lim in (n, n - 1):
+            before = len(calls)
+            got[lim] = sorted((r["id"], r["v"]) for r in ids.dense_ids(
+                data, "v", "id", local_max_rows=lim).collect())
+            assert len(calls) - before == (lim == n), lim
+        assert got[n] == got[n - 1]
+        assert [i for i, _ in got[n]] == list(range(len(got[n])))
+
+
 def test_graphframe(spark):
     e = edges_from_pairs(spark, [(0, 1), (1, 2)])
     gf = GraphFrame.from_edges(e)

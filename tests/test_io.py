@@ -104,6 +104,47 @@ def test_rgg_spark_matches_numpy(spark):
     assert rows == ref
 
 
+@pytest.mark.parametrize("chunk", [1, 97, 1 << 22])
+def test_strip_pairs_matches_dense_matrix(chunk):
+    """The sort-by-y sweep finds exactly the pairs (and bit-equal
+    distances) of the dense distance matrix, whatever its chunk size."""
+    from vite_spark.io.generators import strip_pairs
+
+    rng = np.random.default_rng(7)
+    X, Y = rng.random(600), rng.random(600)
+    Y[:20] = Y[20:40] + 0.05          # pairs exactly on the y window
+    rn = 0.05
+    i, j, w = strip_pairs(X, Y, rn, chunk)
+    dx = X[:, None] - X[None, :]
+    dy = Y[:, None] - Y[None, :]
+    ed = np.sqrt(dx * dx + dy * dy)
+    iu, ju = np.where(np.triu(ed <= rn, k=1))
+    got = sorted((min(a, b), max(a, b), x)
+                 for a, b, x in zip(i.tolist(), j.tolist(), w.tolist()))
+    assert got == sorted(zip(iu.tolist(), ju.tolist(), ed[iu, ju].tolist()))
+    assert strip_pairs(X[:0], Y[:0], rn, chunk)[0].size == 0
+
+
+def test_rgg_spark_strips_span_arrow_batches(spark):
+    """Each strip's pairs come from one group however many Arrow batches
+    its rows arrive in: at 64 rows per batch a 500-row strip spans eight,
+    and the edge set still equals the brute-force NumPy one (weights
+    bit-equal)."""
+    from vite_spark.io.generators import rgg_edges_spark
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        rows = sorted((r["src"], r["dst"], r["weight"])
+                      for r in rgg_edges_spark(spark, 2000, 4).collect())
+    finally:
+        spark.conf.set(key, old)
+    s, d, w, _ = rgg_edges_np(2000, 4)
+    assert rows == sorted(zip(s.tolist(), d.tolist(), w.tolist()))
+    assert len(rows) > 10000
+
+
 def test_converters(spark, tmp_path):
     from vite_spark.io.edgelist import (
         load_dimacs,

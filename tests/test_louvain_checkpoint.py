@@ -322,6 +322,32 @@ def test_run_switches_to_driver_mid_run(spark, tmp_path, ck):
             == _labels(mixed.labels, nv).tolist()
 
 
+@pytest.mark.parametrize("ck", [False, True], ids=["plain", "ckpt"])
+def test_gate_boundary(spark, tmp_path, ck):
+    """The entry gate (one capped collect) moves exactly at
+    ``local_phase_max_edges``: level 0 of ne rows runs in the driver at
+    ne and packed at ne - 1 (the coarse levels in the driver), with the
+    same labels, Q and iterations."""
+    s, d, w, nv = fx.grid_graph()
+    edges = fx.to_spark_edges(spark, (s, d, w, nv))
+    ne = edges.count()
+    runs = {}
+    for gate in (ne, ne - 1):
+        extra = dict(checkpoint_dir=str(tmp_path / str(gate))) if ck else {}
+        m = MetricsCollector()
+        res = louvain(spark, edges, EngineConfig(local_phase_max_edges=gate,
+                                                 **extra), metrics=m)
+        runs[gate] = res, [(r["tier"], r["ne"]) for r in m.rows
+                           if r.get("kind") == "tier"]
+    (at, rows_at), (below, rows_below) = runs[ne], runs[ne - 1]
+    assert rows_at[0] == ("local", ne)
+    assert rows_below[0] == ("packed", ne)
+    assert {t for t, _ in rows_at + rows_below[1:]} == {"local"}
+    assert np.array_equal(_labels(at.labels, nv), _labels(below.labels, nv))
+    assert at.q_per_phase == pytest.approx(below.q_per_phase, abs=1e-12)
+    assert at.iters_per_phase == below.iters_per_phase
+
+
 def test_driver_checkpoint_resumes(spark, tmp_path, monkeypatch):
     """A driver run killed after superstep 3 of level 1 resumes through
     louvain(resume=True) from the files the driver wrote (level edges,

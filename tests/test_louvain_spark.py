@@ -313,13 +313,10 @@ def test_sharded_pack_builder_and_cache(spark, tmp_path):
     assert tiers[0] == ("join", "kernel")
 
 
-def test_key_overflow_guard_routes_to_join(spark):
-    """When max_nown * nv_dense would overflow the int64 grouping key,
-    _csr_phase must decline (return None) and the join superstep must
-    produce the same clustering — checked by shift-invariance: karate at
-    ids + 2^61 (nparts=1, so 34 * 2^61 >= 2^63 fires the guard) must
-    yield the base run's labels shifted (r3 VERDICT next#3: pin the
-    guard, not just the known overflow site)."""
+def test_sharded_phase_is_shift_invariant(spark):
+    """The sharded kernel's grouping keys are partition-local, so global
+    id width does not matter: karate at ids + 2^61 (one partition) yields
+    the base run's iterations, Q and labels, shifted."""
     s, d, w, nv = FIXTURES["karate"]()
     cfg = EngineConfig(local_phase_max_edges=0, use_csr_kernel=True,
                        csr_force_sharded=True, shuffle_partitions=1)
@@ -338,3 +335,39 @@ def test_key_overflow_guard_routes_to_join(spark):
     b = base.assignment.orderBy("id").toPandas()
     assert np.array_equal(a["id"].to_numpy() - shift, b["id"].to_numpy())
     assert np.array_equal(a["comm"].to_numpy() - shift, b["comm"].to_numpy())
+
+
+def test_key_overflow_guard_routes_to_join(spark, monkeypatch):
+    """A sharded pack whose tracked-index key (``max_nown`` ·
+    (``max_nux`` + 1)) would reach 2^63 declines in ``_csr_phase``: the
+    phase records the ``join`` tier and the join superstep gives the
+    oracle's labels. The guard is unreachable at fixture sizes, so the
+    pack builder's ``info`` is inflated."""
+    from vite_spark.kernels import csr_pr
+    from vite_spark.runtime.metrics import MetricsCollector
+
+    real = csr_pr._prepare_pack
+    built = []
+
+    def huge(*a, **k):
+        prep = real(*a, **k)
+        if prep is not None:
+            info = dict(prep[2], max_nown=2**62)
+            prep = (prep[0], prep[1], info, *prep[3:])
+            built.append(prep[0])
+        return prep
+
+    monkeypatch.setattr(csr_pr, "_prepare_pack", huge)
+    s, d, w, nv = FIXTURES["karate"]()
+    o_labels, o_q, o_iters = louvain_oracle_phase(s, d, w, nv)
+    m = MetricsCollector()
+    pres = louvain_phase(
+        spark, fx.to_spark_edges(spark, (s, d, w, nv)), threshold=1e-6,
+        cfg=EngineConfig(local_phase_max_edges=0, csr_force_sharded=True,
+                         shuffle_partitions=4), metrics=m)
+    assert built, "the sharded pack builder did not run"
+    assert [(r["tier"], r["reason"]) for r in m.rows
+            if r.get("kind") == "tier"] == [("join", "kernel")]
+    assert pres.iters == o_iters
+    assert pres.q == pytest.approx(o_q, abs=1e-6)
+    assert np.array_equal(_labels_from_df(pres.assignment, nv), o_labels)

@@ -58,7 +58,7 @@ def single_calls(monkeypatch):
     real = csr_pr._driver_local
 
     def spy(*a, **k):
-        calls.append(a[3])
+        calls.append(a[2])
         return real(*a, **k)
 
     monkeypatch.setattr(csr_pr, "_driver_local", spy)
@@ -204,6 +204,97 @@ def test_tier_rows(spark, edges, monkeypatch):
     assert _tiers(run(TIERS["sharded"])) == [("join", "non_local")]
     # the tier row is no superstep: perfbench's counters skip it
     assert not _is_superstep("tier")
+
+
+def test_gate_boundary(spark, edges, monkeypatch):
+    """The runner's gate (one capped collect) moves exactly at
+    ``PACK_EDGES_PER_PART``: an input of ne rows takes the single tier at
+    ne and the sharded loop at ne - 1, with the same outputs and the same
+    gate inputs in the tier row. A session with one shuffle partition
+    takes the single tier whatever the target."""
+    from vite_spark import config
+    from vite_spark.algos.core import coreness
+    from vite_spark.algos.triangles import triangle_count, \
+        triangles_per_vertex
+
+    kernels = {
+        "pagerank": lambda cfg, m: _ranks(pagerank(
+            spark, edges, tol=0.0, max_iter=15, weighted=True, cfg=cfg,
+            metrics=m), "rank"),
+        "cc": lambda cfg, m: _labels_and_changed(spark, edges, cfg, m, "cc"),
+        "lpa": lambda cfg, m: _labels_and_changed(spark, edges, cfg, m,
+                                                  "lpa"),
+        "kcore": lambda cfg, m: sorted(map(tuple, coreness(
+            spark, edges, cfg=cfg, metrics=m).collect())),
+        "triangles": lambda cfg, m: triangle_count(spark, edges, cfg=cfg,
+                                                   metrics=m),
+        "triangles_v": lambda cfg, m: sorted(map(tuple, triangles_per_vertex(
+            spark, edges, cfg=cfg, metrics=m).collect())),
+    }
+
+    def run(fn):
+        m = MetricsCollector()
+        out = fn(EngineConfig(), m)
+        return out, [(r["tier"], r["ne"], r["nparts"]) for r in m.rows
+                     if r.get("kind") == "tier"]
+
+    for name, fn in kernels.items():
+        (_, [(_, ne, _)]) = run(fn)
+        got = {}
+        for target in (ne, ne - 1):
+            monkeypatch.setattr(config, "PACK_EDGES_PER_PART", target)
+            got[target] = run(fn)
+        assert got[ne][1] == [("single", ne, 1)], name
+        # 8 session partitions capped at ceil(ne / (ne - 1)) rows
+        assert got[ne - 1][1] == [("sharded", ne, 2)], name
+        a, b = got[ne][0], got[ne - 1][0]
+        if name == "pagerank":
+            assert np.array_equal(a[:, 0], b[:, 0])
+            assert np.allclose(a[:, 1], b[:, 1], rtol=1e-12, atol=1e-18)
+        else:
+            assert a == b, name
+        monkeypatch.setattr(config, "PACK_EDGES_PER_PART", 1)
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        try:
+            assert run(fn)[1] == [("single", ne, 1)], name
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _group_jobs(spark, gid):
+    """Ids of the jobs run under job group ``gid``, once the listener has
+    seen every event posted so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_driver_tier_is_one_job(spark):
+    """q_pagerank's runner on the materialized sf0.001 derivation: the
+    gate's capped collect is the tier's only Spark job (no count, no
+    pin), and nothing stays persisted."""
+    from vite_spark.derive import lineitem_part_edges
+    from vite_spark.queries import PR_ITERS
+
+    sc = spark.sparkContext
+    e = lineitem_part_edges(spark, "/root/testdata/sf0.001").persist()
+    try:
+        e.count()
+        before = _persistent(spark)
+        m = MetricsCollector()
+        sc.setJobGroup("driver-tier-jobs", "driver tier")
+        try:
+            ranks = pagerank(spark, e, damping=0.85, tol=0.0,
+                             max_iter=PR_ITERS, metrics=m)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(_group_jobs(spark, "driver-tier-jobs")) == 1
+        assert _tiers(m) == [("single", None)]
+        assert _persistent(spark) - before == set()
+        assert ranks.count() > 0
+    finally:
+        e.unpersist()
 
 
 def _persistent(spark):

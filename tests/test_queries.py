@@ -106,14 +106,18 @@ def test_cc_rows_match_twophase(spark):
     assert registry()["cc_gini"][0](spark, SF_DIR).collect() == want
 
 
-def test_graph_queries_leave_no_state(spark):
-    """PageRank, CC sizes, the triangle total and LPA each leave no
-    persisted RDD and no engine scratch entry behind: their single-task
-    tier runs in the driver."""
+def test_graph_queries_leave_no_state(spark, tmp_path):
+    """PageRank, CC sizes, the triangle total and LPA, and the repos
+    table's derivation (``repos_to_edges``: sha256 gate, dense ids) with a
+    checkpointed ``louvain``, each leave no persisted RDD and no engine
+    scratch entry behind: their driver tiers pin nothing."""
     import os
     import tempfile
 
-    from vite_spark.config import resolve_scratch
+    from vite_spark import fixtures as fx
+    from vite_spark.algos.louvain import louvain
+    from vite_spark.config import EngineConfig, resolve_scratch
+    from vite_spark.derive import repos_to_edges
 
     jsc = spark.sparkContext._jsc
     scratch = resolve_scratch(None) or tempfile.gettempdir()
@@ -128,3 +132,15 @@ def test_graph_queries_leave_no_state(spark):
         # test's RDDs while the call runs
         assert set(jsc.getPersistentRDDs().keys()) - rdds == set(), name
         assert packs() - before == set(), name
+
+    repos = spark.createDataFrame(
+        fx.repos_table(n_repos=60, rows_per_repo=6),
+        "repo string, path string, commit string, lang string, "
+        "content string")
+    rdds, before = set(jsc.getPersistentRDDs().keys()), packs()
+    edges, repo_ids = repos_to_edges(repos)
+    res = louvain(spark, edges,
+                  EngineConfig(checkpoint_dir=str(tmp_path / "ck")))
+    assert res.labels.join(repo_ids, "id").count() > 0
+    assert set(jsc.getPersistentRDDs().keys()) - rdds == set()
+    assert packs() - before == set()

@@ -50,7 +50,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from vite_spark.algos.louvain import (
     _argmax_moves,
     _counter_tables,
-    _fits_driver,
     _maybe_broadcast,
     modularity_of,
     self_loop_weights,
@@ -341,18 +340,21 @@ def leiden_levels(
     # adaptive driver-local tier (the louvain driver-level design): a
     # graph within the one Louvain gate (cfg.local_phase_max_edges, its
     # Leiden crossover walls at the definition; 0 forces the distributed
-    # tier) runs the pytest-proven NumPy mirror — one Arrow collect in,
-    # one Arrow hand-off out (kernels/csr_pr ``_collect``/
-    # ``_emit_local``), identical labels by the parity tests — so small
-    # graphs and deep coarse levels never pay cluster job latency.
-    # Arbitrary ids handled by a monotone densify (np.unique is sorted,
-    # so every min-id tie-break and the min-original-id canonicalization
-    # survive the mapping).
-    ne = edges.count()
-    if _fits_driver(ne, cfg):
-        from vite_spark.kernels.csr_pr import _collect, _emit_local
+    # tier) runs the pytest-proven NumPy mirror — one capped Arrow
+    # collect in, which is also the gate (no count job), one Arrow
+    # hand-off out (kernels/csr_pr ``_collect_upto``/``_emit_local``),
+    # identical labels by the parity tests — so small graphs and deep
+    # coarse levels never pay cluster job latency. Arbitrary ids handled
+    # by a monotone densify (np.unique is sorted, so every min-id
+    # tie-break and the min-original-id canonicalization survive the
+    # mapping).
+    from vite_spark.kernels.csr_pr import _arrays, _collect_upto, _emit_local
 
-        s0, d0, w0 = _collect(edges, ("src", "dst", "weight"))
+    tbl = (_collect_upto(edges, ("src", "dst", "weight"),
+                         cfg.local_phase_max_edges)
+           if cfg.local_phase_max_edges > 0 else None)
+    if tbl is not None:
+        s0, d0, w0 = _arrays(tbl)
         uniq = np.unique(s0)
         # symmetrization contract: every dst must appear as a src, or
         # searchsorted would silently mismap dst ids absent from uniq

@@ -254,21 +254,26 @@ def _superstep(
     )
 
 
-def _collect_level(edges: DataFrame, colors: DataFrame | None = None):
-    """A level's edge table (and phase-0 colors) in the driver, each with
-    one Arrow collect (kernels/csr_pr ``_collect``). Returns (s, d, w,
-    ids, col): ``ids`` are the sorted distinct endpoints and s, d their
-    positions — a monotone densify, so every id-order tie-break survives;
-    ``col`` is aligned with ``ids`` (-1 uncolored), or None."""
+EDGE_COLS = ("src", "dst", "weight")
+
+
+def _collect_level(tbl, colors: DataFrame | None = None):
+    """A level's collected edge table ``tbl`` (Arrow, ``EDGE_COLS``; the
+    gate's ``csr_pr._collect_upto``) and its phase-0 colors (one more
+    ``_collect_upto``) as driver arrays (``csr_pr._arrays``). Returns
+    (s, d, w, ids, col): ``ids`` are the sorted distinct endpoints and
+    s, d their positions — a monotone densify, so every id-order
+    tie-break survives; ``col`` is aligned with ``ids`` (-1 uncolored),
+    or None."""
     import numpy as np
 
-    from vite_spark.kernels.csr_pr import _collect
+    from vite_spark.kernels.csr_pr import _arrays, _collect_upto
 
-    s, d, w = _collect(edges, ("src", "dst", "weight"))
+    s, d, w = _arrays(tbl)
     ids = np.unique(np.r_[s, d])
     col = None
     if colors is not None:
-        cid, cval = _collect(colors, ("id", "color"))
+        cid, cval = _arrays(_collect_upto(colors, ("id", "color")))
         col = np.full(len(ids), -1, dtype=np.int64)
         col[np.searchsorted(ids, cid)] = cval
     return np.searchsorted(ids, s), np.searchsorted(ids, d), w, ids, col
@@ -330,12 +335,13 @@ def _local_phase(
 ) -> PhaseResult:
     """Driver-local phase for a level whose edge table fits on one node:
     the level comes in and the labels go out through the packed runner's
-    driver-tier helpers (kernels/csr_pr ``_collect``/``_emit_local``: one
-    Arrow collect, one Arrow hand-off, no Python worker) around
+    driver-tier helpers (kernels/csr_pr ``_collect_upto``/``_emit_local``:
+    one Arrow collect, one Arrow hand-off, no Python worker) around
     ``_phase_arrays``."""
-    from vite_spark.kernels.csr_pr import _emit_local
+    from vite_spark.kernels.csr_pr import _collect_upto, _emit_local
 
-    s, d, w, ids, col = _collect_level(edges, colors)
+    s, d, w, ids, col = _collect_level(_collect_upto(edges, EDGE_COLS),
+                                       colors)
     labels, q, iters = _phase_arrays(s, d, w, ids, threshold, lower, cfg,
                                      metrics, level, colors=col)
     adf = _emit_local(spark, {"id": ids, "comm": ids[labels]},
@@ -345,21 +351,22 @@ def _local_phase(
 
 class _DriverLevels:
     """The remaining levels of one ``louvain`` run, in the driver. The
-    entry level comes in with one collect (``_collect_level``); every
-    phase runs ``_phase_arrays``; an accepted phase's dense renumber and
-    label composition (``_dense_renumber``) and its coarsening
-    (``coarsen_oracle``: super-edges with summed weights, communities
-    renumbered by dense rank of community id — ``coarsen``'s contract)
-    stay in NumPy; the checkpoint tables are written from the driver; and
-    the composed labels go back once (``frame``)."""
+    entry level comes in as the gate's collected table (``tbl``, through
+    ``_collect_level``); every phase runs ``_phase_arrays``; an accepted
+    phase's dense renumber and label composition (``_dense_renumber``)
+    and its coarsening (``coarsen_oracle``: super-edges with summed
+    weights, communities renumbered by dense rank of community id —
+    ``coarsen``'s contract) stay in NumPy; the checkpoint tables are
+    written from the driver; and the composed labels go back once
+    (``frame``)."""
 
-    def __init__(self, spark, edges, colors, base):
+    def __init__(self, spark, tbl, colors, base):
         self.spark = spark
         # base: (id, label) of the distributed levels before the entry
         # level (labels = entry-level vertex ids), None from level 0
         self.base = base
         self.s, self.d, self.w, self.ids, self.colors = _collect_level(
-            edges, colors)
+            tbl, colors)
         self.entry = self.ids    # the entry level's vertex ids
         self.comp = None         # entry vertex -> current level vertex
         self.labels = None
@@ -423,7 +430,9 @@ class _DriverLevels:
 
 def _probe(edges: DataFrame):
     """One job: max src, max dst and the row count (``ne``) — the local
-    gate's input and ``_csr_phase``'s dense-id precheck / partition cap."""
+    gate's input where no capped collect asked (``louvain_phase``, a
+    colored level 0) and ``_csr_phase``'s dense-id precheck / partition
+    cap."""
     return edges.agg(
         F.max("src").alias("ms"), F.max("dst").alias("md"),
         F.count(F.lit(1)).alias("ne"),
@@ -1376,9 +1385,12 @@ def louvain(
     """Full multi-level Louvain (reference main.cpp:242-513 protocol).
 
     Levels run distributed (``louvain_phase``) until one has at most
-    ``cfg.local_phase_max_edges`` rows — read off the probe a level runs
-    anyway. From that level on the run stays in the driver
-    (``_DriverLevels``): one Arrow collect of that level, every remaining
+    ``cfg.local_phase_max_edges`` rows. The gate is one capped Arrow
+    collect of the level (``csr_pr._collect_upto``: no pin, no probe job),
+    which is also the driver's input when it fits; a level above the cap
+    and a colored level 0 (the coloring re-reads the level) take the
+    pinned probe instead. From the first level that fits the run stays
+    in the driver (``_DriverLevels``): every remaining
     phase, renumber, composition and coarsening in NumPy, the checkpoint
     tables written from the driver, and the composed labels handed back
     once — the labels themselves when level 0 ran in the driver, else one
@@ -1392,6 +1404,7 @@ def louvain(
     latest superstep within the in-flight level (``resume_phase``, the
     join tier); the levels after it take the gate as above."""
     from vite_spark.config import threshold_for_phase
+    from vite_spark.kernels.csr_pr import _collect_upto
 
     cfg = cfg or EngineConfig()
     metrics = metrics or MetricsCollector()
@@ -1427,18 +1440,25 @@ def louvain(
     try:
         while True:
             th = threshold_for_phase(short_phase) if cfg.threshold_cycling else cfg.threshold
-            probe = None
-            if (drv is None and not mid_level_resume
-                    and (cfg.local_phase_max_edges > 0 or cfg.use_csr_kernel)):
-                # one pin spans the probe, the coloring, and the level's
-                # consumer (the driver collect, or the distributed phase
-                # and the coarsening that re-reads the level): each would
-                # re-run the caller's upstream derivation. persist()
-                # returns the same object, so ``pin`` alone says whether
-                # this loop owns the cache.
-                if not cur_edges.is_cached:
-                    pin = cur_edges = cur_edges.persist()
-                probe = _probe(cur_edges)
+            probe = tbl = None
+            colored = cfg.coloring and phase == 0 and not cfg.vertex_ordering
+            if drv is None and not mid_level_resume:
+                if cfg.local_phase_max_edges > 0 and not colored:
+                    # the driver gate: one capped Arrow collect (no pin,
+                    # no probe job) that is also the driver levels' input
+                    tbl = _collect_upto(cur_edges, EDGE_COLS,
+                                        cfg.local_phase_max_edges)
+                if tbl is None and (cfg.local_phase_max_edges > 0
+                                    or cfg.use_csr_kernel):
+                    # one pin spans the probe, the coloring, and the
+                    # level's consumer (the driver collect, or the
+                    # distributed phase and the coarsening that re-reads
+                    # the level): each would re-run the caller's upstream
+                    # derivation. persist() returns the same object, so
+                    # ``pin`` alone says whether this loop owns the cache.
+                    if not cur_edges.is_cached:
+                        pin = cur_edges = cur_edges.persist()
+                    probe = _probe(cur_edges)
             # coloring only on phase 0, where the graph is largest
             # (main.cpp:267-269). cfg.vertex_ordering (L17,
             # distLouvainMethodVertexOrder) is treated as the plain path — this
@@ -1453,12 +1473,15 @@ def louvain(
             # distLouvainMethodWithColoring, which DOES refresh aggregates
             # between buckets and is implemented separately above.)
             phase_colors = None
-            if cfg.coloring and phase == 0 and not cfg.vertex_ordering:
+            if colored:
                 from vite_spark.algos.coloring import multi_hash_coloring
 
                 phase_colors, _ = multi_hash_coloring(spark, cur_edges)
             if probe is not None and _fits_driver(int(probe["ne"] or 0), cfg):
-                drv = _DriverLevels(spark, cur_edges, phase_colors, comm_all)
+                tbl = _collect_upto(cur_edges, EDGE_COLS)
+            if tbl is not None:
+                drv = _DriverLevels(spark, tbl, phase_colors, comm_all)
+                tbl = None
                 if pin is not None:
                     pin.unpersist()
                     pin = None

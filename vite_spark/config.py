@@ -63,6 +63,20 @@ def threshold_for_phase(phase: int) -> float:
 # peak RSS at 4M rows: Python 350-440 MB (PageRank, CC), 590 MB (triangle
 # count), 1.1 GB (per-vertex triangles on dense communities); JVM
 # 1.1-1.7 GB (3 GB heap).
+#
+# The gate is one capped collect (kernels/csr_pr._collect_upto: limit to
+# this + 1 rows, toArrow; no persist, no count job), which is also the
+# driver tier's input. What that moves (same VM, fresh process each, 3
+# interleaved pairs, pinned count gate -> capped collect): an input above
+# the cap pays the collect on top of the pin, count and pack, so its
+# derivation runs once more: sf0.1 q_pagerank (2.39M rows) at
+# SPARK_GRAFT_PACK_EDGES_PER_PART=1000000 read 11.7/11.7/11.8 s ->
+# 13.8/14.4/14.8 s cold, 5.8-5.9 s -> 6.6-6.8 s warm. At the top the
+# driver tier no longer builds a columnar cache: PageRank (20 iters) on
+# the 4M-row ring lattice read JVM VmHWM 1969/1932/2457 ->
+# 1842/1770/1700 MB, driver Python 479 -> 424 MB (the runner's Arrow
+# sort replaces the NumPy copies and lexsort), wall
+# 6.96/7.11/6.92 -> 6.95/7.06/6.96 s.
 PACK_EDGES_PER_PART = int(
     os.environ.get("SPARK_GRAFT_PACK_EDGES_PER_PART", "4000000"))
 

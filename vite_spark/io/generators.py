@@ -148,11 +148,49 @@ def rgg_edges_np(nv: int, nprocs: int, seed: int = 1):
     return src, dst, np.r_[w, w], nv
 
 
+def strip_pairs(X, Y, rn: float, chunk: int = 1 << 22):
+    """(i, j, dist): every pair of the points (X, Y) at Euclidean distance
+    ≤ ``rn``, each once, as positions into X/Y. A sort-by-y sweep: after
+    sorting on y, the partners of a point lie in the run of points that
+    follow it with y within ``rn`` (one searchsorted); the candidates are
+    then checked with the exact distance, ``chunk`` at a time, so memory
+    stays O(chunk + n) instead of the dense n×n matrix."""
+    order = np.argsort(Y, kind="stable")
+    xs, ys = X[order], Y[order]
+    n = len(ys)
+    # the window is padded far above float rounding, so the exact
+    # distance test alone decides (dy == rn pairs included)
+    cnt = (np.searchsorted(ys, ys + (rn + 1e-12), side="right")
+           - np.arange(n) - 1)
+    ends = np.cumsum(cnt)
+    out_i, out_j, out_w = [], [], []
+    a = 0
+    while a < n:
+        b = max(a + 1, int(np.searchsorted(ends, ends[a] - cnt[a] + chunk,
+                                           side="right")))
+        c = cnt[a:b]
+        i = np.repeat(np.arange(a, b), c)
+        j = i + 1 + np.arange(len(i)) - np.repeat(np.cumsum(c) - c, c)
+        dx = xs[i] - xs[j]
+        dy = ys[i] - ys[j]
+        ed = np.sqrt(dx * dx + dy * dy)
+        keep = ed <= rn
+        out_i.append(order[i[keep]])
+        out_j.append(order[j[keep]])
+        out_w.append(ed[keep])
+        a = b
+    if not out_i:
+        e = np.empty(0, np.int64)
+        return e, e, np.empty(0)
+    return np.concatenate(out_i), np.concatenate(out_j), np.concatenate(out_w)
+
+
 def rgg_edges_spark(spark, nv: int, nprocs: int, seed: int = 1):
     """Distributed RGG: one Arrow task per logical strip generates its
-    coords (closed-form LCG jump), computes in-strip pairs vectorized, and
-    boundary pairs are found by joining adjacent strips' boundary bands —
-    the reference's rank±1 ghost exchange as a DataFrame join."""
+    coords (closed-form LCG jump), each strip's pairs come from one
+    grouped task (``strip_pairs``), and boundary pairs are found by
+    joining adjacent strips' boundary bands — the reference's rank±1
+    ghost exchange as a DataFrame join."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
         DoubleType,
@@ -208,31 +246,18 @@ def rgg_edges_spark(spark, nv: int, nprocs: int, seed: int = 1):
         ]
     )
 
-    def local_pairs(pdf_iter):
+    def local_pairs(pdf):
+        # one call per strip (the group), however many Arrow batches the
+        # strip's rows arrive in
         import pandas as pd
 
-        for pdf in pdf_iter:
-            for strip in pdf["strip"].unique():
-                sub = pdf[pdf["strip"] == strip]
-                ids = sub["id"].to_numpy()
-                X = sub["x"].to_numpy()
-                Y = sub["y"].to_numpy()
-                dx = X[:, None] - X[None, :]
-                dy = Y[:, None] - Y[None, :]
-                ed = np.sqrt(dx * dx + dy * dy)
-                iu, ju = np.where(np.triu(ed <= rn, k=1))
-                if len(iu) == 0:
-                    continue
-                w = ed[iu, ju]
-                yield pd.DataFrame(
-                    {
-                        "src": np.r_[ids[iu], ids[ju]],
-                        "dst": np.r_[ids[ju], ids[iu]],
-                        "weight": np.r_[w, w],
-                    }
-                )
+        i, j, w = strip_pairs(pdf["x"].to_numpy(), pdf["y"].to_numpy(), rn)
+        ids = pdf["id"].to_numpy()
+        return pd.DataFrame({"src": np.r_[ids[i], ids[j]],
+                             "dst": np.r_[ids[j], ids[i]],
+                             "weight": np.r_[w, w]})
 
-    local = coords.repartition(nprocs, "strip").mapInPandas(
+    local = coords.groupBy("strip").applyInPandas(
         local_pairs, schema=edge_schema
     )
 

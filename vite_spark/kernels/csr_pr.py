@@ -5,19 +5,19 @@ Every route-pack kernel (PageRank, HITS, CC, LPA, BFS, k-core, WL)
 iterates over a sharded CSR pack (kernels/csr_sharded.py: 1-D range
 ownership, per-partition sorted universe ux, pack-time
 req_{owner}_{reader} interest sets) through one runner, ``_run_packed``:
-one input pin, one gate, pack build or reuse, the local-master check,
-cleanup, and one ``kind="tier"`` metrics row naming the tier that ran
-and why. ``_prepare_pack`` is the one builder of that pack, for these
-kernels and for Louvain's sharded levels (algos/louvain._csr_phase):
-range partitioning, the temporary dir or the named pack cache
-(``vite_pack`` for the canonical table, ``core_pack`` for k-core's and
-WL's simplified graph) with its manifest and one purge list, and the
-routes. Only the triangle kernels build their own pack (the runner's
-``prepare`` argument; kernels/csr_tri*.py: oriented rank-relabeled
-pack, single-task tier on open inputs too). WL keeps its own round jobs
-(per-round class counts, a fixed round count; sharded tier only). Vite's
-DistGraph likewise runs one code path at any rank count: one rank simply
-owns [0, nv].
+one gate, the input pin, pack build or reuse and the local-master check
+of the sharded loop, cleanup, and one ``kind="tier"`` metrics row naming
+the tier that ran and why. ``_prepare_pack`` is the one builder of that
+pack, for these kernels and for Louvain's sharded levels
+(algos/louvain._csr_phase): range partitioning, the temporary dir or the
+named pack cache (``vite_pack`` for the canonical table, ``core_pack``
+for k-core's and WL's simplified graph) with its manifest and one purge
+list, and the routes. Only the triangle kernels build their own pack
+(the runner's ``prepare`` argument; kernels/csr_tri*.py: oriented
+rank-relabeled pack, single-task tier on open inputs too). WL keeps its
+own round jobs (per-round class counts, a fixed round count; sharded
+tier only). Vite's DistGraph likewise runs one code path at any rank
+count: one rank simply owns [0, nv].
 
 Gate: a run whose pack would have one partition (``cfg.shuffle_partitions``,
 else the scale-adaptive count ``adaptive_pack_nparts``), with no
@@ -28,14 +28,16 @@ not vertex-closed (except for the triangle kernels, whose bodies take
 open inputs), or a kernel's own precondition sends the run to the
 caller's join path (the runner returns None).
 
-- **Single task** (``_driver_local``), run in the driver: ONE Arrow
-  collect brings the edge rows into the driver, which lexsorts them into
-  pack order and derives own/srcl/dstl exactly as a one-partition pack
-  would (ux == own when vertex-closed, there is no exchange), runs the
-  whole recurrence in place and hands the result back as one Arrow
-  table. No shuffle, Python worker, pack/route or scratch files,
-  per-iteration jobs or persisted blocks. Louvain's driver-local phase
-  (algos/louvain._local_phase) collects and emits through the same
+- **Single task** (``_driver_local``), run in the driver: the gate's
+  ONE capped Arrow collect (``_collect_upto``: no persist, no count job)
+  is both the question "does the input fit?" and the tier's whole input;
+  the driver sorts the rows into pack order and derives own/srcl/dstl
+  exactly as a one-partition pack would (ux == own when vertex-closed,
+  there is no exchange), runs the whole recurrence in place and hands
+  the result back as one Arrow table. No shuffle,
+  Python worker, pack/route or scratch files, per-iteration jobs or
+  persisted blocks. Louvain's driver levels (algos/louvain) and
+  ``kernels/ids.dense_ids`` gate, collect and emit through the same
   helpers.
 - **Sharded job loop**: one job per iteration, in one of two shapes.
 
@@ -242,7 +244,7 @@ class _Fallback(Exception):
 
 
 def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None,
-                prepare=_prepare_pack):
+                cols=("src", "dst"), prepare=_prepare_pack):
     """The packed kernels' one runner. Returns None when the caller's
     join path must run instead: a non-local master on the sharded loop
     (the pack is a shared filesystem), an empty input, an input that is
@@ -250,16 +252,20 @@ def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None,
     precondition).
 
     Gate: the pack's partition count is ``cfg.shuffle_partitions``,
-    else ``adaptive_pack_nparts`` of the session's count over one count
-    job — the only count of ``edges`` — at ``PACK_EDGES_PER_PART`` edge
-    rows per partition; at one partition with no
-    ``cfg.checkpoint_dir`` a kernel with a single-task tier runs
-    ``single(edges)`` in the driver (``_driver_local``: no scratch
-    files, so on any master). Every other run needs a local master and
-    builds (or reopens the cached) pack through
-    ``prepare(spark, edges, cfg, nparts, ne)`` (``_prepare_pack``, or
-    the triangle kernels' own builder): given the requested
-    partition count and the gate's count (None when
+    else ``adaptive_pack_nparts`` of the session's count at
+    ``config.PACK_EDGES_PER_PART`` edge rows per partition (read at call
+    time). A kernel with a single-task tier and no ``cfg.checkpoint_dir``
+    asks one question first: ``_collect_upto`` collects its ``cols`` of
+    at most ``PACK_EDGES_PER_PART`` rows (no cap when the requested count
+    is one) with ONE Arrow job, no persist and no count, and when the
+    rows fit, ``single(table)`` runs in the driver (``_driver_local``: no
+    scratch files, so on any master). An explicit
+    ``cfg.shuffle_partitions`` above one skips that question.
+
+    Every other run needs a local master and builds (or reopens the
+    cached) pack through ``prepare(spark, edges, cfg, nparts, ne)``
+    (``_prepare_pack``, or the triangle kernels' own builder): given the
+    requested partition count and the gate's count (None when
     ``cfg.shuffle_partitions`` fixes the layout), the builder picks the
     layout and returns ``(pack_dir, nparts, info, routing, cleanup)``,
     or None when not vertex-closed. The runner then returns
@@ -267,15 +273,17 @@ def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None,
     removed, or — a cached pack — only the run's files starting with
     ``prefixes``. Records one ``kind="tier"`` row: ``tier``
     (single/sharded/join), ``reason`` (non_local/empty/open/kernel, join
-    only) and the gate inputs ``nparts`` and ``ne`` (the gate's count,
-    else the pack's; None when neither exists).
+    only) and the gate inputs ``nparts`` and ``ne`` (the gate's row
+    count, else the pack's; None when neither exists).
 
-    One pin spans every consumer of ``edges`` (gate count, driver collect
-    or range-boundary sample + pack job): without it each re-ran the
+    On that pack path one pin spans every consumer of ``edges`` (gate
+    count, range-boundary sample, pack job): without it each re-ran the
     caller's whole upstream derivation (interleaved A/B at sf0.1:
     q_pagerank 4.73 s vs 6.50 s, packed-CC query 4.66 s vs 7.52 s
     medians, every pair wins). Skipped when the caller already cached
     the table."""
+    from vite_spark import config
+
     requested = cfg.shuffle_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
@@ -288,23 +296,33 @@ def _run_packed(spark, edges, cfg, metrics, prefixes, step, single=None,
     if not local and (single is None or cfg.checkpoint_dir):
         tier("join", "non_local")
         return None
-    pin = None
-    if not edges.is_cached:
-        pin = edges = edges.persist()
     try:
+        if (single is not None and not cfg.checkpoint_dir
+                and (requested == 1 or cfg.shuffle_partitions is None)):
+            tbl = _collect_upto(edges, cols, None if requested == 1
+                                else config.PACK_EDGES_PER_PART)
+            if tbl is not None:
+                if cfg.shuffle_partitions is None:
+                    gate["ne"] = tbl.num_rows
+                    if not tbl.num_rows:
+                        raise _Fallback("empty")
+                    gate["nparts"] = 1
+                # pack row order (stable, like np.lexsort); the unsorted
+                # rows are released before the kernel runs
+                tbl = tbl.sort_by([("src", "ascending"),
+                                   ("dst", "ascending")])
+                out = single(tbl)
+                tier("single")
+                return out
+        pin = None
+        if not edges.is_cached:
+            pin = edges = edges.persist()
         try:
             if cfg.shuffle_partitions is None:
-                from vite_spark.config import adaptive_pack_nparts
-
                 gate["ne"] = ne = edges.count()
                 if ne == 0:
                     raise _Fallback("empty")
-                gate["nparts"] = adaptive_pack_nparts(requested, ne)
-            if (single is not None and gate["nparts"] == 1
-                    and not cfg.checkpoint_dir):
-                out = single(edges)
-                tier("single")
-                return out
+                gate["nparts"] = config.adaptive_pack_nparts(requested, ne)
             if not local:
                 raise _Fallback("non_local")
             prep = prepare(spark, edges, cfg, requested, gate["ne"])
@@ -366,14 +384,25 @@ def _members(ids, x):
     return pos, hit
 
 
-def _collect(edges, cols):
-    """The columns ``cols`` of ``edges`` as NumPy arrays in the driver,
-    through one Arrow collect (``DataFrame.toArrow``, whatever the
-    session's Arrow setting): ``weight`` as float64, the rest int64."""
-    tbl = edges.select(*cols).toArrow()
+def _collect_upto(df, cols, cap=None):
+    """The columns ``cols`` of ``df`` as one Arrow table in the driver, or
+    None when ``df`` has more than ``cap`` rows: ONE collect job
+    (``limit(cap + 1)`` then ``DataFrame.toArrow``, whatever the
+    session's Arrow setting), with no persist and no count. ``cap=None``
+    collects every row. The driver tiers' gate: a table that comes back
+    is the tier's whole input."""
+    q = df.select(*cols)
+    tbl = (q if cap is None else q.limit(cap + 1)).toArrow()
+    return None if cap is not None and tbl.num_rows > cap else tbl
+
+
+def _arrays(tbl):
+    """The columns of the Arrow table ``tbl`` as NumPy arrays: ``weight``
+    as float64, the rest int64. A one-chunk column of that type comes
+    back as a read-only view of the table's buffer (no copy)."""
     return [np.asarray(tbl.column(c).to_numpy(),
                        np.float64 if c == "weight" else np.int64)
-            for c in cols]
+            for c in tbl.column_names]
 
 
 def _emit_local(spark, cols, out):
@@ -387,13 +416,14 @@ def _emit_local(spark, cols, out):
         pa.table({n: np.asarray(cols[n]) for n in names}), schema=out)
 
 
-def _driver_local(spark, edges, cols, out, body, open_ok=False):
-    """The single-task tier, run in the driver: ``_collect`` the edge
-    rows, lexsort them into pack row order and derive what a
-    one-partition pack holds: own = sorted distinct src, srcl, dstl
-    (ux == own when the input is vertex-closed) and the src segment
-    starts. ``body(own, srcl, dstl, seg, w)`` (w = the weights when
-    ``cols`` has them, else None) returns (per-iteration stats, the
+def _driver_local(spark, tbl, out, body, open_ok=False):
+    """The single-task tier, run in the driver over the runner's collected
+    edge table ``tbl`` (``_collect_upto``: src, dst and, when the kernel
+    reads them, the weights), already sorted into pack row order (src,
+    dst): derive what a one-partition pack holds: own = sorted distinct
+    src, srcl, dstl (ux == own when the input is vertex-closed) and the
+    src segment starts. ``body(own, srcl, dstl, seg, w)`` (w = the weights
+    when ``tbl`` has them, else None) returns (per-iteration stats, the
     columns of the output schema ``out``), or None when the kernel's own
     precondition fails.
 
@@ -408,12 +438,10 @@ def _driver_local(spark, edges, cols, out, body, open_ok=False):
     whose dst is a src (dstl is its position in own only there) and
     ``dst`` holds the rows' dst ids."""
     t0 = time.time()
-    src, dst, *w = _collect(edges, cols)
+    src, dst, *w = _arrays(tbl)
     if not len(src):
         raise _Fallback("empty")
-    order = np.lexsort((dst, src))          # pack row order
-    src, dst = src[order], dst[order]
-    w = w[0][order] if w else None
+    w = w[0] if w else None
     first = np.r_[True, src[1:] != src[:-1]]
     seg = np.flatnonzero(first)
     own = src[seg]
@@ -565,7 +593,7 @@ def _owner_sweep(spark, edges, max_iter, cfg, metrics, op):
             metrics.record(kind=kind, iter=t - op.lead, changed=changed,
                            wall_s=wall_s, edges_processed=ne, **tags)
 
-    def single(edges):
+    def single(tbl):
         def body(own, srcl, dstl, seg, w):
             if not op.admits(own, w):
                 return None
@@ -579,9 +607,7 @@ def _owner_sweep(spark, edges, max_iter, cfg, metrics, op):
                     break
             return chg, op.frame(own, curr)
 
-        cols = ("src", "dst", "weight") if op.weights else ("src", "dst")
-        out, chg, wall, ne = _driver_local(spark, edges, cols, op.out,
-                                           body)
+        out, chg, wall, ne = _driver_local(spark, tbl, op.out, body)
         for t, c in enumerate(chg, 1):
             record(t, int(c), wall / len(chg), ne)
         return out
@@ -634,6 +660,8 @@ def _owner_sweep(spark, edges, max_iter, cfg, metrics, op):
 
     return _run_packed(spark, edges, cfg, metrics, (op.prefix + "_",), step,
                        single=single,
+                       cols=("src", "dst", "weight") if op.weights
+                       else ("src", "dst"),
                        prepare=partial(_prepare_pack, cache=op.cache))
 
 
@@ -841,7 +869,7 @@ def csr_pagerank(spark, edges, damping, tol, max_iter, weighted, cfg,
     mode_str = ("csr_sharded_" + mode if mode in ("eigen", "katz")
                 else "csr_sharded_pr")
 
-    def single(edges):
+    def single(tbl):
         adj = mode in ("eigen", "katz")
         seeds_arr = (np.asarray(sorted(set(int(x) for x in seeds)), np.int64)
                      if seeds is not None else None)
@@ -881,8 +909,7 @@ def csr_pagerank(spark, edges, damping, tol, max_iter, weighted, cfg,
             return deltas, {"id": own, "rank": r / norm}
 
         out, deltas, wall, ne = _driver_local(
-            spark, edges, ("src", "dst", "weight"), "id long, rank double",
-            body)
+            spark, tbl, "id long, rank double", body)
         # metrics rows mirror the job loop's one-job-late delta protocol
         # exactly: row t (a scatter job there) carries Δ_{t-1};
         # convergence at Δ_K stops the rows at t = K+1; a finalize row
@@ -992,4 +1019,4 @@ def csr_pagerank(spark, edges, damping, tol, max_iter, weighted, cfg,
         return out.select("id", (F.col("rank") / norm).alias("rank"))
 
     return _run_packed(spark, edges, cfg, metrics, ("prc_", "rnk_"),
-                       step, single=single)
+                       step, single=single, cols=("src", "dst", "weight"))

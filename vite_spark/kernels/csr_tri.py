@@ -4,15 +4,16 @@ count") over the shared kernel infrastructure (Louvain kernels/csr*.py,
 PageRank csr_pr.py, LPA csr_lpa.py, CC csr_cc.py).
 
 Both triangle kernels (this global count and kernels/csr_tri_vertex.py)
-run through the packed runner ``csr_pr._run_packed``: one input pin,
-the edge-count gate (``adaptive_pack_nparts`` over one count job, at the
-shared ``config.PACK_EDGES_PER_PART`` rows per partition; the crossover
-is measured there), the local-master check of the sharded tier, cleanup
-and the ``kind="tier"`` row. Two tiers:
+run through the packed runner ``csr_pr._run_packed``: the edge-row gate
+(one capped Arrow collect at the shared ``config.PACK_EDGES_PER_PART``
+rows per partition; the crossover is measured there), the input pin and
+local-master check of the sharded tier, cleanup and the ``kind="tier"``
+row. Two tiers:
 
-- **Single task** (one partition at that target, no ``checkpoint_dir``):
-  ``csr_pr._driver_local`` collects the rows into the driver with one
-  Arrow collect, where ``_tri_single`` runs ``algos/triangles._oriented``
+- **Single task** (the rows fit that target, no ``checkpoint_dir``):
+  the runner's collect brings the rows into the driver, where
+  ``csr_pr._driver_local`` runs ``_tri_single``:
+  ``algos/triangles._oriented``
   and the count job's local probe in NumPy: drop self-loops and
   duplicate rows, out-degree, drop rows whose dst has no out-edge, rank
   by (deg, id) and orient low → high, offset-k wedge passes with a
@@ -600,13 +601,12 @@ def csr_triangles(spark, edges, cfg, metrics) -> int | None:
                        triangles=int(tri))
         return int(tri)
 
-    def single(edges):
+    def single(tbl):
         def body(own, srcl, dstl, seg, w, hit, dst):
             return _tri_single(own, srcl, dstl, hit, dst)[0], None
 
         _, stats, wall, _ = csr_pr._driver_local(
-            spark, edges, ("src", "dst"), "id long, triangles long", body,
-            open_ok=True)
+            spark, tbl, "id long, triangles long", body, open_ok=True)
         return record(wall, *stats)
 
     def step(pack_dir, nparts, info, routing):

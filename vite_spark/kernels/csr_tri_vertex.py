@@ -262,7 +262,7 @@ def csr_triangles_per_vertex(spark, edges, cfg, metrics):
                        wall_s=round(time.time() - t0, 3),
                        edges_oriented=int(oriented))
 
-    def single(edges):
+    def single(tbl):
         def body(own, srcl, dstl, seg, w, hit, dst):
             stats, cr = _tri_single(own, srcl, dstl, hit, dst,
                                     credits=True)
@@ -274,8 +274,7 @@ def csr_triangles_per_vertex(spark, edges, cfg, metrics):
 
         t0 = time.time()
         out, stats, _, _ = csr_pr._driver_local(
-            spark, edges, ("src", "dst"), "id long, triangles long", body,
-            open_ok=True)
+            spark, tbl, "id long, triangles long", body, open_ok=True)
         record(t0, stats[2])
         return out
 

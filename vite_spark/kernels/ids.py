@@ -9,10 +9,13 @@ window and no driver-side materialization of the values — it works at
 
 Two tiers, one order. Small inputs (≤ ``local_max_rows`` distinct
 values, default 2M / $SPARK_GRAFT_DENSE_IDS_LOCAL_MAX; 0 forces the
-distributed tier) rank in the driver: the cached distinct set comes back
-with one Arrow collect, Arrow sorts it and the ranked
-table goes back to the JVM with one Arrow ``createDataFrame`` — 2 jobs
-(count + collect), no shuffle, Python worker or checkpointed block.
+distributed tier) rank in the driver: the gate is one capped Arrow
+collect of the distinct set (kernels/csr_pr ``_collect_upto``, at
+``local_max_rows`` plus one row for a null), which is also the tier's
+input; Arrow sorts it and the ranked table goes back to the JVM with one
+Arrow ``createDataFrame`` — 1 job (the collect), no persist, count,
+Python worker or checkpointed block. A larger set pays that collect,
+then the distributed tier's pinned count.
 Output is identical by construction (rank ordered by value is a pure
 function of the value set; Arrow and Spark both order strings by UTF-8
 bytes).
@@ -47,19 +50,25 @@ def dense_ids(df: DataFrame, col: str, out_col: str = "new_id",
             os.environ.get("SPARK_GRAFT_DENSE_IDS_LOCAL_MAX", "2000000")
         )
 
-    d = df.select(col).distinct().persist()
+    d = df.select(col).distinct()
+    out_schema = StructType(
+        list(d.schema.fields) + [StructField(out_col, LongType(), False)]
+    )
+    if local_max_rows > 0:
+        from vite_spark.kernels.csr_pr import _collect_upto
+
+        tbl = _collect_upto(d, (col,), local_max_rows + 1)
+        if (tbl is not None and
+                tbl.num_rows - tbl.column(col).null_count <= local_max_rows):
+            return _rank_in_driver(spark, tbl, col, out_schema)
+
+    d = d.persist()
     vals = None
     try:
         # materializes the distinct set into the cache
         cnt = d.agg(F.count(F.lit(1)).alias("n"),
                     F.count(col).alias("nn")).collect()[0]
-        n, base = cnt["nn"], cnt["n"] - cnt["nn"]   # base 1: a null exists
-        out_schema = StructType(
-            list(d.schema.fields) + [StructField(out_col, LongType(), False)]
-        )
-
-        if 0 < local_max_rows and n <= local_max_rows:
-            return _rank_in_driver(spark, d, col, out_schema)
+        base = cnt["n"] - cnt["nn"]   # 1: a null exists
         # distributed tier (the 10^12-id path): range partition the
         # cached distinct (the boundary sample reads the cache instead
         # of recomputing the distinct), offsets from per-partition
@@ -127,13 +136,13 @@ def _ascending(tbl, col: str):
     return vals
 
 
-def _rank_in_driver(spark, d: DataFrame, col: str, out_schema) -> DataFrame:
-    """The small tier: the distinct set ``d`` (null included) ranked
-    0.. in the driver."""
+def _rank_in_driver(spark, tbl, col: str, out_schema) -> DataFrame:
+    """The small tier: the collected distinct set ``tbl`` (Arrow, null
+    included) ranked 0.. in the driver."""
     import numpy as np
     import pyarrow as pa
 
-    vals = _ascending(d.toArrow(), col)
+    vals = _ascending(tbl, col)
     return spark.createDataFrame(
         pa.table({col: vals, out_schema.fieldNames()[-1]:
                   np.arange(len(vals), dtype=np.int64)}),

@@ -37,6 +37,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """The engine's local session (``extra_conf`` overrides any default).
+
+    PySpark's DataFrame call-site capture is off
+    (``spark.python.sql.dataFrameDebugging.enabled``): with it on, every
+    ``F.*``/DataFrame call walks the Python stack and makes extra Py4J
+    round trips, and the first one imports IPython. The cost: a Spark
+    error message no longer names the Python line (file, function) of
+    the DataFrame call that failed; the Python traceback still does.
+    PySpark reads the setting once per process, at the first DataFrame
+    call after a session exists."""
     _ensure_malloc_tunables()
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -56,6 +66,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
