@@ -129,17 +129,20 @@ def test_rgg_spark_strips_span_arrow_batches(spark):
     """Each strip's pairs come from one group however many Arrow batches
     its rows arrive in: at 64 rows per batch a 500-row strip spans eight,
     and the edge set still equals the brute-force NumPy one (weights
-    bit-equal)."""
+    bit-equal). The generator leaves no persistent RDD behind."""
     from vite_spark.io.generators import rgg_edges_spark
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "64")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
     try:
         rows = sorted((r["src"], r["dst"], r["weight"])
                       for r in rgg_edges_spark(spark, 2000, 4).collect())
     finally:
         spark.conf.set(key, old)
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
     s, d, w, _ = rgg_edges_np(2000, 4)
     assert rows == sorted(zip(s.tolist(), d.tolist(), w.tolist()))
     assert len(rows) > 10000

@@ -307,15 +307,20 @@ def _packs(scratch):
     return {f for f in os.listdir(scratch) if f.startswith("vite_")}
 
 
-@pytest.mark.parametrize("kernel", ["pagerank", "triangles", "louvain",
+@pytest.mark.parametrize("kernel", ["pagerank", "triangles",
+                                    "triangles_vertex", "louvain",
                                     "kcore", "wl"])
 def test_pins_released_when_pack_build_fails(spark, monkeypatch, kernel):
     """The input pin (and the triangle pack's intermediate tables) must
     not outlive a failure of the tier that follows the gate, nor must a
-    half-built temporary pack."""
+    half-built temporary pack. The per-vertex case fails the rank-map
+    write (the sharded triangle tier's only parquet write), after its
+    rank job has pinned the degree table."""
+    from pyspark.sql import DataFrameWriter
+
     from vite_spark.algos import louvain as lv
     from vite_spark.algos.core import coreness
-    from vite_spark.algos.triangles import triangle_count
+    from vite_spark.algos.triangles import triangle_count, triangles_per_vertex
     from vite_spark.algos.wl import wl_refine
     from vite_spark.kernels import csr_tri
 
@@ -329,6 +334,10 @@ def test_pins_released_when_pack_build_fails(spark, monkeypatch, kernel):
         "triangles": (csr_tri, "pack_csr_partitions_sharded",
                       lambda: triangle_count(
                           spark, edges, EngineConfig(shuffle_partitions=4))),
+        "triangles_vertex": (DataFrameWriter, "parquet",
+                             lambda: triangles_per_vertex(
+                                 spark, edges,
+                                 EngineConfig(shuffle_partitions=4))),
         "louvain": (lv, "_local_phase",
                     lambda: lv.louvain_phase(spark, edges, 1e-6)),
         "kcore": (csr_pr, "pack_csr_partitions_sharded", lambda: coreness(

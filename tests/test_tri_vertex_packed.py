@@ -1,4 +1,4 @@
-"""Packed-CSR PER-VERTEX triangle counts (kernels/csr_tri_vertex.py) vs
+"""Packed-CSR PER-VERTEX triangle counts (kernels/csr_tri.py) vs
 the wedge-join path (algos/triangles.triangles_per_vertex) and a
 brute-force NumPy reference: exact per-vertex equality including the
 zero rows, dispatch evidence via metrics, pack-cache reuse, and the
@@ -85,17 +85,25 @@ def test_vertex_packed_random_sparse_ids(spark, seed):
 
 
 def test_vertex_packed_small_flush_batches(spark, monkeypatch):
-    """FLUSH_PAIRS=64 forces many remote probe batches carrying the apex
-    triple — per-vertex credits must be identical. Remote probes exist
-    only in the sharded tier, hence 4 partitions."""
-    from vite_spark.kernels import csr_tri, csr_tri_vertex
+    """FLUSH_PAIRS=64 forces many remote probe batches through both modes
+    of the one wedge job — (u, v, w) triples with credits, (v, w) pairs
+    without: per-vertex credits must equal the join path's, and sum to
+    three times the count. Remote probes exist only in the sharded tier,
+    hence 4 partitions."""
+    from vite_spark.algos.triangles import triangle_count
+    from vite_spark.kernels import csr_tri
 
     monkeypatch.setattr(csr_tri, "FLUSH_PAIRS", 64)
-    monkeypatch.setattr(csr_tri_vertex, "FLUSH_PAIRS", 64)
     s, d, w, nv, _truth = fx.planted_partition()
     edges = fx.to_spark_edges(spark, (s, d, w, nv))
-    p, j = _per_vertex(spark, edges, EngineConfig(shuffle_partitions=4))
+    cfg = EngineConfig(shuffle_partitions=4)
+    p, j = _per_vertex(spark, edges, cfg)
     assert p == j
+    m = MetricsCollector()
+    total = triangle_count(spark, edges, cfg=cfg, metrics=m)
+    (row,) = [r for r in m.rows if r.get("kind") == "triangles_packed"]
+    assert row["queries"] > 64, "remote probes must have been batched"
+    assert sum(p.values()) == 3 * total > 0
 
 
 def test_vertex_packed_pack_cache_reuse(spark, tmp_path):

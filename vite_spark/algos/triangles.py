@@ -32,6 +32,20 @@ def _oriented(edges: DataFrame) -> DataFrame:
     ).select("src", "dst")
 
 
+def _closed_wedges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(o, tri): the persisted oriented table and its closed wedges
+    (u, v, w) — wedge u→v→w of the oriented self-join whose closing edge
+    u→w exists. The caller unpersists ``o``."""
+    o = _oriented(edges).persist()
+    wedges = o.alias("a").join(
+        o.alias("b"), F.col("a.dst") == F.col("b.src")
+    ).select(F.col("a.src").alias("u"), F.col("a.dst").alias("v"), F.col("b.dst").alias("w"))
+    tri = wedges.join(
+        o.select(F.col("src").alias("u"), F.col("dst").alias("w")), ["u", "w"]
+    )
+    return o, tri
+
+
 def triangle_count(spark: SparkSession, edges: DataFrame,
                    cfg: EngineConfig | None = None,
                    metrics: MetricsCollector | None = None) -> int:
@@ -42,27 +56,22 @@ def triangle_count(spark: SparkSession, edges: DataFrame,
     if cfg.use_csr_kernel:
         # packed-CSR fast path (kernels/csr_tri.py): identical
         # degree-orientation algorithm, but the O(Σ outdeg²) wedge
-        # volume never materializes — one job probes closing edges
-        # against immutable pack-time key arrays (local bulk in place,
-        # remote residue via static-index mmap reads) instead of moving
-        # the wedge table through two shuffles. Exact integer count —
-        # parity pytest-enforced. Falls back here (None) for non-local
-        # masters.
+        # volume never materializes — small inputs count in the driver,
+        # larger ones in one wedge job that probes closing edges against
+        # immutable pack-time key arrays instead of moving the wedge
+        # table through two shuffles. Exact integer count — parity
+        # pytest-enforced. Falls back here (None) for non-local masters
+        # above the driver tier's gate.
         from vite_spark.kernels.csr_tri import csr_triangles
 
         res = csr_triangles(spark, edges, cfg, metrics)
         if res is not None:
             return res
 
-    o = _oriented(edges).persist()
-    wedges = o.alias("a").join(
-        o.alias("b"), F.col("a.dst") == F.col("b.src")
-    ).select(F.col("a.src").alias("u"), F.col("a.dst").alias("v"), F.col("b.dst").alias("w"))
-    tri = wedges.join(
-        o.select(F.col("src").alias("u"), F.col("dst").alias("w")), ["u", "w"]
-    ).count()
+    o, tri = _closed_wedges(edges)
+    n = tri.count()
     o.unpersist()
-    return int(tri)
+    return int(n)
 
 
 def triangles_per_vertex(spark: SparkSession, edges: DataFrame,
@@ -74,25 +83,20 @@ def triangles_per_vertex(spark: SparkSession, edges: DataFrame,
     metrics = metrics or MetricsCollector()
 
     if cfg.use_csr_kernel:
-        # packed-CSR fast path (kernels/csr_tri_vertex.py): same pack and
-        # probe strategy as the global kernel above, emitting per-rank
-        # triangle credits instead of scalars; the only shuffle is the
-        # groupBy over the ghost-set-bounded credit table. Exact equality
-        # with the join path pytest-enforced. Falls back here (None) for
-        # non-local masters.
-        from vite_spark.kernels.csr_tri_vertex import csr_triangles_per_vertex
+        # packed-CSR fast path (kernels/csr_tri.py): the global count's
+        # tiers, pack and wedge job with credits on, emitting per-vertex
+        # credits instead of scalars; the sharded tier's only shuffle is
+        # the groupBy over the ghost-set-bounded credit table. Exact
+        # equality with the join path pytest-enforced. Falls back here
+        # (None) for non-local masters above the driver tier's gate.
+        from vite_spark.kernels.csr_tri import csr_triangles_per_vertex
 
         res = csr_triangles_per_vertex(spark, edges, cfg, metrics)
         if res is not None:
             return res
 
-    o = _oriented(edges).persist()
-    wedges = o.alias("a").join(
-        o.alias("b"), F.col("a.dst") == F.col("b.src")
-    ).select(F.col("a.src").alias("u"), F.col("a.dst").alias("v"), F.col("b.dst").alias("w"))
-    tri = wedges.join(
-        o.select(F.col("src").alias("u"), F.col("dst").alias("w")), ["u", "w"]
-    ).persist()
+    o, tri = _closed_wedges(edges)
+    tri = tri.persist()
     counts = (
         tri.select(F.col("u").alias("id"))
         .union(tri.select(F.col("v").alias("id")))

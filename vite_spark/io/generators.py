@@ -236,7 +236,9 @@ def rgg_edges_spark(spark, nv: int, nprocs: int, seed: int = 1):
                     }
                 )
 
-    coords = ranks.mapInPandas(gen_coords, schema=coord_schema).persist()
+    # not persisted: the strip pass and both boundary bands each
+    # regenerate the coordinates, a vectorized closed-form LCG per strip
+    coords = ranks.mapInPandas(gen_coords, schema=coord_schema)
 
     edge_schema = StructType(
         [

@@ -13,7 +13,7 @@ pack, for these kernels and for Louvain's sharded levels
 named pack cache (``vite_pack`` for the canonical table, ``core_pack``
 for k-core's and WL's simplified graph) with its manifest and one purge
 list, and the routes. Only the triangle kernels build their own pack
-(the runner's ``prepare`` argument; kernels/csr_tri*.py: oriented
+(the runner's ``prepare`` argument; kernels/csr_tri.py: oriented
 rank-relabeled pack, single-task tier on open inputs too). WL keeps its
 own round jobs (per-round class counts, a fixed round count; sharded
 tier only). Vite's DistGraph likewise runs one code path at any rank

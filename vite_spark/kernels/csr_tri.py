@@ -3,31 +3,29 @@ algorithm ("PageRank, connected components, label propagation, triangle
 count") over the shared kernel infrastructure (Louvain kernels/csr*.py,
 PageRank csr_pr.py, LPA csr_lpa.py, CC csr_cc.py).
 
-Both triangle kernels (this global count and kernels/csr_tri_vertex.py)
-run through the packed runner ``csr_pr._run_packed``: the edge-row gate
-(one capped Arrow collect at the shared ``config.PACK_EDGES_PER_PART``
-rows per partition; the crossover is measured there), the input pin and
-local-master check of the sharded tier, cleanup and the ``kind="tier"``
-row. Two tiers:
+Two entry points share everything below: ``csr_triangles`` (the global
+count) and ``csr_triangles_per_vertex`` (every triangle credited to each
+of its three vertices, zero rows included). Both run through the packed
+runner ``csr_pr._run_packed``: the edge-row gate (one capped Arrow
+collect at the shared ``config.PACK_EDGES_PER_PART`` rows per partition;
+the crossover is measured there), the input pin and local-master check
+of the sharded tier, cleanup and the ``kind="tier"`` row. Two tiers,
+each one body with a ``credits`` flag for the two outputs:
 
 - **Single task** (the rows fit that target, no ``checkpoint_dir``):
-  the runner's collect brings the rows into the driver, where
-  ``csr_pr._driver_local`` runs ``_tri_single``:
-  ``algos/triangles._oriented``
-  and the count job's local probe in NumPy: drop self-loops and
-  duplicate rows, out-degree, drop rows whose dst has no out-edge, rank
-  by (deg, id) and orient low → high, offset-k wedge passes with a
-  searchsorted membership test per closing edge, per-vertex credits by
-  bincount. Inputs that are not vertex-closed stay on this tier (the
-  body takes the miss mask). No pack files, no Python worker, one Spark
-  job (the collect).
-- **Sharded**: the pack and count phases below. ``_prepare_tri_pack`` is
-  the runner's pack builder; it keeps its own partition cap from the
-  wedge volume.
+  ``csr_pr._driver_local`` runs ``_tri_single`` in the driver over the
+  runner's collected rows — ``algos/triangles._oriented`` and the local
+  probe below, in NumPy. Inputs that are not vertex-closed stay on this
+  tier (the body takes the miss mask). No pack files, no Python worker,
+  one Spark job (the collect).
+- **Sharded**: the pack and count phases below, one ``_wedge_job``.
+  ``_prepare_tri_pack`` is the runner's pack builder; it keeps its own
+  partition cap from the wedge volume.
 
-Both tiers record the same ``triangles_packed`` row (``wedges``,
+The count's tiers record the same ``triangles_packed`` row (``wedges``,
 ``queries``, ``edges_oriented``, ``triangles``; at one partition every
-query is local, so ``queries`` is 0).
+query is local, so ``queries`` is 0); the per-vertex tiers record
+``triangles_vertex_packed``.
 
 The join-path `algos/triangles.triangle_count` is the cluster-correct
 DataFrame shape (degree-oriented wedge self-join + closing-edge join);
@@ -87,6 +85,19 @@ sharded kernel) — and equals algos/triangles.triangle_count on every
 input (same orientation, same distinct/self-loop handling;
 pytest-enforced parity).
 
+Per-vertex credits (``credits=True``): a closed wedge credits all three
+RANK ids. The apex is always owned (rows are src-range-partitioned), so
+its credits go into a dense count over own; v and w may be owned
+anywhere, so they accumulate as (rank, count) runs compacted per batch —
+never a dense nv array per task. Remote buffers then carry the apex's
+own index with the pair. Each task emits its compacted (rk, cnt) rows —
+O(|own_p| + |U_p|), the ghost-set bound — and one groupBy(rk) over that
+bounded table is the only shuffle. Output must name ORIGINAL ids, so the
+per-vertex tier adds one pack artifact, ``rank_map.parquet`` (rk, id),
+written lazily by re-running the deterministic rank job (the count path
+never pays for it), and joins the credits against it plus a left join
+from the distinct vertices for the zero rows.
+
 Scale shape: per-partition memory O(edges/p + FLUSH); the O(Σ outdeg²)
 wedge volume never materializes anywhere — not in a shuffle (the join
 path moves it through TWO exchanges), not even on scratch (the first
@@ -135,7 +146,7 @@ FLUSH_PAIRS = 8_000_000
 
 def _pid_tasks(spark, nparts):
     """pid frame with ~2 tasks per core instead of one task per pid: the
-    count-phase jobs' per-pid work items are independent and every run()
+    probe-key and wedge jobs' per-pid work items are independent and every run()
     loop already iterates the pids inside its frame, so grouping pids per
     task changes nothing about the result — but it removes the per-task
     python-runner handshake (~50-85 ms/task measured on this host) that
@@ -179,8 +190,12 @@ def _rank_by_degree(spark, e, nparts):
         yield pd.DataFrame({"pid": [pid], "n": [np.int64(n)],
                             "sd": [sd], "wd": [wd]})
 
-    rows = d2.mapInPandas(cnt, schema="pid int, n long, sd long, wd long"
-                          ).collect()
+    try:
+        rows = d2.mapInPandas(
+            cnt, schema="pid int, n long, sd long, wd long").collect()
+    except BaseException:
+        d2.unpersist()
+        raise
     offs = {}
     acc = 0
     for r in sorted(rows, key=lambda r: r["pid"]):
@@ -215,7 +230,7 @@ def _rank_by_degree(spark, e, nparts):
 def _prepare_tri_pack(spark, edges, cfg, nparts, ne):
     """The sharded tier's pack builder for ``csr_pr._run_packed``:
     (pack_dir, nparts, info, None, cleanup) — the oriented rank-relabeled
-    sharded pack (no routes: the count job reads the owners' static
+    sharded pack (no routes: the wedge job reads the owners' static
     files), cached under <pack_cache_dir>/tri_pack (NOT the shared
     vite_pack: the triangle pack stores a different graph — oriented,
     relabeled). Same caller contract as the Louvain pack cache: every
@@ -260,7 +275,7 @@ def _prepare_tri_pack(spark, edges, cfg, nparts, ne):
         d2, ranks, dstats = _rank_by_degree(spark, e, nparts)
         ranks = ranks.persist()
         if ne is not None:
-            # the count job's work is the WEDGE probe, not an edge
+            # the wedge job's work is the WEDGE probe, not an edge
             # gather, so the requested partition count is capped by the
             # wedge-volume upper bound Σ C(deg, 2) (computed inside the
             # rank job's count pass — no extra job) alongside
@@ -299,10 +314,10 @@ def _prepare_tri_pack(spark, edges, cfg, nparts, ne):
 
 def _tri_single(own, srcl, dstl, hit, dst, credits=False):
     """The single-task tier's count: ``algos/triangles._oriented`` and
-    the count job's local probe, step by step, on one task's lexsorted
+    the wedge job's local probe, step by step, on one task's lexsorted
     rows (``csr_pr._driver_local``'s open-input body arguments). Returns
     (stats, cr): stats = [wedges, queries, edges_oriented, triangles]
-    exactly as the sharded count job sums them at one partition (no
+    exactly as the sharded wedge job sums them at one partition (no
     remote queries); cr = per-own-vertex triangle counts (every triangle
     credited to its three vertices) with ``credits``, else None."""
     n = len(own)
@@ -344,7 +359,7 @@ def _tri_single(own, srcl, dstl, hit, dst, credits=False):
         k += 1
         act = act[act + k < row_end[act]]
         v, w = rd[act], rd[act + k]
-        # the count job's wedge tally: v below every owner range (below
+        # the wedge job's wedge tally: v below every owner range (below
         # the smallest oriented src) has no out-edge and is not queried
         wedges += int((v >= lo).sum())
         _, f = _positions(keys, v * np.int64(n) + w)
@@ -365,8 +380,8 @@ def _tri_single(own, srcl, dstl, hit, dst, credits=False):
 def _build_probe_keys(spark, pack_dir, nparts):
     """One job at pack time: per partition, save the strictly-increasing
     closing-edge key array `krw_{pid}.npy` (srcl·(|ux|+1) + dstl — rows
-    are (src, dst)-sorted, so the composite is sorted). Both count-phase
-    jobs membership-test against it via read-only mmap, so the array is
+    are (src, dst)-sorted, so the composite is sorted). The wedge job
+    membership-tests against it via read-only mmap, so the array is
     built once per pack and lives once in the page cache instead of
     being recomputed into fresh private pages per task per run (fresh
     first-touch is host-serialized — BENCH.md host physics — and was the
@@ -381,7 +396,7 @@ def _build_probe_keys(spark, pack_dir, nparts):
                 sp = os.path.join(pack_dir, f"srcl_{pid}.npy")
                 if not os.path.exists(sp):
                     # empty input: the pack job may not materialize every
-                    # partition's files (the count jobs only run for
+                    # partition's files (the wedge job only runs for
                     # ne > 0) — write empty keys so the krw file set is
                     # complete for the cache-validity check
                     _atomic_save(os.path.join(pack_dir, f"krw_{pid}.npy"),
@@ -408,10 +423,15 @@ def _build_probe_keys(spark, pack_dir, nparts):
         run, schema="pid int, n long").collect()
 
 
-def _count_job(spark, pack_dir, nparts, flush_pairs):
+def _wedge_job(spark, pack_dir, nparts, flush_pairs, credits=False):
     """Enumerate wedge queries, probe local ones in place and remote
-    ones against the owners' static index files; one sentinel row
-    (pid, wedges, queries, tri).
+    ones against the owners' static index files. Without ``credits``:
+    one sentinel row (pid, wedges, queries, tri) per pid, remote buffers
+    of (v, w) pairs. With ``credits``: compacted (rk, cnt) rows, every
+    closed wedge crediting its three ranks (apex u into a dense count
+    over own, v and w as per-batch ``np.unique`` runs), remote buffers of
+    (u, v, w) triples — the apex's own index rides along so a remote hit
+    can credit it on the way back.
 
     Local shortcut: a query (v, w) whose closing edge would live in THIS
     partition (owner(v) == pid — rows are src-range-partitioned) is
@@ -458,10 +478,11 @@ def _count_job(spark, pack_dir, nparts, flush_pairs):
                                mmap_mode="r")
                 nrows = len(srcl)
                 if nrows == 0:
-                    yield pd.DataFrame(
-                        {"pid": [pid], "wedges": [np.int64(0)],
-                         "queries": [np.int64(0)],
-                         "tri": [np.int64(0)]})
+                    if not credits:
+                        yield pd.DataFrame(
+                            {"pid": [pid], "wedges": [np.int64(0)],
+                             "queries": [np.int64(0)],
+                             "tri": [np.int64(0)]})
                     continue
                 ux = np.load(os.path.join(pack_dir, f"ux_{pid}.npy"),
                              mmap_mode="r")
@@ -481,7 +502,7 @@ def _count_job(spark, pack_dir, nparts, flush_pairs):
                               mmap_mode="r")
                 stride = np.int64(len(ux) + 1)
                 # pack-time closing-edge key array, one page-cache copy
-                # shared with the probe job and across reps
+                # shared by both modes and across reps
                 key_rows = np.load(
                     os.path.join(pack_dir, f"krw_{pid}.npy"),
                     mmap_mode="r")
@@ -507,6 +528,17 @@ def _count_job(spark, pack_dir, nparts, flush_pairs):
                 wedges = 0
                 queries = 0
                 tri = 0
+                if credits:
+                    # apex credits: dense over own (u is always local);
+                    # v/w credits: compacted (rank, count) runs
+                    own_cnt = np.zeros(len(own), np.int64)
+                    runs: list = []
+
+                def close(u, v, w):
+                    np.add.at(own_cnt, u, 1)
+                    for r in (v, w):
+                        uq, c = np.unique(r, return_counts=True)
+                        runs.append((uq, c.astype(np.int64)))
 
                 def flush():
                     nonlocal buffered, queries, tri
@@ -518,8 +550,9 @@ def _count_job(spark, pack_dir, nparts, flush_pairs):
                         if not st:
                             continue
                         own_q, ux_q, stride_q, krw_q = st
-                        vl, okv = _positions(own_q, arr[0])
-                        wl, okw = _positions(ux_q, arr[1])
+                        # (v, w) are the last two rows in both modes
+                        vl, okv = _positions(own_q, arr[-2])
+                        wl, okw = _positions(ux_q, arr[-1])
                         ok = okv & okw
                         if not ok.any():
                             continue
@@ -527,6 +560,9 @@ def _count_job(spark, pack_dir, nparts, flush_pairs):
                               + wl[ok].astype(np.int64))
                         _, found = _positions(krw_q, kq)
                         tri += int(found.sum())
+                        if credits and found.any():
+                            hit = np.flatnonzero(ok)[found]
+                            close(arr[0][hit], arr[1][hit], arr[2][hit])
                     bufs.clear()
                     buffered = 0
 
@@ -561,30 +597,52 @@ def _count_job(spark, pack_dir, nparts, flush_pairs):
                                   + dstl64[ilk + k])
                             _, found = _positions(key_rows, kq)
                             tri += int(found.sum())
+                            if credits and found.any():
+                                hit = ilk[found]
+                                close(srcl64[hit], dst_g[hit],
+                                      dst_g[hit + k])
                         rem = ~loc
                         i, qs = i[rem], qs[rem]
                     if not len(i):
                         continue
-                    v = dst_g[i]
-                    w = dst_g[i + k]
+                    cols = [dst_g[i], dst_g[i + k]]
+                    if credits:
+                        cols.insert(0, srcl64[i])
                     order = np.argsort(qs, kind="stable")
-                    qs, v, w = qs[order], v[order], w[order]
+                    qs = qs[order]
+                    cols = np.stack([c[order] for c in cols])
                     qb = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
                     qe = np.r_[qb[1:], len(qs)]
                     for b, e_ in zip(qb, qe):
                         bufs.setdefault(int(qs[b]), []).append(
-                            np.stack([v[b:e_], w[b:e_]]))
-                    buffered += len(v)
+                            cols[:, b:e_])
+                    buffered += len(qs)
                     if buffered >= flush_pairs:
                         flush()
                 flush()
-                yield pd.DataFrame(
-                    {"pid": [pid], "wedges": [np.int64(wedges)],
-                     "queries": [np.int64(queries)],
-                     "tri": [np.int64(tri)]})
+                if not credits:
+                    yield pd.DataFrame(
+                        {"pid": [pid], "wedges": [np.int64(wedges)],
+                         "queries": [np.int64(queries)],
+                         "tri": [np.int64(tri)]})
+                    continue
+                # compact the task's credits into one (rk, cnt) frame
+                nz = np.flatnonzero(own_cnt)
+                parts = [(np.asarray(own, np.int64)[nz], own_cnt[nz])] + runs
+                rk = np.concatenate([p[0] for p in parts])
+                cnt = np.concatenate([p[1] for p in parts])
+                if len(rk):
+                    order = np.argsort(rk, kind="stable")
+                    rk, cnt = rk[order], cnt[order]
+                    first = np.r_[True, rk[1:] != rk[:-1]]
+                    gid = np.cumsum(first) - 1
+                    rk = rk[first]
+                    cnt = np.bincount(gid, weights=cnt).astype(np.int64)
+                    yield pd.DataFrame({"rk": rk, "cnt": cnt})
 
     return _pid_tasks(spark, nparts).mapInPandas(
-        run, schema="pid int, wedges long, queries long, tri long")
+        run, schema="rk long, cnt long" if credits
+        else "pid int, wedges long, queries long, tri long")
 
 
 def csr_triangles(spark, edges, cfg, metrics) -> int | None:
@@ -611,11 +669,87 @@ def csr_triangles(spark, edges, cfg, metrics) -> int | None:
 
     def step(pack_dir, nparts, info, routing):
         t0 = time.time()
-        sent = _count_job(spark, pack_dir, nparts, FLUSH_PAIRS).collect()
+        sent = _wedge_job(spark, pack_dir, nparts, FLUSH_PAIRS).collect()
         return record(time.time() - t0,
                       sum(r["wedges"] for r in sent),
                       sum(r["queries"] for r in sent), info["ne"],
                       sum(r["tri"] for r in sent))
+
+    return csr_pr._run_packed(spark, edges, cfg, metrics,
+                              TRI_TRANSIENT_PREFIXES, step, single=single,
+                              prepare=_prepare_tri_pack)
+
+
+def _ensure_rank_map(spark, edges, pack_dir, nparts):
+    """rank_map.parquet (rk, id) in the pack dir — written once; the
+    rank job is deterministic, so re-running it reproduces exactly the
+    relabel the pack was built with."""
+    from pyspark.sql import functions as F
+
+    path = os.path.join(pack_dir, "rank_map.parquet")
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        return path
+    e = (edges.select("src", "dst")
+         .filter(F.col("src") != F.col("dst")).distinct())
+    d2, ranks, _ = _rank_by_degree(spark, e, nparts)
+    try:
+        ranks.select("rk", "id").write.mode("overwrite").parquet(path)
+    finally:
+        d2.unpersist()
+    return path
+
+
+def csr_triangles_per_vertex(spark, edges, cfg, metrics):
+    """(id, triangles) DataFrame through ``csr_pr._run_packed``, or None
+    when the caller's wedge-join path must run (non-local master above the
+    gate, empty input). Zero-triangle vertices included, like the join
+    path. Both tiers record one ``triangles_vertex_packed`` row."""
+    from pyspark.sql import functions as F
+
+    def record(t0, oriented):
+        metrics.record(kind="triangles_vertex_packed",
+                       mode="tri_vertex_csr_packed",
+                       wall_s=round(time.time() - t0, 3),
+                       edges_oriented=int(oriented))
+
+    def single(tbl):
+        def body(own, srcl, dstl, seg, w, hit, dst):
+            stats, cr = _tri_single(own, srcl, dstl, hit, dst,
+                                    credits=True)
+            # dst ids that are never a src: in no triangle, still rows
+            miss = np.setdiff1d(dst[~hit], own)
+            return stats, {"id": np.r_[own, miss],
+                           "triangles": np.r_[cr, np.zeros(len(miss),
+                                                           np.int64)]}
+
+        t0 = time.time()
+        out, stats, _, _ = csr_pr._driver_local(
+            spark, tbl, "id long, triangles long", body, open_ok=True)
+        record(t0, stats[2])
+        return out
+
+    def step(pack_dir, nparts, info, routing):
+        t0 = time.time()
+        verts = (edges.select(F.col("src").alias("id"))
+                 .union(edges.select(F.col("dst").alias("id")))
+                 .distinct())
+        rank_map = spark.read.parquet(
+            _ensure_rank_map(spark, edges, pack_dir, nparts))
+        credits = (_wedge_job(spark, pack_dir, nparts, FLUSH_PAIRS,
+                              credits=True)
+                   .groupBy("rk").agg(F.sum("cnt").alias("triangles")))
+        counted = credits.join(rank_map, "rk").select("id", "triangles")
+        out = verts.join(counted, "id", "left").select(
+            "id",
+            F.coalesce("triangles", F.lit(0))
+            .cast("long").alias("triangles"))
+        if not cfg.pack_cache_dir:
+            # no pack cache: the result is a lazy plan over pack files
+            # that the runner removes on return — materialize
+            # executor-side (truncates lineage past the pack reads)
+            out = out.localCheckpoint(eager=True)
+        record(t0, info["ne"])
+        return out
 
     return csr_pr._run_packed(spark, edges, cfg, metrics,
                               TRI_TRANSIENT_PREFIXES, step, single=single,

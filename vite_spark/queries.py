@@ -332,9 +332,9 @@ FROM (SELECT DISTINCT src AS id FROM edges) v LEFT JOIN cnt c USING (id)"""
 def q_clustering_coefficient(spark, sf_dir):
     """Per-vertex local clustering coefficient 2·T(v)/(d(v)·(d(v)−1))
     on the simple undirected graph (0.0 when d < 2) — derived from the
-    per-vertex triangle counts (at driver scale the PACKED per-vertex
-    kernel, kernels/csr_tri_vertex.py) and the distinct-neighbor degree.
-    Both engines evaluate the identical double expression on exact
+    per-vertex triangle counts (kernels/csr_tri.csr_triangles_per_vertex,
+    whose driver tier takes the sf0.01 input) and the distinct-neighbor
+    degree. Both engines evaluate the identical double expression on exact
     int64 inputs, so the values hash-match bit-for-bit."""
     from vite_spark.algos.triangles import triangles_per_vertex
 
