@@ -102,10 +102,9 @@ def test_et_abort_on_packed_path(spark, kernel):
 def test_colored_engine_matches_oracle(spark, kernel):
     # karate-scale: the distributed colored path chains ~4 joins per color
     # bucket per superstep — parity is scale-free, so test it small.
-    # kernel="packed" forces the per-color-bucket PACKED loop
-    # (kernels/csr.py colored block, r2 VERDICT next#6); kernel="sharded"
-    # forces the bucketed SHARDED kernel (linear bucket-step protocol,
-    # kernels/csr_sharded.py — r3 VERDICT next#6).
+    # kernel="packed" forces the mirror kernel and kernel="sharded" the
+    # sharded one, each one job per color bucket on the linear
+    # bucket-step protocol (kernels/csr.py, kernels/csr_sharded.py).
     s, d, w, nv = fx.karate()
     edges = fx.to_spark_edges(spark, (s, d, w, nv))
     colors_df, _ = multi_hash_coloring(spark, edges)
@@ -125,6 +124,44 @@ def test_colored_engine_matches_oracle(spark, kernel):
     assert pres.iters == o_iters
     assert pres.q == pytest.approx(o_q, abs=1e-6)
     assert np.array_equal(_labels(pres.assignment, nv), o_labels)
+
+
+@pytest.mark.parametrize("kernel", ["packed", "sharded"])
+@pytest.mark.parametrize("et", [0, 1])
+def test_one_bucket_colored_matches_plain(spark, kernel, et):
+    """Colored and plain phases are one protocol on the linear bucket
+    step: colors that put every vertex in one bucket give the plain
+    phase's labels, Q, iterations and per-superstep q/moved rows, on the
+    mirror and on the sharded kernel."""
+    from pyspark.sql import functions as F
+
+    from vite_spark.runtime.metrics import MetricsCollector
+
+    s, d, w, nv, _ = fx.planted_partition()
+    edges = fx.to_spark_edges(spark, (s, d, w, nv))
+    one = edges.select(F.col("src").alias("id")).distinct().withColumn(
+        "color", F.lit(0).cast("long"))
+
+    def run(colors):
+        m = MetricsCollector()
+        pres = louvain_phase(
+            spark, edges, threshold=1e-6, metrics=m, colors=colors,
+            cfg=EngineConfig(local_phase_max_edges=0, max_total_iterations=8,
+                             early_term=et,
+                             csr_force_sharded=kernel == "sharded"),
+        )
+        steps = [(r["iter"], r["q"], r["moved"], r["mode"]) for r in m.rows
+                 if r.get("kind") == "superstep"]
+        return _labels(pres.assignment, nv), pres.q, pres.iters, steps
+
+    plain, colored = run(None), run(one)
+    assert np.array_equal(plain[0], colored[0])
+    assert plain[1:3] == colored[1:3]
+    assert [r[:3] for r in plain[3]] == [r[:3] for r in colored[3]]
+    assert len(plain[3]) >= 3
+    assert {r[3] for r in plain[3]} == {
+        "csr_sharded" if kernel == "sharded" else "csr_packed"}
+    assert {r[3] for r in colored[3]} == {"csr_colored"}
 
 
 @pytest.mark.parametrize("kernel", ["join", "packed", "sharded"])

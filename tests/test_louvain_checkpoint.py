@@ -377,12 +377,11 @@ def test_driver_checkpoint_resumes(spark, tmp_path, monkeypatch):
     assert res.iters_per_phase == ref.iters_per_phase
 
 
-@pytest.mark.parametrize("opt", ["plain", "checkpoint"])
+@pytest.mark.parametrize("opt", ["plain", "checkpoint", "coloring"])
 def test_driver_run_leaves_no_state(spark, tmp_path, opt):
     """No persistent RDD created by the call and no new vite_* scratch
-    entry remain after a run in the driver (the input pin is released).
-    Not with coloring: multi_hash_coloring returns a localCheckpointed
-    frame, which no unpersist releases."""
+    entry remain after a run in the driver (the input pin, the coloring
+    rounds' cuts and the phase colors are released)."""
     import tempfile
 
     def scratch():

@@ -27,6 +27,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+from vite_spark.session import release
+
 MAX_COVG = 70      # coloring.hpp:69-71
 DEFAULT_NHASH = 4  # maxColors/2 with maxColors=8 (main.cpp:80,269)
 
@@ -78,7 +80,9 @@ def multi_hash_coloring(
     single_iteration: bool = False,
     max_rounds: int = 64,
 ) -> tuple[DataFrame, int]:
-    """Returns (colors(id, color) with -1 for uncolored, num_colors=nextColor)."""
+    """Returns (colors(id, color) with -1 for uncolored, num_colors=nextColor).
+    ``colors`` is a ``localCheckpoint`` cut: the caller releases it with
+    ``session.release`` after its last reader."""
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).persist()
     verts = (
         edges.select(F.col("src").alias("id")).distinct().persist()
@@ -184,7 +188,7 @@ def multi_hash_coloring(
             )
             .localCheckpoint(eager=True)
         )
-        colors.unpersist()
+        release(colors)     # round 1's persist, later rounds' cuts
         h.unpersist()
         colors = colors_next
 

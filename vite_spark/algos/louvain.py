@@ -46,6 +46,7 @@ from vite_spark.graph import weighted_degrees, self_loop_weights
 from vite_spark.kernels.ids import dense_ids
 from vite_spark.runtime.metrics import MetricsCollector
 from vite_spark.runtime import checkpoint as ckpt
+from vite_spark.session import release
 
 # Edge rows per partition of a distributed Louvain level (only caps the
 # session's count). The sweep is the heaviest per-edge packed kernel
@@ -72,11 +73,11 @@ class PhaseResult:
     iters: int
     nv: int = 0
     converged: bool = True
-    # Fused end-of-phase outputs from the mirror kernel (see
-    # kernels/csr.csr_labels_coarse_packed): the densely-renumbered
+    # Fused end-of-phase outputs from the mirror kernel, plain or colored
+    # (see kernels/csr.csr_labels_coarse_packed): the densely-renumbered
     # (id, label) table and the coarse super-edge table for the next
     # level. None when the phase ran a path without the fusion (sharded,
-    # colored, join, local) — the caller then uses the generic coarsen.
+    # join, local) — the caller then uses the generic coarsen.
     renum_labels: DataFrame | None = None
     coarse_edges: DataFrame | None = None
 
@@ -478,6 +479,11 @@ def _csr_phase(
     bit-identical to the reference protocol (pytest-enforced), at the cost
     of one extra (discarded) sweep per phase.
 
+    One loop runs both kernels in both modes: iteration k is one job per
+    color bucket (``buckets = [None]`` uncolored), on the kernels' linear
+    step counter (k-1)·nb + bi + 1; the protocol check runs after bucket
+    0 of iteration k, and the labels replay labels_at·nb steps.
+
     State representation (cfg.csr_mirror_max_ids boundary):
     - MIRROR (kernels/csr.py): every worker holds O(nv_dense) state arrays
       advanced by move deltas — fastest constant, bounded by per-worker
@@ -494,8 +500,8 @@ def _csr_phase(
 
     Checkpointing (cfg.checkpoint_dir): the mirror kernel's sweep tasks
     write their owned slices and the driver commits iteration j after job
-    j+1, when it accepts j (runtime/checkpoint.py); the sharded and
-    colored kernels do not checkpoint, so they decline.
+    j+1, when it accepts j (runtime/checkpoint.py); sharded and colored
+    phases do not checkpoint, so they decline.
 
     ``gate`` (the caller's tier row) receives the ``tier`` this phase
     runs (packed/sharded), the pack's ``nparts``, and a ``reason`` when
@@ -517,9 +523,8 @@ def _csr_phase(
     import tempfile
 
     from vite_spark.kernels.csr import (
-        csr_labels_colored,
+        csr_labels_coarse_packed,
         csr_labels_packed,
-        csr_superstep_colored,
         csr_superstep_packed,
         pack_colors,
         pack_csr_partitions,
@@ -608,20 +613,13 @@ def _csr_phase(
         const = 1.0 / two_m
         gate["nparts"] = nparts
 
+        buckets = [None]
         if colors is not None:
-            # colored iteration = one packed job per color bucket; bucket
-            # deltas refresh cd/cs while curr stays iteration-start
-            # (kernels/csr.py colored block). Same one-job-late modularity
-            # protocol: iteration j is judged after bucket 0 of iteration
-            # j+1 reports the a-term at S_j.
-            packed_ok = (
-                pack_colors_sharded(colors.select("id", "color"), pack_dir,
-                                    nparts)
-                if sharded
-                else pack_colors(colors.select("id", "color"), pack_dir,
-                                 nparts)
-            )
-            if not packed_ok:
+            # colored iteration = one packed job per color bucket on the
+            # kernels' linear step counter; bucket moves refresh cd/cs
+            # while curr stays iteration-start (kernels/csr.py)
+            pack = pack_colors_sharded if sharded else pack_colors
+            if not pack(colors.select("id", "color"), pack_dir, nparts):
                 # colors misaligned with the edge pack (missing/extra
                 # vertices) → shuffle-join colored path, same semantics
                 return None
@@ -629,158 +627,81 @@ def _csr_phase(
                 r["color"] for r in colors.select("color").distinct().collect()
             )
             buckets = [c for c in vals if c >= 0] + ([-1] if -1 in vals else [])
-            nb = len(buckets)
-            et = cfg.early_term
-            e_terms, walls, moveds, frozens = {}, {}, {}, {}
-            prev_mod = lower
-            k = 0
-            labels_at, q_final, iters_final = 0, lower, 0
-            done = False
-            while not done:
-                k += 1
-                t0 = time.time()
-                e_k, moved_k, a_prev = 0.0, 0, 0.0
-                for bi, b in enumerate(buckets):
-                    if sharded:
-                        sent = csr_superstep_sharded(
-                            spark, pack_dir, nparts, nv_dense, const,
-                            (k - 1) * nb + bi + 1, routing, early_term=et,
-                            bucket=(k, bi, nb, b),
-                        ).collect()
-                    else:
-                        sent = csr_superstep_colored(
-                            spark, pack_dir, nparts, nv_dense, const, k, bi,
-                            nb, b, early_term=et,
-                        ).collect()
-                    e_k += float(sum(r["e_part"] for r in sent))
-                    moved_k += int(sum(r["moved"] for r in sent))
-                    if bi == 0:
-                        a_prev = float(sum(r["a_part"] for r in sent))
-                        frozens[k] = int(sum(r["frozen"] for r in sent))
-                        if k >= 2:
-                            j = k - 1
-                            mod_j = abs(
-                                e_terms[j] * const - a_prev * const * const
-                            )
-                            metrics.record(
-                                kind="superstep", level=level, iter=j,
-                                q=mod_j, delta_q=mod_j - prev_mod,
-                                moved=moveds[j], active=nv - frozens[j],
-                                edges_processed=ne, wall_s=walls[j],
-                                edges_per_sec=(
-                                    ne / walls[j] if walls[j] > 0 else 0.0
-                                ),
-                                mode="csr_colored",
-                            )
-                            if et in (3, 4) and frozens[j] >= 0.9 * nv:
-                                # t3/t4 phase abort — checked before the
-                                # threshold break with the PRE-iteration
-                                # frozen count, the oracle/join order
-                                labels_at = max(j - 2, 0)
-                                q_final, iters_final = prev_mod, j
-                                done = True
-                                break
-                            if (mod_j - prev_mod) < threshold:
-                                labels_at = max(j - 2, 0)
-                                q_final, iters_final = prev_mod, j
-                                done = True
-                                break
-                            prev_mod = mod_j if mod_j > lower else lower
-                            if j >= cfg.max_total_iterations:
-                                labels_at = j - 1
-                                q_final, iters_final = prev_mod, j
-                                done = True
-                                break
-                if not done:
-                    walls[k] = time.time() - t0
-                    e_terms[k] = e_k
-                    moveds[k] = moved_k
-            if sharded:
-                # labels replay is the PLAIN sharded one over linear
-                # bucket steps: labels_at full iterations = labels_at·nb
-                # self-move files (each vertex moves at most once per
-                # iteration, so later iterations supersede exactly)
-                lab = csr_labels_sharded(
-                    spark, pack_dir, nparts, labels_at * nb
-                ).localCheckpoint(eager=True)
-            else:
-                lab = csr_labels_colored(
-                    spark, pack_dir, nparts, nv_dense, labels_at, nb
-                ).localCheckpoint(eager=True)
-            return PhaseResult(
-                assignment=lab, q=float(q_final), iters=iters_final, nv=nv
-            )
-
+        nb = len(buckets)
+        mode = ("csr_colored" if colors is not None
+                else "csr_sharded" if sharded else "csr_packed")
         et = cfg.early_term
-        e_terms: dict = {}
+        # per-iteration sums of the sentinel columns over its buckets
+        sums: dict = {}
         walls: dict = {}
-        moveds: dict = {}
-        frozens: dict = {}
         prev_mod = lower
-        k = 0
-        labels_at = 0
-        q_final = lower
-        iters_final = 0
         ck, every = cfg.checkpoint_dir, cfg.checkpoint_every
         ck_state = {"two_m": two_m, "nv": nv, "ne": ne, "early_term": et}
-        while True:
+        k, stop = 0, None
+        while stop is None:
             k += 1
             t0 = time.time()
             if ck and ckpt._due(k, every):
                 ckpt.clear_superstep(ck, level, k)
-            # moves travel worker-to-worker via per-(step, pid) files; the
-            # driver's job result is nparts scalar sentinel rows only
-            if sharded:
-                # owner-state advance is normally FUSED into the sweep
-                # job (each partition's task is the unique writer of its
-                # own ost file; racing readers recompute bit-identically
-                # from the (o, k-2) cache + flow partials) — but after a
-                # MOVE-HEAVY superstep that racing recompute replays
-                # O(nworkers × flow volume), so the driver pays the
-                # advance job's ~2 s fixed cost only when the sentinel
-                # move count says the duplicated merge work would cost
-                # more (measured at 24M vertices: 81 s fused vs ~12 s
-                # with the barrier on the first post-bulk-move step).
-                if k >= 2 and moveds[k - 1] > max(nv // 50, 1):
-                    csr_advance_sharded(spark, pack_dir, nparts, k).collect()
-                sent = csr_superstep_sharded(
-                    spark, pack_dir, nparts, nv_dense, const, k,
-                    routing, early_term=et,
-                ).collect()
-            else:
-                sent = csr_superstep_packed(
-                    spark, pack_dir, nparts, nv_dense, const, k,
-                    early_term=et,
-                    checkpoint=(ck, level, every) if ck else None,
-                ).collect()
-            walls[k] = time.time() - t0
-            e_terms[k] = float(sum(r["e_part"] for r in sent))
-            a_prev = float(sum(r["a_part"] for r in sent))
-            moveds[k] = int(sum(r["moved"] for r in sent))
-            frozens[k] = int(sum(r["frozen"] for r in sent))
-
-            if k >= 2:
+            sums[k] = dict.fromkeys(("e_part", "a_part", "moved", "frozen"), 0)
+            for bi, b in enumerate(buckets):
+                # moves travel worker-to-worker via per-(step, pid) files;
+                # the driver's job result is nparts scalar sentinel rows
+                step = (k - 1) * nb + bi + 1
+                bucket = None if b is None else (k, bi, nb, b)
+                if sharded:
+                    # owner-state advance is normally FUSED into the sweep
+                    # job (each partition's task is the unique writer of
+                    # its own ost file; racing readers recompute
+                    # bit-identically from the (o, k-2) cache + flow
+                    # partials) — but after a MOVE-HEAVY superstep that
+                    # racing recompute replays O(nworkers × flow volume),
+                    # so the driver pays the advance job's ~2 s fixed cost
+                    # only when the sentinel move count says the
+                    # duplicated merge work would cost more (measured at
+                    # 24M vertices: 81 s fused vs ~12 s with the barrier
+                    # on the first post-bulk-move step). Uncolored only
+                    # (csr_superstep_sharded).
+                    if (bucket is None and k >= 2
+                            and sums[k - 1]["moved"] > max(nv // 50, 1)):
+                        csr_advance_sharded(spark, pack_dir, nparts, k).collect()
+                    sent = csr_superstep_sharded(
+                        spark, pack_dir, nparts, nv_dense, const, step,
+                        routing, early_term=et, bucket=bucket,
+                    ).collect()
+                else:
+                    sent = csr_superstep_packed(
+                        spark, pack_dir, nparts, nv_dense, const, step,
+                        early_term=et,
+                        checkpoint=(ck, level, every) if ck else None,
+                        bucket=bucket,
+                    ).collect()
+                walls[k] = time.time() - t0
+                for c in sums[k]:
+                    sums[k][c] += sum(r[c] for r in sent)
+                if bi or k < 2:
+                    continue
+                # the one protocol check, after bucket 0 of iteration k
+                # (its a-term is the post-move a-term of iteration j)
                 j = k - 1
-                mod_j = abs(e_terms[j] * const - a_prev * const * const)
+                e_j, frozen_j = sums[j]["e_part"], sums[j]["frozen"]
+                mod_j = abs(e_j * const - sums[k]["a_part"] * const * const)
                 metrics.record(
                     kind="superstep", level=level, iter=j, q=mod_j,
-                    delta_q=mod_j - prev_mod, moved=moveds[j],
-                    active=nv - frozens[j],
+                    delta_q=mod_j - prev_mod, moved=sums[j]["moved"],
+                    active=nv - frozen_j,
                     edges_processed=ne, wall_s=walls[j],
                     edges_per_sec=ne / walls[j] if walls[j] > 0 else 0.0,
-                    mode="csr_sharded" if sharded else "csr_packed",
+                    mode=mode,
                 )
-                if et in (3, 4) and frozens[j] >= 0.9 * nv:
+                if ((et in (3, 4) and frozen_j >= 0.9 * nv)
+                        or (mod_j - prev_mod) < threshold):
                     # t3/t4 phase abort (join-path order: after the j
-                    # metrics, before the threshold check) — same return
-                    # protocol as the convergence break
-                    labels_at, q_final, iters_final = max(j - 2, 0), prev_mod, j
-                    break
-                if (mod_j - prev_mod) < threshold:
-                    # reference break at iteration j returns pastComm =
-                    # state two supersteps back (identity within the
-                    # first two) and prevMod
-                    labels_at, q_final, iters_final = max(j - 2, 0), prev_mod, j
+                    # metrics, before the threshold check, with the
+                    # PRE-iteration frozen count) or the reference break
+                    # at iteration j: pastComm = state two iterations back
+                    # (identity within the first two) and prevMod
+                    stop = (max(j - 2, 0), prev_mod, j)
                     break
                 prev_mod = mod_j if mod_j > lower else lower
                 if ck and ckpt._due(j, every):
@@ -794,43 +715,44 @@ def _csr_phase(
                 if j >= cfg.max_total_iterations:
                     # reference max-iter break happens AFTER rotation:
                     # past = S_{j-1}, prevMod = mod_j
-                    labels_at, q_final, iters_final = j - 1, prev_mod, j
+                    stop = (j - 1, prev_mod, j)
                     break
-
+        labels_at, q_final, iters_final = stop
+        # labels replay whole iterations: labels_at·nb linear steps
+        # (each vertex moves at most once per iteration)
+        n_steps = labels_at * nb
         if sharded:
             lab = csr_labels_sharded(
-                spark, pack_dir, nparts, labels_at
+                spark, pack_dir, nparts, n_steps
             ).localCheckpoint(eager=True)
+        elif (
+            coarsen_gain_over is not None
+            and (float(q_final) - coarsen_gain_over) > threshold
+        ):
+            # caller will coarsen (same gain test it applies): fused
+            # labels + dense renumber + coarse partials in one kernel
+            # job — see csr_labels_coarse_packed
+            mixed = csr_labels_coarse_packed(
+                spark, pack_dir, nparts, nv_dense, n_steps
+            ).localCheckpoint(eager=True)
+            lab = mixed.filter(F.col("kind") == 0).select(
+                F.col("a").alias("id"), F.col("b").alias("comm")
+            )
+            renum = mixed.filter(F.col("kind") == 2).select(
+                F.col("a").alias("id"), F.col("b").alias("label")
+            )
+            coarse = (
+                mixed.filter(F.col("kind") == 1)
+                .groupBy(F.col("a").alias("src"), F.col("b").alias("dst"))
+                .agg(F.sum("w").alias("weight"))
+            )
+            return PhaseResult(
+                assignment=lab, q=float(q_final), iters=iters_final,
+                nv=nv, renum_labels=renum, coarse_edges=coarse,
+            )
         else:
-            if (
-                coarsen_gain_over is not None
-                and (float(q_final) - coarsen_gain_over) > threshold
-            ):
-                # caller will coarsen (same gain test it applies):
-                # fused labels + dense renumber + coarse partials in one
-                # kernel job — see csr_labels_coarse_packed
-                from vite_spark.kernels.csr import csr_labels_coarse_packed
-
-                mixed = csr_labels_coarse_packed(
-                    spark, pack_dir, nparts, nv_dense, labels_at
-                ).localCheckpoint(eager=True)
-                lab = mixed.filter(F.col("kind") == 0).select(
-                    F.col("a").alias("id"), F.col("b").alias("comm")
-                )
-                renum = mixed.filter(F.col("kind") == 2).select(
-                    F.col("a").alias("id"), F.col("b").alias("label")
-                )
-                coarse = (
-                    mixed.filter(F.col("kind") == 1)
-                    .groupBy(F.col("a").alias("src"), F.col("b").alias("dst"))
-                    .agg(F.sum("w").alias("weight"))
-                )
-                return PhaseResult(
-                    assignment=lab, q=float(q_final), iters=iters_final,
-                    nv=nv, renum_labels=renum, coarse_edges=coarse,
-                )
             lab = csr_labels_packed(
-                spark, pack_dir, nparts, nv_dense, labels_at
+                spark, pack_dir, nparts, nv_dense, n_steps
             ).localCheckpoint(eager=True)
         return PhaseResult(
             assignment=lab, q=float(q_final), iters=iters_final, nv=nv
@@ -1416,6 +1338,7 @@ def louvain(
     comm_all: DataFrame | None = None  # (id, label) for original vertices
     drv: _DriverLevels | None = None   # set once the run is in the driver
     pin: DataFrame | None = None       # the level's edges, pinned here
+    colors_cut: DataFrame | None = None  # phase 0's colors (a cut)
     prev_phase_mod = -1.0
     phase = 0
     short_phase = 0
@@ -1477,6 +1400,7 @@ def louvain(
                 from vite_spark.algos.coloring import multi_hash_coloring
 
                 phase_colors, _ = multi_hash_coloring(spark, cur_edges)
+                colors_cut = phase_colors
             if probe is not None and _fits_driver(int(probe["ne"] or 0), cfg):
                 tbl = _collect_upto(cur_edges, EDGE_COLS)
             if tbl is not None:
@@ -1581,6 +1505,10 @@ def louvain(
     finally:
         if pin is not None:
             pin.unpersist()
+        if colors_cut is not None:
+            # every reader of the colors is done: the level's outputs
+            # were cut eagerly (comm_all, the coarse edges) or collected
+            release(colors_cut)
 
     if drv is not None:
         comm_all = drv.frame()

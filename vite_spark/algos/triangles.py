@@ -32,18 +32,15 @@ def _oriented(edges: DataFrame) -> DataFrame:
     ).select("src", "dst")
 
 
-def _closed_wedges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(o, tri): the persisted oriented table and its closed wedges
-    (u, v, w) — wedge u→v→w of the oriented self-join whose closing edge
-    u→w exists. The caller unpersists ``o``."""
-    o = _oriented(edges).persist()
+def _closed_wedges(o: DataFrame) -> DataFrame:
+    """The closed wedges (u, v, w) of the oriented table ``o``: wedge
+    u→v→w of its self-join whose closing edge u→w exists."""
     wedges = o.alias("a").join(
         o.alias("b"), F.col("a.dst") == F.col("b.src")
     ).select(F.col("a.src").alias("u"), F.col("a.dst").alias("v"), F.col("b.dst").alias("w"))
-    tri = wedges.join(
+    return wedges.join(
         o.select(F.col("src").alias("u"), F.col("dst").alias("w")), ["u", "w"]
     )
-    return o, tri
 
 
 def triangle_count(spark: SparkSession, edges: DataFrame,
@@ -68,8 +65,9 @@ def triangle_count(spark: SparkSession, edges: DataFrame,
         if res is not None:
             return res
 
-    o, tri = _closed_wedges(edges)
-    n = tri.count()
+    # the pin serves the count's three reads of the oriented table
+    o = _oriented(edges).persist()
+    n = _closed_wedges(o).count()
     o.unpersist()
     return int(n)
 
@@ -95,12 +93,11 @@ def triangles_per_vertex(spark: SparkSession, edges: DataFrame,
         if res is not None:
             return res
 
-    o, tri = _closed_wedges(edges)
-    tri = tri.persist()
+    # a lazy plan (no pin outlives the call): one closed-wedge plan,
+    # each triangle credited to u, v and w by one explode
     counts = (
-        tri.select(F.col("u").alias("id"))
-        .union(tri.select(F.col("v").alias("id")))
-        .union(tri.select(F.col("w").alias("id")))
+        _closed_wedges(_oriented(edges))
+        .select(F.explode(F.array("u", "v", "w")).alias("id"))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
@@ -112,6 +109,4 @@ def triangles_per_vertex(spark: SparkSession, edges: DataFrame,
     out = verts.join(counts, "id", "left").select(
         "id", F.coalesce("triangles", F.lit(0)).cast("long").alias("triangles")
     )
-    tri.unpersist()
-    o.unpersist()
     return out

@@ -22,6 +22,11 @@ assembled once per worker from the pack files. This is the Spark
 re-expression of Vite's model (louvain.cpp:2583-2954): static local CSR
 per rank, only the mutable community state is exchanged per iteration.
 
+Colored phases run the same job once per color bucket: ``step`` is the
+linear bucket counter, so one move-file chain, one ET chain and one
+replay serve both modes (plain = one bucket per iteration; the sharded
+kernel's protocol, kernels/csr_sharded.py).
+
 Cluster contract: pack AND move files require that every superstep task
 can read the files any partition wrote — true in local mode (one
 filesystem) and on any shared-scratch cluster; the caller
@@ -406,14 +411,17 @@ def _load_moves(pack_dir: str, nparts: int, step: int):
     return mv[0], mv[1]
 
 
-def _apply_delta(st: dict, mid: np.ndarray, mnew: np.ndarray, nv: int) -> None:
-    """Advance the mirror by one superstep's moves. bincount (two O(nv)
-    passes) beats np.add.at's scattered writes once the delta is a few % of
-    nv; below that the scatter wins."""
+def _apply_delta(st: dict, mid: np.ndarray, mnew: np.ndarray, nv: int,
+                 scatter: bool = False) -> None:
+    """Advance the mirror's aggregates cd/cs by one move file (curr is
+    the caller's: it may wait for the iteration's end). bincount (two
+    O(nv) passes) beats np.add.at's scattered writes once the delta is a
+    few % of nv; below that the scatter wins. ``scatter`` forces the
+    scatter: the colored oracle refreshes its bucket aggregates with
+    np.add.at, so colored phases stay bit-identical to it."""
     mold = st["curr"][mid]
-    st["curr"][mid] = mnew
     wts = st["vdeg"][mid]
-    if len(mid) * 32 < nv:
+    if scatter or len(mid) * 32 < nv:
         np.add.at(st["cd"], mnew, wts)
         np.add.at(st["cs"], mnew, 1)
         np.subtract.at(st["cd"], mold, wts)
@@ -426,17 +434,21 @@ def _apply_delta(st: dict, mid: np.ndarray, mnew: np.ndarray, nv: int) -> None:
 
 
 def _replayed_state(pack_dir: str, nparts: int, nv_dense: int, n_deltas: int,
-                    cache: bool = True) -> dict:
-    """State after applying move files 1..n_deltas to the singleton init
-    (louvain.cpp:2564-2581). With cache=True the worker's persistent mirror
-    is advanced incrementally (typically by exactly one delta); cache=False
-    replays fresh (used by the label job, which may need an EARLIER state
-    than the cached one)."""
+                    nb: int = 1, cache: bool = True) -> dict:
+    """State after applying move files 1..n_deltas (linear bucket steps,
+    ``nb`` per iteration) to the singleton init (louvain.cpp:2564-2581):
+    cd/cs advance after every bucket, curr only at iteration boundaries
+    (the iteration's moves wait in ``pending``), so at nb = 1 every file
+    advances both. With cache=True the worker's persistent mirror is
+    advanced incrementally (typically by exactly one file); cache=False
+    replays fresh (used by the label jobs, which may need an EARLIER
+    state than the cached one)."""
     st = _WORKER_STATE.get(pack_dir) if cache else None
     if st is None or st["applied"] > n_deltas:
         vdeg, self_w, present = _assemble_static(pack_dir, nparts, nv_dense)
         st = {
             "applied": 0,
+            "pending": [],
             "curr": np.arange(nv_dense, dtype=np.int64),
             "cd": vdeg.copy(),
             "cs": present.astype(np.int64),
@@ -449,7 +461,14 @@ def _replayed_state(pack_dir: str, nparts: int, nv_dense: int, n_deltas: int,
             _WORKER_STATE[pack_dir] = st
     for j in range(st["applied"] + 1, n_deltas + 1):
         mid, mnew = _load_moves(pack_dir, nparts, j)
-        _apply_delta(st, mid, mnew, nv_dense)
+        # mold is the iteration-start community: each vertex is swept in
+        # exactly one bucket, so its curr has not moved yet
+        _apply_delta(st, mid, mnew, nv_dense, scatter=nb > 1)
+        st["pending"].append((mid, mnew))
+        if j % nb == 0:
+            for mid_p, mnew_p in st["pending"]:
+                st["curr"][mid_p] = mnew_p
+            st["pending"] = []
         st["applied"] = j
     return st
 
@@ -534,6 +553,7 @@ def csr_superstep_packed(
     step: int,
     early_term: int = 0,
     checkpoint: tuple | None = None,
+    bucket: tuple | None = None,
 ) -> DataFrame:
     """Superstep ``step`` (1-based) over packed partitions with
     delta-replayed worker state.
@@ -546,24 +566,38 @@ def csr_superstep_packed(
     partition's moves to mv_{step}_{pid}.npy, and returns exactly one
     scalar sentinel row — the driver never sees a move row.
 
+    ``bucket = (k_iter, bi, n_buckets, bucket_color)`` runs this job as
+    color bucket ``bi`` of colored iteration ``k_iter``, with ``step`` the
+    linear bucket counter (k_iter-1)·n_buckets + bi + 1 (the protocol of
+    csr_sharded.csr_superstep_sharded; plain mode is (step, 0, 1)): the
+    sweep takes only own rows of ``bucket_color``, against the
+    iteration-start curr and the cd/cs refreshed by the earlier buckets
+    (_replayed_state). a_part, the frozen count and the frozen
+    clusterWeight e-term ride bucket-0 sentinels, once per iteration.
+
     With early_term != 0 the sweep SKIPS rows of frozen src vertices (the
     work saving of the heuristic), frozen vertices contribute their pinned
     frozen_cw to the e-term, and the sentinel carries the frozen count for
-    the driver's t3/t4 phase-abort check. Delta replay and labels are
-    UNCHANGED: frozen vertices simply stop producing moves, and an
-    ET-pinned pastComm equals the frozen vertex's stationary label (it
-    froze only after 2 static iterations, so curr at every j ≥ f-2 equals
-    the pinned past) — the labels_at = j-2 replay stays exact under ET.
+    the driver's t3/t4 phase-abort check. The ET chain is per linear step
+    (each active vertex is in one bucket, so its record advances once per
+    iteration); the freeze rules count iterations (k_iter). Delta replay
+    and labels are UNCHANGED: frozen vertices simply stop producing
+    moves, and an ET-pinned pastComm equals the frozen vertex's
+    stationary label (it froze only after 2 static iterations, so curr at
+    every j ≥ f-2 equals the pinned past) — the labels_at = j-2 replay
+    stays exact under ET.
 
-    ``checkpoint`` = (dir, level, every) makes each task write its owned
-    slice of the superstep checkpoint (runtime/checkpoint.py layout, one
-    parquet file per partition): S_{step-1} is the ``assignment`` of
-    iter step-1 and the ``past`` of iter step; under ET the ``past`` and
-    ``act`` of iter step come from the advanced ET state. The driver
-    commits (state.json + _COMPLETE) once it accepts the iteration.
+    ``checkpoint`` = (dir, level, every) (plain mode only) makes each task
+    write its owned slice of the superstep checkpoint
+    (runtime/checkpoint.py layout, one parquet file per partition):
+    S_{step-1} is the ``assignment`` of iter step-1 and the ``past`` of
+    iter step; under ET the ``past`` and ``act`` of iter step come from
+    the advanced ET state. The driver commits (state.json + _COMPLETE)
+    once it accepts the iteration.
 
     Output schema: (pid, e_part, a_part, moved, frozen).
     """
+    k_iter, bi, nb = (step, 0, 1) if bucket is None else bucket[:3]
 
     def run(pdf_iter):
         import os
@@ -580,40 +614,35 @@ def csr_superstep_packed(
         for pdf in pdf_iter:
             for pid in pdf["pid"]:
                 pid = int(pid)
-                st = _replayed_state(pack_dir, nparts, nv_dense, step - 1)
+                st = _replayed_state(pack_dir, nparts, nv_dense, step - 1, nb)
                 own = np.load(os.path.join(pack_dir, f"own_{pid}.npy"))
-                a_part = float((st["cd"][own] ** 2).sum())
+                a_part = float((st["cd"][own] ** 2).sum()) if bi == 0 else 0.0
                 et = _load_et(pack_dir, pid, step - 1, own) if early_term else None
                 shard(step - 1, "assignment", id=own, comm=st["curr"][own])
                 if not early_term:
                     shard(step, "past", id=own, comm=st["curr"][own])
-                dst = np.load(os.path.join(pack_dir, f"dst_{pid}.npy"),
-                              mmap_mode="r")
-                if len(dst) == 0:
-                    _atomic_save(
-                        os.path.join(pack_dir, f"mv_{step}_{pid}.npy"),
-                        np.empty((2, 0), np.int64),
-                    )
-                    if early_term:
-                        _save_et(pack_dir, pid, step, et)
-                    yield pd.DataFrame({
-                        "pid": [pid], "e_part": [0.0], "a_part": [a_part],
-                        "moved": [np.int64(0)], "frozen": [np.int64(0)],
-                    })
-                    continue
                 # mmap views, never copied: edge bytes are read straight
                 # off the shared page cache (no per-superstep 48 MB/task
                 # fresh-page faulting — see _ARENA note)
-                srcl = np.load(os.path.join(pack_dir, f"srcl_{pid}.npy"),
-                               mmap_mode="r")
-                w = np.load(os.path.join(pack_dir, f"w_{pid}.npy"),
+                srcl, dst, w = (
+                    np.load(os.path.join(pack_dir, f"{name}_{pid}.npy"),
                             mmap_mode="r")
+                    for name in ("srcl", "dst", "w"))
+                rows = None
+                if bucket is not None:
+                    col = np.load(os.path.join(pack_dir, f"col_{pid}.npy"))
+                    rows = col[srcl] == bucket[3]
                 n_frozen = 0
                 if early_term:
-                    n_frozen = int((~et["active"]).sum())
-                    if n_frozen:
-                        rows = et["active"][srcl]   # skip frozen src rows
-                        srcl, dst, w = srcl[rows], dst[rows], w[rows]
+                    inactive = ~et["active"]
+                    n_inactive = int(inactive.sum())
+                    if bi == 0:
+                        n_frozen = n_inactive
+                    if n_inactive:      # skip frozen src rows
+                        act = et["active"][srcl]
+                        rows = act if rows is None else rows & act
+                if rows is not None:
+                    srcl, dst, w = srcl[rows], dst[rows], w[rows]
                 if len(dst):
                     ids, cc, new_comm, e_cc = sweep_partition_np(
                         None, dst, w,
@@ -631,9 +660,10 @@ def csr_superstep_packed(
                 )
                 e_part = float(e_cc.sum())
                 if early_term:
-                    e_part += float(et["frozen_cw"][~et["active"]].sum())
+                    if bi == 0:
+                        e_part += float(et["frozen_cw"][inactive].sum())
                     swept = np.searchsorted(own, ids)
-                    et = _advance_et(et, step, early_term, cc, new_comm,
+                    et = _advance_et(et, k_iter, early_term, cc, new_comm,
                                      e_cc, swept)
                     _save_et(pack_dir, pid, step, et)
                     shard(step, "past", id=own, comm=et["past"])
@@ -660,16 +690,14 @@ def _save_et(pack_dir: str, pid: int, step: int, et: dict) -> None:
     os.replace(tmp, os.path.join(pack_dir, f"et_{step}_{pid}.npz"))
 
 
-# ---------------------------------------------------------------------------
-# Colored variant (L16, louvain.cpp:593-786 / distLouvainMethodWithColoring):
-# one iteration = a loop over color buckets; community AGGREGATES refresh
-# between buckets while neighbor ASSIGNMENTS stay Jacobi (the counter is
-# built once per iteration). Packed re-expression: one job per
-# (iteration, bucket); bucket move deltas advance cd/cs immediately but
-# curr only at iteration end (pending list) — exactly the join path's
-# "refresh cinfo between buckets, decisions against iteration-start
-# assignment" semantics (algos/louvain.py colored block).
-# ---------------------------------------------------------------------------
+# Colored Louvain (L16, louvain.cpp:593-786 / distLouvainMethodWithColoring)
+# is the plain superstep run once per color bucket on a linear step
+# counter: move files, the ET chain and the replay are indexed by linear
+# step, cd/cs refresh after every bucket, and curr (the neighbors'
+# assignments) advances only when an iteration ends — the join path's
+# "refresh cinfo between buckets, decide against the iteration-start
+# assignment" (algos/louvain.py colored block). col_{pid}.npy holds the
+# owned colors.
 
 
 def pack_colors(colors_df: DataFrame, pack_dir: str, nparts: int) -> bool:
@@ -712,197 +740,6 @@ def pack_colors(colors_df: DataFrame, pack_dir: str, nparts: int) -> bool:
         write, schema="pid int, n long, ok boolean"
     ).collect()
     return all(r["ok"] for r in res)
-
-
-_COLORED_STATE: dict = {}
-
-
-def _load_bucket_moves(pack_dir: str, nparts: int, it: int, bi: int):
-    parts = [
-        np.load(os.path.join(pack_dir, f"mvc_{it}_{bi}_{p}.npy"))
-        for p in range(nparts)
-    ]
-    mv = np.concatenate(parts, axis=1) if len(parts) > 1 else parts[0]
-    return mv[0], mv[1]
-
-
-def _colored_state(pack_dir: str, nparts: int, nv_dense: int,
-                   step: int, bi: int, n_buckets: int,
-                   cache: bool = True) -> dict:
-    """Mirror state positioned at (iteration ``step``, before bucket
-    ``bi``): curr at S_{step-1} (iteration-start, Jacobi), cd/cs advanced
-    by buckets 0..bi-1 of iteration ``step``; pending curr updates applied
-    when the position rolls into a new iteration."""
-    target = (step, bi)
-    st = _COLORED_STATE.get(pack_dir) if cache else None
-    if st is not None and (st["it"], st["bi"]) > target:
-        st = None
-    if st is None:
-        vdeg, self_w, present = _assemble_static(pack_dir, nparts, nv_dense)
-        st = {
-            "it": 1, "bi": 0,
-            "curr": np.arange(nv_dense, dtype=np.int64),
-            "cd": vdeg.copy(),
-            "cs": present.astype(np.int64),
-            "vdeg": vdeg, "self_w": self_w,
-            "pending": [],
-        }
-        if cache:
-            _COLORED_STATE.clear()
-            _COLORED_STATE[pack_dir] = st
-    while (st["it"], st["bi"]) < target:
-        it, b = st["it"], st["bi"]
-        mid, mnew = _load_bucket_moves(pack_dir, nparts, it, b)
-        if len(mid):
-            # cd/cs advance NOW (aggregate refresh between buckets);
-            # mold = iteration-start community — each vertex is swept in
-            # exactly one bucket, so curr[mid] is still pre-iteration
-            mold = st["curr"][mid]
-            wts = st["vdeg"][mid]
-            np.add.at(st["cd"], mnew, wts)
-            np.subtract.at(st["cd"], mold, wts)
-            np.add.at(st["cs"], mnew, 1)
-            np.subtract.at(st["cs"], mold, 1)
-            st["pending"].append((mid, mnew))
-        if b + 1 < n_buckets:
-            st["bi"] = b + 1
-        else:
-            for mid_p, mnew_p in st["pending"]:
-                st["curr"][mid_p] = mnew_p
-            st["pending"] = []
-            st["it"], st["bi"] = it + 1, 0
-    return st
-
-
-def csr_superstep_colored(
-    spark,
-    pack_dir: str,
-    nparts: int,
-    nv_dense: int,
-    const: float,
-    step: int,
-    bi: int,
-    n_buckets: int,
-    bucket_color: int,
-    early_term: int = 0,
-) -> DataFrame:
-    """Bucket ``bi`` of colored iteration ``step``: sweep only own
-    vertices of ``bucket_color`` against (iteration-start curr, refreshed
-    cd/cs), write mvc_{step}_{bi}_{pid}.npy. Bucket-0 sentinels carry the
-    a-term partial at S_{step-1} (the one-job-late modularity protocol,
-    as in the plain packed superstep).
-
-    With ``early_term`` the colored+ET combination runs packed (r3 VERDICT
-    next#6): ET state is owner-local like the plain path, chained per
-    BUCKET (linear counter step·n_buckets+bi — each active vertex belongs
-    to exactly one bucket, so its ET record advances exactly once per
-    iteration, the oracle's per-iteration update). Frozen src rows are
-    skipped inside their own bucket; the whole partition's frozen
-    clusterWeight and frozen count ride the bucket-0 sentinel once per
-    iteration (the oracle adds frozen_cw[~active] once per e_term, and
-    the t3/t4 abort checks the pre-iteration frozen count)."""
-
-    def run(pdf_iter):
-        import os
-
-        import pandas as pd
-
-        lin = (step - 1) * n_buckets + bi  # ET chain position before this bucket
-        for pdf in pdf_iter:
-            for pid in pdf["pid"]:
-                pid = int(pid)
-                st = _colored_state(pack_dir, nparts, nv_dense, step, bi,
-                                    n_buckets)
-                own = np.load(os.path.join(pack_dir, f"own_{pid}.npy"))
-                a_part = (
-                    float((st["cd"][own] ** 2).sum()) if bi == 0 else 0.0
-                )
-                et = (
-                    _load_et(pack_dir, pid, lin, own) if early_term else None
-                )
-                e_part = 0.0
-                n_frozen = 0
-                if early_term and bi == 0:
-                    inactive = ~et["active"]
-                    n_frozen = int(inactive.sum())
-                    e_part += float(et["frozen_cw"][inactive].sum())
-                col = np.load(os.path.join(pack_dir, f"col_{pid}.npy"))
-                srcl = np.load(os.path.join(pack_dir, f"srcl_{pid}.npy"),
-                               mmap_mode="r")
-                dst = np.load(os.path.join(pack_dir, f"dst_{pid}.npy"),
-                              mmap_mode="r")
-                w = np.load(os.path.join(pack_dir, f"w_{pid}.npy"),
-                            mmap_mode="r")
-                rows = col[srcl] == bucket_color if len(col) else (
-                    np.zeros(0, dtype=bool)
-                )
-                if early_term and rows.any():
-                    rows &= et["active"][srcl]  # skip frozen src rows
-                moved = np.int64(0)
-                if rows.any():
-                    ids, cc, new_comm, e_cc = sweep_partition_np(
-                        None, dst[rows], w[rows],
-                        st["curr"], st["vdeg"], st["self_w"], st["cd"],
-                        st["cs"], const, srcl=srcl[rows], own_ids=own,
-                    )
-                    mvd = new_comm != cc
-                    _atomic_save(
-                        os.path.join(pack_dir, f"mvc_{step}_{bi}_{pid}.npy"),
-                        np.vstack([ids[mvd], new_comm[mvd]]),
-                    )
-                    e_part += float(e_cc.sum())
-                    moved = np.int64(mvd.sum())
-                    if early_term:
-                        swept = np.searchsorted(own, ids)
-                        et = _advance_et(et, step, early_term, cc, new_comm,
-                                         e_cc, swept)
-                else:
-                    _atomic_save(
-                        os.path.join(pack_dir, f"mvc_{step}_{bi}_{pid}.npy"),
-                        np.empty((2, 0), np.int64),
-                    )
-                if early_term:
-                    _save_et(pack_dir, pid, lin + 1, et)
-                yield pd.DataFrame({
-                    "pid": [pid], "e_part": [e_part], "a_part": [a_part],
-                    "moved": [moved], "frozen": [np.int64(n_frozen)],
-                })
-
-    return _pid_frame(spark, nparts).mapInPandas(
-        run,
-        schema="pid int, e_part double, a_part double, moved long, frozen long",
-    )
-
-
-def csr_labels_colored(
-    spark, pack_dir: str, nparts: int, nv_dense: int, n_iters: int,
-    n_buckets: int,
-) -> DataFrame:
-    """Owned labels after ``n_iters`` FULL colored iterations (fresh
-    replay, cache bypassed — the protocol's pastComm is an earlier state
-    than the worker caches)."""
-
-    def run(pdf_iter):
-        import os
-
-        import pandas as pd
-
-        st = None
-        for pdf in pdf_iter:
-            for pid in pdf["pid"]:
-                pid = int(pid)
-                own = np.load(os.path.join(pack_dir, f"own_{pid}.npy"))
-                if len(own) == 0:
-                    continue
-                if st is None:
-                    st = _colored_state(pack_dir, nparts, nv_dense,
-                                        n_iters + 1, 0, n_buckets,
-                                        cache=False)
-                yield pd.DataFrame({"id": own, "comm": st["curr"][own]})
-
-    return _pid_frame(spark, nparts).mapInPandas(
-        run, schema="id long, comm long"
-    )
 
 
 def csr_labels_coarse_packed(
@@ -987,7 +824,10 @@ def csr_labels_packed(
     files 1..n_deltas — each task emits labels for its OWNED vertices only,
     so the assignment is produced fully distributed (the driver never holds
     it). Replays fresh (cache bypassed): the requested state is usually
-    EARLIER than the worker mirrors (the phase protocol returns pastComm)."""
+    EARLIER than the worker mirrors (the phase protocol returns pastComm).
+    A colored phase asks for whole iterations (labels_at·n_buckets linear
+    steps); a vertex moves at most once per iteration, so the plain
+    replay's curr is exact there too."""
 
     def run(pdf_iter):
         import os

@@ -145,7 +145,7 @@ from vite_spark.kernels.csr_sharded import (
 TRANSIENT_PREFIXES = (
     "prc_", "rnk_", "lown_", "cown_", "bfd_", "hac_", "aown_", "hown_",
     "hco_", "wlo_", "mvu_", "mvd_", "flw_", "cur_", "ost_", "et_", "tm_",
-    "mvc_", "colw_", "colr_", "col_")
+    "colw_", "colr_", "col_")
 
 
 def _prepare_pack(spark, edges, cfg, nparts, ne, cache="vite_pack",

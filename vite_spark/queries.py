@@ -117,11 +117,6 @@ tidt AS (SELECT doc_id, p, tid FROM pos JOIN vocab USING (tok))
 """
 
 
-def _values(name: str, cols: str, rows) -> str:
-    body = ", ".join("(" + ", ".join(str(x) for x in r) + ")" for r in rows)
-    return f"{name}({cols}) AS (SELECT * FROM (VALUES {body}) t({cols}))"
-
-
 def _sql_list(xs) -> str:
     return "[" + ", ".join(f"'{x}'" for x in xs) + "]"
 

@@ -73,3 +73,16 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def release(df) -> None:
+    """Drop ``df``'s stored blocks, whichever way they were stored:
+    ``persist()`` through ``unpersist``, a ``localCheckpoint`` cut through
+    the RDD its plan wraps (the cut's ``unpersist`` leaves that RDD
+    persisted). A released cut can no longer be read, so release it
+    after its last reader."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    else:
+        df.unpersist()
